@@ -1,5 +1,8 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
+import org.json4s._
+import graft.tools.Json
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -51,7 +54,7 @@ object Bench {
         .groupBy("l_returnflag").count().count()
       graft.queries.StreamingQueries.prewarm(spark, sfDir)
       graft.queries.Staged.prewarm(spark, sfDir)
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) => System.err.println(s"[bench] warmup failed: $e") }
     // Median of 3 runs in sorted name order: a single timing in one JVM
     // moves 5-7x between rounds from run-order/GC noise (observed r2->r3),
     // which makes per-query regressions unjudgeable. The fixed order
@@ -68,17 +71,34 @@ object Bench {
     // executes the FULL plan — projections, sorts, everything — and
     // discards rows at the sink. The r10 totals therefore step UP vs
     // r9 by design; SURVEY §6 documents the change.
+    // A run that throws is NOT timed: it returns None, logs to stderr
+    // and lands in `failed` — a crash must never read as a fast query.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def run(name: String,
         fn: (org.apache.spark.sql.SparkSession, String) =>
-          org.apache.spark.sql.DataFrame): Double = {
+          org.apache.spark.sql.DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      val dt = (System.nanoTime() - t0) / 1e9
+      val dt =
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          Some((System.nanoTime() - t0) / 1e9)
+        } catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed += name
+          None
+        }
       // released OUTSIDE the timed region: cache cleanup between runs
       // is harness hygiene, not part of the query's cost
       graft.operators.CacheScope.release(spark)
       dt
+    }
+    // median of 3 runs; the first failure ends the query (None)
+    def median3(name: String,
+        fn: (org.apache.spark.sql.SparkSession, String) =>
+          org.apache.spark.sql.DataFrame): Option[Double] = {
+      val ts = Iterator.continually(run(name, fn)).take(3)
+        .takeWhile(_.isDefined).flatten.toSeq
+      if (ts.size == 3) Some(ts.sorted.apply(1)) else None
     }
     // --- r13 sweep-health telemetry (the r12 verdict's item 1: +13%
     // idle-to-idle inflation on untouched queries). Per query we record
@@ -149,9 +169,8 @@ object Bench {
     // agg_q1 is the canary: moderate cost (~0.4 s), one scan + one
     // map-side-combined aggregate, no staged artifacts, no cache state.
     val canaryName = "agg_q1"
-    def canaryShot(): Double =
-      (1 to 3).map(_ => run(canaryName, SparkEntry.queries(canaryName)))
-        .sorted.apply(1)
+    def canaryShot(): Double = // a failed canary is 0 and listed in `failed`
+      median3(canaryName, SparkEntry.queries(canaryName)).getOrElse(0.0)
     // r15 (item 5): SPARK_GRAFT_ORDER=community_first|community_last
     // reorders the heavy graph block for the in-suite-inflation A/B;
     // anything but the default "alpha" order never persists artifacts
@@ -174,20 +193,20 @@ object Bench {
     val (firstHalf, secondHalf) = ordered.splitAt(ordered.size / 2)
     def sweep(qs: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame)]) =
-      qs.map { case (name, fn) =>
+      qs.flatMap { case (name, fn) =>
         val gc0 = gcMs()
-        val med = (1 to 3).map(_ => run(name, fn)).sorted.apply(1)
+        val med = median3(name, fn)
         diag += ((name, gcMs() - gc0, heapMb(), storageMb()))
         val (dn, dmb) = diskStats()
         diagExt += ((codeCacheMb(), dn, dmb))
         maybeFence()
-        name -> med
+        med.map(name -> _)
       }
     val r1 = sweep(firstHalf)
     val canaryMid = if (only.isEmpty) canaryShot() else 0.0
     val r2 = sweep(secondHalf)
     val canaryEnd = if (only.isEmpty) canaryShot() else 0.0
-    val results = r1 ++ r2
+    val swept = r1 ++ r2
     // drift is DIRECTIONAL: pressure arriving mid-sweep shows as a
     // RISING canary (max of the later points over the start), while a
     // canary that only speeds up (JIT/page-cache warming — observed
@@ -207,11 +226,13 @@ object Bench {
     // shot at end-of-JVM measured the 354-query run's heap debt, not
     // the plan (winsorize 9.5 s here vs 2.6 s in a fresh JVM)
     System.gc()
-    val isolated = results.sortBy(-_._2).take(5)
-      .map { case (name, _) =>
-        name -> (1 to 3).map(_ => run(name, SparkEntry.queries(name)))
-          .sorted.apply(1)
+    val isolated = swept.sortBy(-_._2).take(5)
+      .flatMap { case (name, _) =>
+        median3(name, SparkEntry.queries(name)).map(name -> _)
       }
+    // a query that failed in ANY run (sweep or isolated) is left out of
+    // the timings and the total, and listed under `failed`
+    val results = swept.filterNot { case (n, _) => failed(n) }
     // --- r15 (verdict item 3): canary-NORMALIZED round-over-round
     // comparison, replacing the prose arbitration §6 ran every round.
     // bench_prev.json is the PREVIOUS round's committed record (the
@@ -221,25 +242,15 @@ object Bench {
     // DIVIDED by that factor (<= NORM_RATIO_MAX in DiagCheck) — a
     // slower sandbox no longer reads as a regression, and a real plan
     // regression can no longer hide behind "the machine was slow".
-    def parseNumMap(json: String, key: String): Map[String, Double] = {
-      val i = json.indexOf("\"" + key + "\":{")
-      if (i < 0) Map.empty
-      else {
-        val start = json.indexOf('{', i)
-        val end = json.indexOf('}', start) // both maps are flat
-        """"([^"]+)":(-?[0-9.eE+]+)""".r
-          .findAllMatchIn(json.substring(start + 1, end))
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    }
     val canaryMean = (canaryStart + canaryMid + canaryEnd) / 3
     val sharedBlock: Option[(Int, Double, Double, Double)] =
       if (only.nonEmpty) None
       else try {
         val txt = java.nio.file.Files.readString(
           java.nio.file.Paths.get("/root/repo/bench_prev.json"))
-        val pq = parseNumMap(txt, "queries")
-        val pc = parseNumMap(txt, "canary")
+        val prev = Json.parse(txt)
+        val pq = Json.numbers(prev \ "queries")
+        val pc = Json.numbers(prev \ "canary")
         val prevCanary = Seq("start", "mid", "end").flatMap(pc.get)
         val shared = results.filter { case (n, _) => pq.contains(n) }
         if (shared.isEmpty || prevCanary.size != 3) None
@@ -250,7 +261,10 @@ object Bench {
           if (psub <= 0 || pcm <= 0 || canaryMean <= 0) None
           else Some((shared.size, sub, psub, pcm))
         }
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] no previous record: $e")
+        None
+      }
     val normalizedRatio = sharedBlock.map { case (_, sub, psub, pcm) =>
       (sub / psub) / (canaryMean / pcm)
     }
@@ -266,22 +280,15 @@ object Bench {
     val diagVerdict = graft.tools.DiagCheck.evaluate(diag.toSeq,
       normalizedRatio,
       diag.zip(diagExt).map { case ((n, _, _, _), (_, _, dmb)) => (n, dmb) }
-        .toSeq)
+        .toSeq, failed.toSeq)
     if (only.isEmpty && !diagVerdict.pass)
       System.err.println(s"[bench] DIAG CHECK FAILED: ${diagVerdict.json}")
-    // 3-decimal (ms) precision: full doubles made the 85-query JSON line
-    // long enough that the driver's log capture truncated the tail.
-    // Locale.ROOT: the f-interpolator is locale-dependent — a
-    // comma-decimal default locale would emit invalid JSON
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def jsonMap(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
     def jsonLine(rs: Seq[(String, Double)], total: Double,
-        extra: String = ""): String =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
-        s""""sf":"$sfDir"$extra,"queries":${jsonMap(rs)}}"""
+        meta: List[JField]): String =
+      Json.compact(JObject(List[JField]("metric" -> JString("total"),
+        "value" -> Json.fixed3(total), "unit" -> JString("sec"),
+        "sf" -> JString(sfDir)) ++ meta ++ List[JField](
+        "failed" -> Json.strings(failed.toSeq), "queries" -> Json.secs(rs))))
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // The driver keeps only the LAST ~2000 chars of stdout and parses the
     // last line as JSON — a 200-query map is ~6 KB, so its head gets cut
@@ -291,50 +298,56 @@ object Bench {
     // query_count / queries_in_map fields so nothing is silently
     // dropped; the FULL per-query map is persisted to bench_out.json.
     var top = results.sortBy(-_._2).take(20)
-    def meta(n: Int): String =
-      s""","query_count":${results.size},"queries_in_map":$n""" +
-        s""","diag_pass":${if (diagVerdict.pass) 1 else 0}""" +
-        s""","queries_full":"bench_out.json","note":"queries = $n slowest""""
+    def meta(n: Int): List[JField] = List(
+      "query_count" -> JInt(results.size), "queries_in_map" -> JInt(n),
+      "diag_pass" -> JInt(if (diagVerdict.pass) 1 else 0),
+      "queries_full" -> JString("bench_out.json"),
+      "note" -> JString(s"queries = $n slowest"))
     while (top.nonEmpty &&
       jsonLine(top.sortBy(_._1), total, meta(top.size)).length > 1600)
       top = top.dropRight(1)
+    def write(path: java.nio.file.Path, body: String): Unit =
+      try java.nio.file.Files.writeString(path, body)
+      catch { case NonFatal(e) => System.err.println(s"[bench] cannot write $path: $e") }
     // Persisted only for FULL runs: an args-restricted profiling run
     // must not clobber the committed full-suite record. `isolated`
     // carries the guard numbers (suite-median vs isolated single-shot
     // for the 5 slowest — SURVEY §6 documents the acceptable delta).
     if (only.isEmpty && order == "alpha")
-      try java.nio.file.Files.writeString(
+      write(
         java.nio.file.Paths.get("/root/repo/bench_out.json"),
-        s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
-          s""""sf":"$sfDir","action":"noop_write",""" +
-          s""""gc_fence":$fence,""" +
-          s""""canary":${jsonMap(canary)},""" +
-          s""""shared":${sharedBlock.map { case (n, sub, psub, pcm) =>
-            s"""{"n":$n,"subtotal":${fmt(sub)},""" +
-              s""""prev_subtotal":${fmt(psub)},""" +
-              s""""canary_mean":${fmt(canaryMean)},""" +
-              s""""prev_canary_mean":${fmt(pcm)},""" +
-              s""""normalized_ratio":${fmt(normalizedRatio.get)}}"""
-          }.getOrElse("null")},""" +
-          s""""diag_check":${diagVerdict.json},""" +
-          s""""isolated":${jsonMap(isolated)},""" +
-          s""""queries":${jsonMap(results)}}""" + "\n")
-      catch { case _: Throwable => () }
+        Json.compact(JObject(
+          "metric" -> JString("total"), "value" -> Json.fixed3(total),
+          "unit" -> JString("sec"), "sf" -> JString(sfDir),
+          "action" -> JString("noop_write"), "gc_fence" -> JInt(fence),
+          "canary" -> Json.secs(canary),
+          "shared" -> sharedBlock.map { case (n, sub, psub, pcm) =>
+            JObject("n" -> JInt(n), "subtotal" -> Json.fixed3(sub),
+              "prev_subtotal" -> Json.fixed3(psub),
+              "canary_mean" -> Json.fixed3(canaryMean),
+              "prev_canary_mean" -> Json.fixed3(pcm),
+              "normalized_ratio" -> Json.fixed3(normalizedRatio.get))
+          }.getOrElse(JNull),
+          "diag_check" -> diagVerdict.toJson,
+          "isolated" -> Json.secs(isolated),
+          "failed" -> Json.strings(failed.toSeq),
+          "queries" -> Json.secs(results))) + "\n")
     // full per-query sweep telemetry (r13): one line per query in sweep
     // order — gc_ms is the GC time that fired DURING the query's three
     // runs; heap/storage are post-query occupancy. The file is how a
     // future round attributes a diffuse drift (rising gc_ms = heap
     // debt; rising storage_mb = a leaked persist) without re-running.
     if (only.isEmpty)
-      try java.nio.file.Files.writeString(
+      write(
         java.nio.file.Paths.get(if (order == "alpha")
           "/root/repo/bench_diag.json"
         else s"/root/repo/bench_diag_$order.json"),
         diag.zip(diagExt).map { case ((n, g, h, st), (cc, dn, dmb)) =>
-          s"""{"q":"$n","gc_ms":$g,"heap_mb":$h,"storage_mb":$st,""" +
-            s""""code_cache_mb":$cc,"disk_files":$dn,"disk_mb":$dmb}"""
+          Json.compact(JObject("q" -> JString(n), "gc_ms" -> JLong(g),
+            "heap_mb" -> JLong(h), "storage_mb" -> JLong(st),
+            "code_cache_mb" -> JLong(cc), "disk_files" -> JLong(dn),
+            "disk_mb" -> JLong(dmb)))
         }.mkString("[\n", ",\n", "\n]") + "\n")
-      catch { case _: Throwable => () }
     println(jsonLine(top.sortBy(_._1), total, meta(top.size)))
     spark.stop()
   }

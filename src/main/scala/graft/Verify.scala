@@ -33,21 +33,12 @@ object Verify {
       }
       finally graft.operators.CacheScope.release(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // json4s escapes backslash, quote and every control char — a tab or
+    // CR in builder-authored SQL would otherwise make the driver's
+    // json.load fail and silently zero the round's correctness
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      graft.tools.Json.compact(org.json4s.JObject(SparkEntry.oracleSql
+        .map { case (k, v) => k -> org.json4s.JString(v) }.toList)))
     spark.stop()
   }
 }

@@ -1,7 +1,10 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -11,7 +14,7 @@ import org.apache.spark.storage.StorageLevel
   * the iterative graph operators), so callers get a per-job release
   * handle instead of the session-wide `spark.catalog.clearCache()`.
   *
-  * Operators call [[persist]] / [[checkpoint]]; a pipeline driver calls
+  * Operators call [[persist]] / [[iterate]]; a pipeline driver calls
   * [[release]] after the consuming action (Verify/Bench do, per query).
   *
   * Checkpoints need their own tracking because `Dataset.unpersist` only
@@ -43,20 +46,15 @@ import org.apache.spark.storage.StorageLevel
   * is the only exit.
   */
 object CacheScope {
-  /** A tracked release thunk. `checkpointed` marks entries whose frame
-    * DIES at release (no lineage to recompute from) — [[releasePersisted]]
-    * skips them, so a caller can shed recomputable cache pressure
-    * mid-pipeline without killing live iterative-operator results. */
-  private final case class Entry(thunk: () => Unit, checkpointed: Boolean)
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   private val tracked =
-    new java.util.HashMap[SparkSession, java.util.ArrayList[Entry]]()
+    new java.util.HashMap[SparkSession, java.util.ArrayList[() => Unit]]()
 
-  private def track(spark: SparkSession, thunk: () => Unit,
-      checkpointed: Boolean = false): Unit =
+  private def track(spark: SparkSession, thunk: () => Unit): Unit =
     tracked.synchronized {
       tracked.computeIfAbsent(spark,
-        _ => new java.util.ArrayList[Entry]()).add(Entry(thunk, checkpointed))
+        _ => new java.util.ArrayList[() => Unit]()).add(thunk)
     }
 
   /** Persist MEMORY_AND_DISK and track for later [[release]]. */
@@ -80,20 +78,57 @@ object CacheScope {
     p
   }
 
+  /** The per-round policy of every iterative operator: run `step` from
+    * `init` for at most `maxRounds` rounds, cutting lineage every round
+    * (iterative self-joins otherwise grow the logical plan linearly in
+    * rounds — analysis cost, and an eviction would recompute the whole
+    * history) and freeing the superseded round — its cache entry AND its
+    * checkpoint blocks, so a persisted round-0 frame goes too — as soon
+    * as its successor has materialized. In-flight state is therefore two
+    * rounds, never rounds × frame; the final round stays tracked for
+    * [[release]].
+    *
+    * Each round costs ONE job, either way:
+    *  - `changed` names a boolean column of the step's output: the
+    *    checkpoint is LAZY and one `max(changed)` aggregate both
+    *    materializes it and tests convergence (an eager checkpoint would
+    *    run a second job — measured 3× slower end to end at the 10×
+    *    probe). The loop stops at the first round with no change.
+    *  - no `changed`: a fixed round count, each round checkpointed
+    *    EAGERLY — materializing round r is what makes round r−1 safe to
+    *    free (lazy per-round checkpoints all stayed pinned until the
+    *    query's release in the r8 bench).
+    *
+    * Returns the final round and whether it converged (always true
+    * without `changed`: a fixed count has nothing to converge). Callers
+    * must not read a round the loop superseded — its blocks are gone. */
+  private[graft] def iterate(init: DataFrame, maxRounds: Int)(
+      step: DataFrame => DataFrame,
+      changed: Option[String] = None): (DataFrame, Boolean) = {
+    var state = init
+    var rounds = 0
+    var converged = false
+    while (rounds < maxRounds && !converged) {
+      val next = checkpoint(step(state), eager = changed.isEmpty)
+      converged = changed.exists { c =>
+        !next.agg(F.coalesce(F.max(F.col(c)), F.lit(false))).head().getBoolean(0)
+      }
+      state.unpersist(blocking = false)
+      unpersistCheckpoint(state)
+      state = next
+      rounds += 1
+    }
+    (state, changed.isEmpty || converged)
+  }
+
   /** Checkpoint (reliable when the context has a checkpoint dir, local
-    * otherwise — the same dispatch every iterative operator used
-    * inline) and track the checkpoint's RDD blocks for [[release]].
-    * Iterative loops additionally call [[unpersistCheckpoint]] on each
-    * SUPERSEDED round as soon as its successor materializes, so
-    * in-flight state is two node-frames, not rounds × node-frame; the
-    * registry entry then makes the double-unpersist a no-op and covers
-    * the FINAL round the loop itself never supersedes. */
-  private[graft] def checkpoint(df: DataFrame, eager: Boolean): DataFrame = {
+    * otherwise) and track the checkpoint's RDD blocks for [[release]]. */
+  private def checkpoint(df: DataFrame, eager: Boolean): DataFrame = {
     val cp =
       if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
         df.checkpoint(eager)
       else df.localCheckpoint(eager)
-    track(df.sparkSession, () => unpersistCheckpoint(cp), checkpointed = true)
+    track(df.sparkSession, () => unpersistCheckpoint(cp))
     cp
   }
 
@@ -107,13 +142,15 @@ object CacheScope {
       case _             => None
     }
 
-  /** Free a checkpointed Dataset's blocks (non-blocking, idempotent).
-    * Callers must only free checkpoints whose successor has already
-    * MATERIALIZED — an un-materialized dependent plan would recompute
-    * from a truncated lineage and fail. */
-  private[graft] def unpersistCheckpoint(cp: DataFrame): Unit =
+  /** Free a checkpointed Dataset's blocks (non-blocking, idempotent; a
+    * no-op on a frame that is not a checkpoint). Only for checkpoints
+    * whose successor has already MATERIALIZED — an un-materialized
+    * dependent plan would recompute from a truncated lineage and fail. */
+  private def unpersistCheckpoint(cp: DataFrame): Unit =
     checkpointRdd(cp).foreach { r =>
-      try r.unpersist(blocking = false) catch { case _: Throwable => () }
+      try r.unpersist(blocking = false) catch {
+        case NonFatal(e) => log.warn("CacheScope: checkpoint unpersist failed", e)
+      }
     }
 
   /** Number of sessions currently tracked (test observability). */
@@ -134,29 +171,14 @@ object CacheScope {
     * recompute from — release() is the END OF THEIR LIFE: a read after
     * release fails with a missing-block error instead of recomputing.
     * Callers therefore release only after the consuming action (the
-    * Verify/Bench per-query discipline); a caller that must shed cache
-    * pressure while an iterative-operator result still has readers uses
-    * [[releasePersisted]] instead. */
+    * Verify/Bench per-query discipline). A failing release step is
+    * logged and the remaining steps still run. */
   def release(spark: SparkSession): Unit = {
     val list = tracked.synchronized(tracked.remove(spark))
-    if (list != null) list.forEach { e =>
-      try e.thunk() catch { case _: Throwable => () }
-    }
-  }
-
-  /** Unpersist only the RECOMPUTABLE frames (persist entries); leave
-    * checkpointed frames — whose blocks are their only copy — tracked
-    * and alive for a later [[release]]. Safe at any time. */
-  def releasePersisted(spark: SparkSession): Unit = {
-    val toRun = new java.util.ArrayList[Entry]()
-    tracked.synchronized {
-      val list = tracked.remove(spark)
-      if (list != null) {
-        val keep = new java.util.ArrayList[Entry]()
-        list.forEach { e => if (e.checkpointed) keep.add(e) else toRun.add(e) }
-        if (!keep.isEmpty) tracked.put(spark, keep)
+    if (list != null) list.forEach { thunk =>
+      try thunk() catch {
+        case NonFatal(e) => log.warn("CacheScope: release step failed", e)
       }
     }
-    toRun.forEach { e => try e.thunk() catch { case _: Throwable => () } }
   }
 }

@@ -471,14 +471,9 @@ object Dedup {
     * scale; the per-round cost is linear in |edges|. (For adversarial
     * long-path graphs you'd switch to pointer-jumping / large-star
     * small-star — O(log n) rounds — which this API could adopt without
-    * signature change.) Each round's labels are CHECKPOINTED, not just
-    * persisted: iterative self-joins grow the logical lineage linearly
-    * in rounds (plan analysis cost, and a cache eviction would trigger
-    * a full-history recompute), so every round truncates it — to the
-    * cluster checkpoint dir when one is set (fault-tolerant, the
-    * production setting), else an executor-local checkpoint. The
-    * convergence check rides the same materializing pass (max
-    * label-change flag), not a separate scan.
+    * signature change.) The per-round lineage cut, free and convergence
+    * test are [[CacheScope.iterate]]'s `changed`-column policy: one job
+    * per round, the max label-change flag materializing the round.
     *
     * Output: (doc_id, cluster_id) for every vertex that appears in ≥ 1
     * pair. Isolated docs are absent — join back against the corpus with
@@ -506,53 +501,27 @@ object Dedup {
     * conservative; pass 0 to force the distributed loop. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxRounds: Int = 25, localThreshold: Long = 100000L): DataFrame = {
-    val edges = CacheScope.persist(
-      pairs.select(F.col(aCol).as("src"), F.col(bCol).as("dst"))
-        .unionByName(pairs.select(F.col(bCol).as("src"), F.col(aCol).as("dst")))
-        .distinct())
+    val edges = Graph.undirected(pairs, aCol, bCol, assumeUnique = false)
     val finishedLocally = localFinish(pairs, edges, aCol, localThreshold)
     if (finishedLocally.isDefined) return finishedLocally.get
-    var labels = CacheScope.persist(
+    val init = CacheScope.persist(
       edges.select(F.col("src").as("v")).distinct()
         .withColumn("lbl", F.col("v")))
-    var round = 0
-    var converged = false
     // maxRounds + 1: convergence is only OBSERVABLE via a round with no
     // improvement, so a graph whose last improvement lands exactly in
     // round maxRounds needs one confirming round — without it a
     // provably-final labelling would be reported as unconverged
-    while (round < maxRounds + 1 && !converged) {
+    val (last, converged) = CacheScope.iterate(init, maxRounds + 1)({ labels =>
       // min over {own label} ∪ {neighbor labels}
       val neighborMin = edges
         .join(labels.withColumnRenamed("v", "src"), "src")
         .groupBy(F.col("dst").as("v"))
         .agg(F.min(F.col("lbl")).as("_nlbl"))
-      val nextPlan = labels.join(neighborMin, Seq("v"), "left")
+      labels.join(neighborMin, Seq("v"), "left")
         .select(F.col("v"),
           F.least(F.col("lbl"), F.coalesce(F.col("_nlbl"), F.col("lbl"))).as("lbl"),
           (F.col("_nlbl") < F.col("lbl")).as("_changed"))
-      // truncate lineage LAZILY: the convergence aggregate below is the
-      // materializing action, so each round stays ONE job (an eager
-      // checkpoint would run a second, measured 3× slower end-to-end at
-      // the 10× probe)
-      val next = CacheScope.checkpoint(nextPlan, eager = false)
-      // one action per round: did any label improve? (metadata-sized;
-      // materializes the checkpoint, later rounds read its partitions,
-      // not the join lineage)
-      converged = next.agg(F.coalesce(F.max(F.col("_changed")), F.lit(false)))
-        .head().getBoolean(0) == false
-      // `next` is now materialized, so the superseded round can be
-      // freed in full: Dataset.unpersist covers the round-0 persisted
-      // frame (CacheManager), unpersistCheckpoint the later rounds'
-      // RDD-level checkpoint blocks Dataset.unpersist never touches
-      // (the r8 suite-pollution leak); each is a no-op on the other's
-      // rounds, and CacheScope's registry makes release()'s second
-      // free idempotent
-      labels.unpersist(blocking = false)
-      CacheScope.unpersistCheckpoint(labels)
-      labels = next
-      round += 1
-    }
+    }, changed = Some("_changed"))
     // a silent cut-off would split one true component into several
     // "clusters" with no signal (a 30-hop drift chain at maxRounds=25
     // reports two representatives of one duplicate family) — fail loud,
@@ -564,7 +533,7 @@ object Dedup {
           "diameter exceeds maxRounds; raise maxRounds (rounds are cheap: " +
           "one shuffle each) or use connectedComponentsStarContract " +
           "(O(log n) rounds) for this graph")
-    labels.select(F.col("v").as("doc_id"), F.col("lbl").as("cluster_id"))
+    last.select(F.col("v").as("doc_id"), F.col("lbl").as("cluster_id"))
   }
 
   /** Small-graph finishing layer shared by both CC variants: when the
@@ -629,24 +598,19 @@ object Dedup {
     * non-increasing, bounded below by the component min (which labels
     * itself forever), so the fixpoint — no neighbor smaller, jump a
     * no-op — is exactly "every vertex labelled its component min".
-    * Same lazy per-round checkpointing, loud non-convergence and
+    * Same [[CacheScope.iterate]] round policy, loud non-convergence and
     * small-graph union-find finishing (`localThreshold`) as the
     * propagation variant. */
   def connectedComponentsStarContract(pairs: DataFrame, aCol: String,
       bCol: String, maxRounds: Int = 40,
       localThreshold: Long = 100000L): DataFrame = {
-    val edges = CacheScope.persist(
-      pairs.select(F.col(aCol).as("src"), F.col(bCol).as("dst"))
-        .unionByName(pairs.select(F.col(bCol).as("src"), F.col(aCol).as("dst")))
-        .distinct())
+    val edges = Graph.undirected(pairs, aCol, bCol, assumeUnique = false)
     val finishedLocally = localFinish(pairs, edges, aCol, localThreshold)
     if (finishedLocally.isDefined) return finishedLocally.get
-    var labels = CacheScope.persist(
+    val init = CacheScope.persist(
       edges.select(F.col("src").as("v")).distinct()
         .withColumn("lbl", F.col("v")))
-    var round = 0
-    var converged = false
-    while (round < maxRounds + 1 && !converged) {
+    val (last, converged) = CacheScope.iterate(init, maxRounds + 1)({ labels =>
       // 1. jump: follow the label's own label — a self-join of the
       // MATERIALIZED previous round (checkpointed partitions, so the
       // two branches re-read, never recompute). A label always names a
@@ -663,27 +627,18 @@ object Dedup {
         .join(jumped.select(F.col("v").as("src"), F.col("lbl")), "src")
         .groupBy(F.col("dst").as("v"))
         .agg(F.min(F.col("lbl")).as("_nlbl"))
-      val nextPlan = jumped.join(neighborMin, Seq("v"), "left")
+      jumped.join(neighborMin, Seq("v"), "left")
         .select(F.col("v"),
           F.least(F.col("lbl"), F.coalesce(F.col("_nlbl"), F.col("lbl"))).as("lbl"),
           (F.col("_c1") || (F.col("_nlbl") < F.col("lbl"))).as("_changed"))
-      val next = CacheScope.checkpoint(nextPlan, eager = false)
-      converged = next.agg(F.coalesce(F.max(F.col("_changed")), F.lit(false)))
-        .head().getBoolean(0) == false
-      // free the superseded round in full once `next` materialized —
-      // see connectedComponents for why both calls are needed
-      labels.unpersist(blocking = false)
-      CacheScope.unpersistCheckpoint(labels)
-      labels = next
-      round += 1
-    }
+    }, changed = Some("_changed"))
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponentsStarContract did not converge after " +
           s"${maxRounds + 1} rounds (maxRounds=$maxRounds + 1 confirming " +
           "round) — rounds double label reach, so this indicates a " +
           "component of diameter > 2^maxRounds or a bug; raise maxRounds")
-    labels.select(F.col("v").as("doc_id"), F.col("lbl").as("cluster_id"))
+    last.select(F.col("v").as("doc_id"), F.col("lbl").as("cluster_id"))
   }
 
   // ---------------------------------------------------- incremental dedup

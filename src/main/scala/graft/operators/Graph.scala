@@ -19,6 +19,20 @@ object Graph {
     * a dedup-pair graph produces. */
   val SCALE: Long = 1000000000L
 
+  /** The undirected edge list the pair-graph operators iterate over
+    * ([[pageRank]], [[personalizedPageRank]], [[labelPropagation]] and
+    * both [[Dedup.connectedComponents]] variants): every pair in both
+    * directions as (src, dst), persisted once. `assumeUnique` (r15,
+    * §2.4): for a unique canonical pair list (aCol < bCol) the doubled
+    * list is unique by construction — the defensive distinct would be a
+    * full shuffle of 2m rows. */
+  private[operators] def undirected(pairs: DataFrame, aCol: String,
+      bCol: String, assumeUnique: Boolean): DataFrame = {
+    val doubled = pairs.select(F.col(aCol).as("src"), F.col(bCol).as("dst"))
+      .unionByName(pairs.select(F.col(bCol).as("src"), F.col(aCol).as("dst")))
+    CacheScope.persist(if (assumeUnique) doubled else doubled.distinct())
+  }
+
   /** PageRank over an undirected pair graph, in INTEGER fixed-point:
     * every operation is exact long arithmetic (floor division for the
     * per-neighbor share and the damping ratio), so the result is
@@ -31,55 +45,22 @@ object Graph {
     * rank(v) = SCALE.
     *
     * Scale shape: one shuffle per round (edges ⋈ ranks, map-side
-    * combined sum per dst); edges and degrees are persisted once; each
-    * round's ranks are EAGERLY checkpointed and the superseded round's
-    * blocks freed at once ([[CacheScope.checkpoint]]) — iterative
-    * self-join lineage otherwise grows linearly in rounds, and lazy
-    * per-round blocks would all stay pinned until the caller's
-    * release. Rounds are a fixed count (no
-    * convergence action needed — fixed-point iterates are deterministic,
-    * so callers pick iters once and results are reproducible). */
+    * combined sum per dst); edges and degrees are persisted once; the
+    * per-round lineage cut and free is [[CacheScope.iterate]]'s
+    * fixed-count policy. Rounds are a fixed count (no convergence action
+    * needed — fixed-point iterates are deterministic, so callers pick
+    * iters once and results are reproducible). */
   def pageRank(pairs: DataFrame, aCol: String, bCol: String,
       iters: Int = 5, dampNum: Long = 85L, dampDen: Long = 100L,
       assumeUnique: Boolean = false): DataFrame = {
     require(iters >= 1 && dampNum >= 0 && dampNum <= dampDen,
       s"need iters >= 1 and 0 <= dampNum <= dampDen, got $iters, $dampNum/$dampDen")
-    // assumeUnique (r15, §2.4): for a unique canonical pair list
-    // (aCol < bCol) the doubled directed list is unique by construction
-    // — the defensive distinct was a full shuffle of 2m rows
-    val doubled = pairs.select(F.col(aCol).as("src"), F.col(bCol).as("dst"))
-      .unionByName(pairs.select(F.col(bCol).as("src"), F.col(aCol).as("dst")))
-    val edges = CacheScope.persist(
-      if (assumeUnique) doubled else doubled.distinct())
-    val degrees = CacheScope.persist(
-      edges.groupBy(F.col("src").as("v")).agg(F.count(F.lit(1)).as("deg")))
-    val teleport = (dampDen - dampNum) * SCALE / dampDen
-    var ranks = degrees.select(F.col("v"), F.lit(SCALE).as("rank"))
-    var prev: DataFrame = null
-    for (_ <- 1 to iters) {
-      val contrib = edges
-        .join(ranks.withColumnRenamed("v", "src"), "src")
-        .join(degrees.withColumnRenamed("v", "src"), "src")
-        .select(F.col("dst").as("v"),
-          F.expr("rank div deg").as("_share"))
-        .groupBy("v").agg(F.sum("_share").as("_in"))
-      // every vertex of an undirected pair graph has deg >= 1, but keep
-      // the left join + coalesce so a directed caller can't lose vertices
-      val nextPlan = degrees.select("v").join(contrib, Seq("v"), "left")
-        .select(F.col("v"),
-          (F.lit(teleport) +
-            F.expr(s"($dampNum * coalesce(_in, 0L)) div $dampDen")).as("rank"))
-      // EAGER: materializing round r is what makes round r−1's blocks
-      // safe to free — the r8 bench showed lazy per-round checkpoints
-      // accumulating all rounds' blocks past the query (every query
-      // that ran after the graph pair regressed with unchanged plans)
-      val next = CacheScope.checkpoint(nextPlan, eager = true)
-      if (prev != null) CacheScope.unpersistCheckpoint(prev)
-      prev = next
-      ranks = next
-    }
-    ranks.select(F.col("v").as("doc_id"), F.col("rank").as("rank_fp"),
-      F.round(F.col("rank").cast("double") / SCALE, 6).as("rank"))
+    val (edges, degrees) = walkGraph(pairs, aCol, bCol, assumeUnique)
+    // every vertex is a restart target: the uniform-teleport walk
+    val spine = degrees.select(F.col("v"), F.lit(1L).as("is_seed"))
+    dampedWalk(edges, degrees, spine, iters, dampNum, dampDen)
+      .select(F.col("v").as("doc_id"), F.col("rank").as("rank_fp"),
+        F.round(F.col("rank").cast("double") / SCALE, 6).as("rank"))
   }
 
   /** PERSONALIZED PageRank [random walk with restart to a seed set] in
@@ -92,50 +73,54 @@ object Graph {
     * that global PageRank's uniform teleport washes out.
     *
     * Scale shape: identical to [[pageRank]] — one node-keyed shuffle
-    * per round, eager per-round checkpoints, superseded blocks freed.
-    * Seeds ride as a persisted flag column on the node spine (never a
-    * driver-side collect). */
+    * per round under [[CacheScope.iterate]]. Seeds ride as a persisted
+    * flag column on the node spine (never a driver-side collect). */
   def personalizedPageRank(pairs: DataFrame, aCol: String, bCol: String,
       seeds: DataFrame, iters: Int = 3,
       dampNum: Long = 85L, dampDen: Long = 100L,
       assumeUnique: Boolean = false): DataFrame = {
     require(iters >= 1 && dampNum >= 0 && dampNum <= dampDen,
       s"need iters >= 1 and 0 <= dampNum <= dampDen, got $iters, $dampNum/$dampDen")
-    // assumeUnique: see [[pageRank]]
-    val doubled = pairs.select(F.col(aCol).as("src"), F.col(bCol).as("dst"))
-      .unionByName(pairs.select(F.col(bCol).as("src"), F.col(aCol).as("dst")))
-    val edges = CacheScope.persist(
-      if (assumeUnique) doubled else doubled.distinct())
-    val degrees = CacheScope.persist(
-      edges.groupBy(F.col("src").as("v")).agg(F.count(F.lit(1)).as("deg")))
+    val (edges, degrees) = walkGraph(pairs, aCol, bCol, assumeUnique)
     val spine = CacheScope.persist(
       degrees.select("v")
         .join(seeds.select(F.col(seeds.columns.head).as("v")).distinct()
           .withColumn("_s", F.lit(1L)), Seq("v"), "left")
         .select(F.col("v"), F.coalesce(F.col("_s"), F.lit(0L)).as("is_seed")))
+    spine.join(dampedWalk(edges, degrees, spine, iters, dampNum, dampDen), "v")
+      .select(F.col("v"), F.col("is_seed"), F.col("rank").as("rank_fp"),
+        F.round(F.col("rank").cast("double") / SCALE, 6).as("rank"))
+  }
+
+  /** The persisted (undirected edges, out-degrees) pair the two walks
+    * share. */
+  private def walkGraph(pairs: DataFrame, aCol: String, bCol: String,
+      assumeUnique: Boolean): (DataFrame, DataFrame) = {
+    val edges = undirected(pairs, aCol, bCol, assumeUnique)
+    (edges, CacheScope.persist(
+      edges.groupBy(F.col("src").as("v")).agg(F.count(F.lit(1)).as("deg"))))
+  }
+
+  /** `iters` rounds of the damped fixed-point walk both PageRanks run:
+    * rank₀ = is_seed·SCALE, rank'(v) = is_seed·(den−num)·SCALE/den +
+    * num·Σ_{u→v}(rank(u) div deg(u)) div den. `spine` is (v, is_seed)
+    * over every vertex; the left join + coalesce keeps a vertex with no
+    * in-edges. Returns (v, rank). */
+  private def dampedWalk(edges: DataFrame, degrees: DataFrame,
+      spine: DataFrame, iters: Int, dampNum: Long, dampDen: Long): DataFrame = {
     val teleport = (dampDen - dampNum) * SCALE / dampDen
-    var ranks = spine.select(F.col("v"),
-      F.expr(s"is_seed * $SCALE").as("rank"))
-    var prev: DataFrame = null
-    for (_ <- 1 to iters) {
+    val init = spine.select(F.col("v"), F.expr(s"is_seed * $SCALE").as("rank"))
+    CacheScope.iterate(init, iters) { ranks =>
       val contrib = edges
         .join(ranks.withColumnRenamed("v", "src"), "src")
         .join(degrees.withColumnRenamed("v", "src"), "src")
-        .select(F.col("dst").as("v"),
-          F.expr("rank div deg").as("_share"))
+        .select(F.col("dst").as("v"), F.expr("rank div deg").as("_share"))
         .groupBy("v").agg(F.sum("_share").as("_in"))
-      val nextPlan = spine.join(contrib, Seq("v"), "left")
+      spine.join(contrib, Seq("v"), "left")
         .select(F.col("v"),
           F.expr(s"is_seed * $teleport + " +
             s"($dampNum * coalesce(_in, 0L)) div $dampDen").as("rank"))
-      val next = CacheScope.checkpoint(nextPlan, eager = true)
-      if (prev != null) CacheScope.unpersistCheckpoint(prev)
-      prev = next
-      ranks = next
-    }
-    spine.join(ranks, "v")
-      .select(F.col("v"), F.col("is_seed"), F.col("rank").as("rank_fp"),
-        F.round(F.col("rank").cast("double") / SCALE, 6).as("rank"))
+    }._1
   }
 
   /** Exact triangle count via degree orientation [Cohen 2009 / the
@@ -155,7 +140,7 @@ object Graph {
     * `aCol < bCol`. */
   def triangleCount(pairs: DataFrame, aCol: String, bCol: String,
       assumeUnique: Boolean = false): DataFrame = {
-    // assumeUnique: see [[pageRank]]
+    // assumeUnique: see [[undirected]]
     val base0 = pairs.select(F.col(aCol).as("a"), F.col(bCol).as("b"))
     val e = CacheScope.persist(if (assumeUnique) base0 else base0.distinct())
     val deg = e.select(F.col("a").as("v"))
@@ -191,40 +176,28 @@ object Graph {
     * same contract as [[pageRank]].
     *
     * Scale shape: one (edges ⋈ labels) shuffle plus two map-side-
-    * combined aggregates per round; edges persisted once; per-round
-    * labels eagerly checkpointed with the predecessor's blocks freed
-    * immediately (iterative-join lineage otherwise grows linearly in
-    * rounds; state in flight stays at two node-frames). Synchronous
-    * updates + fixed rounds instead of
-    * the paper's asynchronous sweep: async is inherently order-
-    * dependent — exactly what a distributed, oracle-checked operator
-    * must not be. Returns (v, community). */
+    * combined aggregates per round; edges persisted once; the per-round
+    * lineage cut and free is [[CacheScope.iterate]]'s fixed-count
+    * policy. Synchronous updates + fixed rounds instead of the paper's
+    * asynchronous sweep: async is inherently order-dependent — exactly
+    * what a distributed, oracle-checked operator must not be. Returns
+    * (v, community). */
   def labelPropagation(pairs: DataFrame, aCol: String, bCol: String,
       iters: Int = 4, assumeUnique: Boolean = false): DataFrame = {
     require(iters >= 1, s"need iters >= 1, got $iters")
-    // assumeUnique: see [[pageRank]]
-    val doubled = pairs.select(F.col(aCol).as("src"), F.col(bCol).as("dst"))
-      .unionByName(pairs.select(F.col(bCol).as("src"), F.col(aCol).as("dst")))
-    val edges = CacheScope.persist(
-      if (assumeUnique) doubled else doubled.distinct())
-    var labels = edges.select(F.col("src").as("v")).distinct()
+    val edges = undirected(pairs, aCol, bCol, assumeUnique)
+    val init = edges.select(F.col("src").as("v")).distinct()
       .select(F.col("v"), F.col("v").as("lbl"))
-    var prev: DataFrame = null
-    for (_ <- 1 to iters) {
-      val nextPlan = edges
+    val (last, _) = CacheScope.iterate(init, iters) { labels =>
+      edges
         .join(labels.withColumnRenamed("v", "dst"), "dst")
         .groupBy(F.col("src").as("v"), F.col("lbl"))
         .agg(F.count(F.lit(1)).as("c"))
         .groupBy("v")
         .agg(F.min(F.struct(F.negate(F.col("c")), F.col("lbl"))).as("_m"))
         .select(F.col("v"), F.col("_m.lbl").as("lbl"))
-      // eager + free-the-predecessor: see pageRank's loop
-      val next = CacheScope.checkpoint(nextPlan, eager = true)
-      if (prev != null) CacheScope.unpersistCheckpoint(prev)
-      prev = next
-      labels = next
     }
-    labels.select(F.col("v"), F.col("lbl").as("community"))
+    last.select(F.col("v"), F.col("lbl").as("community"))
   }
 
   /** One deterministic Louvain-style local-move round [Blondel et al.
@@ -374,7 +347,7 @@ object Graph {
     * `aCol < bCol`. */
   def localClustering(pairs: DataFrame, aCol: String,
       bCol: String, assumeUnique: Boolean = false): DataFrame = {
-    // assumeUnique: see [[pageRank]]
+    // assumeUnique: see [[undirected]]
     val base0 = pairs.select(F.col(aCol).as("a"), F.col(bCol).as("b"))
     val e = CacheScope.persist(if (assumeUnique) base0 else base0.distinct())
     val deg = e.select(F.col("a").as("v"))
@@ -570,7 +543,7 @@ object Graph {
     * hold each undirected edge once with `aCol < bCol`. */
   def localClusteringSampled(pairs: DataFrame, aCol: String,
       bCol: String, k: Int, assumeUnique: Boolean = false): DataFrame = {
-    // assumeUnique: see [[pageRank]]
+    // assumeUnique: see [[undirected]]
     val base0 = pairs.select(F.col(aCol).as("a"), F.col(bCol).as("b"))
     val e = CacheScope.persist(if (assumeUnique) base0 else base0.distinct())
     val dir = e.select(F.col("a").as("u"), F.col("b").as("v"))
@@ -617,10 +590,12 @@ object Graph {
     * convergence read (Σ|Δ| over fixed-point scores that each sum to
     * ~SCALE, so e.g. 2e7 ≈ 2 % of total mass still moving).
     *
-    * Scale shape: the pageRank iterative-frame discipline — per rung
-    * two edge-linear join+aggregate passes (no window, map-side
-    * combined), each rung's node frame EAGERLY checkpointed and the
-    * superseded rung's blocks freed, 1-row normalizers broadcast. */
+    * Scale shape: per rung two edge-linear join+aggregate passes (no
+    * window, map-side combined), 1-row normalizers broadcast. The state
+    * is ONE node frame per rung, (v, hub, auth, prev_hub, prev_auth) —
+    * each half-rung left-joins its raw scores onto it, the previous
+    * rung's scores ride along for the residual — under
+    * [[CacheScope.iterate]]'s fixed-count policy. */
   def hits(edgesIn: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 2, assumeUnique: Boolean = false): (DataFrame, DataFrame) = {
     require(iters >= 1, s"need iters >= 1, got $iters")
@@ -628,76 +603,51 @@ object Graph {
     // by construction — the defensive distinct was a full extra shuffle
     val base = edgesIn.select(F.col(srcCol).as("src"), F.col(dstCol).as("dst"))
     val edges = CacheScope.persist(if (assumeUnique) base else base.distinct())
+    // persisted: rung 1 reads the node spine from several subtrees (both
+    // half-rungs' raw frames and joins), which would each recompute the
+    // distinct
     val nodes = CacheScope.persist(
       edges.select(F.col("src").as("v"))
         .unionByName(edges.select(F.col("dst").as("v"))).distinct())
 
     // one L1-normalized half-rung: raw(v) = Σ join-side score, then
-    // score' = raw·SCALE div Σraw (exact integers end to end)
-    def halfRung(scores: DataFrame, scoreCol: String, joinOn: String,
+    // score' = raw·SCALE div Σraw (exact integers end to end), appended
+    // to the node-frame `state` as `outCol`
+    def halfRung(state: DataFrame, scoreCol: String, joinOn: String,
         outKey: String, outCol: String): DataFrame = {
       // raw is PERSISTED (r15, §2.4): the L1 normalizer `tot` and the
       // node left-join are two separate subtrees of the rung's plan —
       // unpersisted, the edge join + aggregate executed TWICE per half-
-      // rung (8 edge passes per 2-iter HITS instead of 4; AQE does not
-      // reuse exchanges across the broadcast boundary). Node-sized frame.
+      // rung (AQE does not reuse exchanges across the broadcast
+      // boundary). Node-sized frame.
       val raw = CacheScope.persist(edges
-        .join(scores.withColumnRenamed("v", joinOn), joinOn)
+        .join(state.select(F.col("v").as(joinOn), F.col(scoreCol)), joinOn)
         .groupBy(F.col(outKey).as("v"))
         .agg(F.sum(F.expr(s"CAST($scoreCol AS DECIMAL(38,0))")).as("_raw")))
       val tot = raw.agg(F.sum("_raw").as("_t"))
-      nodes.join(raw, Seq("v"), "left")
+      state.join(raw, Seq("v"), "left")
         .crossJoin(F.broadcast(tot))
-        .select(F.col("v"), F.expr(
+        .select(state.columns.map(F.col).toSeq :+ F.expr(
           s"""CASE WHEN _t IS NULL OR _t = 0 THEN 0L ELSE
              |CAST(coalesce(_raw, CAST(0 AS DECIMAL(38,0))) * $SCALE
-             |     div _t AS BIGINT) END""".stripMargin).as(outCol))
+             |     div _t AS BIGINT) END""".stripMargin).as(outCol): _*)
     }
 
-    var hubs = nodes.select(F.col("v"), F.lit(SCALE).as("hub"))
-    var auths: DataFrame = null
-    var prevHubs: DataFrame = null
-    var prevAuths: DataFrame = null
-    var oldHubCp: DataFrame = null
-    var oldAuthCp: DataFrame = null
-    for (_ <- 1 to iters) {
-      // auth rung reads hubs over in-edges; hub rung reads the FRESH
-      // auths over out-edges — the classical update order
-      val nextAuths = CacheScope.checkpoint(
-        halfRung(hubs, "hub", "src", "dst", "auth"), eager = true)
-      val nextHubs = CacheScope.checkpoint(
-        halfRung(nextAuths, "auth", "dst", "src", "hub"), eager = true)
-      // free the rung SUPERSEDED two generations back — the last two
-      // rungs stay live for the residual read
-      if (oldHubCp != null) CacheScope.unpersistCheckpoint(oldHubCp)
-      if (oldAuthCp != null) CacheScope.unpersistCheckpoint(oldAuthCp)
-      oldHubCp = prevHubs; oldAuthCp = prevAuths
-      prevHubs = hubs; prevAuths = auths
-      hubs = nextHubs; auths = nextAuths
+    // auth rung reads hubs over in-edges; hub rung reads the FRESH auths
+    // over out-edges — the classical update order. auth₀ = 0, so rung 1's
+    // auth residual is its full mass.
+    val init = nodes.select(F.col("v"), F.lit(SCALE).as("hub"), F.lit(0L).as("auth"))
+    val (last, _) = CacheScope.iterate(init, iters) { s =>
+      val prev = s.select(F.col("v"), F.col("hub").as("prev_hub"),
+        F.col("auth").as("prev_auth"))
+      halfRung(halfRung(prev, "prev_hub", "src", "dst", "auth"),
+        "auth", "dst", "src", "hub")
     }
-    // only the last two rungs feed the residual read — free the
-    // grandparent rungs that survived the final iteration (at
-    // iters >= 3 these are superseded checkpoints; at iters = 2
-    // oldHubCp is the never-persisted hub-init frame, a no-op free)
-    if (oldHubCp != null) CacheScope.unpersistCheckpoint(oldHubCp)
-    if (oldAuthCp != null) CacheScope.unpersistCheckpoint(oldAuthCp)
-    val scores = hubs
-      .select(F.col("v"), F.col("hub").as("hub_fp"))
-      .join(auths.select(F.col("v"), F.col("auth").as("auth_fp")), "v")
-    val residual =
-      if (prevHubs == null)
-        scores.agg(F.lit(-1L).as("hub_resid_l1"),
-          F.lit(-1L).as("auth_resid_l1")) // iters = 1: no prior rung
-      else {
-        val h = hubs.join(prevHubs.withColumnRenamed("hub", "_ph"), "v")
-          .agg(F.sum(F.expr("abs(hub - _ph)")).as("hub_resid_l1"))
-        val a = auths.join(
-            (if (prevAuths == null)
-              nodes.select(F.col("v"), F.lit(0L).as("_pa"))
-            else prevAuths.withColumnRenamed("auth", "_pa")), "v")
-          .agg(F.sum(F.expr("abs(auth - _pa)")).as("auth_resid_l1"))
-        h.crossJoin(F.broadcast(a))
-      }
+    val scores = last.select(F.col("v"), F.col("hub").as("hub_fp"),
+      F.col("auth").as("auth_fp"))
+    val residual = last.agg(
+      F.sum(F.expr("abs(hub - prev_hub)")).as("hub_resid_l1"),
+      F.sum(F.expr("abs(auth - prev_auth)")).as("auth_resid_l1"))
     (scores, residual)
   }
 

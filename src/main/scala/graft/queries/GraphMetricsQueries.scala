@@ -1062,11 +1062,10 @@ object GraphMetricsQueries {
     * rungs (broadcast 1-row frame) — the convergence read production
     * uses to pick depth.
     *
-    * Scale shape: pageRank's iterative-frame discipline — per rung two
-    * edge-linear join+aggregate passes (map-side combined, no window),
-    * rung state eagerly checkpointed with superseded blocks freed,
-    * 1-row normalizers broadcast. Oracle = the identical rungs
-    * unrolled as CTEs. */
+    * Scale shape: per rung two edge-linear join+aggregate passes
+    * (map-side combined, no window), one rung-state frame per rung under
+    * [[graft.operators.CacheScope.iterate]], 1-row normalizers
+    * broadcast. Oracle = the identical rungs unrolled as CTEs. */
   private val hitsScores = QueryDef(
     "hits_scores",
     (s, d) => {

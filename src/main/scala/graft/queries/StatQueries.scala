@@ -329,7 +329,7 @@ object StatQueries {
     * MULTI-EDGES — min-hop BFS is invariant to edge multiplicity,
     * frontier-level distinct absorbs it, and skipping the edge-dedup
     * shuffle of the largest intermediate measured 40% faster at sf0.1
-    * (5.0 → 3.0 s, tools/ReachProf A/B; D23 keeps the distinct
+    * (5.0 → 3.0 s, `runMain graft.Bench graph_reach` A/B; D23 keeps the distinct
     * because degree semantics need it). Then `hops` joins against a
     * frontier that shrinks monotonically; each round is one shuffle on
     * node id. Fixed hop budget ⇒ bounded rounds, no convergence loop. */

@@ -124,15 +124,17 @@ object StreamingQueries {
     * cost item): the partition count binds at stream START, and every
     * extra shuffle partition is an extra state store instantiated,
     * checkpointed and committed PER micro-batch — profiled at sf0.1
-    * (tools/StreamProfile) a stateful drain drops ~0.3–0.9 s going
-    * 32 → 8 partitions with identical results. Queries that already
+    * a stateful drain drops ~0.3–0.9 s going 32 → 8 partitions with
+    * identical results (re-measure per query with
+    * `runMain graft.Bench <names>`). Queries that already
     * picked a tighter value via [[withStatePartitions]] keep it (the
     * cap takes the MIN with the surrounding setting); at production
     * scale state-partition count is a deployment choice, not a plan
     * property. */
   /** tmpfs checkpoint root (r9): the offset/commit WAL and state-store
     * files fsync per micro-batch — ~100 ms/batch of pure log IO on the
-    * disk-backed default temp dir, measured with `tools/StreamProbe`.
+    * disk-backed default temp dir (per-layer attribution:
+    * `python3 perfbench/run.py --trace 1`).
     * A fresh per-drain directory under /dev/shm (when present) removes
     * the fsync cost with identical semantics; each drain's dir is
     * deleted after the sink is read. Production points
@@ -168,8 +170,8 @@ object StreamingQueries {
     }
   }
 
-  /** Per-drain state-store hygiene confs (r10, A/B'd in
-    * tools/StreamSuiteProf): a 1–2 micro-batch AvailableNow drain never
+  /** Per-drain state-store hygiene confs (r10, A/B'd with
+    * `runMain graft.Bench <names>`): a 1–2 micro-batch AvailableNow drain never
     * benefits from the defaults tuned for long-lived streams —
     * maintenance (snapshot compaction) firing mid-drain contends with
     * the batch itself, and retaining 100 checkpoint versions is dead
@@ -189,13 +191,13 @@ object StreamingQueries {
     // complete mode the sink always holds the last FULL result and the
     // watermark never evicts state, so an empty wrap-up batch re-emits
     // the same table at ~0.5-0.8 s of state-store/plan overhead
-    // (StreamProbe). APPEND-mode stateful queries KEEP it — it is what
+    // (measured per batch at sf0.1). APPEND-mode stateful queries KEEP it — it is what
     // emits their watermark-finalized rows.
     val noData = if (mode == "complete") "false" else "true"
     // suite cap 8 → 4 (r10): each shuffle partition is a state store
     // instantiated + committed per micro-batch, and no G-query's state
-    // needs more than a handful of stores at bench SF — A/B'd in
-    // StreamSuiteProf (tumbling 1.8 → 1.3 s, pii 1.15 → 0.6 s, suite
+    // needs more than a handful of stores at bench SF — A/B'd with
+    // `runMain graft.Bench` (tumbling 1.8 → 1.3 s, pii 1.15 → 0.6 s, suite
     // −15–25%). Production sizes this to state volume via deployment
     // conf, exactly like the previous 8.
     val q = withStatePartitions(s,
@@ -471,8 +473,8 @@ object StreamingQueries {
       // state partitioning is fixed at the query's first run, and the
       // per-partition store overhead dominates when state is modest —
       // size it to the state volume, not the session's scan parallelism
-      // (measured 8.2 s → ~3 s at sf0.1 going 32 → 8; see
-      // tools/StreamJoinProf). Restored after the drain.
+      // (measured 8.2 s → ~3 s at sf0.1 going 32 → 8 with
+      // `runMain graft.Bench`). Restored after the drain.
       val prev = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", "8")
       try {
@@ -508,8 +510,7 @@ object StreamingQueries {
   /** Stream-stream LEFT OUTER join: unmatched clicks emit their null
     * row only when the watermark passes the point where a purchase
     * could still arrive — the state-EVICTION semantics inner joins
-    * never exercise (probe in tools/StreamJoinProf confirms the
-    * AvailableNow finalizing batch emits them).
+    * never exercise (the AvailableNow finalizing batch emits them).
     *
     * Null emission near the stream's end depends on where the final
     * watermark stops — and with two watermarked sources that is the

@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.json4s._
+
 /** Machine check over the per-query sweep telemetry Bench records to
   * `bench_diag.json` (r14, the r13 verdict's item 6: the r12 "+13 %
   * diffuse inflation" and its r13 root-causing were arbitrated by
@@ -23,6 +25,9 @@ package graft.tools
   *    than [[STORAGE_MAX_MB]] MB resident fails (healthy queries
   *    leave ≤ ~100 MB of shared-session residue; a leaked
   *    corpus-scale frame is GBs).
+  *  - **Failed queries**: a query that threw is not timed (Bench lists
+  *    it under `failed`), and any entry there fails the check — a
+  *    crash must never pass as a fast sweep.
   */
 object DiagCheck {
 
@@ -51,25 +56,28 @@ object DiagCheck {
       gcLateMs: Double, storageMaxMb: Long,
       storageOffenders: Seq[(String, Long)],
       normalizedRatio: Option[Double] = None,
-      diskOffenders: Seq[(String, Long)] = Nil) {
-    def json: String = {
-      def f(v: Double) = String.format(java.util.Locale.ROOT, "%.3f",
-        Double.box(v))
+      diskOffenders: Seq[(String, Long)] = Nil,
+      failed: Seq[String] = Nil) {
+    def toJson: JObject = {
       def offs(o: Seq[(String, Long)]) =
-        o.map { case (q, m) => s"""\"$q:${m}mb\"""" }
-          .mkString("[", ",", "]")
-      s"""{"pass":${if (pass) 1 else 0},""" +
-        s""""gc_early_ms":${f(gcEarlyMs)},""" +
-        s""""gc_late_ms":${f(gcLateMs)},"storage_max_mb":$storageMaxMb,""" +
-        s""""normalized_ratio":${normalizedRatio.map(f).getOrElse("null")},""" +
-        s""""disk_offenders":${offs(diskOffenders)},""" +
-        s""""storage_offenders":${offs(storageOffenders)}}"""
+        Json.strings(o.map { case (q, m) => s"$q:${m}mb" })
+      JObject(
+        "pass" -> JInt(if (pass) 1 else 0),
+        "gc_early_ms" -> Json.fixed3(gcEarlyMs),
+        "gc_late_ms" -> Json.fixed3(gcLateMs),
+        "storage_max_mb" -> JLong(storageMaxMb),
+        "normalized_ratio" -> normalizedRatio.map(Json.fixed3).getOrElse(JNull),
+        "disk_offenders" -> offs(diskOffenders),
+        "storage_offenders" -> offs(storageOffenders),
+        "failed" -> Json.strings(failed))
     }
+    def json: String = Json.compact(toJson)
   }
 
   def evaluate(diag: Seq[Row],
       normalizedRatio: Option[Double] = None,
-      diskMb: Seq[(String, Long)] = Nil): Verdict = {
+      diskMb: Seq[(String, Long)] = Nil,
+      failed: Seq[String] = Nil): Verdict = {
     val q = math.max(1, diag.size / 4)
     val early = diag.take(q).map(_._2.toDouble)
     val late = diag.takeRight(q).map(_._2.toDouble)
@@ -85,8 +93,8 @@ object DiagCheck {
     val diskOffenders = diskMb.collect {
       case (n, mb) if mb > DISK_MAX_MB => (n, mb)
     }
-    Verdict(gcOk && offenders.isEmpty && normOk && diskOffenders.isEmpty,
-      earlyMean, lateMean, storageMax, offenders, normalizedRatio,
-      diskOffenders)
+    Verdict(gcOk && offenders.isEmpty && normOk && diskOffenders.isEmpty &&
+      failed.isEmpty, earlyMean, lateMean, storageMax, offenders,
+      normalizedRatio, diskOffenders, failed)
   }
 }

@@ -47,44 +47,65 @@ class CacheScopeSpec extends SparkSpec {
     // Dataset.unpersist / the old frame registry never touched, so every
     // query running AFTER an iterative graph op inherited its blocks.
     // localCheckpoint registers its RDD in sc.getPersistentRDDs, which
-    // makes both halves of the fix observable.
+    // makes both halves of CacheScope.iterate's policy observable, for
+    // every operator on it: the eager fixed-count path and the lazy
+    // `changed`-column path (both CC variants, forced distributed).
+    import graft.operators.{Dedup, Graph}
     val sc = spark.sparkContext
-    CacheScope.release(spark)
-    val before = sc.getPersistentRDDs.keySet
-    val pairs = spark.range(40).selectExpr("id AS a", "(id + 1) % 40 AS b")
-    val labels = graft.operators.Graph.labelPropagation(pairs, "a", "b", 4)
-    assert(labels.count() == 40)
-    val during = sc.getPersistentRDDs.keySet -- before
-    // 4 rounds ran, but superseded rounds are freed as soon as their
-    // successor materializes: only the FINAL round's checkpoint plus the
-    // persisted edge frame's cache-buffer RDD may remain registered —
-    // without the mid-loop free this set holds every round (5 entries)
-    assert(during.size <= 2,
-      s"expected at most edges + the final round's checkpoint, got $during")
-    CacheScope.release(spark)
-    val after = sc.getPersistentRDDs.keySet -- before
-    assert(after.isEmpty,
-      s"release() must clear checkpoint RDD registrations, got $after")
+    val ring = spark.range(40).selectExpr("id AS a", "(id + 1) % 40 AS b")
+    val path = spark.range(12).selectExpr("id AS a", "id + 1 AS b")
+    val seeds = spark.range(3).toDF("v")
+    // (operator, run to completion → row count, expected rows, frames the
+    // operator itself persists)
+    val cases: Seq[(String, () => Long, Long, Int)] = Seq(
+      ("pageRank", () => Graph.pageRank(ring, "a", "b", iters = 5).count(),
+        40L, 2), // edges, degrees
+      ("personalizedPageRank", () => Graph.personalizedPageRank(
+        ring, "a", "b", seeds, iters = 4).count(), 40L, 3), // + seed spine
+      ("labelPropagation", () => Graph.labelPropagation(ring, "a", "b", 4)
+        .count(), 40L, 1), // edges
+      ("hits", () => {
+        val (scores, resid) = Graph.hits(ring, "a", "b", iters = 3)
+        assert(resid.collect().length == 1)
+        scores.count()
+      }, 40L, 2 + 2 * 3), // edges, nodes, one raw frame per half-rung
+      ("connectedComponents", () => Dedup.connectedComponents(
+        path, "a", "b", localThreshold = 0L).count(), 13L, 2), // edges, round 0
+      ("connectedComponentsStarContract", () =>
+        Dedup.connectedComponentsStarContract(
+          path, "a", "b", localThreshold = 0L).count(), 13L, 2))
+    for ((name, run, rows, persisted) <- cases) {
+      CacheScope.release(spark)
+      val before = sc.getPersistentRDDs.keySet
+      assert(run() == rows, name)
+      val during = sc.getPersistentRDDs.keySet -- before
+      // every round but the last is freed as soon as its successor
+      // materializes — without the mid-loop free this set holds every
+      // round's checkpoint
+      assert(during.size <= persisted + 1,
+        s"$name: expected at most $persisted persisted inputs + the final " +
+          s"round's checkpoint, got $during")
+      CacheScope.release(spark)
+      val after = sc.getPersistentRDDs.keySet -- before
+      assert(after.isEmpty,
+        s"$name: release() must clear checkpoint RDD registrations, got $after")
+    }
   }
 
-  test("releasePersisted frees recomputable frames but keeps checkpoints alive") {
+  test("both CC variants throw when a component outlasts maxRounds") {
+    // a 30-hop path: propagation needs ~30 rounds, pointer jumping ~5 —
+    // two (+ one confirming) is too few for either
+    import graft.operators.Dedup
+    val path = spark.range(30).selectExpr("id AS a", "id + 1 AS b")
+    intercept[IllegalStateException] {
+      Dedup.connectedComponents(path, "a", "b", maxRounds = 2,
+        localThreshold = 0L)
+    }
+    intercept[IllegalStateException] {
+      Dedup.connectedComponentsStarContract(path, "a", "b", maxRounds = 2,
+        localThreshold = 0L)
+    }
     CacheScope.release(spark)
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val p = CacheScope.persist(spark.range(30).toDF("id"))
-    assert(p.count() == 30)
-    val cp = CacheScope.checkpoint(
-      spark.range(10).toDF("x"), eager = true)
-    assert(CacheScope.trackedFrames(spark) == 2)
-    CacheScope.releasePersisted(spark)
-    // the checkpoint entry survives — its blocks are its only copy
-    assert(CacheScope.trackedFrames(spark) == 1)
-    assert(cp.count() == 10, "checkpointed frame must still be readable")
-    // the persisted frame is gone from the cache but recomputes fine
-    assert(p.count() == 30)
-    CacheScope.release(spark)
-    assert(CacheScope.trackedFrames(spark) == 0)
-    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
   test("a derived session's caches release independently") {

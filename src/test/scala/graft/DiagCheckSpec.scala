@@ -86,6 +86,30 @@ class DiagCheckSpec extends SparkSpec {
     assert(v.json.contains("\"leaky_chain:3000mb\""))
   }
 
+  test("a query that failed in the sweep fails the check") {
+    val healthy = rows(Seq.fill(100)(16L))
+    assert(DiagCheck.evaluate(healthy, failed = Nil).pass)
+    val v = DiagCheck.evaluate(healthy, failed = Seq("boom_q"))
+    assert(!v.pass)
+    assert(v.storageOffenders.isEmpty && v.diskOffenders.isEmpty,
+      "it must be the failed-query gate that fired")
+    assert(v.json.contains("\"failed\":[\"boom_q\"]"))
+  }
+
+  test("bench JSON: fixed 3-decimal numbers; a previous record's maps " +
+    "read back") {
+    import graft.tools.Json
+    assert(Json.compact(Json.secs(Seq("b" -> 1.23, "a" -> 0.0004,
+      "c" -> 12.3456))) == """{"b":1.230,"a":0.000,"c":12.346}""")
+    assert(Json.compact(Json.fixed3(Double.NaN)) == "null")
+    val prev = Json.parse(
+      """{"canary":{"start":1.396,"mid":2,"drift":1.060},"queries":{"q":0.5}}""")
+    assert(Json.numbers(prev \ "canary") ==
+      Map("start" -> 1.396, "mid" -> 2.0, "drift" -> 1.06))
+    assert(Json.numbers(prev \ "queries") == Map("q" -> 0.5))
+    assert(Json.numbers(prev \ "absent").isEmpty)
+  }
+
   test("verdict json is well-formed and carries the gate numbers") {
     val v = DiagCheck.evaluate(
       rows(Seq.fill(100)(16L)).updated(3, ("bad", 16L, 0L, 600L)))

@@ -20,6 +20,10 @@ the previous committed record (bench_prev.json) divided by the canary
 machine factor; the normalized ratio must be <= 1.15. A missing block
 (first round, or no prev snapshot) skips that gate.
 
+Failed queries: bench_out.json's "failed" array lists every query that
+threw in the sweep (Bench leaves it out of the timings); any entry fails
+the check, so a crash can never pass as a fast sweep.
+
 Usage: tools/diagcheck.py [bench_diag.json] [bench_out.json]
 """
 import json
@@ -66,6 +70,15 @@ def check_normalized(out_path):
     return r <= NORM_RATIO_MAX, msg
 
 
+def check_failed(out_path):
+    """Returns the queries bench_out.json lists as failed ([] if absent)."""
+    try:
+        out = json.load(open(out_path))
+    except Exception:
+        return []
+    return out.get("failed") or []
+
+
 def main():
     path = sys.argv[1] if len(sys.argv) > 1 else "bench_diag.json"
     out_path = sys.argv[2] if len(sys.argv) > 2 else "bench_out.json"
@@ -76,14 +89,17 @@ def main():
           f"{offenders if offenders else 'none'}")
     norm_ok, norm_msg = check_normalized(out_path)
     print(norm_msg)
-    if not ok or not norm_ok:
+    failed = check_failed(out_path)
+    print(f"failed queries: {failed if failed else 'none'}")
+    if not ok or not norm_ok or failed:
         print("DIAG CHECK FAILED: "
               + ("late-sweep GC accumulation (cleaner debt); "
                  if late > GC_LATE_FACTOR * early + GC_LATE_SLACK_MS
                  else "")
               + (f"leaked persist {offenders}; " if offenders else "")
-              + ("normalized round-over-round inflation"
-                 if not norm_ok else ""))
+              + ("normalized round-over-round inflation; "
+                 if not norm_ok else "")
+              + (f"failed queries {failed}" if failed else ""))
         sys.exit(1)
     print("diag check PASS")
 
