@@ -171,24 +171,8 @@ object Bench {
     val canaryName = "agg_q1"
     def canaryShot(): Double = // a failed canary is 0 and listed in `failed`
       median3(canaryName, SparkEntry.queries(canaryName)).getOrElse(0.0)
-    // r15 (item 5): SPARK_GRAFT_ORDER=community_first|community_last
-    // reorders the heavy graph block for the in-suite-inflation A/B;
-    // anything but the default "alpha" order never persists artifacts
-    // (an A/B run must not clobber the committed record).
-    val order = sys.env.getOrElse("SPARK_GRAFT_ORDER", "alpha")
-    val isCommunity = (n: String) => n.startsWith("community_") ||
-      n == "ktruss_peel"
-    val alpha = SparkEntry.queries.toSeq.sortBy(_._1)
+    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
-    val ordered = order match {
-      case "community_first" =>
-        alpha.filter(q => isCommunity(q._1)) ++
-          alpha.filterNot(q => isCommunity(q._1))
-      case "community_last" =>
-        alpha.filterNot(q => isCommunity(q._1)) ++
-          alpha.filter(q => isCommunity(q._1))
-      case _ => alpha
-    }
     val canaryStart = if (only.isEmpty) canaryShot() else 0.0
     val (firstHalf, secondHalf) = ordered.splitAt(ordered.size / 2)
     def sweep(qs: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
@@ -313,7 +297,7 @@ object Bench {
     // must not clobber the committed full-suite record. `isolated`
     // carries the guard numbers (suite-median vs isolated single-shot
     // for the 5 slowest — SURVEY §6 documents the acceptable delta).
-    if (only.isEmpty && order == "alpha")
+    if (only.isEmpty)
       write(
         java.nio.file.Paths.get("/root/repo/bench_out.json"),
         Json.compact(JObject(
@@ -339,9 +323,7 @@ object Bench {
     // debt; rising storage_mb = a leaked persist) without re-running.
     if (only.isEmpty)
       write(
-        java.nio.file.Paths.get(if (order == "alpha")
-          "/root/repo/bench_diag.json"
-        else s"/root/repo/bench_diag_$order.json"),
+        java.nio.file.Paths.get("bench_diag.json"),
         diag.zip(diagExt).map { case ((n, g, h, st), (cc, dn, dmb)) =>
           Json.compact(JObject("q" -> JString(n), "gc_ms" -> JLong(g),
             "heap_mb" -> JLong(h), "storage_mb" -> JLong(st),

@@ -215,22 +215,9 @@ case class TopKDistinct(
 
 object TopKFunctions {
 
-  /** Registry + Column surface (`top_k(struct(...), k)` and
-    * `top_k_distinct(struct(...), k)` in SQL). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "top_k",
-      exprs => TopKStruct(
-        exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int]).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "top_k_distinct",
-      exprs => TopKDistinct(
-        exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int]).toAggregateExpression(),
-      "built-in")
-  }
+  /** Installs graft's SQL functions ([[GraftFunctions.sql]]), among
+    * them `top_k(struct(...), k)` and `top_k_distinct(struct(...), k)`. */
+  def register(spark: SparkSession): Unit = GraftFunctions.register(spark)
 
   /** Built directly as an expression Column (session-independent — see
     * [[org.apache.spark.sql.graft.ColumnBridge]]); the SQL-name

@@ -194,6 +194,29 @@ object VectorFunctions {
     org.apache.spark.sql.functions.round(
       floatDot(a, b) / (floatNorm(a) * floatNorm(b)), 6)
 
+  /** Installs graft's SQL functions ([[GraftFunctions.sql]]) on an
+    * existing session. */
+  def register(spark: SparkSession): Unit = GraftFunctions.register(spark)
+}
+
+/** Every SQL function graft installs, as (name, expression class,
+  * builder). [[GraftExtensions]] injects this list at session build
+  * time and [[register]] installs it on an existing session, so both
+  * routes expose the same names. */
+object GraftFunctions {
+  private def intArg(e: Expression): Int = e.eval(null).asInstanceOf[Int]
+
+  val sql: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] =
+    Seq(
+      ("float_dot", classOf[FloatDotProduct],
+        e => FloatDotProduct(e(0), e(1))),
+      ("long_dot", classOf[LongDotProduct], e => LongDotProduct(e(0), e(1))),
+      ("md5_prefix60", classOf[Md5Prefix60], e => Md5Prefix60(e(0))),
+      ("top_k", classOf[TopKStruct],
+        e => TopKStruct(e(0), intArg(e(1))).toAggregateExpression()),
+      ("top_k_distinct", classOf[TopKDistinct],
+        e => TopKDistinct(e(0), intArg(e(1))).toAggregateExpression()))
+
   // Weak keys: a stopped session must not be pinned forever in a
   // long-lived JVM that builds many sessions.
   private val registered: java.util.Set[SparkSession] =
@@ -201,36 +224,26 @@ object VectorFunctions {
       java.util.Collections.newSetFromMap(
         new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
 
-  /** Register the native functions for SQL use on an existing session
-    * (idempotent and silent on repeat calls). */
-  def register(spark: SparkSession): Unit = if (registered.add(spark)) {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_dot", exprs => FloatDotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "long_dot", exprs => LongDotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_prefix60", exprs => Md5Prefix60(exprs(0)), "built-in")
-  }
+  /** Register [[sql]] on an existing session (idempotent and silent on
+    * repeat calls). */
+  def register(spark: SparkSession): Unit = if (registered.add(spark))
+    sql.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, build, "built-in")
+    }
 }
 
 /** Session extension (config: spark.sql.extensions=graft.functions.GraftExtensions)
-  * injecting the native functions at session build time. */
+  * injecting [[GraftFunctions.sql]] and the plan rewrites at session
+  * build time. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    ext.injectFunction((
-      FunctionIdentifier("float_dot"),
-      new ExpressionInfo(classOf[FloatDotProduct].getName, "float_dot"),
-      (exprs: Seq[Expression]) => FloatDotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("long_dot"),
-      new ExpressionInfo(classOf[LongDotProduct].getName, "long_dot"),
-      (exprs: Seq[Expression]) => LongDotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("md5_prefix60"),
-      new ExpressionInfo(classOf[Md5Prefix60].getName, "md5_prefix60"),
-      (exprs: Seq[Expression]) => Md5Prefix60(exprs(0))))
+    GraftFunctions.sql.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
     ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
     ext.injectOptimizerRule(_ => graft.plans.SaltedAggRewrite)
     ext.injectOptimizerRule(_ => graft.plans.SaltedJoinRewrite)

@@ -256,10 +256,10 @@ object ExtendedQueries {
     * same provider's scan — schema from the committed manifest, one
     * input partition per committed file. The oracle reads the source
     * directly, so the hash compare covers the WHOLE write+read path:
-    * task staging, commit messages, manifest publication, escaped-TSV
-    * encode/decode (ints, longs, strings, and doubles via the exact
-    * Double.toString round-trip). Commit/abort atomicity itself is
-    * proven by GraftSinkSpec's injected task failures. */
+    * task staging, commit messages, manifest publication, parquet
+    * encode/decode (ints, longs, strings, and bit-exact doubles).
+    * Commit/abort atomicity itself is proven by GraftSinkSpec's
+    * injected task failures. */
   private val sinkRoundtrip = QueryDef(
     "sink_roundtrip",
     (s, d) => {

@@ -1549,8 +1549,8 @@ object StreamingQueries {
     * provider's batch scan. Stateless append stream (timestamps land
     * as integer micros — the sink's int/long/double/string surface),
     * so the whole query is write-path proof: staging per epoch, atomic
-    * manifest chain, epoch markers, TSV decode. At 100 TB this is the
-    * continuous-ingest half of the sink: micro-batches append
+    * manifest chain, epoch markers, parquet decode. At 100 TB this is
+    * the continuous-ingest half of the sink: micro-batches append
     * snapshots, batch readers time-travel over them. */
   private val streamSinkExactlyOnce = QueryDef(
     "stream_sink_exactly_once",

@@ -3,6 +3,8 @@ package graft.sources
 import java.util
 import java.util.UUID
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -11,6 +13,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -27,14 +30,18 @@ import org.apache.spark.unsafe.types.UTF8String
   *    reports the file in its [[WriterCommitMessage]] — nothing under
   *    `_staging/` is ever readable;
   *  - the driver's JOB commit moves the staged files into `data/` and
-  *    then publishes a NEW manifest version `_graft_commit_v<N>.json`
-  *    (written to a temp name and renamed — the single atomic step);
+  *    then publishes a NEW manifest version `_graft_commit_v<N>.json`;
   *    an append manifest lists the previous version's files plus the
   *    new ones, a truncate (SaveMode.Overwrite) manifest lists only
-  *    the new ones. N is resolved AT COMMIT TIME (not plan time), so
-  *    overlapping writers serialize: whoever commits second sees the
-  *    first's snapshot and appends onto it, and the publish step
-  *    retries on a version-name collision instead of clobbering;
+  *    the new ones;
+  *  - publishing is an optimistic-concurrency loop (Delta Lake's
+  *    commit, Armbrust et al., VLDB 2020): read the latest manifest,
+  *    re-check it (epoch idempotence, append schema), build the body
+  *    on it, write it to a temp name and publish that as version
+  *    latest+1 with an atomic NO-CLOBBER step. A writer that loses the
+  *    name to a concurrent commit goes round again on the new latest,
+  *    so overlapping writers serialize and no commit drops another's
+  *    files from the chain;
   *  - an APPEND onto a prior snapshot requires the incoming schema to
   *    match the committed manifest schema by field names and types
   *    (r14 ADVICE: ACCEPT_ANY_SCHEMA disables Spark's own check, and a
@@ -51,23 +58,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *    is unreachable by construction, which GraftSinkSpec proves by
   *    injecting a mid-write task failure.
   *
-  * Row encoding is per-file, named by extension in the manifest:
-  *  - `tsv` (default): escaped TSV (`\t`/`\n`/`\r`/`\\` escaped, null
-  *    = unescapable `\N`), longs/ints as decimal strings and doubles
-  *    via `Double.toString` — an exact round-trip for every supported
-  *    type, which is what lets the DuckDB oracle hash-compare a
-  *    round-tripped table (`sink_roundtrip`);
-  *  - `parquet` (`option("format", "parquet")`): real columnar pages
-  *    through parquet-java's public writer (snappy-compressed,
-  *    optional int32/int64/double/UTF-8 primitives) — the encoding a
-  *    100 TB deployment runs, behind the SAME staging/manifest
-  *    transaction (`sink_time_travel` oracles this path).
-  * Formats interoperate: a snapshot may list files of both kinds and
-  * each partition reader dispatches on the extension. All paths go
-  * through the Hadoop FileSystem API with the SESSION's Hadoop
-  * configuration threaded to executors ([[SerializableHadoopConf]]),
-  * so `file://` in tests and HDFS/S3A on a cluster are the same code
-  * INCLUDING fs.defaultFS/credentials.
+  * Rows are stored as parquet, written through parquet-java's public
+  * writer (snappy pages; optional int32/int64/double/UTF-8 primitives,
+  * so nulls, control characters and every double's bits round-trip
+  * exactly). `option("format", "parquet")` is accepted; any other
+  * format is refused when the write is built. All paths go through the
+  * Hadoop FileSystem API with the SESSION's Hadoop configuration
+  * threaded to executors ([[SerializableHadoopConf]]), so `file://` in
+  * tests and HDFS on a cluster are the same code INCLUDING
+  * fs.defaultFS/credentials.
   */
 /** Java-serializable Hadoop Configuration carrier (the r14 ADVICE fix:
   * `new Configuration()` on executors dropped the session's
@@ -90,6 +89,13 @@ class SerializableHadoopConf(@transient var conf: Configuration)
 object GraftSink {
   val MANIFEST_PREFIX = "_graft_commit_v"
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Best-effort cleanup: a failure is logged as a WARN, not raised. */
+  private[sources] def quietly(what: String)(body: => Any): Unit =
+    try body
+    catch { case NonFatal(e) => log.warn(s"graft sink: $what failed", e) }
+
   /** Driver-side Hadoop conf: the active session's (so fs.defaultFS /
     * S3A settings apply), falling back to defaults off-session (specs
     * that probe manifests before any SparkSession exists). */
@@ -103,6 +109,10 @@ object GraftSink {
 
   private[sources] def fs(p: Path, conf: Configuration): FileSystem =
     p.getFileSystem(conf)
+
+  /** A streaming epoch's staging directory under its query's. */
+  private[sources] def epochDir(stagingDir: Path, epochId: Long): Path =
+    new Path(stagingDir, s"e$epochId")
 
   /** (version, manifestPath) of the latest committed snapshot. */
   private[sources] def latestManifest(root: Path): Option[(Long, Path)] = {
@@ -124,40 +134,66 @@ object GraftSink {
     if (fs(root).exists(p)) Some(p) else None
   }
 
-  private[sources] def readText(p: Path): String = {
+  /** A committed manifest. On disk: line 1 = schema json, then
+    * `#epoch<TAB>qid<TAB>e` lines (the highest committed streaming
+    * epoch per query id), then one `file<TAB>rows` line per data file. */
+  private[sources] case class Manifest(schema: StructType,
+      files: Seq[(String, Long)], epochs: Map[String, Long])
+
+  private[sources] def readManifest(p: Path): Manifest = {
     val in = fs(p).open(p)
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      bytes.toString("UTF-8")
-    } finally in.close()
+    val text =
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    val lines = text.split("\n").toSeq.filter(_.nonEmpty)
+    val (meta, files) = lines.tail.partition(_.startsWith("#"))
+    Manifest(
+      DataType.fromJson(lines.head).asInstanceOf[StructType],
+      files.map { l =>
+        val Array(name, rows) = l.split("\t")
+        (name, rows.toLong)
+      },
+      meta.filter(_.startsWith("#epoch\t"))
+        .map { l =>
+          val parts = l.split("\t")
+          parts(1) -> parts(2).toLong
+        }
+        .groupMapReduce(_._1)(_._2)(math.max))
   }
 
-  /** Manifest body: line 1 = schema json, then one `file<TAB>rows`
-    * line per committed data file. Lines starting with `#` are
-    * metadata (streaming epoch markers) and skipped here. */
-  private[sources] def readManifest(p: Path): (StructType, Seq[(String, Long)]) = {
-    val lines = readText(p).split("\n").toSeq.filter(_.nonEmpty)
-    val schema = DataType.fromJson(lines.head).asInstanceOf[StructType]
-    val files = lines.tail.filterNot(_.startsWith("#")).map { l =>
-      val Array(name, rows) = l.split("\t")
-      (name, rows.toLong)
+  /** The snapshot a read resolves: exactly version `v` when one is
+    * given, else the latest. An uncommitted `v` is an error naming the
+    * latest; a path with no snapshot at all is one only when
+    * `required` (a write to a fresh path infers an empty schema). */
+  private[sources] def snapshot(root: Path, version: Option[Long],
+      required: Boolean): Option[Manifest] = {
+    val manifest = version match {
+      case Some(v) => Some(manifestAt(root, v).getOrElse(
+        throw new IllegalArgumentException(
+          s"graft sink at $root has no committed version $v (latest: " +
+            s"${latestManifest(root).map(_._1).getOrElse("none")})")))
+      case None => latestManifest(root).map(_._2)
     }
-    (schema, files)
+    if (manifest.isEmpty && required) throw new IllegalStateException(
+      s"graft sink at $root has no committed snapshot")
+    manifest.map(readManifest)
   }
 
-  /** Streaming epoch markers in a manifest: highest committed epoch
-    * per streaming query id (`#epoch<TAB>qid<TAB>e` lines). */
-  private[sources] def readEpochs(p: Path): Map[String, Long] =
-    readText(p).split("\n").toSeq
-      .filter(_.startsWith("#epoch\t"))
-      .map { l =>
-        val parts = l.split("\t")
-        parts(1) -> parts(2).toLong
-      }
-      .groupMapReduce(_._1)(_._2)(math.max)
+  /** The data files versions (start, end] ADDED: `end`'s files minus
+    * those of version `start` (start ≤ 0 is the empty table, i.e. the
+    * full snapshot). The chain carries files forward on every append,
+    * so the difference is exactly the delta; a truncate in the range
+    * surfaces only the rows written after it. The batch change feed
+    * and the MicroBatchStream both plan through this. */
+  private[sources] def filesAdded(root: Path, start: Long,
+      end: Manifest): Seq[(String, Long)] =
+    if (start <= 0) end.files
+    else {
+      val before = manifestAt(root, start)
+        .map(readManifest(_).files.map(_._1).toSet)
+        .getOrElse(throw new IllegalArgumentException(
+          s"graft sink at $root has no committed startVersion $start"))
+      end.files.filterNot { case (n, _) => before(n) }
+    }
 
   private[sources] def checkSchema(schema: StructType): Unit =
     schema.fields.foreach { f =>
@@ -171,42 +207,12 @@ object GraftSink {
 
   /** Append-compatibility: same field names and types in the same
     * order as the committed snapshot (nullability is not load-bearing
-    * — both encodings mark nulls explicitly per cell). */
+    * — every parquet column is optional). */
   private[sources] def compatible(a: StructType, b: StructType): Boolean =
     a.fields.length == b.fields.length &&
       a.fields.zip(b.fields).forall { case (x, y) =>
         x.name == y.name && x.dataType == y.dataType
       }
-
-  private[sources] def escape(s: String): String = {
-    val b = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '\\' => b.append("\\\\")
-      case '\t' => b.append("\\t")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case c => b.append(c)
-    }
-    b.toString
-  }
-
-  private[sources] def unescape(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '\\' => b.append('\\'); i += 2
-          case 't' => b.append('\t'); i += 2
-          case 'n' => b.append('\n'); i += 2
-          case 'r' => b.append('\r'); i += 2
-          case o => b.append(o); i += 2
-        }
-      } else { b.append(c); i += 1 }
-    }
-    b.toString
-  }
 
   /** Parquet MessageType for a (pre-checked) sink schema: optional
     * primitives, strings as UTF-8-annotated binary. */
@@ -235,23 +241,13 @@ class GraftAtomicSinkProvider extends TableProvider {
   /** Reads infer from the requested (or latest) committed manifest; a
     * fresh path (write-only so far) infers an empty schema — the scan
     * builder throws the real "no committed snapshot" error if a read
-    * follows. */
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val path = new Path(options.get("path"))
-    val manifest = Option(options.get("version")) match {
-      case Some(v) =>
-        // only readers pass `version`; a missing snapshot must fail
-        // HERE with the real error (an empty inferred schema would
-        // surface as an unresolved-column analysis error downstream)
-        Some(GraftSink.manifestAt(path, v.toLong).getOrElse(
-          throw new IllegalArgumentException(
-            s"graft sink at $path has no committed version $v " +
-              s"(latest: ${GraftSink.latestManifest(path).map(_._1)
-                .getOrElse("none")})")))
-      case None => GraftSink.latestManifest(path).map(_._2)
-    }
-    manifest.map(GraftSink.readManifest(_)._1).getOrElse(new StructType())
-  }
+    * follows. An uncommitted `version` (only readers pass one) fails
+    * HERE: an empty inferred schema would surface downstream as an
+    * unresolved-column analysis error instead. */
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    GraftSink.snapshot(new Path(options.get("path")),
+      Option(options.get("version")).map(_.toLong), required = false)
+      .map(_.schema).getOrElse(new StructType())
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
@@ -274,26 +270,26 @@ class GraftSinkTable(path: String, schema0: StructType)
       Option(options.get("version")).map(_.toLong),
       Option(options.get("startVersion")).map(_.toLong))
 
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
+    val format = info.options.getOrDefault("format", "parquet")
+    require(format.equalsIgnoreCase("parquet"),
+      s"graft sink writes parquet only, got format '$format'")
     new GraftSinkWriteBuilder(path, info.schema(), info.queryId(),
-      truncate = false,
-      format = Option(info.options.get("format")).getOrElse("tsv"))
+      truncate = false)
+  }
 }
 
 class GraftSinkWriteBuilder(path: String, schema: StructType,
-    queryId: String, truncate: Boolean, format: String)
+    queryId: String, truncate: Boolean)
     extends WriteBuilder with SupportsTruncate {
   override def truncate(): WriteBuilder =
-    new GraftSinkWriteBuilder(path, schema, queryId, truncate = true, format)
+    new GraftSinkWriteBuilder(path, schema, queryId, truncate = true)
   override def build(): Write = new Write {
     GraftSink.checkSchema(schema)
-    require(format == "tsv" || format == "parquet",
-      s"graft sink format must be tsv or parquet, got '$format'")
     override def toBatch: BatchWrite =
-      new GraftSinkBatchWrite(path, schema, queryId, truncate, format)
-    override def toStreaming: org.apache.spark.sql.connector.write
-        .streaming.StreamingWrite =
-      new GraftSinkStreamingWrite(path, schema, queryId, format)
+      new GraftSinkBatchWrite(path, schema, queryId, truncate)
+    override def toStreaming: StreamingWrite =
+      new GraftSinkStreamingWrite(path, schema, queryId)
   }
 }
 
@@ -301,53 +297,39 @@ case class GraftSinkCommitMessage(stagedFile: String, fileName: String,
     rows: Long) extends WriterCommitMessage
 
 class GraftSinkBatchWrite(path: String, schema: StructType,
-    queryId: String, truncate: Boolean, format: String) extends BatchWrite {
+    queryId: String, truncate: Boolean) extends BatchWrite {
   private val root = new Path(path)
   private val stagingDir = new Path(root, s"_staging/$queryId")
   private val sconf = new SerializableHadoopConf(GraftSink.driverConf())
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftSinkWriterFactory(stagingDir.toString, schema.json, format,
-      sconf)
+    new GraftSinkWriterFactory(stagingDir.toString, schema.json, sconf)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     GraftSinkCommit.publish(root, stagingDir, schema, truncate,
       messages.collect { case m: GraftSinkCommitMessage => m },
       epochMarker = None)
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    // no manifest was published, so nothing became visible; drop the
-    // whole staging directory (covers tasks that never sent a message)
-    try GraftSink.fs(root).delete(stagingDir, true)
-    catch { case _: Throwable => () }
-  }
+  // no manifest was published, so nothing became visible; drop the
+  // whole staging directory (covers tasks that never sent a message)
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftSink.quietly(s"batch abort of $stagingDir") {
+      GraftSink.fs(root).delete(stagingDir, true)
+    }
 }
 
 /** The shared manifest-publication protocol — batch and streaming
   * commits differ only in staging dir and the idempotence marker. */
 private[sources] object GraftSinkCommit {
+  /** Each lost attempt means another writer published in between, so
+    * running out is a livelock, not contention; it fails the commit. */
+  private val MaxAttempts = 64
+
   def publish(root: Path, stagingDir: Path, schema: StructType,
       truncate: Boolean, mine: Seq[GraftSinkCommitMessage],
       epochMarker: Option[(String, Long)]): Unit = {
     val fs = GraftSink.fs(root)
-    // snapshot resolution happens HERE, not at plan time: an
-    // overlapping writer that committed since this job was planned is
-    // visible now, so its snapshot is what an append carries forward
-    val latest = GraftSink.latestManifest(root)
-    val priorEpochs: Map[String, Long] =
-      latest.map { case (_, m) => GraftSink.readEpochs(m) }
-        .getOrElse(Map.empty)
-    // streaming EXACTLY-ONCE: a re-committed epoch (driver recovery
-    // replays the last epoch against the same checkpoint) is a no-op —
-    // the marker proves the snapshot already holds its rows, and the
-    // retry's staged files must be dropped, not double-published
-    epochMarker.foreach { case (qid, epoch) =>
-      if (priorEpochs.get(qid).exists(_ >= epoch)) {
-        try fs.delete(stagingDir, true) catch { case _: Throwable => () }
-        return
-      }
-    }
     val dataDir = new Path(root, "data")
     fs.mkdirs(dataDir)
     mine.foreach { m =>
@@ -356,51 +338,83 @@ private[sources] object GraftSinkCommit {
       if (!ok) throw new java.io.IOException(
         s"commit failed to publish ${m.stagedFile}")
     }
-    val prior: Seq[(String, Long)] =
-      if (truncate) Seq.empty
-      else latest.map { case (_, m) =>
-        val (priorSchema, priorFiles) = GraftSink.readManifest(m)
-        // r14 ADVICE (medium): ACCEPT_ANY_SCHEMA disables Spark's own
-        // append validation, and a reordered/retyped append would
-        // reinterpret the carried-forward files' cells under the new
-        // header — refuse instead
-        if (!GraftSink.compatible(schema, priorSchema))
-          throw new IllegalArgumentException(
-            s"graft sink append schema ${schema.simpleString} is " +
-              s"incompatible with committed snapshot schema " +
-              s"${priorSchema.simpleString}; use SaveMode.Overwrite " +
-              "to replace the table")
-        priorFiles
-      }.getOrElse(Seq.empty)
-    val epochs: Map[String, Long] =
-      (if (truncate) Map.empty[String, Long] else priorEpochs) ++
-        epochMarker.toMap
-    val body = (schema.json +:
-      (epochs.toSeq.sortBy(_._1).map { case (q, e) => s"#epoch\t$q\t$e" } ++
-        (prior ++ mine.map(m => (m.fileName, m.rows)))
-          .map { case (n, r) => s"$n\t$r" })).mkString("\n")
-    // the ONE atomic step: temp manifest renamed onto its version
-    // name. On stores whose rename fails when the destination exists
-    // (HDFS), a concurrent publish loses the rename and retries at the
-    // next version; the exists-check narrows the same race on local fs
-    val tmp = new Path(root, s".manifest_tmp_${UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    var version = latest.map(_._1).getOrElse(0L) + 1
-    var published = false
-    var attempts = 0
-    while (!published) {
-      val target = new Path(root, s"${GraftSink.MANIFEST_PREFIX}$version.json")
-      if (fs.exists(target)) version += 1
-      else if (fs.rename(tmp, target)) published = true
+    val added = mine.map(m => (m.fileName, m.rows))
+
+    // snapshot resolution happens per ATTEMPT, not at plan time: an
+    // overlapping writer that committed since this job was planned —
+    // or since this commit's last attempt — is what it builds on
+    @annotation.tailrec
+    def attempt(n: Int): Unit = {
+      val latest = GraftSink.latestManifest(root)
+      val prior = latest.map { case (_, m) => GraftSink.readManifest(m) }
+      val priorEpochs = prior.map(_.epochs).getOrElse(Map.empty)
+      // streaming EXACTLY-ONCE: a re-committed epoch (driver recovery
+      // replays the last epoch against the same checkpoint) is a no-op
+      // — the marker proves the snapshot already holds its rows, and
+      // the retry's files must be dropped, not double-published
+      val replayed = epochMarker.exists { case (qid, epoch) =>
+        priorEpochs.get(qid).exists(_ >= epoch)
+      }
+      if (replayed) GraftSink.quietly(s"replayed epoch at $stagingDir") {
+        added.foreach { case (f, _) => fs.delete(new Path(dataDir, f), false) }
+        fs.delete(stagingDir, true)
+      }
       else {
-        attempts += 1
-        if (attempts > 64) throw new java.io.IOException(
-          "commit failed to publish manifest")
-        version += 1
+        val carried: Seq[(String, Long)] =
+          if (truncate) Seq.empty
+          else prior.map { p =>
+            // r14 ADVICE (medium): ACCEPT_ANY_SCHEMA disables Spark's
+            // own append validation, and a reordered/retyped append
+            // would reinterpret the carried-forward files' cells under
+            // the new header — refuse instead
+            if (!GraftSink.compatible(schema, p.schema))
+              throw new IllegalArgumentException(
+                s"graft sink append schema ${schema.simpleString} is " +
+                  s"incompatible with committed snapshot schema " +
+                  s"${p.schema.simpleString}; use SaveMode.Overwrite " +
+                  "to replace the table")
+            p.files
+          }.getOrElse(Seq.empty)
+        val epochs =
+          (if (truncate) Map.empty[String, Long] else priorEpochs) ++
+            epochMarker.toMap
+        val body = (schema.json +:
+          (epochs.toSeq.sortBy(_._1).map { case (q, e) => s"#epoch\t$q\t$e" } ++
+            (carried ++ added).map { case (f, r) => s"$f\t$r" }))
+          .mkString("\n")
+        val tmp = new Path(root, s".manifest_tmp_${UUID.randomUUID()}")
+        val out = fs.create(tmp, true)
+        try out.write(body.getBytes("UTF-8")) finally out.close()
+        val version = latest.map(_._1).getOrElse(0L) + 1
+        val target =
+          new Path(root, s"${GraftSink.MANIFEST_PREFIX}$version.json")
+        if (publishIfAbsent(fs, tmp, target)) fs.delete(stagingDir, true)
+        else if (n + 1 >= MaxAttempts) throw new java.io.IOException(
+          s"commit failed to publish a manifest at $root in $MaxAttempts " +
+            "attempts")
+        else attempt(n + 1)
       }
     }
-    fs.delete(stagingDir, true)
+    attempt(0)
+  }
+
+  /** The ONE atomic step of a commit: `tmp` becomes `target` only if no
+    * file has that name yet. HDFS's `rename` refuses an existing
+    * destination atomically, but the local file system's overwrites it
+    * (concurrent renames onto one name can all report success), so
+    * `file:` paths publish with a hard link, which fails on an existing
+    * name. The temp file never survives the call. */
+  private def publishIfAbsent(fs: FileSystem, tmp: Path,
+      target: Path): Boolean = {
+    def local(p: Path) = java.nio.file.Paths.get(fs.makeQualified(p).toUri)
+    val isLocal = fs.getScheme == "file"
+    val won =
+      if (isLocal)
+        try { java.nio.file.Files.createLink(local(target), local(tmp)); true }
+        catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      else fs.rename(tmp, target)
+    if (isLocal || !won) fs.delete(tmp, false)
+    won
   }
 }
 
@@ -411,113 +425,56 @@ private[sources] object GraftSinkCommit {
   * latest manifest and dropped instead of double-published — the
   * Delta/Iceberg txn-id discipline on this sink's own chain. */
 class GraftSinkStreamingWrite(path: String, schema: StructType,
-    queryId: String, format: String)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
+    queryId: String) extends StreamingWrite {
   private val root = new Path(path)
+  private val stagingDir = new Path(root, s"_staging/$queryId")
   private val sconf = new SerializableHadoopConf(GraftSink.driverConf())
 
-  private def epochStaging(epochId: Long): Path =
-    new Path(root, s"_staging/$queryId/e$epochId")
-
   override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): org.apache.spark.sql.connector.write
-      .streaming.StreamingDataWriterFactory =
-    new GraftSinkStreamingWriterFactory(
-      new Path(root, s"_staging/$queryId").toString, schema.json, format,
-      sconf)
+      info: PhysicalWriteInfo): StreamingDataWriterFactory =
+    new GraftSinkWriterFactory(stagingDir.toString, schema.json, sconf)
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
-    GraftSinkCommit.publish(root, epochStaging(epochId), schema,
-      truncate = false,
+    GraftSinkCommit.publish(root, GraftSink.epochDir(stagingDir, epochId),
+      schema, truncate = false,
       messages.collect { case m: GraftSinkCommitMessage => m },
       epochMarker = Some((queryId, epochId)))
 
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
-    try GraftSink.fs(root).delete(epochStaging(epochId), true)
-    catch { case _: Throwable => () }
-  }
-}
-
-class GraftSinkStreamingWriterFactory(stagingRoot: String,
-    schemaJson: String, format: String, sconf: SerializableHadoopConf)
-    extends org.apache.spark.sql.connector.write.streaming
-    .StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] = {
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val dir = s"$stagingRoot/e$epochId"
-    if (format == "parquet")
-      new GraftSinkParquetWriter(dir, schema, partitionId, taskId,
-        sconf.conf)
-    else new GraftSinkDataWriter(dir, schema, partitionId, taskId,
-      sconf.conf)
-  }
-}
-
-class GraftSinkWriterFactory(stagingDir: String, schemaJson: String,
-    format: String, sconf: SerializableHadoopConf)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int,
-      taskId: Long): DataWriter[InternalRow] = {
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    if (format == "parquet")
-      new GraftSinkParquetWriter(stagingDir, schema, partitionId, taskId,
-        sconf.conf)
-    else
-      new GraftSinkDataWriter(stagingDir, schema, partitionId, taskId,
-        sconf.conf)
-  }
-}
-
-class GraftSinkDataWriter(stagingDir: String, schema: StructType,
-    partitionId: Int, taskId: Long, conf: Configuration)
-    extends DataWriter[InternalRow] {
-  private val fileName =
-    s"part-$partitionId-$taskId-${UUID.randomUUID()}.tsv"
-  private val staged = new Path(new Path(stagingDir), fileName)
-  private val out = {
-    val f = GraftSink.fs(staged, conf)
-    f.mkdirs(staged.getParent)
-    new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      f.create(staged, true), "UTF-8"))
-  }
-  private var rows = 0L
-
-  override def write(row: InternalRow): Unit = {
-    val cells = schema.fields.zipWithIndex.map { case (f, i) =>
-      if (row.isNullAt(i)) "\\N"
-      else f.dataType match {
-        case IntegerType => row.getInt(i).toString
-        case LongType => row.getLong(i).toString
-        case DoubleType => row.getDouble(i).toString
-        case StringType => GraftSink.escape(row.getUTF8String(i).toString)
-        case dt => throw new IllegalStateException(s"unsupported $dt")
-      }
+    val dir = GraftSink.epochDir(stagingDir, epochId)
+    GraftSink.quietly(s"streaming abort of $dir") {
+      GraftSink.fs(root).delete(dir, true)
     }
-    out.write(cells.mkString("\t"))
-    out.write("\n")
-    rows += 1
   }
-
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    GraftSinkCommitMessage(staged.toString, fileName, rows)
-  }
-
-  override def abort(): Unit = {
-    try out.close() catch { case _: Throwable => () }
-    try GraftSink.fs(staged, conf).delete(staged, false)
-    catch { case _: Throwable => () }
-  }
-
-  override def close(): Unit = ()
 }
 
-/** Columnar task writer: parquet-java's public example writer (real
-  * page encoding + snappy), same staging/commit-message protocol as
-  * the TSV writer — the transaction does not care about the encoding. */
+/** Task-side writer factory for both write surfaces: a batch task
+  * stages into `stagingDir`, a streaming task into its epoch's
+  * `e<epoch>` subdirectory of it. */
+class GraftSinkWriterFactory(stagingDir: String, schemaJson: String,
+    sconf: SerializableHadoopConf)
+    extends DataWriterFactory with StreamingDataWriterFactory {
+  private def writer(dir: String, partitionId: Int,
+      taskId: Long): DataWriter[InternalRow] =
+    new GraftSinkParquetWriter(dir,
+      DataType.fromJson(schemaJson).asInstanceOf[StructType], partitionId,
+      taskId, sconf.conf)
+
+  override def createWriter(partitionId: Int,
+      taskId: Long): DataWriter[InternalRow] =
+    writer(stagingDir, partitionId, taskId)
+
+  override def createWriter(partitionId: Int, taskId: Long,
+      epochId: Long): DataWriter[InternalRow] =
+    writer(GraftSink.epochDir(new Path(stagingDir), epochId).toString,
+      partitionId, taskId)
+}
+
+/** Task writer: parquet-java's public example writer (real page
+  * encoding + snappy) into one staged file, reported to the driver's
+  * commit in a [[GraftSinkCommitMessage]]. */
 class GraftSinkParquetWriter(stagingDir: String, schema: StructType,
     partitionId: Int, taskId: Long, conf: Configuration)
     extends DataWriter[InternalRow] {
@@ -560,9 +517,10 @@ class GraftSinkParquetWriter(stagingDir: String, schema: StructType,
   }
 
   override def abort(): Unit = {
-    try writer.close() catch { case _: Throwable => () }
-    try GraftSink.fs(staged, conf).delete(staged, false)
-    catch { case _: Throwable => () }
+    GraftSink.quietly(s"close of aborted $staged")(writer.close())
+    GraftSink.quietly(s"delete of aborted $staged") {
+      GraftSink.fs(staged, conf).delete(staged, false)
+    }
   }
 
   override def close(): Unit = ()
@@ -572,35 +530,16 @@ class GraftSinkParquetWriter(stagingDir: String, schema: StructType,
 
 /** Batch read resolution: `version` pins the snapshot (else latest);
   * `startVersion` turns the scan into a CHANGE-FEED read — exactly the
-  * files versions (start, end] ADDED (the batch twin of the streaming
-  * MicroBatchStream's version-delta planning; startVersion = 0 is the
-  * full snapshot, a truncate in the range surfaces only rows written
-  * after it). */
+  * files versions (start, end] added ([[GraftSink.filesAdded]], the
+  * same planning as the streaming MicroBatchStream; startVersion = 0
+  * is the full snapshot). */
 class GraftSinkScanBuilder(path: String, version: Option[Long],
     startVersion: Option[Long]) extends ScanBuilder {
   override def build(): Scan = {
     val root = new Path(path)
-    val manifest = version match {
-      case Some(v) => GraftSink.manifestAt(root, v).getOrElse(
-        throw new IllegalArgumentException(
-          s"graft sink at $path has no committed version $v " +
-            s"(latest: ${GraftSink.latestManifest(root).map(_._1)
-              .getOrElse("none")})"))
-      case None => GraftSink.latestManifest(root).map(_._2).getOrElse(
-        throw new IllegalStateException(
-          s"graft sink at $path has no committed snapshot"))
-    }
-    val (schema, files) = GraftSink.readManifest(manifest)
-    val delta = startVersion match {
-      case Some(s) if s > 0 =>
-        val startFiles = GraftSink.manifestAt(root, s).map(m =>
-          GraftSink.readManifest(m)._2.map(_._1).toSet).getOrElse(
-          throw new IllegalArgumentException(
-            s"graft sink at $path has no committed startVersion $s"))
-        files.filterNot { case (n, _) => startFiles(n) }
-      case _ => files
-    }
-    new GraftSinkScan(path, schema, delta)
+    val end = GraftSink.snapshot(root, version, required = true).get
+    new GraftSinkScan(path, end.schema,
+      GraftSink.filesAdded(root, startVersion.getOrElse(0L), end))
   }
 }
 
@@ -630,23 +569,16 @@ case class GraftSinkOffset(version: Long)
 
 /** STREAMING read surface (r15): the manifest chain consumed as a
   * stream — each micro-batch is the set of data files a version range
-  * ADDED (the Delta/Iceberg "table as a stream" pattern on this sink's
-  * own chain). Offsets are manifest versions, so restart resumes
-  * exactly where the checkpoint left off and nothing is re-read; the
-  * chain is append-only (appends carry prior files forward), so
-  * files(end) − files(start) is precisely the delta. A TRUNCATE
-  * surfaces only the rows it wrote (its manifest drops prior files —
-  * replaced history is not replayed), which is the documented
-  * change-feed semantics for overwrites. */
+  * ADDED ([[GraftSink.filesAdded]]; the Delta/Iceberg "table as a
+  * stream" pattern on this sink's own chain). Offsets are manifest
+  * versions, so restart resumes exactly where the checkpoint left off
+  * and nothing is re-read. A TRUNCATE surfaces only the rows it wrote
+  * (its manifest drops prior files — replaced history is not
+  * replayed), which is the documented change-feed semantics for
+  * overwrites. */
 class GraftSinkMicroBatchStream(path: String, schema: StructType)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   private val root = new Path(path)
-
-  private def filesAt(version: Long): Set[String] =
-    if (version <= 0) Set.empty
-    else GraftSink.manifestAt(root, version)
-      .map(m => GraftSink.readManifest(m)._2.map(_._1).toSet)
-      .getOrElse(Set.empty)
 
   override def latestOffset():
       org.apache.spark.sql.connector.read.streaming.Offset =
@@ -666,10 +598,9 @@ class GraftSinkMicroBatchStream(path: String, schema: StructType)
       Array[InputPartition] = {
     val s = start.asInstanceOf[GraftSinkOffset].version
     val e = end.asInstanceOf[GraftSinkOffset].version
-    val delta = (filesAt(e) -- filesAt(s)).toSeq.sorted
-    delta.map(name => GraftSinkFilePartition(
-      new Path(new Path(path), s"data/$name").toString): InputPartition)
-      .toArray
+    val added = if (e <= s) Seq.empty else GraftSink.filesAdded(root, s,
+      GraftSink.snapshot(root, Some(e), required = true).get)
+    new GraftSinkScan(path, schema, added).planInputPartitions()
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -682,48 +613,14 @@ class GraftSinkMicroBatchStream(path: String, schema: StructType)
   override def stop(): Unit = ()
 }
 
+/** Task reader factory: one parquet reader per committed data file. */
 class GraftSinkReaderFactory(schemaJson: String,
     sconf: SerializableHadoopConf) extends PartitionReaderFactory {
   override def createReader(
-      partition: InputPartition): PartitionReader[InternalRow] = {
-    val file = partition.asInstanceOf[GraftSinkFilePartition].file
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    if (file.endsWith(".parquet"))
-      new GraftSinkParquetReader(file, schema, sconf.conf)
-    else new GraftSinkPartitionReader(file, schema, sconf.conf)
-  }
-}
-
-class GraftSinkPartitionReader(file: String, schema: StructType,
-    conf: Configuration) extends PartitionReader[InternalRow] {
-  private val in = {
-    val p = new Path(file)
-    new java.io.BufferedReader(new java.io.InputStreamReader(
-      GraftSink.fs(p, conf).open(p), "UTF-8"))
-  }
-  private var line: String = _
-
-  override def next(): Boolean = { line = in.readLine(); line != null }
-
-  override def get(): InternalRow = {
-    // -1 keeps trailing empty cells (a null/empty string in the last
-    // column still yields an arity-n split)
-    val cells = line.split("\t", -1)
-    val vals = schema.fields.zipWithIndex.map { case (f, i) =>
-      val c = cells(i)
-      if (c == "\\N") null
-      else f.dataType match {
-        case IntegerType => java.lang.Integer.valueOf(c)
-        case LongType => java.lang.Long.valueOf(c)
-        case DoubleType => java.lang.Double.valueOf(c)
-        case StringType => UTF8String.fromString(GraftSink.unescape(c))
-        case dt => throw new IllegalStateException(s"unsupported $dt")
-      }
-    }
-    new GenericInternalRow(vals.asInstanceOf[Array[Any]])
-  }
-
-  override def close(): Unit = in.close()
+      partition: InputPartition): PartitionReader[InternalRow] =
+    new GraftSinkParquetReader(
+      partition.asInstanceOf[GraftSinkFilePartition].file,
+      DataType.fromJson(schemaJson).asInstanceOf[StructType], sconf.conf)
 }
 
 /** Columnar task reader: parquet-java Group reader over one committed

@@ -142,7 +142,7 @@ class GraftSinkSpec extends SparkSpec {
         org.apache.spark.sql.types.LongType)))
     def stagedCommit(tag: String, id: Int): Unit = {
       val bw = new graft.sources.GraftSinkBatchWrite(
-        path, schema, s"q_$tag", truncate = false, format = "tsv")
+        path, schema, s"q_$tag", truncate = false)
       val w = bw.createBatchWriterFactory(null).createWriter(0, 0L)
       val row = new org.apache.spark.sql.catalyst.expressions
         .GenericInternalRow(Array[Any](id, id * 10L))
@@ -157,6 +157,65 @@ class GraftSinkSpec extends SparkSpec {
     val v2 = spark.read.format(FMT).option("path", path)
       .option("version", "2").load().collect().map(_.getInt(0)).toSeq
     assert(v2.sorted == Seq(1, 2))
+  }
+
+  test("concurrent batch + streaming appenders: every row exactly once, " +
+    "no version gap") {
+    import java.util.concurrent.{Callable, ConcurrentLinkedQueue,
+      CountDownLatch, Executors}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val path = tmpDir()
+    val schema = StructType(Seq(StructField("id", IntegerType)))
+    val batchWriters = 8
+    val rounds = 4
+    val acked = new ConcurrentLinkedQueue[Int]()
+    val stream = new graft.sources.GraftSinkStreamingWrite(path, schema, "qs")
+    val pool = Executors.newFixedThreadPool(batchWriters + 1)
+    try (1 to rounds).foreach { round =>
+      val go = new CountDownLatch(1)
+      // every writer stages its row first, then all commit at once
+      val commits = (0 to batchWriters).map { w =>
+        val id = round * 100 + w
+        pool.submit(new Callable[Unit] {
+          def call(): Unit = {
+            val row = new GenericInternalRow(Array[Any](id))
+            if (w < batchWriters) {
+              val bw = new graft.sources.GraftSinkBatchWrite(
+                path, schema, s"q_${round}_$w", truncate = false)
+              val tw = bw.createBatchWriterFactory(null).createWriter(0, 0L)
+              tw.write(row)
+              val msg = tw.commit()
+              go.await()
+              bw.commit(Array(msg))
+            } else {
+              val tw = stream.createStreamingWriterFactory(null)
+                .createWriter(0, 0L, round.toLong)
+              tw.write(row)
+              val msg = tw.commit()
+              go.await()
+              stream.commit(round.toLong, Array(msg))
+            }
+            acked.add(id)
+          }
+        })
+      }
+      go.countDown()
+      commits.foreach(_.get())
+    } finally pool.shutdownNow()
+    val got = spark.read.format(FMT).option("path", path).load()
+      .collect().map(_.getInt(0)).sorted.toSeq
+    val want = acked.asScala.toSeq.sorted
+    assert(want.size == rounds * (batchWriters + 1))
+    assert(got == want, s"lost or duplicated rows: " +
+      s"missing ${want.diff(got)}, extra ${got.diff(want)}")
+    val versions = new java.io.File(path).list().toSeq
+      .filter(_.startsWith("_graft_commit_v"))
+      .map(_.stripPrefix("_graft_commit_v").stripSuffix(".json").toLong)
+      .sorted
+    assert(versions == (1L to want.size.toLong),
+      s"version chain is not 1..${want.size}: $versions")
   }
 
   test("append with a reordered/retyped schema is refused instead of " +
@@ -180,8 +239,8 @@ class GraftSinkSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSeq == Seq("b"))
   }
 
-  test("parquet format round-trips exactly behind the same transaction " +
-    "and interoperates with tsv snapshots") {
+  test("parquet round-trips exactly; a failed parquet append publishes " +
+    "nothing") {
     val path = tmpDir()
     import spark.implicits._
     val df1 = Seq(
@@ -203,20 +262,19 @@ class GraftSinkSpec extends SparkSpec {
       .doubleToRawLongBits(r.getDouble(2))).toSeq ==
       df1.orderBy("i").collect().map(r => java.lang.Double
         .doubleToRawLongBits(r.getDouble(2))).toSeq)
-    // a TSV append onto a parquet snapshot: one scan reads both encodings
-    Seq((4, 40L, 1.5, "tsv row")).toDF("i", "l", "d", "s")
-      .write.format(FMT).option("path", path).mode("append").save()
-    val mixed = spark.read.format(FMT).option("path", path).load()
-    assert(mixed.count() == 4)
-    assert(mixed.orderBy("i").collect().map(_.getInt(0)).toSeq ==
-      Seq(1, 2, 3, 4))
-    // a failed parquet write is as invisible as a failed tsv write
+    // parquet is the only encoding: any other format is refused up front
+    val err = intercept[Exception] {
+      df1.write.format(FMT).option("path", path).option("format", "tsv")
+        .mode("append").save()
+    }
+    assert(err.getMessage.contains("parquet only"), s"got: ${err.getMessage}")
+    // a failed append publishes nothing: the snapshot still reads 3 rows
     intercept[Exception] {
       poisoned.write.format(FMT).option("path", path)
         .option("format", "parquet").mode("append").save()
     }
     assert(spark.read.format(FMT).option("path", path).load()
-      .count() == 4)
+      .count() == 3)
   }
 
   test("streaming write: epochs append snapshots; a REPLAYED epoch is " +
@@ -225,8 +283,7 @@ class GraftSinkSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.IntegerType)))
-    val sw = new graft.sources.GraftSinkStreamingWrite(
-      path, schema, "qs", "tsv")
+    val sw = new graft.sources.GraftSinkStreamingWrite(path, schema, "qs")
     def commitEpoch(epoch: Long, ids: Seq[Int],
         w: graft.sources.GraftSinkStreamingWrite = sw): Unit = {
       val writer = w.createStreamingWriterFactory(null)
@@ -244,8 +301,8 @@ class GraftSinkSpec extends SparkSpec {
     assert(readIds() == Seq(1, 2, 3))
     // replay epoch 1 (post-recovery, even from a FRESH StreamingWrite
     // instance): the #epoch marker must make it a no-op
-    val recovered = new graft.sources.GraftSinkStreamingWrite(
-      path, schema, "qs", "tsv")
+    val recovered =
+      new graft.sources.GraftSinkStreamingWrite(path, schema, "qs")
     commitEpoch(1L, Seq(3), recovered)
     assert(readIds() == Seq(1, 2, 3), "replayed epoch double-published")
     // a LATER epoch still lands, and earlier snapshots stay readable
@@ -254,8 +311,7 @@ class GraftSinkSpec extends SparkSpec {
     assert(spark.read.format(FMT).option("path", path)
       .option("version", "2").load().count() == 3)
     // an INDEPENDENT streaming query's epoch 1 is not confused with qs's
-    val other = new graft.sources.GraftSinkStreamingWrite(
-      path, schema, "qt", "tsv")
+    val other = new graft.sources.GraftSinkStreamingWrite(path, schema, "qt")
     commitEpoch(1L, Seq(9), other)
     assert(readIds() == Seq(1, 2, 3, 4, 9))
   }

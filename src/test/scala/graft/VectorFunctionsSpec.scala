@@ -113,9 +113,26 @@ class Md5Prefix60Spec extends SparkSpec {
   }
 }
 
-class GraftExtensionsSpec extends org.scalatest.funsuite.AnyFunSuite {
+class GraftExtensionsSpec extends SparkSpec {
   test("extension point applies cleanly (functions + optimizer rule)") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.functions.GraftExtensions().apply(ext) // must not throw
+    val injected = scala.collection.mutable.ArrayBuffer.empty[String]
+    val ext = new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+    }
+    new graft.functions.GraftExtensions().apply(ext)
+    // a session built with the extension must expose exactly the SQL
+    // functions the register calls install on an existing session
+    val fresh = spark.newSession()
+    def names() = fresh.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).toSet
+    val builtin = names()
+    graft.functions.VectorFunctions.register(fresh)
+    graft.functions.TopKFunctions.register(fresh)
+    val registered = names() -- builtin
+    assert(injected.toSet == registered)
+    assert(injected.size == registered.size, s"duplicates in $injected")
   }
 }
