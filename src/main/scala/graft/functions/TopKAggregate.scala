@@ -215,8 +215,9 @@ case class TopKDistinct(
 
 object TopKFunctions {
 
-  /** Installs graft's SQL functions ([[GraftFunctions.sql]]), among
-    * them `top_k(struct(...), k)` and `top_k_distinct(struct(...), k)`. */
+  /** Installs graft's SQL functions and plan rewrites
+    * ([[GraftFunctions.register]]), among them `top_k(struct(...), k)`
+    * and `top_k_distinct(struct(...), k)`. */
   def register(spark: SparkSession): Unit = GraftFunctions.register(spark)
 
   /** Built directly as an expression Column (session-independent — see

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
@@ -194,15 +196,15 @@ object VectorFunctions {
     org.apache.spark.sql.functions.round(
       floatDot(a, b) / (floatNorm(a) * floatNorm(b)), 6)
 
-  /** Installs graft's SQL functions ([[GraftFunctions.sql]]) on an
-    * existing session. */
+  /** Installs graft's SQL functions and plan rewrites
+    * ([[GraftFunctions.register]]) on an existing session. */
   def register(spark: SparkSession): Unit = GraftFunctions.register(spark)
 }
 
 /** Every SQL function graft installs, as (name, expression class,
-  * builder). [[GraftExtensions]] injects this list at session build
-  * time and [[register]] installs it on an existing session, so both
-  * routes expose the same names. */
+  * builder), and every optimizer rule. [[GraftExtensions]] injects both
+  * lists at session build time and [[register]] installs them on an
+  * existing session, so both routes expose the same names and rewrites. */
 object GraftFunctions {
   private def intArg(e: Expression): Int = e.eval(null).asInstanceOf[Int]
 
@@ -217,6 +219,10 @@ object GraftFunctions {
       ("top_k_distinct", classOf[TopKDistinct],
         e => TopKDistinct(e(0), intArg(e(1))).toAggregateExpression()))
 
+  /** The plan rewrites, in the order both routes install them. */
+  val rules: Seq[Rule[LogicalPlan]] = Seq(graft.plans.TopKRewrite,
+    graft.plans.SaltedAggRewrite, graft.plans.SaltedJoinRewrite)
+
   // Weak keys: a stopped session must not be pinned forever in a
   // long-lived JVM that builds many sessions.
   private val registered: java.util.Set[SparkSession] =
@@ -224,18 +230,21 @@ object GraftFunctions {
       java.util.Collections.newSetFromMap(
         new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
 
-  /** Register [[sql]] on an existing session (idempotent and silent on
-    * repeat calls). */
-  def register(spark: SparkSession): Unit = if (registered.add(spark))
+  /** Install [[sql]] and [[rules]] on an existing session (idempotent
+    * and silent on repeat calls). */
+  def register(spark: SparkSession): Unit = if (registered.add(spark)) {
     sql.foreach { case (name, _, build) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         name, build, "built-in")
     }
+    val have = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = have ++ rules.filterNot(have.contains)
+  }
 }
 
 /** Session extension (config: spark.sql.extensions=graft.functions.GraftExtensions)
-  * injecting [[GraftFunctions.sql]] and the plan rewrites at session
-  * build time. */
+  * injecting [[GraftFunctions.sql]] and [[GraftFunctions.rules]] at
+  * session build time. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -244,8 +253,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo(cls.getName, name), build))
     }
-    ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.SaltedAggRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.SaltedJoinRewrite)
+    GraftFunctions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
   }
 }

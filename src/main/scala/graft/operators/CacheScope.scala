@@ -88,46 +88,48 @@ object CacheScope {
     * rounds, never rounds × frame; the final round stays tracked for
     * [[release]].
     *
-    * Each round costs ONE job, either way:
-    *  - `changed` names a boolean column of the step's output: the
-    *    checkpoint is LAZY and one `max(changed)` aggregate both
-    *    materializes it and tests convergence (an eager checkpoint would
-    *    run a second job — measured 3× slower end to end at the 10×
-    *    probe). The loop stops at the first round with no change.
-    *  - no `changed`: a fixed round count, each round checkpointed
-    *    EAGERLY — materializing round r is what makes round r−1 safe to
-    *    free (lazy per-round checkpoints all stayed pinned until the
-    *    query's release in the r8 bench).
+    * Each round is a LAZY checkpoint plus ONE aggregate — `count(*)`,
+    * and `max(changed)` when `changed` names a boolean column of the
+    * step's output — that materializes it (an eager checkpoint next to
+    * the convergence aggregate was two jobs per round: measured 3×
+    * slower end to end at the 10× probe).
+    * Materializing round r is what makes round r−1 safe to free. With
+    * `changed` the loop stops at the first round with no change.
     *
-    * Returns the final round and whether it converged (always true
-    * without `changed`: a fixed count has nothing to converge). Callers
-    * must not read a round the loop superseded — its blocks are gone. */
+    * Returns the final round, whether it converged (always true without
+    * `changed`: a fixed count has nothing to converge) and each round's
+    * row count, in round order. Callers must not read a round the loop
+    * superseded — its blocks are gone. */
   private[graft] def iterate(init: DataFrame, maxRounds: Int)(
       step: DataFrame => DataFrame,
-      changed: Option[String] = None): (DataFrame, Boolean) = {
+      changed: Option[String] = None): (DataFrame, Boolean, Seq[Long]) = {
+    val aggs = F.count(F.lit(1)) +:
+      changed.map(c => F.coalesce(F.max(F.col(c)), F.lit(false))).toSeq
     var state = init
+    val rows = Seq.newBuilder[Long]
     var rounds = 0
     var converged = false
     while (rounds < maxRounds && !converged) {
-      val next = checkpoint(step(state), eager = changed.isEmpty)
-      converged = changed.exists { c =>
-        !next.agg(F.coalesce(F.max(F.col(c)), F.lit(false))).head().getBoolean(0)
-      }
+      val next = checkpoint(step(state))
+      val r = next.agg(aggs.head, aggs.tail: _*).head()
+      rows += r.getLong(0)
+      converged = changed.isDefined && !r.getBoolean(1)
       state.unpersist(blocking = false)
       unpersistCheckpoint(state)
       state = next
       rounds += 1
     }
-    (state, changed.isEmpty || converged)
+    (state, changed.isEmpty || converged, rows.result())
   }
 
-  /** Checkpoint (reliable when the context has a checkpoint dir, local
-    * otherwise) and track the checkpoint's RDD blocks for [[release]]. */
-  private def checkpoint(df: DataFrame, eager: Boolean): DataFrame = {
+  /** Lazy checkpoint (reliable when the context has a checkpoint dir,
+    * local otherwise), tracking the checkpoint's RDD blocks for
+    * [[release]]. */
+  private def checkpoint(df: DataFrame): DataFrame = {
     val cp =
       if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(eager)
-      else df.localCheckpoint(eager)
+        df.checkpoint(eager = false)
+      else df.localCheckpoint(eager = false)
     track(df.sparkSession, () => unpersistCheckpoint(cp))
     cp
   }

@@ -511,7 +511,7 @@ object Dedup {
     // improvement, so a graph whose last improvement lands exactly in
     // round maxRounds needs one confirming round — without it a
     // provably-final labelling would be reported as unconverged
-    val (last, converged) = CacheScope.iterate(init, maxRounds + 1)({ labels =>
+    val (last, converged, _) = CacheScope.iterate(init, maxRounds + 1)({ labels =>
       // min over {own label} ∪ {neighbor labels}
       val neighborMin = edges
         .join(labels.withColumnRenamed("v", "src"), "src")
@@ -610,7 +610,7 @@ object Dedup {
     val init = CacheScope.persist(
       edges.select(F.col("src").as("v")).distinct()
         .withColumn("lbl", F.col("v")))
-    val (last, converged) = CacheScope.iterate(init, maxRounds + 1)({ labels =>
+    val (last, converged, _) = CacheScope.iterate(init, maxRounds + 1)({ labels =>
       // 1. jump: follow the label's own label — a self-join of the
       // MATERIALIZED previous round (checkpointed partitions, so the
       // two branches re-read, never recompute). A label always names a

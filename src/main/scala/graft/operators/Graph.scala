@@ -188,7 +188,7 @@ object Graph {
     val edges = undirected(pairs, aCol, bCol, assumeUnique)
     val init = edges.select(F.col("src").as("v")).distinct()
       .select(F.col("v"), F.col("v").as("lbl"))
-    val (last, _) = CacheScope.iterate(init, iters) { labels =>
+    val (last, _, _) = CacheScope.iterate(init, iters) { labels =>
       edges
         .join(labels.withColumnRenamed("v", "dst"), "dst")
         .groupBy(F.col("src").as("v"), F.col("lbl"))
@@ -474,23 +474,27 @@ object Graph {
       .groupBy("pa", "pb").agg(F.count(F.lit(1)).as("w"))
 
   /** Per-EDGE triangle support — the k-truss peeling primitive: for
-    * every edge (a, b) of the canonical list (a < b, unique), how many
-    * triangles of the CURRENT graph contain it. Same degree-oriented
-    * wedge enumeration as [[triangleCount]]/[[localClustering]] (each
-    * triangle found exactly once, wedge fan-out bounded by ~√m), each
-    * closed triangle exploding into its THREE canonical edges and one
-    * map-side-combined count — the credit pass is triangle-output-sized.
-    * Edges in no triangle get no row (support 0 — callers left-join). */
+    * every edge (a, b) of the canonical list (a < b), how many triangles
+    * contain it. Edges in no triangle get no row (support 0 — callers
+    * left-join). [[orient]] + [[orientedSupport]]. */
   def edgeSupport(pairs: DataFrame, aCol: String,
-      bCol: String, assumeUnique: Boolean = false): DataFrame = {
-    // `assumeUnique` (r15, §2.4): callers feeding an already-canonical
-    // edge list (the k-truss peel rounds read back their own filtered
-    // parquet) skip the defensive distinct — a full extra shuffle of
-    // the edge list per round otherwise
+      bCol: String, assumeUnique: Boolean = false): DataFrame =
+    orientedSupport(orient(pairs, aCol, bCol, assumeUnique))
+      .select(F.least(F.col("src"), F.col("dst")).as("a"),
+        F.greatest(F.col("src"), F.col("dst")).as("b"), F.col("support"))
+
+  /** The edge list as (src, dst), each edge pointing from its
+    * (degree, id)-SMALLER endpoint to the larger, persisted — the
+    * orientation [[triangleCount]] uses: the strict total order makes it
+    * acyclic, so every triangle has exactly ONE vertex with two
+    * out-edges, and out-degree stays ~√m even on power-law graphs.
+    * `pairs` holds each undirected edge once with `aCol < bCol`;
+    * `assumeUnique` skips the defensive distinct (see [[undirected]]). */
+  private[graft] def orient(pairs: DataFrame, aCol: String, bCol: String,
+      assumeUnique: Boolean): DataFrame = {
     val base = pairs.select(F.col(aCol).as("a"), F.col(bCol).as("b"))
-    val e = CacheScope.persist(if (assumeUnique) base else base.distinct())
-    val deg = e.select(F.col("a").as("v"))
-      .unionByName(e.select(F.col("b").as("v")))
+    val e = if (assumeUnique) base else base.distinct()
+    val deg = e.select(F.explode(F.array(F.col("a"), F.col("b"))).as("v"))
       .groupBy("v").agg(F.count(F.lit(1)).as("dg"))
     val withDeg = e
       .join(deg.withColumnRenamed("v", "a")
@@ -499,26 +503,67 @@ object Graph {
         .withColumnRenamed("dg", "_db"), "b")
     val aFirst = F.col("_da") < F.col("_db") ||
       (F.col("_da") === F.col("_db") && F.col("a") < F.col("b"))
-    val o = CacheScope.persist(withDeg.select(
+    CacheScope.persist(withDeg.select(
       F.when(aFirst, F.col("a")).otherwise(F.col("b")).as("src"),
       F.when(aFirst, F.col("b")).otherwise(F.col("a")).as("dst")))
+  }
+
+  /** Triangle support of every edge of an ACYCLICALLY oriented edge list
+    * `o` (src, dst) — any subset of an [[orient]] output qualifies, so
+    * the k-truss peel keeps its round-0 orientation while edges drop.
+    * Each triangle is found once, as the wedge (apex→x, apex→y) of its
+    * one two-out-edge vertex, closed by the oriented x–y edge; it
+    * credits its three edges in their orientation, one
+    * map-side-combined count — the credit pass is triangle-output-sized.
+    * Returns (src, dst, support) for edges in ≥ 1 triangle. */
+  private[graft] def orientedSupport(o: DataFrame): DataFrame = {
     val o2 = o.select(F.col("src"), F.col("dst").as("dst2"))
     val wedges = o.join(o2, "src").where(F.col("dst") < F.col("dst2"))
       .select(F.col("src").as("apex"), F.col("dst").as("x"),
         F.col("dst2").as("y"))
-    val eClose = e.select(F.col("a").as("x"), F.col("b").as("y"))
+    val closing = o.select(F.least(F.col("src"), F.col("dst")).as("x"),
+      F.greatest(F.col("src"), F.col("dst")).as("y"),
+      F.col("src").as("_cs"), F.col("dst").as("_cd"))
     // SHUFFLE_HASH like localClustering: stream the wedge list against
-    // a hash of the edge list (the bounded side by construction)
-    val tri = wedges.join(eClose.hint("shuffle_hash"), Seq("x", "y"),
-      "left_semi")
+    // a hash of the edge list (the bounded side by construction). An
+    // inner join, not a semi join: edges are unique, so each closed
+    // wedge matches once, and the match carries the closing edge's
+    // orientation
+    val tri = wedges.join(closing.hint("shuffle_hash"), Seq("x", "y"))
     tri.select(F.explode(F.array(
-        F.struct(F.least(F.col("apex"), F.col("x")).as("a"),
-          F.greatest(F.col("apex"), F.col("x")).as("b")),
-        F.struct(F.least(F.col("apex"), F.col("y")).as("a"),
-          F.greatest(F.col("apex"), F.col("y")).as("b")),
-        F.struct(F.col("x").as("a"), F.col("y").as("b")))).as("ed"))
-      .select(F.col("ed.a").as("a"), F.col("ed.b").as("b"))
-      .groupBy("a", "b").agg(F.count(F.lit(1)).as("support"))
+        F.struct(F.col("apex").as("src"), F.col("x").as("dst")),
+        F.struct(F.col("apex").as("src"), F.col("y").as("dst")),
+        F.struct(F.col("_cs").as("src"), F.col("_cd").as("dst")))).as("ed"))
+      .select(F.col("ed.src").as("src"), F.col("ed.dst").as("dst"))
+      .groupBy("src", "dst").agg(F.count(F.lit(1)).as("support"))
+  }
+
+  /** k-core peel, `rounds` fixed rounds: each round drops the nodes of
+    * degree < k and re-derives degrees on the surviving edges. Returns
+    * (node, degree) over the edges left after the last round — nodes of
+    * degree ≥ 1 only.
+    *
+    * The state is node-sized: round r's (node, degree) frame, whose
+    * degree ≥ k rows are round r+1's survivors. Survivors shrink
+    * monotonically and every endpoint of e_r is a survivor of every
+    * earlier round, so e_{r+1} = e0 ⋉ keep ⋉ keep over the BASE edges
+    * (persisted once): each round is one map-side-combined degree
+    * aggregate over two semi joins, and the lineage stays one round deep
+    * under [[CacheScope.iterate]] instead of growing two semi joins per
+    * round. Degree reads the edge list ONCE via explode(array(a, b)). */
+  def kCore(edges: DataFrame, aCol: String, bCol: String, k: Long,
+      rounds: Int): DataFrame = {
+    val e0 = CacheScope.persist(
+      edges.select(F.col(aCol).as("a"), F.col(bCol).as("b")))
+    def degrees(e: DataFrame) =
+      e.select(F.explode(F.array(F.col("a"), F.col("b"))).as("node"))
+        .groupBy("node").agg(F.count(F.lit(1)).as("degree"))
+    CacheScope.iterate(degrees(e0), rounds) { deg =>
+      val keep = deg.where(F.col("degree") >= k)
+      degrees(e0
+        .join(keep.select(F.col("node").as("a")), Seq("a"), "left_semi")
+        .join(keep.select(F.col("node").as("b")), Seq("b"), "left_semi"))
+    }._1
   }
 
   /** SAMPLED local clustering coefficient — the 100 TB read of
@@ -637,7 +682,7 @@ object Graph {
     // over out-edges — the classical update order. auth₀ = 0, so rung 1's
     // auth residual is its full mass.
     val init = nodes.select(F.col("v"), F.lit(SCALE).as("hub"), F.lit(0L).as("auth"))
-    val (last, _) = CacheScope.iterate(init, iters) { s =>
+    val (last, _, _) = CacheScope.iterate(init, iters) { s =>
       val prev = s.select(F.col("v"), F.col("hub").as("prev_hub"),
         F.col("auth").as("prev_auth"))
       halfRung(halfRung(prev, "prev_hub", "src", "dst", "auth"),
@@ -663,12 +708,13 @@ object Graph {
     *
     * Scale shape: the ranked adjacency (u, idx, v, deg) is ONE window
     * pass partitioned per node (degree-bounded sorts, never global),
-    * persisted and reused by every step; each step is one equi-join of
-    * the frontier on the current node with the rank condition applied
-    * as the join filter — degree-bounded fan-out, i.e. the same
-    * edge-linear per-round cost as a BFS hop, for `steps` rounds.
-    * Walks never die: the adjacency is undirected, so every reached
-    * node has degree ≥ 1. */
+    * persisted and reused by every step. The state is one row per walk
+    * carrying its path; step t = size(path) is one equi-join on the
+    * path's last node with the rank condition applied as the join
+    * filter — the same edge-linear per-round cost as a BFS hop, under
+    * [[CacheScope.iterate]]. The final paths are posexploded into
+    * (walk_id, step, node) rows. Walks never die: the adjacency is
+    * undirected, so every reached node has degree ≥ 1. */
   def randomWalks(edges: DataFrame, aCol: String, bCol: String,
       starts: DataFrame, startCol: String, steps: Int): DataFrame = {
     val und = edges.select(F.col(aCol).as("u"), F.col(bCol).as("v"))
@@ -679,32 +725,24 @@ object Graph {
       .withColumn("idx", F.row_number().over(w).cast("long") - 1)
       .withColumn("deg", F.count(F.lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("u"))))
-    // every per-step frontier is PERSISTED (r15, §2.4): the output is
-    // the UNION of all step frames, and step t's lineage is a t-join
-    // chain — unpersisted, the union action re-executed step 1's join
-    // `steps` times, step 2's `steps−1` times, … (O(steps²) joins plus
-    // `steps+1` re-runs of the starts projection). Frontier frames are
-    // walk-cohort-sized (≤ |starts| rows), so the cache cost is the
-    // walk corpus itself, not the graph.
-    val step0 = CacheScope.persist(
-      starts.select(F.col(startCol).as("walk_id"),
-        F.lit(0L).as("step"), F.col(startCol).as("node")))
-    var frontier = step0
-    val stepFrames = Seq(step0) ++ (1 to steps).map { t =>
+    val init = starts.select(F.col(startCol).as("walk_id"),
+      F.array(F.col(startCol)).as("path"))
+    val (last, _, _) = CacheScope.iterate(init, steps) { walks =>
       val key = F.concat(
         F.col("walk_id").cast("string"), F.lit("|"),
-        F.lit(t.toString), F.lit("|"), F.col("_cu").cast("string"))
-      val cur = frontier
-        .select(F.col("walk_id"), F.col("node").as("_cu"))
+        F.size(F.col("path")).cast("string"), F.lit("|"),
+        F.col("_cu").cast("string"))
+      val cur = walks
+        .withColumn("_cu", F.element_at(F.col("path"), -1))
         .withColumn("_h", Hashing.hash60(key))
-      val next = CacheScope.persist(cur.join(adj,
+      cur.join(adj,
           cur("_cu") === adj("u") &&
             adj("idx") === F.pmod(cur("_h"), adj("deg")))
-        .select(F.col("walk_id"), F.lit(t.toLong).as("step"),
-          F.col("v").as("node")))
-      frontier = next
-      next
+        .select(F.col("walk_id"),
+          F.concat(F.col("path"), F.array(F.col("v"))).as("path"))
     }
-    stepFrames.reduce(_ unionAll _)
+    last.select(F.col("walk_id"), F.posexplode(F.col("path")))
+      .select(F.col("walk_id"), F.col("pos").cast("long").as("step"),
+        F.col("col").as("node"))
   }
 }

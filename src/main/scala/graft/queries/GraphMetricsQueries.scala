@@ -724,8 +724,6 @@ object GraphMetricsQueries {
   val TRUSS_K = 10
   val TRUSS_ROUNDS = 3
 
-  private val trussRuns = new java.util.concurrent.atomic.AtomicLong()
-
   // ---------------------------------------------------------------- D70
   /** Bounded k-truss peeling ladder — the edge-cohesion complement of
     * k-core (node degrees) and the clustering spectrum (node wedges):
@@ -735,47 +733,35 @@ object GraphMetricsQueries {
     * PINNED, not convergence-looped — each round is a full triangle
     * enumeration at 100 TB, so production pays a fixed number and reads
     * the published trajectory to decide if another round is worth it
-    * (the D55 ladder discipline). Per round: one degree-oriented wedge
-    * pass over the surviving edges ([[graft.operators.Graph
-    * .edgeSupport]] — √m-bounded like D57, and round 2+ runs on the
-    * already-peeled remnant), survivors to scratch parquet (the
-    * iterative-frame discipline). Rows: (round, n_edges_before,
+    * (the D55 ladder discipline). The state is the surviving edge list,
+    * degree-oriented once ([[graft.operators.Graph.orient]]; any subset
+    * of an acyclic orientation stays acyclic, and out-degrees only
+    * shrink, so the √m wedge bound holds every round). Per round: one
+    * wedge pass over the surviving edges
+    * ([[graft.operators.Graph.orientedSupport]] — round 2+ runs on the
+    * already-peeled remnant) under [[graft.operators.CacheScope.iterate]],
+    * whose per-round row counts are the published edge counts (plus one
+    * count of the staged input). Rows: (round, n_edges_before,
     * n_dropped, n_edges_after). */
   private val ktrussPeel = QueryDef(
     "ktruss_peel",
     (s, d) => {
-      val base = s"/tmp/graft_truss_${Harness.runId}/" +
-        s"run_${trussRuns.incrementAndGet()}"
-      var cur = Staged.coPurchaseEdges(s, d)
-        .select(F.col("pa").as("a"), F.col("pb").as("b"))
-      val rows = (1 to TRUSS_ROUNDS).map { r =>
-        // assumeUnique: round 1 reads the staged deduped edge list,
-        // later rounds read back their own filtered parquet — both
-        // canonical already, so edgeSupport's defensive distinct was a
-        // pure extra shuffle per round (r15, §2.4)
-        val sup = graft.operators.Graph.edgeSupport(cur, "a", "b",
-          assumeUnique = true)
-        // survivors straight off the support aggregate: every (a, b) in
-        // `sup` IS an edge of `cur` (supports are credited only to the
-        // three real edges of each closed triangle), and edges absent
-        // from `sup` have support 0 < TRUSS_K − 2 — the former
-        // cur ⟕ sup + fill(0) + filter re-joined the whole edge list
-        // per round only to drop every row the filter could not keep
-        // anyway (r15, §2.4: one Exchange removed per round)
-        sup.where(F.col("support") >= TRUSS_K - 2)
-          .select("a", "b")
-          .write.mode("overwrite").parquet(s"$base/r$r")
-        val next = s.read.parquet(s"$base/r$r")
-        val before = cur.agg(F.count(F.lit(1)).as("n_edges_before"))
-        val after = next.agg(F.count(F.lit(1)).as("n_edges_after"))
-        cur = next
-        before.crossJoin(F.broadcast(after))
-          .select(F.lit(r.toLong).as("round"),
-            F.col("n_edges_before"),
-            F.expr("n_edges_before - n_edges_after").as("n_dropped"),
-            F.col("n_edges_after"))
+      // assumeUnique: the staged edge list is canonical and deduped
+      val o = graft.operators.Graph.orient(Staged.coPurchaseEdges(s, d),
+        "pa", "pb", assumeUnique = true)
+      val n0 = o.count()
+      // survivors straight off the support aggregate: every edge in it
+      // IS a surviving edge (supports are credited only to the three
+      // real edges of each closed triangle), and edges absent from it
+      // have support 0 < TRUSS_K − 2
+      val (_, _, n) = graft.operators.CacheScope.iterate(o, TRUSS_ROUNDS) {
+        cur => graft.operators.Graph.orientedSupport(cur)
+          .where(F.col("support") >= TRUSS_K - 2).select("src", "dst")
       }
-      rows.reduce(_ unionAll _).orderBy("round")
+      val sizes = n0 +: n
+      s.createDataFrame((1 to TRUSS_ROUNDS).map { r =>
+        (r.toLong, sizes(r - 1), sizes(r - 1) - sizes(r), sizes(r))
+      }).toDF("round", "n_edges_before", "n_dropped", "n_edges_after")
     },
     Some {
       def roundCtes(r: Int): String = {

@@ -34,32 +34,8 @@ object Tables {
     *    TIMESTAMP_NTZ; cast to TIMESTAMP (NTZ micros reinterpreted in
     *    the UTC session zone — the same integers DuckDB's naive read
     *    sees). */
-  // Weak keys so stopped sessions can be GC'd (long-lived JVMs create
-  // many sessions; a strong-keyed registry would pin each one).
-  private val registered: java.util.Set[SparkSession] =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (registered.add(spark)) { // once per session: re-registering spams WARNs
-      graft.functions.VectorFunctions.register(spark)
-      graft.functions.TopKFunctions.register(spark)
-      if (!spark.experimental.extraOptimizations.contains(graft.plans.TopKRewrite))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.TopKRewrite
-      if (!spark.experimental.extraOptimizations
-          .contains(graft.plans.SaltedAggRewrite))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+
-            graft.plans.SaltedAggRewrite
-      if (!spark.experimental.extraOptimizations
-          .contains(graft.plans.SaltedJoinRewrite))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+
-            graft.plans.SaltedJoinRewrite
-    }
-
+    graft.functions.GraftFunctions.register(spark)
     if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$dir/$name.parquet")

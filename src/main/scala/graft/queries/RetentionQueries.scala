@@ -182,49 +182,16 @@ object RetentionQueries {
     * with degree < k, then re-derives degrees on the surviving edge
     * set. Fixed round count (like D15 PageRank) keeps the result
     * deterministic whether or not the peel has converged, so the
-    * unrolled oracle replays the identical three rounds. Scale shape:
-    * each round is one map-side-combined degree aggregate plus two
-    * SEMI joins of the edge list against the surviving-node list —
-    * shuffles stay keyed on node id, state is one degree per node,
-    * and the edge list comes from the SHARED staged build
-    * ([[Staged.coPurchasePairs]]). */
+    * unrolled oracle replays the identical three rounds. Scale shape
+    * ([[graft.operators.Graph.kCore]]): each round is one map-side-
+    * combined degree aggregate plus two SEMI joins of the base edge list
+    * against the surviving-node list — shuffles stay keyed on node id,
+    * state is one degree per node, and the edge list comes from the
+    * SHARED staged build ([[Staged.coPurchaseEdges]]). */
   private val kcore = QueryDef(
     "kcore",
-    (s, d) => {
-      val k = 2L
-      // What persists is chosen by SIZE, not by position in the loop:
-      // the base edge set (one distinct shuffle) and each round's
-      // survivor list (node-sized, ≤ |parts| — thousands of times
-      // smaller than the edge list). Each round then costs one
-      // map-side-combined degree aggregate plus two semi joins that
-      // AQE plans as broadcasts off the cached keep-list stats. The
-      // two tempting alternatives are both measured traps: persisting
-      // every round's EDGES pays three ~1 M-row MEMORY_AND_DISK writes
-      // for recomputes that are nearly free (6.5 s), and explicit
-      // F.broadcast(keep) on BOTH endpoint joins duplicates the keep
-      // subtree 2× per round — 2³ re-executions of the whole lineage
-      // by round 3 (87 s). Persisting the small frame and letting
-      // Catalyst reuse it is the 100 TB pattern too: survivor lists
-      // shrink monotonically, edges never re-shuffle.
-      // Degree reads the edge lineage ONCE via explode(array(pa,pb)) —
-      // the unionAll form scanned it twice, and by round 3 that lineage
-      // is the base scan plus four semi joins (unionAll: 24 semi-join
-      // re-executions across the peel; explode: 12 — measured ~25%
-      // off the wall clock).
-      def degrees(e: org.apache.spark.sql.DataFrame) =
-        e.select(F.explode(F.array(F.col("pa"), F.col("pb"))).as("node"))
-          .groupBy("node").agg(F.count(F.lit(1)).as("degree"))
-      var edges = graft.operators.CacheScope.persist(
-        Staged.coPurchaseEdges(s, d))
-      for (_ <- 1 to 3) {
-        val keep = graft.operators.CacheScope.persist(
-          degrees(edges).where(F.col("degree") >= k).select("node"))
-        edges = edges
-          .join(keep.withColumnRenamed("node", "pa"), Seq("pa"), "left_semi")
-          .join(keep.withColumnRenamed("node", "pb"), Seq("pb"), "left_semi")
-      }
-      degrees(edges).orderBy("node")
-    },
+    (s, d) => graft.operators.Graph.kCore(Staged.coPurchaseEdges(s, d),
+      "pa", "pb", k = 2L, rounds = 3).orderBy("node"),
     Some("""
       WITH e0 AS (
         SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb

@@ -598,7 +598,12 @@ object RetrievalQueries {
     * (the D6 broadcast-queries scan); everything after — candidate
     * vectors, the 8×7 per-query sim matrix, four greedy rounds — is
     * queries×shortlist metadata (≤ 24 rows here), iterated in
-    * UNROLLED bounded rounds, never a corpus-sized loop. */
+    * [[MMR_PICK]] bounded rounds, never a corpus-sized loop. The state is
+    * `selected` (the EDBT 2020 incremental top-k model: round r extends
+    * round r−1's picks instead of re-deriving them); each round is
+    * `selected ∪ pick(selected)` under
+    * [[graft.operators.CacheScope.iterate]], and a pick's rank is one
+    * past its query's last selected rank. */
   private val mmrRerank = QueryDef(
     "mmr_rerank",
     (s, d) => {
@@ -606,10 +611,8 @@ object RetrievalQueries {
       val emb = t(s, d, "embeddings")
       // persisted (r15, §2.4): the shortlist frame is queries×MMR_SHORT
       // rows but its lineage is the FULL brute-force corpus scan, and it
-      // is referenced by round 1's seed pick plus every greedy round's
-      // anti-join — unpersisted, the bench plan re-ran the corpus
-      // scan+topK once per MMR round (5 scans per execution; AQE does
-      // not reuse exchanges across separate action subtrees)
+      // is referenced by every round's anti-join and candidate join —
+      // unpersisted, each round re-ran the corpus scan+topK
       val short = graft.operators.CacheScope.persist(
         Similarity.bruteForceTopK(emb,
           emb.filter(F.col("vec_id") < 3), "vec_id", "embedding",
@@ -637,45 +640,38 @@ object RetrievalQueries {
               .as("sim_micro")))
       val w = Window.partitionBy("query_id")
         .orderBy(F.col("_pico").desc, F.col("match_id"))
-      // each round's pick (and the seed) is PERSISTED (r15, §2.4/§3.3):
-      // round r+1 references `selected` three times (anti-join, the
-      // candidate join, and through the growing union), so the
-      // unpersisted plan tree grew ~3× per round — 427 Exchange nodes
-      // for 4 picks, with the same tiny window aggregates re-planned
-      // and re-executed dozens of times. Picks are queries×1 rows.
-      var selected = graft.operators.CacheScope.persist(short
-        .withColumn("_pico",
-          F.expr(s"$MMR_LAMBDA_MICRO * rel_micro"))
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") === 1)
-        .select(F.col("query_id"), F.col("match_id"),
-          F.lit(1L).as("mmr_rank"), F.col("rel_micro"),
-          F.col("_pico").as("mmr_pico")))
-      for (r <- 2 to MMR_PICK) {
+      val none = short.where(F.lit(false)).select(F.col("query_id"),
+        F.col("match_id"), F.lit(0L).as("mmr_rank"), F.col("rel_micro"),
+        F.col("rel_micro").as("mmr_pico"))
+      // LEFT joins: with nothing selected yet (round 1) the max-sim
+      // penalty is 0, so the first pick is the relevance argmax
+      val (picks, _, _) = graft.operators.CacheScope.iterate(
+          none, MMR_PICK) { selected =>
         val rem = short.join(
           selected.select("query_id", "match_id"),
           Seq("query_id", "match_id"), "left_anti")
         val pick = rem
           .join(selected.select(F.col("query_id"),
-            F.col("match_id").as("_sel")), "query_id")
+            F.col("match_id").as("_sel"), F.col("mmr_rank").as("_rank")),
+            Seq("query_id"), "left")
           .join(sims,
             sims("sq") === rem("query_id") &&
               sims("a") === rem("match_id") &&
-              sims("b") === F.col("_sel"))
+              sims("b") === F.col("_sel"), "left")
           .groupBy(rem("query_id").as("query_id"),
             rem("match_id").as("match_id"), F.col("rel_micro"))
-          .agg(F.max("sim_micro").as("_maxsim"))
+          .agg(F.coalesce(F.max("sim_micro"), F.lit(0L)).as("_maxsim"),
+            F.coalesce(F.max("_rank"), F.lit(0L)).as("_last"))
           .withColumn("_pico", F.expr(s"$MMR_LAMBDA_MICRO * rel_micro" +
             s" - ${1000000L - MMR_LAMBDA_MICRO} * _maxsim"))
           .withColumn("_rn", F.row_number().over(w))
           .where(F.col("_rn") === 1)
           .select(F.col("query_id"), F.col("match_id"),
-            F.lit(r.toLong).as("mmr_rank"), F.col("rel_micro"),
+            (F.col("_last") + 1).as("mmr_rank"), F.col("rel_micro"),
             F.col("_pico").as("mmr_pico"))
-        selected = graft.operators.CacheScope.persist(
-          selected.unionByName(pick))
+        selected.unionByName(pick)
       }
-      selected.orderBy("query_id", "mmr_rank")
+      picks.orderBy("query_id", "mmr_rank")
     },
     Some {
       val lam = MMR_LAMBDA_MICRO

@@ -48,8 +48,8 @@ class CacheScopeSpec extends SparkSpec {
     // query running AFTER an iterative graph op inherited its blocks.
     // localCheckpoint registers its RDD in sc.getPersistentRDDs, which
     // makes both halves of CacheScope.iterate's policy observable, for
-    // every operator on it: the eager fixed-count path and the lazy
-    // `changed`-column path (both CC variants, forced distributed).
+    // every operator on it: fixed-count and `changed`-column loops (both
+    // CC variants, forced distributed).
     import graft.operators.{Dedup, Graph}
     val sc = spark.sparkContext
     val ring = spark.range(40).selectExpr("id AS a", "(id + 1) % 40 AS b")
@@ -73,7 +73,11 @@ class CacheScopeSpec extends SparkSpec {
         path, "a", "b", localThreshold = 0L).count(), 13L, 2), // edges, round 0
       ("connectedComponentsStarContract", () =>
         Dedup.connectedComponentsStarContract(
-          path, "a", "b", localThreshold = 0L).count(), 13L, 2))
+          path, "a", "b", localThreshold = 0L).count(), 13L, 2),
+      ("randomWalks", () => Graph.randomWalks(ring, "a", "b", seeds, "v",
+        steps = 4).count(), 15L, 1), // ranked adjacency
+      ("kCore", () => Graph.kCore(ring, "a", "b", 2L, 3).count(),
+        40L, 1)) // base edges
     for ((name, run, rows, persisted) <- cases) {
       CacheScope.release(spark)
       val before = sc.getPersistentRDDs.keySet
@@ -90,6 +94,15 @@ class CacheScopeSpec extends SparkSpec {
       assert(after.isEmpty,
         s"$name: release() must clear checkpoint RDD registrations, got $after")
     }
+  }
+
+  test("iterate returns each round's row count") {
+    // 8 ids halve per round: 4, 2, 1
+    val (last, converged, rows) = CacheScope.iterate(
+      spark.range(8).toDF("id"), 3)(_.selectExpr("id div 2 AS id").distinct())
+    assert(rows == Seq(4L, 2L, 1L))
+    assert(converged && last.count() == 1L)
+    CacheScope.release(spark)
   }
 
   test("both CC variants throw when a component outlasts maxRounds") {

@@ -115,4 +115,15 @@ class MmrRerankSpec extends SparkSpec {
     assert(reordered,
       "diversity penalty never changed the ranking — fixture too easy")
   }
+
+  test("mmr_rerank's executed plan has fewer than 100 Exchanges") {
+    // counted as occurrences of "Exchange" in executedPlan.toString; the
+    // per-round lineage cut keeps the plan to the final sort over the
+    // last round, where re-planning every round's picks gave hundreds
+    val plan = SparkEntry.queries("mmr_rerank")(spark, sf)
+      .queryExecution.executedPlan.toString
+    val exchanges = "Exchange[ \n]".r.findAllMatchIn(plan).size
+    assert(exchanges < 100, s"$exchanges Exchanges")
+    graft.operators.CacheScope.release(spark)
+  }
 }

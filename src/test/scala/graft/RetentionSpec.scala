@@ -56,18 +56,48 @@ class RetentionSpec extends SparkSpec {
     // round 1 drops 5 (deg 1), round 2 drops 4, round 3 confirms
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L))
       .toDF("pa", "pb")
-    var e = edges
-    for (_ <- 1 to 3) {
-      val deg = e.select(F.col("pa").as("node"))
-        .unionAll(e.select(F.col("pb").as("node")))
-        .groupBy("node").agg(F.count(F.lit(1)).as("degree"))
-      val keep = deg.where(F.col("degree") >= 2).select("node")
-      e = e.join(keep.withColumnRenamed("node", "pa"), Seq("pa"), "left_semi")
-        .join(keep.withColumnRenamed("node", "pb"), Seq("pb"), "left_semi")
+    val core = graft.operators.Graph.kCore(edges, "pa", "pb", 2L, 3)
+      .as[(Long, Long)].collect().sorted
+    assert(core.sameElements(Array((1L, 2L), (2L, 2L), (3L, 2L))))
+    graft.operators.CacheScope.release(spark)
+  }
+
+  /** The unrolled-CTE form of the kcore oracle, driver-side: each round
+    * keeps the edges whose endpoints both have degree ≥ k in the
+    * previous round's edges; returns the final edges' (node, degree). */
+  private def peelReplay(edges: Seq[(Long, Long)], k: Long,
+      rounds: Int): Seq[(Long, Long)] = {
+    def degrees(e: Seq[(Long, Long)]) =
+      e.flatMap { case (a, b) => Seq(a, b) }.groupBy(identity)
+        .map { case (v, vs) => (v, vs.size.toLong) }
+    val last = (1 to rounds).foldLeft(edges) { (e, _) =>
+      val deg = degrees(e)
+      e.filter { case (a, b) => deg(a) >= k && deg(b) >= k }
     }
-    val survivors = e.select("pa").union(e.select("pb"))
-      .distinct().as[Long].collect().sorted
-    assert(survivors.sameElements(Array(1L, 2L, 3L)))
+    degrees(last).toSeq.sorted
+  }
+
+  test("Graph.kCore equals a round-by-round peel replay on random graphs") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import spark.implicits._
+    val genEdges = for {
+      n <- Gen.chooseNum(2, 14)
+      m <- Gen.chooseNum(1, 30)
+      es <- Gen.listOfN(m, Gen.zip(Gen.chooseNum(0L, n - 1L),
+        Gen.chooseNum(0L, n - 1L)))
+    } yield es.collect { case (a, b) if a != b =>
+      (math.min(a, b), math.max(a, b)) }.distinct
+    var seed = Seed(20240229L)
+    for (k <- 1L to 3L; rounds <- 1 to 4) {
+      seed = seed.next
+      val edges = genEdges(Gen.Parameters.default, seed).get
+      val got = graft.operators.Graph.kCore(edges.toDF("pa", "pb"),
+        "pa", "pb", k, rounds).as[(Long, Long)].collect().toSeq.sorted
+      assert(got == peelReplay(edges, k, rounds),
+        s"k=$k rounds=$rounds edges=$edges")
+      graft.operators.CacheScope.release(spark)
+    }
   }
 
   test("ab_wilson bounds bracket the point rate and stay in [0, 1]") {

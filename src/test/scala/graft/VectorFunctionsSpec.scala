@@ -115,17 +115,23 @@ class Md5Prefix60Spec extends SparkSpec {
 
 class GraftExtensionsSpec extends SparkSpec {
   test("extension point applies cleanly (functions + optimizer rule)") {
+    val fresh = spark.newSession()
     val injected = scala.collection.mutable.ArrayBuffer.empty[String]
+    val rules = scala.collection.mutable.ArrayBuffer.empty[AnyRef]
     val ext = new org.apache.spark.sql.SparkSessionExtensions {
       override def injectFunction(f: FunctionDescription): Unit = {
         injected += f._1.funcName
         super.injectFunction(f)
       }
+      override def injectOptimizerRule(b: RuleBuilder): Unit = {
+        rules += b(fresh)
+        super.injectOptimizerRule(b)
+      }
     }
     new graft.functions.GraftExtensions().apply(ext)
     // a session built with the extension must expose exactly the SQL
-    // functions the register calls install on an existing session
-    val fresh = spark.newSession()
+    // functions and optimizer rules the register calls install on an
+    // existing session
     def names() = fresh.sessionState.functionRegistry.listFunction()
       .map(_.funcName).toSet
     val builtin = names()
@@ -134,5 +140,6 @@ class GraftExtensionsSpec extends SparkSpec {
     val registered = names() -- builtin
     assert(injected.toSet == registered)
     assert(injected.size == registered.size, s"duplicates in $injected")
+    assert(fresh.experimental.extraOptimizations == rules.toSeq)
   }
 }
