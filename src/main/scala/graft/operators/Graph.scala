@@ -200,19 +200,26 @@ object Graph {
     last.select(F.col("v"), F.col("lbl").as("community"))
   }
 
-  /** One deterministic Louvain-style local-move round [Blondel et al.
-    * 2008 §2] applied to a GIVEN partition (e.g. [[labelPropagation]]'s
-    * output): every vertex evaluates the exact modularity gain of
-    * moving to each NEIGHBOR community and takes the best
+  /** One deterministic synchronous Louvain local-move round [Blondel et
+    * al. 2008 §2] applied to a GIVEN partition `labels` (v, community)
+    * over a weighted edge list `wEdges` (pa, pb, w): one row per
+    * undirected edge with pa ≤ pb; unweighted graphs pass w = 1
+    * ([[unitWeights]]). Every vertex evaluates the exact modularity gain
+    * of moving to each NEIGHBOR community and takes the best
     * strictly-positive one, ties broken by the smallest target label.
     * The gain is the standard ΔQ with the whole comparison multiplied
-    * through by 2m² so it stays exact integer arithmetic
+    * through by 2W² so it stays exact integer arithmetic
     * (DECIMAL(38,0) — degree sums at 100 TB overflow a long product):
     *
-    *   gain(v: a→c) · 2m² = 2m·(k_{v,c} − k_{v,a}) − k_v·(d_c − d_a + k_v)
+    *   gain(v: a→c) · 2W² = 2W·(k_{v,c} − k_{v,a}) − k_v·(s_c − s_a + k_v)
     *
-    * with k_{v,c} = v's edges into community c, k_v = v's degree,
-    * d_c = community c's total degree (v counted in its own a-terms).
+    * with k_{v,c} = the weight of v's edges into community c, k_v = v's
+    * weighted degree, s_c = community c's total degree (v counted in its
+    * own a-terms), W = the total edge weight. A SELF-LOOP (pa = pb — the
+    * intra-community weight of a Louvain phase-2 [[coarsenGraph]]) adds
+    * 2w to its node's degree (hence to s_c and W) and nothing to any
+    * k_{v,c}: the loop moves WITH the node. Nodes of `labels` without
+    * edges keep their label.
     *
     * Moves are SYNCHRONOUS (all vertices decide against the same input
     * partition, then all move) — the standard distributed-Louvain
@@ -220,85 +227,41 @@ object Graph {
     * oracle-checked distributed operator cannot be. Synchronized moves
     * make each individual gain exact but their SUM unrealized (two
     * adjacent vertices can cross), so callers publish the recomputed
-    * before/after modularity rather than trusting Σgain; one round over
-    * an LPA partition is the bounded refinement step, not a full
-    * Louvain descent.
+    * modularity rather than trusting Σgain. `monotone` restricts moves to
+    * SMALLER target labels — the cycle-breaking rule synchronous
+    * distributed Louvain variants use (a→b and b→a cannot both fire).
     *
-    * Scale shape: three map-side-combined aggregates (degrees, per-
-    * (vertex, neighbor-community) counts, per-community degree totals)
-    * plus vertex-keyed joins; the candidate frame is bounded by
-    * Σ_v |neighbor communities of v| ≤ |directed edges| — never
-    * vertices × communities. Returns (v, community). */
-  def louvainMoveRound(pairs: DataFrame, aCol: String, bCol: String,
-      labels: DataFrame): DataFrame = {
-    // contract as [[triangleCount]]: `pairs` holds each undirected edge
-    // ONCE with aCol < bCol (the staged deduped list). The labeled
-    // canonical edge list is the ONE corpus-scale intermediate the whole
-    // round needs — serialized persist, released by the caller's
-    // CacheScope.release (callers that sequence eagerly, e.g. D53,
-    // build the frame themselves and free it as soon as the moved
-    // labels materialize).
-    louvainMoveRoundLabeled(
-      CacheScope.persistSer(labelEdges(pairs, aCol, bCol, labels)), labels)
-  }
-
-  /** Canonical labeled edge list: one row per undirected edge (pa < pb)
-    * with BOTH endpoint communities attached — (pa, pb, ca, cb). Two
-    * node-keyed shuffles (labels are node-sized, NOT broadcast at
-    * 100 TB). This single frame carries everything the community
-    * operators derive per partition — m, e_in, degrees, per-(vertex,
-    * neighbor-community) counts, community degree totals — so callers
-    * build it ONCE per (edges, labels) pair and feed both the
-    * modularity score and the move round (the r9 bench showed the same
-    * edges⋈labels pipeline executing three times per D53 run). */
-  def labelEdges(pairs: DataFrame, aCol: String, bCol: String,
-      labels: DataFrame): DataFrame =
-    pairs.select(F.col(aCol).as("pa"), F.col(bCol).as("pb"))
-      .join(labels.select(F.col("v").as("pa"),
-        F.col("community").as("ca")), "pa")
-      .join(labels.select(F.col("v").as("pb"),
-        F.col("community").as("cb")), "pb")
-
-  /** The move round computed FROM a prebuilt [[labelEdges]] frame. The
-    * frame is read EXACTLY ONCE (the two-sided neighbor union feeding
-    * k_vc) — degrees, community totals and m all derive from the k_vc
-    * aggregate, so a caller that persists lblEdges pays one serialized
-    * decode pass for the whole round. */
-  def louvainMoveRoundLabeled(lblEdges: DataFrame,
-      labels: DataFrame, kvcScratch: Option[String] = None): DataFrame = {
+    * Scale shape: the edge frame is read ONCE per round — each edge
+    * explodes into (pa sees cb) and (pb sees ca), the self-loop weight in
+    * its own column, feeding the round's one corpus-scale aggregate k_vc
+    * (≤ directed edges, never vertices × communities). Degrees, community
+    * totals and W all derive from k_vc. k_vc has four consumer subtrees,
+    * and Catalyst re-executes its whole pipeline (edge scan and label
+    * joins included) under each: `kvcScratch` materializes it to storage
+    * once — the inter-phase artifact a distributed Louvain writes anyway
+    * — and the four read the small columnar result. None keeps the
+    * single-plan form (metadata-sized coarse graphs, property tests).
+    * Returns (v, community). */
+  def louvainMove(wEdges: DataFrame, labels: DataFrame,
+      kvcScratch: Option[String] = None,
+      monotone: Boolean = false): DataFrame = {
     val lab = labels.select(F.col("v"), F.col("community").as("lbl"))
-    // directed neighbor view: each undirected edge contributes
-    // (pa sees cb) and (pb sees ca) — exploded in ONE scan of the edge
-    // frame (a two-select union would decode the persisted frame twice)
-    val dirNbr = lblEdges.select(F.explode(F.array(
-        F.struct(F.col("pa").as("v"), F.col("cb").as("c")),
-        F.struct(F.col("pb").as("v"), F.col("ca").as("c")))).as("x"))
-      .select(F.col("x.v").as("v"), F.col("x.c").as("c"))
-    // k_vc is the round's ONE corpus-scale aggregate (≤ directed edges;
-    // in practice vertices × their few neighbor communities). It feeds
-    // the gain base AND the candidate join, and everything else derives
-    // from it without another pass over the edge list (deg = Σ_c k_vc,
-    // d_c = Σ_{v∈c} deg(v), 2m = Σ_v deg). Four consumer subtrees,
-    // though, and the r10 executed plan showed Catalyst duplicating
-    // the WHOLE kvc pipeline — edge scan and label joins included —
-    // under each one (22 parquet scans, zero static exchange reuse;
-    // AQE does not dedup them once the label joins become runtime
-    // broadcasts): 3–4 edge passes per round. Block-caching kvc is
-    // corpus-proportional residency (exactly r9's pollution class) and
-    // A/B'd as a wash. `kvcScratch` is the production answer:
-    // materialize the aggregate to storage ONCE — the inter-phase
-    // artifact a distributed Louvain writes anyway — and let all four
-    // consumers read the small columnar result. None keeps the pure
-    // single-plan form (tiny graphs, property tests).
+    val loop = F.col("pa") === F.col("pb")
+    val kw = F.when(loop, 0L).otherwise(F.col("w")).as("kv")
+    val sw = F.when(loop, F.col("w")).otherwise(0L).as("sw")
+    val agg = labelEdges(wEdges, labels)
+      .select(F.explode(F.array(
+        F.struct(F.col("pa").as("v"), F.col("cb").as("c"), kw, sw),
+        F.struct(F.col("pb").as("v"), F.col("ca").as("c"), kw, sw))).as("x"))
+      .select("x.*")
+      .groupBy("v", "c").agg(F.sum("kv").as("kv"), F.sum("sw").as("sw"))
     val kvc = kvcScratch match {
       case Some(dir) =>
-        dirNbr.groupBy("v", "c").agg(F.count(F.lit(1)).as("kv"))
-          .write.mode("overwrite").parquet(dir)
-        lblEdges.sparkSession.read.parquet(dir)
-      case None =>
-        dirNbr.groupBy("v", "c").agg(F.count(F.lit(1)).as("kv"))
+        agg.write.mode("overwrite").parquet(dir)
+        wEdges.sparkSession.read.parquet(dir)
+      case None => agg
     }
-    val deg = kvc.groupBy("v").agg(F.sum("kv").as("k"))
+    val deg = kvc.groupBy("v").agg(F.expr("sum(kv) + sum(sw)").as("k"))
     val dtot = lab.join(deg, "v")
       .groupBy(F.col("lbl").as("c")).agg(F.sum("k").as("dt"))
     val m = deg.agg(F.expr("sum(k) div 2").as("m"))
@@ -308,18 +271,17 @@ object Graph {
         F.col("kv").as("kva")), Seq("v", "lbl"), "left")
       .na.fill(0L, Seq("kva"))
       // dtot is COMMUNITY-sized (one row per community — ≪ nodes after
-      // any nontrivial detection, and the partition coarsens every
-      // round): broadcast explicitly, because a shuffle join on the
-      // community key funnels all node rows into #communities
-      // partitions — on a refined partition that is a handful of hot
-      // partitions regardless of cluster size (r10: the 2-community
-      // rung-2 move spent its time in exactly that skew)
+      // any nontrivial detection): broadcast explicitly, because a
+      // shuffle join on the community key funnels all node rows into
+      // #communities partitions — a handful of hot partitions on a
+      // refined partition, regardless of cluster size
       .join(F.broadcast(
         dtot.select(F.col("c").as("lbl"), F.col("dt").as("dta"))), "lbl")
       .crossJoin(F.broadcast(m))
     val cand = base
       .join(kvc, "v")
-      .where(F.col("c") =!= F.col("lbl"))
+      .where(F.col("c") =!= F.col("lbl") &&
+        (if (monotone) F.col("c") < F.col("lbl") else F.lit(true)))
       .join(F.broadcast(dtot), "c")
       .select(F.col("v"), F.col("c"),
         F.expr("2 * CAST(m AS DECIMAL(38,0)) * (kv - kva) - " +
@@ -334,6 +296,22 @@ object Graph {
         F.when(F.col("_gain") > 0, F.col("_tc")).otherwise(F.col("lbl"))
           .as("community"))
   }
+
+  /** A canonical edge list (pa, pb) as the unit-weight graph
+    * (pa, pb, w = 1) [[louvainMove]] and the modularity scorer take. */
+  def unitWeights(edges: DataFrame): DataFrame =
+    edges.select(F.col("pa"), F.col("pb"), F.lit(1L).as("w"))
+
+  /** An edge list (pa, pb, …) with BOTH endpoint communities of
+    * `labels` (v, community) attached as ca, cb — two node-keyed
+    * shuffles (labels are node-sized, NOT broadcast at 100 TB). Edges
+    * with an unlabeled endpoint drop. */
+  def labelEdges(edges: DataFrame, labels: DataFrame): DataFrame =
+    edges
+      .join(labels.select(F.col("v").as("pa"),
+        F.col("community").as("ca")), "pa")
+      .join(labels.select(F.col("v").as("pb"),
+        F.col("community").as("cb")), "pb")
 
   /** Per-node triangle participation via the same degree orientation as
     * [[triangleCount]], with the wedge APEX kept so each closed triangle
@@ -380,95 +358,13 @@ object Graph {
     deg.join(perNode, Seq("v"), "left").na.fill(0L, Seq("n_tri"))
   }
 
-  /** One synchronous WEIGHTED Louvain local-move round over an explicit
-    * weighted edge list (pa, pb, w) — one row per undirected edge with
-    * pa ≤ pb; SELF-LOOPS (pa = pb) are allowed and handled the way
-    * Louvain's phase-2 coarse graphs need: a self-loop contributes 2w
-    * to its node's weighted degree (and hence to s_c and W) but never
-    * to any k_vc, because the loop moves WITH the node. Gain formula is
-    * the exact weighted analog of [[louvainMoveRoundLabeled]]'s —
-    * gain(v: a→c) = 2W·(w_vc − w_va) − k_v·(s_c − s_a + k_v), all
-    * integer DECIMAL(38,0) arithmetic (weights are counts), best
-    * strictly-positive move, smallest-label tie-break, moves applied
-    * synchronously. Labels frame is the node spine, so zero-degree and
-    * self-loop-only nodes keep their labels instead of dropping.
-    * Output: (v, community). Same scale shape as the unweighted round:
-    * one corpus-scale k_vc aggregate (optionally materialized to
-    * `kvcScratch` for its four consumer subtrees), community-sized
-    * totals broadcast. */
-  def louvainMoveRoundWeighted(wEdges: DataFrame, labels: DataFrame,
-      kvcScratch: Option[String] = None,
-      monotone: Boolean = false): DataFrame = {
-    val lab = labels.select(F.col("v"), F.col("community").as("lbl"))
-    val nonSelf = wEdges.where(F.col("pa") =!= F.col("pb"))
-    val self = wEdges.where(F.col("pa") === F.col("pb"))
-      .select(F.col("pa").as("v"), F.col("w").as("sw"))
-    val lblE = nonSelf
-      .join(lab.select(F.col("v").as("pa"), F.col("lbl").as("ca")), "pa")
-      .join(lab.select(F.col("v").as("pb"), F.col("lbl").as("cb")), "pb")
-    val dirNbr = lblE.select(F.explode(F.array(
-        F.struct(F.col("pa").as("v"), F.col("cb").as("c"),
-          F.col("w").as("w")),
-        F.struct(F.col("pb").as("v"), F.col("ca").as("c"),
-          F.col("w").as("w")))).as("x"))
-      .select(F.col("x.v").as("v"), F.col("x.c").as("c"),
-        F.col("x.w").as("w"))
-    val kvc = kvcScratch match {
-      case Some(dir) =>
-        dirNbr.groupBy("v", "c").agg(F.sum("w").as("kv"))
-          .write.mode("overwrite").parquet(dir)
-        wEdges.sparkSession.read.parquet(dir)
-      case None =>
-        dirNbr.groupBy("v", "c").agg(F.sum("w").as("kv"))
-    }
-    // weighted degree on the LABEL spine: k_v = Σ_c k_vc + 2·w_self —
-    // a left join keeps isolated / self-loop-only nodes
-    val deg = lab.select("v")
-      .join(kvc.groupBy("v").agg(F.sum("kv").as("_k0")), Seq("v"), "left")
-      .na.fill(0L, Seq("_k0"))
-      .join(self, Seq("v"), "left").na.fill(0L, Seq("sw"))
-      .select(F.col("v"), F.expr("_k0 + 2 * sw").as("k"))
-    val dtot = lab.join(deg, "v")
-      .groupBy(F.col("lbl").as("c")).agg(F.sum("k").as("dt"))
-    val m = deg.agg(F.expr("sum(k) div 2").as("m"))
-    val base = lab
-      .join(deg, "v")
-      .join(kvc.select(F.col("v"), F.col("c").as("lbl"),
-        F.col("kv").as("kva")), Seq("v", "lbl"), "left")
-      .na.fill(0L, Seq("kva"))
-      .join(F.broadcast(
-        dtot.select(F.col("c").as("lbl"), F.col("dt").as("dta"))), "lbl")
-      .crossJoin(F.broadcast(m))
-    val cand0 = base
-      .join(kvc, "v")
-      .where(F.col("c") =!= F.col("lbl"))
-    // monotone guard: restrict moves to SMALLER target labels — the
-    // cycle-breaking rule synchronous distributed Louvain variants use
-    // (a→b and b→a cannot both fire when only one direction descends)
-    val cand = (if (monotone) cand0.where(F.col("c") < F.col("lbl"))
-      else cand0)
-      .join(F.broadcast(dtot), "c")
-      .select(F.col("v"), F.col("c"),
-        F.expr("2 * CAST(m AS DECIMAL(38,0)) * (kv - kva) - " +
-          "CAST(k AS DECIMAL(38,0)) * (dt - dta + k)").as("gain"))
-    val best = cand.groupBy("v")
-      .agg(F.min(F.struct(F.negate(F.col("gain")).as("ng"), F.col("c")))
-        .as("_b"))
-      .select(F.col("v"), F.col("_b.c").as("_tc"),
-        F.negate(F.col("_b.ng")).as("_gain"))
-    lab.join(best, Seq("v"), "left")
-      .select(F.col("v"),
-        F.when(F.col("_gain") > 0, F.col("_tc")).otherwise(F.col("lbl"))
-          .as("community"))
-  }
-
-  /** Louvain PHASE-2 coarse graph: collapse a labeled partition's
-    * communities to supernodes with aggregated edge weights — one row
-    * per community pair (pa ≤ pb, pa = pb carries the intra-community
-    * self-loop weight). Metadata-sized after any nontrivial detection.
-    * `lblEdges` is a [[labelEdges]] frame (pa, pb, ca, cb). */
-  def coarsenGraph(lblEdges: DataFrame): DataFrame =
-    lblEdges.select(
+  /** Louvain PHASE-2 coarse graph: collapse the communities of
+    * `labels` (v, community) over the canonical edge list `edges`
+    * (pa, pb) to supernodes with aggregated edge weights — one row per
+    * community pair (pa ≤ pb, pa = pb carries the intra-community
+    * self-loop weight). Metadata-sized after any nontrivial detection. */
+  def coarsenGraph(edges: DataFrame, labels: DataFrame): DataFrame =
+    labelEdges(edges, labels).select(
         F.least(F.col("ca"), F.col("cb")).as("pa"),
         F.greatest(F.col("ca"), F.col("cb")).as("pb"))
       .groupBy("pa", "pb").agg(F.count(F.lit(1)).as("w"))

@@ -24,10 +24,6 @@ object CommunityQueries {
   private[queries] val lpaIters = 4
   private def iters = lpaIters
 
-  /** Unique scratch suffix per D53 execution: concurrent runs (parallel
-    * specs) must not overwrite each other's moved-label parquet. */
-  private val refineRuns = new java.util.concurrent.atomic.AtomicLong()
-
   /** Shared unrolled-LPA CTE chain: e0 (deduped co-purchase edges),
     * both-direction edges, l0..l4 label frames. The per-round argmax is
     * row_number over (count DESC, label ASC) — exactly
@@ -77,63 +73,107 @@ object CommunityQueries {
       WITH $lpaCtesSql
       SELECT v, lbl AS community FROM l$iters ORDER BY v"""))
 
-  /** One-row exact-integer Newman modularity of a labeled partition:
-    * Q = Σ_c [e_in_c/m − (d_c/2m)²] as the integer numerator
-    * Σ_c (4·m·e_in_c − d_c²) over DECIMAL(38,0) with ONE integral
-    * division by 4m² at the end — bit-exact against the HUGEINT
-    * oracle. Edges joined to labels on each endpoint (two node-keyed
-    * shuffles — labels are node-sized, NOT broadcast at 100 TB);
-    * per-community terms are two map-side-combined aggregates to a
-    * community-bounded frame. Returns (n_communities, m, q_micro);
-    * shared by D51 (the detected partition) and D53 (before/after the
-    * refinement move). */
-  private[graft] def modularityCore(edges: DataFrame, comm: DataFrame): DataFrame =
-    // NO persist (r15, §5): since the one-pass explode rewrite of
-    // [[modularityCoreLabeled]], the labeled edge list is consumed by
-    // exactly ONE subtree (the persisted per-community aggregate — m
-    // and the final reduction both read THAT tiny frame, not the
-    // edges), so the old four-consumer persistSer was paying a full
-    // serialize + cache-write of a corpus-scale frame per scoring pass
-    // for zero reuse
-    modularityCoreLabeled(Graph.labelEdges(edges, "pa", "pb", comm))
-
-  /** [[modularityCore]] from a PREBUILT (and caller-persisted)
-    * [[Graph.labelEdges]] frame — the r9 verdict's fix: D53 used to run
-    * the same edges⋈labels pipeline three times per execution; now one
-    * labeled frame feeds the move round and the after-score, and the
-    * before-score is staged ([[Staged.communityQ]]). */
-  private[graft] def modularityCoreLabeled(lbl: DataFrame): DataFrame = {
-    // ONE pass over the corpus-scale labeled frame: each edge explodes
-    // into its two endpoint communities, carrying the intra-community
-    // indicator on the ca side only (so e_in counts each edge once);
-    // one map-side-combined aggregate yields BOTH per-community terms.
-    // The r9 shape read the frame four times (m, e_in, two degree-union
-    // branches) and needed a deg⋈e_in repair join.
-    val perC = graft.operators.CacheScope.persist(lbl
+  /** One-row exact-integer Newman modularity of the partition `comm`
+    * (v, community) over a weighted edge list `w` (pa, pb, w), one row
+    * per undirected edge, pa ≤ pb, self-loops allowed:
+    * Q = Σ_c [w_in_c/W − (s_c/2W)²] as the integer numerator
+    * Σ_c (4·W·w_in_c − s_c²) over DECIMAL(38,0) with ONE integral
+    * division by 4W² at the end — bit-exact against the HUGEINT oracle.
+    * s_c is community c's weighted degree (a self-loop adds 2w), w_in_c
+    * its internal weight. Unweighted callers pass w = 1
+    * ([[Graph.unitWeights]]): W = m, s_c = d_c, w_in_c = e_in_c.
+    *
+    * Scale shape: the labeled edge list (two node-keyed label joins —
+    * labels are node-sized, NOT broadcast at 100 TB) is read ONCE: each
+    * edge explodes into its two endpoint communities, the internal
+    * weight on the ca side only (so w_in counts each edge once), and one
+    * map-side-combined aggregate yields BOTH per-community terms. W and
+    * the final reduction read that persisted community-sized frame, not
+    * the edges. Returns (n_communities, m, q_micro) with m = W; the
+    * weighted queries publish them as w_tot / qw_micro. */
+  private[graft] def modularityCore(w: DataFrame, comm: DataFrame): DataFrame = {
+    val perC = graft.operators.CacheScope.persist(Graph.labelEdges(w, comm)
       .select(F.explode(F.array(
         F.struct(F.col("ca").as("c"),
-          F.when(F.col("ca") === F.col("cb"), 1L).otherwise(0L).as("i")),
-        F.struct(F.col("cb").as("c"), F.lit(0L).as("i")))).as("x"))
-      .select(F.col("x.c").as("community"), F.col("x.i").as("i"))
+          F.when(F.col("ca") === F.col("cb"), F.col("w"))
+            .otherwise(F.lit(0L)).as("iw"),
+          F.col("w").as("w")),
+        F.struct(F.col("cb").as("c"), F.lit(0L).as("iw"),
+          F.col("w").as("w")))).as("x"))
+      .select(F.col("x.c").as("community"), F.col("x.iw").as("iw"),
+        F.col("x.w").as("w"))
       .groupBy("community")
-      .agg(F.count(F.lit(1)).as("d_c"), F.sum("i").as("e_in")))
-    // m = Σ d_c / 2 — read from the tiny persisted per-community frame,
-    // not from another edge scan (coalesce: sum over the EMPTY graph is
-    // null, and the m = 0 guard below must see 0)
-    val m = perC.agg(F.expr("coalesce(sum(d_c), 0) div 2").as("m"))
-    perC
-      .crossJoin(F.broadcast(m))
+      .agg(F.sum("w").as("s_c"), F.sum("iw").as("w_in")))
+    // coalesce: the sum over the EMPTY graph is null, and the m = 0
+    // guard below must see 0
+    val m = perC.agg(F.expr("coalesce(sum(s_c), 0) div 2").as("m"))
+    perC.crossJoin(F.broadcast(m))
       .agg(F.count(F.lit(1)).as("n_communities"),
-        F.sum(F.expr("4 * CAST(m AS DECIMAL(38,0)) * e_in - " +
-          "CAST(d_c AS DECIMAL(38,0)) * d_c")).as("_num"))
+        F.sum(F.expr("4 * CAST(m AS DECIMAL(38,0)) * w_in - " +
+          "CAST(s_c AS DECIMAL(38,0)) * s_c")).as("_num"))
       .crossJoin(F.broadcast(m))
       .select(F.col("n_communities"), F.col("m"),
-        // degenerate guard: a corpus with no multi-item orders has
-        // m = 0 edges — modularity of the empty graph is defined 0
+        // degenerate guard: modularity of the empty graph is defined 0
         // here rather than a division-by-zero null/error
         F.expr("CAST(IF(m = 0, 0, _num * 1000000 div " +
           "(4 * CAST(m AS DECIMAL(38,0)) * m)) AS BIGINT)")
           .as("q_micro"))
+  }
+
+  /** Per-JVM scratch root of the community ladders' staged frames. */
+  private val scratchRoot =
+    java.nio.file.Paths.get(s"/tmp/graft_community_${Harness.runId}")
+
+  /** A fresh scratch directory under [[scratchRoot]] — unique per call,
+    * so concurrent runs of one query never overwrite each other. */
+  private def scratchDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(
+      java.nio.file.Files.createDirectories(scratchRoot), tag).toString
+
+  /** One rung of a community ladder, the step every community query
+    * runs: move `from` (v, community) once over the weighted graph `g`
+    * (pa, pb, w) with [[Graph.louvainMove]] — or, given `to`, take it as
+    * the candidate without a move — stage the candidate labels to
+    * scratch parquet, and return them read back with ONE 1-row stats
+    * frame (n_moved, n_communities, m, q_micro): the labels that changed
+    * vs `from` and the exact [[modularityCore]] of the candidate over
+    * `g`. The stats are one plan, so one action reads the whole rung —
+    * the 1-row scalar a driver-side accept guard reads.
+    *
+    * The staged labels feed the stats' three label reads and the next
+    * rung; NO corpus-scale block cache anywhere (profiled at sf0.1:
+    * persist()ing the move result cost 2–3 s against 0.3 s for the plain
+    * pipeline, localCheckpoint 3–6× the plan cost; the parquet write
+    * costs ~0.1 s and is the shape a production refinement publishes
+    * anyway). `kvc` stages the move's k_vc aggregate beside the labels
+    * (fine corpus-scale rungs; metadata-sized coarse rungs skip it);
+    * `monotone` is [[Graph.louvainMove]]'s cycle guard. */
+  private[queries] def rung(g: DataFrame, from: DataFrame,
+      kvc: Boolean = false, monotone: Boolean = false,
+      to: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+    val dir = scratchDir("rung")
+    to.getOrElse(Graph.louvainMove(g, from,
+        if (kvc) Some(s"$dir/kvc") else None, monotone))
+      .write.mode("overwrite").parquet(s"$dir/labels")
+    val cand = g.sparkSession.read.parquet(s"$dir/labels")
+    val nMoved = from.select(F.col("v"), F.col("community").as("_x"))
+      .join(cand.select(F.col("v"), F.col("community").as("_y")), "v")
+      .agg(F.sum(F.when(F.col("_x") =!= F.col("_y"), 1L).otherwise(0L))
+        .as("n_moved"))
+    (cand, nMoved.crossJoin(F.broadcast(modularityCore(g, cand))))
+  }
+
+  /** Louvain phase 2's coarse graph of `labels` over the canonical
+    * `edges`, staged to scratch parquet (every coarse rung reads it from
+    * several subtrees), and its supernode spine (v, community = v). */
+  private def coarse(edges: DataFrame,
+      labels: DataFrame): (DataFrame, DataFrame) = {
+    val dir = scratchDir("coarse")
+    Graph.coarsenGraph(edges, labels).write.mode("overwrite").parquet(dir)
+    val cg = edges.sparkSession.read.parquet(dir)
+    (cg, cg.select(F.col("pa").as("v"))
+      .unionByName(cg.select(F.col("pb").as("v"))).distinct()
+      .select(F.col("v"), F.col("v").as("community")))
   }
 
   /** Oracle CTE block computing the modularity aggregate of the label
@@ -196,8 +236,8 @@ object CommunityQueries {
 
   /** Oracle CTE block for ONE synchronous Louvain local-move round from
     * the label CTE `inLbl` (columns v, lbl), suffixed `p` so rounds can
-    * chain (D55 runs two). Mirrors [[Graph.louvainMoveRoundLabeled]]
-    * term for term: exact HUGEINT gain 2m·(k_vc − k_va) − k_v·(d_c −
+    * chain (D55 runs two). Mirrors [[Graph.louvainMove]] at w = 1 term
+    * for term: exact HUGEINT gain 2m·(k_vc − k_va) − k_v·(d_c −
     * d_a + k_v), best strictly-positive move, smallest-label tie-break.
     * Emits `lr$p` (v, lbl). Requires [[moveBaseCtesSql]] in scope. */
   private def moveCtesSql(inLbl: String, p: String): String =
@@ -227,7 +267,7 @@ object CommunityQueries {
 
   // ---------------------------------------------------------------- D53
   /** One Louvain-style local-move refinement round over the DETECTED
-    * partition ([[Graph.louvainMoveRound]] on [[Staged.communityLabels]]):
+    * partition ([[Graph.louvainMove]] on [[Staged.communityLabels]]):
     * each part evaluates the exact integer-arithmetic modularity gain
     * of joining a neighbor community and takes the best strictly-
     * positive move (ties → smallest target label), all moves applied
@@ -237,55 +277,25 @@ object CommunityQueries {
     * moved labels, NOT summed per-move gains — synchronized moves can
     * interfere) is the honest judge of whether the round helped.
     *
-    * Footprint discipline (the r9 verdict's `weak`): the before-score
-    * reads the STAGED summary ([[Staged.communityQ]] — a pure function
-    * of the staged labels); ONE serialized labeled-edge frame feeds the
-    * move round AND (remapped through the node-sized move map) the
-    * after-score — r9 built the same edges⋈labels pipeline 3× and held
-    * ~7 deserialized persists live at once; now it's one SER edge frame
-    * plus the small k_vc/degree aggregates.
+    * One [[rung]]: the move and the after-score are two columnar scans
+    * of the staged edge list; the before-score is the STAGED summary
+    * ([[Staged.communityQ]] — a pure function of the staged labels).
     * Summary row: n_nodes, n_moved, n_communities (after), m,
     * q_before_micro, q_after_micro. */
   private val communityRefine = QueryDef(
     "community_refine",
     (s, d) => {
-      val edges = Staged.coPurchaseEdges(s, d)
       val before = Staged.communityLabels(s, d)
       val qb = Staged.communityQ(s, d)
         .select(F.col("q_micro").as("q_before_micro"))
-      // NO block-cache persist anywhere: the staged parquet edge list
-      // IS the shared corpus artifact, each of the query's two corpus
-      // passes (the move round's k_vc build, the after-score) is a
-      // columnar scan + two node-keyed label joins feeding ONE map-side-
-      // combined aggregate, and the moved labels materialize to SCRATCH
-      // PARQUET for their three consumer subtrees. Profiled at sf0.1:
-      // every cache variant loses — persist()ing the move result costs
-      // 2–3 s against 0.3 s for the plain pipeline (the cached plan
-      // re-executes without exchange reuse), localCheckpoint pins 3–6×
-      // the plan cost, and cache pressure was exactly r9's driver-bench
-      // pollution; the parquet write costs ~0.1 s over the plain run and
-      // is the shape a production refinement publishes anyway.
-      val afterDir = s"/tmp/graft_refine_${Harness.runId}/" +
-        s"after_${refineRuns.incrementAndGet()}"
-      Graph.louvainMoveRoundLabeled(
-        Graph.labelEdges(edges, "pa", "pb", before), before,
-        kvcScratch = Some(afterDir + "_kvc"))
-        .write.mode("overwrite").parquet(afterDir)
-      val after = s.read.parquet(afterDir)
-      val qa = modularityCoreLabeled(
-        Graph.labelEdges(edges, "pa", "pb", after))
-        .select(F.col("n_communities"), F.col("m"),
-          F.col("q_micro").as("q_after_micro"))
-      val nNodes = before.agg(F.count(F.lit(1)).as("n_nodes"))
-      val nMoved = before.select(F.col("v"), F.col("community").as("_cb"))
-        .join(after.select(F.col("v"), F.col("community").as("_ca")), "v")
-        .agg(F.sum(F.when(F.col("_cb") =!= F.col("_ca"), 1L).otherwise(0L))
-          .as("n_moved"))
-      nNodes.crossJoin(F.broadcast(nMoved))
-        .crossJoin(F.broadcast(qa))
+      val (_, st) = rung(Graph.unitWeights(Staged.coPurchaseEdges(s, d)),
+        before, kvc = true)
+      before.agg(F.count(F.lit(1)).as("n_nodes"))
+        .crossJoin(F.broadcast(st))
         .crossJoin(F.broadcast(qb))
         .select(F.col("n_nodes"), F.col("n_moved"), F.col("n_communities"),
-          F.col("m"), F.col("q_before_micro"), F.col("q_after_micro"))
+          F.col("m"), F.col("q_before_micro"),
+          F.col("q_micro").as("q_after_micro"))
     },
     Some(s"""
       WITH $lpaCtesSql,
@@ -317,42 +327,23 @@ object CommunityQueries {
     * (staged score, n_moved 0), round 1 the staged first move
     * ([[Staged.communityMoved]] / [[Staged.communityMovedQ]] — pure
     * functions of staged artifacts; D53's live run IS the same round
-    * and its bench number tracks the move cost), round 2 computed LIVE
-    * here: one k_vc build over the rung-1 labeled edges + one scoring
-    * pass over the rung-2 labels, both through scratch parquet with
-    * ZERO corpus-scale persists (D53's footprint discipline). Fixed
-    * round count, not convergence-looped: each rung is a full
-    * corpus pass at 100 TB, so production pins the depth and reads the
-    * published per-rung Q to decide if another is worth paying. */
+    * and its bench number tracks the move cost), round 2 one [[rung]]
+    * computed LIVE here. Fixed round count, not convergence-looped:
+    * each rung is a full corpus pass at 100 TB, so production pins the
+    * depth and reads the published per-rung Q to decide if another is
+    * worth paying. */
   private val communityLadder = QueryDef(
     "community_ladder",
     (s, d) => {
-      val edges = Staged.coPurchaseEdges(s, d)
-      val l1 = Staged.communityMoved(s, d)
-      val dir = s"/tmp/graft_refine_${Harness.runId}/" +
-        s"ladder_${refineRuns.incrementAndGet()}"
-      Graph.louvainMoveRoundLabeled(
-        Graph.labelEdges(edges, "pa", "pb", l1), l1,
-        kvcScratch = Some(dir + "_kvc"))
-        .write.mode("overwrite").parquet(dir)
-      val l2 = s.read.parquet(dir)
-      def moved(a: DataFrame, b: DataFrame) =
-        a.select(F.col("v"), F.col("community").as("_x"))
-          .join(b.select(F.col("v"), F.col("community").as("_y")), "v")
-          .agg(F.sum(F.when(F.col("_x") =!= F.col("_y"), 1L)
-            .otherwise(0L)).as("n_moved"))
-      def rung(round: Int, nMoved: DataFrame, q: DataFrame) =
-        nMoved.crossJoin(F.broadcast(q))
-          .select(F.lit(round).as("round"), F.col("n_moved"),
-            F.col("n_communities"), F.col("m"), F.col("q_micro"))
-      val r0 = rung(0,
-        s.range(1).select(F.lit(0L).as("n_moved")), Staged.communityQ(s, d))
-      val q1 = Staged.communityMovedQ(s, d)
-      val r1 = rung(1, q1.select("n_moved"),
-        q1.select("n_communities", "m", "q_micro"))
-      val r2 = rung(2, moved(l1, l2), modularityCoreLabeled(
-        Graph.labelEdges(edges, "pa", "pb", l2)))
-      r0.union(r1).union(r2).orderBy("round")
+      val (_, st2) = rung(Graph.unitWeights(Staged.coPurchaseEdges(s, d)),
+        Staged.communityMoved(s, d), kvc = true)
+      def row(round: Int, st: DataFrame) =
+        st.select(F.lit(round).as("round"), F.col("n_moved"),
+          F.col("n_communities"), F.col("m"), F.col("q_micro"))
+      row(0, Staged.communityQ(s, d).withColumn("n_moved", F.lit(0L)))
+        .union(row(1, Staged.communityMovedQ(s, d)))
+        .union(row(2, st2))
+        .orderBy("round")
     },
     Some(s"""
       WITH $lpaCtesSql,
@@ -398,60 +389,20 @@ object CommunityQueries {
     * many orders contain the pair — [[Staged.coPurchasePairs]] carries
     * it as row multiplicity), and weighted Q asks whether the detected
     * communities capture the STRONG ties, not just any ties:
-    * Q_w = Σ_c [w_in_c/W − (s_c/2W)²] with s_c the weighted degree sum
-    * — exact integers throughout (weights are order counts), numerator
-    * Σ_c (4·W·w_in_c − s_c²) over DECIMAL(38,0)/HUGEINT, ONE integral
-    * division by 4W². Same one-pass explode shape as
-    * [[modularityCoreLabeled]], weight columns riding along; the pair
-    * re-aggregation is ONE map-side-combined count over the staged
-    * multi-edge parquet. Output beside D51's unweighted Q: a weighted
-    * score ABOVE the unweighted one means intra-community pairs are
-    * bought together more often than the raw topology suggests. */
-  /** One-row exact-integer WEIGHTED Newman modularity of a labeled
-    * partition over a weighted pair list (pa, pb, w):
-    * Q_w = Σ_c [w_in_c/W − (s_c/2W)²] as the integer numerator
-    * Σ_c (4·W·w_in_c − s_c²) over DECIMAL(38,0) with ONE integral
-    * division by 4W². Same one-pass explode shape as
-    * [[modularityCoreLabeled]], weight columns riding along. Shared by
-    * D54 (detected partition, live-built weights) and D62 (weighted
-    * move rung, staged weights — before and after scores). */
-  private[graft] def weightedModularityCore(w: DataFrame,
-      comm: DataFrame): DataFrame = {
-    val lblW = w
-      .join(comm.select(F.col("v").as("pa"), F.col("community").as("ca")),
-        "pa")
-      .join(comm.select(F.col("v").as("pb"), F.col("community").as("cb")),
-        "pb")
-    val perC = graft.operators.CacheScope.persist(lblW
-      .select(F.explode(F.array(
-        F.struct(F.col("ca").as("c"),
-          F.when(F.col("ca") === F.col("cb"), F.col("w"))
-            .otherwise(F.lit(0L)).as("iw"),
-          F.col("w").as("w")),
-        F.struct(F.col("cb").as("c"), F.lit(0L).as("iw"),
-          F.col("w").as("w")))).as("x"))
-      .select(F.col("x.c").as("community"), F.col("x.iw").as("iw"),
-        F.col("x.w").as("w"))
-      .groupBy("community")
-      .agg(F.sum("w").as("s_c"), F.sum("iw").as("w_in")))
-    val wTot = perC.agg(F.expr("coalesce(sum(s_c), 0) div 2").as("w_tot"))
-    perC.crossJoin(F.broadcast(wTot))
-      .agg(F.count(F.lit(1)).as("n_communities"),
-        F.sum(F.expr("4 * CAST(w_tot AS DECIMAL(38,0)) * w_in - " +
-          "CAST(s_c AS DECIMAL(38,0)) * s_c")).as("_num"))
-      .crossJoin(F.broadcast(wTot))
-      .select(F.col("n_communities"), F.col("w_tot"),
-        F.expr("CAST(IF(w_tot = 0, 0, _num * 1000000 div " +
-          "(4 * CAST(w_tot AS DECIMAL(38,0)) * w_tot)) AS BIGINT)")
-          .as("qw_micro"))
-  }
-
+    * [[modularityCore]] over the weights, published as w_tot /
+    * qw_micro; the pair re-aggregation is ONE map-side-combined count
+    * over the staged multi-edge parquet. Output beside D51's unweighted
+    * Q: a weighted score ABOVE the unweighted one means intra-community
+    * pairs are bought together more often than the raw topology
+    * suggests. */
   private val communityWeighted = QueryDef(
     "community_weighted",
-    (s, d) => weightedModularityCore(
+    (s, d) => modularityCore(
       Staged.coPurchasePairs(s, d).groupBy("pa", "pb")
         .agg(F.count(F.lit(1)).as("w")),
-      Staged.communityLabels(s, d)),
+      Staged.communityLabels(s, d))
+      .select(F.col("n_communities"), F.col("m").as("w_tot"),
+        F.col("q_micro").as("qw_micro")),
     Some(s"""
       WITH $lpaCtesSql,
       li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
@@ -481,8 +432,8 @@ object CommunityQueries {
 
   /** Oracle CTE block scoring WEIGHTED modularity of label CTE `lblCte`
     * over weighted pair CTE `wEdges` (pa, pb, w), suffixed `p`. Emits
-    * `agw$p` (w_tot, n_communities, num). Mirrors
-    * [[weightedModularityCore]] term for term. */
+    * `agw$p` (w_tot, n_communities, num). Mirrors [[modularityCore]]
+    * term for term. */
   private def qwCtesSql(wEdges: String, lblCte: String, p: String): String =
     s"""lblw$p AS MATERIALIZED (
        |          SELECT e.w, x.lbl AS ca, y.lbl AS cb
@@ -503,7 +454,7 @@ object CommunityQueries {
        |          FROM perc$p, wt$p GROUP BY w_tot)""".stripMargin
 
   /** Oracle CTE block for ONE synchronous WEIGHTED Louvain move round —
-    * mirrors [[Graph.louvainMoveRoundWeighted]] term for term: weighted
+    * mirrors [[Graph.louvainMove]] term for term: weighted
     * k_vc over non-self edges `wEdges` (pa, pb, w), weighted degree
     * k_v = Σ k_vc + 2·w_self from self-loop CTE `selfCte` (v, sw) on
     * the label spine `spine` (v, lbl), exact HUGEINT gain
@@ -560,42 +511,27 @@ object CommunityQueries {
     * the r10 verdict's objective-mismatch fix: D53/D55 move on
     * unweighted Q while D54 SCORES weighted Q, so for weighted graphs
     * the ladder optimized a different objective than the one it
-    * publishes. This rung moves on the exact weighted gain
-    * 2W·(w_vc − w_va) − k_v·(s_c − s_a + k_v) over the staged
-    * multi-edge weights ([[Staged.coPurchaseWeights]]) and publishes
-    * the before/after WEIGHTED Q — recomputed exactly from the moved
-    * labels, not summed per-move gains (synchronized moves can
-    * interfere — D53's honesty discipline). D53's footprint rules:
-    * staged weight parquet is the shared corpus artifact, moved labels
-    * materialize to scratch parquet, k_vc to its own scratch, zero
-    * corpus-scale persists. Summary row: n_nodes, n_moved,
-    * n_communities (after), w_tot, qw_before_micro, qw_after_micro. */
+    * publishes. This [[rung]] moves on the exact weighted gain over the
+    * staged multi-edge weights ([[Staged.coPurchaseWeights]]) and
+    * publishes the before/after WEIGHTED Q — recomputed exactly from
+    * the moved labels, not summed per-move gains (synchronized moves
+    * can interfere — D53's honesty discipline). Summary row: n_nodes,
+    * n_moved, n_communities (after), w_tot, qw_before_micro,
+    * qw_after_micro. */
   private val communityLadderWeighted = QueryDef(
     "community_ladder_weighted",
     (s, d) => {
       val w = Staged.coPurchaseWeights(s, d)
       val l0 = Staged.communityLabels(s, d)
-      val qb = weightedModularityCore(w, l0)
-        .select(F.col("qw_micro").as("qw_before_micro"))
-      val dir = s"/tmp/graft_refine_${Harness.runId}/" +
-        s"wladder_${refineRuns.incrementAndGet()}"
-      Graph.louvainMoveRoundWeighted(w, l0, kvcScratch = Some(dir + "_kvc"))
-        .write.mode("overwrite").parquet(dir)
-      val l1 = s.read.parquet(dir)
-      val qa = weightedModularityCore(w, l1)
-        .select(F.col("n_communities"), F.col("w_tot"),
-          F.col("qw_micro").as("qw_after_micro"))
-      val nNodes = l0.agg(F.count(F.lit(1)).as("n_nodes"))
-      val nMoved = l0.select(F.col("v"), F.col("community").as("_cb"))
-        .join(l1.select(F.col("v"), F.col("community").as("_ca")), "v")
-        .agg(F.sum(F.when(F.col("_cb") =!= F.col("_ca"), 1L).otherwise(0L))
-          .as("n_moved"))
-      nNodes.crossJoin(F.broadcast(nMoved))
-        .crossJoin(F.broadcast(qa))
+      val qb = modularityCore(w, l0)
+        .select(F.col("q_micro").as("qw_before_micro"))
+      val (_, st) = rung(w, l0, kvc = true)
+      l0.agg(F.count(F.lit(1)).as("n_nodes"))
+        .crossJoin(F.broadcast(st))
         .crossJoin(F.broadcast(qb))
         .select(F.col("n_nodes"), F.col("n_moved"), F.col("n_communities"),
-          F.col("w_tot"), F.col("qw_before_micro"),
-          F.col("qw_after_micro"))
+          F.col("m").as("w_tot"), F.col("qw_before_micro"),
+          F.col("q_micro").as("qw_after_micro"))
     },
     Some(s"""
       WITH $lpaCtesSql,
@@ -626,63 +562,35 @@ object CommunityQueries {
       FROM agwb agb, agwa aga"""))
 
   // ---------------------------------------------------------------- D63
-  /** Louvain PHASE 2 — coarsen and move: collapse the detected
-    * communities to supernodes with aggregated edge weights
-    * ([[Graph.coarsenGraph]] — metadata-sized after detection, intra-
-    * community edges becoming self-loops that carry 2w into the
-    * supernode degree), run ONE weighted move round on the coarse
-    * graph from singleton labels, map the coarse labels back to the
-    * parts, and publish the exact UNWEIGHTED Q before/after — the move
-    * on the count-weighted coarse graph optimizes exactly the original
-    * graph's Q, which is the half of Louvain the D55 ladder lacked.
-    * Runs where Louvain's phase 2 runs: AFTER the phase-1 local moves
-    * (input = the staged rung-1 partition [[Staged.communityMoved]],
-    * q_before = its staged score), not the raw LPA labels. One corpus
-    * pass builds the coarse graph (scratch parquet — the move round
-    * reads its edge frame from multiple subtrees), the move itself is
-    * metadata arithmetic, the map-back is one broadcast join, and the
-    * after-score is one scoring pass. Summary row: n_supernodes,
-    * n_moved, n_communities (after), m, q_before_micro,
-    * q_after_micro. */
+  /** Louvain PHASE 2 — coarsen and move: collapse the communities to
+    * supernodes with aggregated edge weights ([[Graph.coarsenGraph]] —
+    * metadata-sized after detection, intra-community edges becoming
+    * self-loops that carry 2w into the supernode degree) and run ONE
+    * monotone weighted [[rung]] on the coarse graph from singleton
+    * labels — the half of Louvain the D55 ladder lacked. Runs where
+    * Louvain's phase 2 runs: AFTER the phase-1 local moves (input = the
+    * staged rung-1 partition [[Staged.communityMoved]], q_before = its
+    * staged score), not the raw LPA labels. The after-score is the
+    * rung's weighted Q of the coarse labels, which equals the exact
+    * UNWEIGHTED Q of the coarse labels mapped back to the parts integer
+    * for integer (coarsening with self-loops preserves e_in_c, d_c and
+    * m exactly) — so the corpus is scanned once, for the coarsen. Summary
+    * row: n_supernodes, n_moved, n_communities (after), m,
+    * q_before_micro, q_after_micro. */
   private val communityCoarsen = QueryDef(
     "community_coarsen",
     (s, d) => {
-      val edges = Staged.coPurchaseEdges(s, d)
-      val l0 = Staged.communityMoved(s, d)
-      val cdir = s"/tmp/graft_refine_${Harness.runId}/" +
-        s"coarse_${refineRuns.incrementAndGet()}"
-      Graph.coarsenGraph(Graph.labelEdges(edges, "pa", "pb", l0))
-        .write.mode("overwrite").parquet(cdir)
-      val cg = s.read.parquet(cdir)
-      val sn = cg.select(F.col("pa").as("v"))
-        .unionByName(cg.select(F.col("pb").as("v"))).distinct()
-        .select(F.col("v"), F.col("v").as("community"))
-      // moved is PERSISTED (r15, §2.4): it is supernode-sized but its
-      // lineage is the whole coarse move round, and it feeds the l1
-      // map-back (whose labelEdges consumer scans it once per join
-      // side) AND the n_moved aggregate — unpersisted, the move round
-      // executed 3–4× per run
-      val moved = graft.operators.CacheScope.persist(
-        Graph.louvainMoveRoundWeighted(cg, sn, monotone = true))
-      val l1 = l0.select(F.col("v"), F.col("community").as("_c0"))
-        .join(F.broadcast(moved.select(F.col("v").as("_c0"),
-          F.col("community").as("_c1"))), "_c0")
-        .select(F.col("v"), F.col("_c1").as("community"))
+      val (cg, sn) = coarse(Staged.coPurchaseEdges(s, d),
+        Staged.communityMoved(s, d))
+      val (_, st) = rung(cg, sn, monotone = true)
       val qb = Staged.communityMovedQ(s, d)
         .select(F.col("q_micro").as("q_before_micro"))
-      val qa = modularityCore(edges, l1)
-        .select(F.col("n_communities"), F.col("m"),
-          F.col("q_micro").as("q_after_micro"))
-      val nSuper = sn.agg(F.count(F.lit(1)).as("n_supernodes"))
-      val nMoved = moved
-        .agg(F.sum(F.when(F.col("v") =!= F.col("community"), 1L)
-          .otherwise(0L)).as("n_moved"))
-      nSuper.crossJoin(F.broadcast(nMoved))
-        .crossJoin(F.broadcast(qa))
+      sn.agg(F.count(F.lit(1)).as("n_supernodes"))
+        .crossJoin(F.broadcast(st))
         .crossJoin(F.broadcast(qb))
         .select(F.col("n_supernodes"), F.col("n_moved"),
           F.col("n_communities"), F.col("m"), F.col("q_before_micro"),
-          F.col("q_after_micro"))
+          F.col("q_micro").as("q_after_micro"))
     },
     Some(s"""
       WITH $lpaCtesSql,
@@ -862,105 +770,64 @@ object CommunityQueries {
     *    (spec-asserted), which is the audit that the coarse arithmetic
     *    really was the original objective.
     *
-    * The accept decisions are 1-row score collects — the driver-side
-    * scalar a convergence loop reads to steer; every corpus-scale pass
-    * (moves, scorings, the coarsen) is distributed, with moved labels
-    * and k_vc aggregates staged to scratch parquet (zero corpus-scale
-    * block-cache residency — D53's footprint discipline). Depth is
-    * pinned, not convergence-looped: each fine rung is a full corpus
-    * pass at 100 TB; the published n_moved trajectory is what tells
-    * production whether deeper is worth paying. One row per rung:
-    * (level, rung, n_moved, accepted, n_communities, q_micro) with
-    * q_micro the ACCEPTED score — monotone across the ladder. */
+    * Every rung — the coarse ones and the unroll included — is one
+    * [[rung]], and its accept decision reads the rung's ONE stats row:
+    * one driver collect per published row (8), the scalar a convergence
+    * loop reads to steer. Every corpus-scale pass (moves, scorings, the
+    * coarsen) is distributed, with moved labels and k_vc aggregates
+    * staged to scratch parquet (zero corpus-scale block-cache
+    * residency). Depth is pinned, not convergence-looped: each fine rung
+    * is a full corpus pass at 100 TB; the published n_moved trajectory
+    * is what tells production whether deeper is worth paying. One row
+    * per rung: (level, rung, n_moved, accepted, n_communities, q_micro)
+    * with q_micro the ACCEPTED score — monotone across the ladder. */
   private val communityConverge = QueryDef(
     "community_converge",
     (s, d) => {
       import s.implicits._
       val edges = Staged.coPurchaseEdges(s, d)
-      val base = s"/tmp/graft_refine_${Harness.runId}/" +
-        s"conv_${refineRuns.incrementAndGet()}"
-
-      def movedCount(a: DataFrame, b: DataFrame): Long =
-        a.select(F.col("v"), F.col("community").as("_x"))
-          .join(b.select(F.col("v"), F.col("community").as("_y")), "v")
-          .agg(F.coalesce(F.sum(F.when(F.col("_x") =!= F.col("_y"), 1L)
-            .otherwise(0L)), F.lit(0L))).collect().head.getLong(0)
-
-      def scoreFine(lbl: DataFrame): (Long, Long) = {
-        val r = modularityCore(edges, lbl).collect().head
-        (r.getAs[Long]("n_communities"), r.getAs[Long]("q_micro"))
-      }
-
+      val unit = Graph.unitWeights(edges)
       val rows = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Long, Long, Long, Long, Long)]
       // rung (0,0): the staged LPA partition
-      val q0row = Staged.communityQ(s, d).collect().head
+      val q0 = Staged.communityQ(s, d).collect().head
       var curLbl = Staged.communityLabels(s, d)
-      var curQ = q0row.getAs[Long]("q_micro")
-      var curN = q0row.getAs[Long]("n_communities")
+      var curQ = q0.getAs[Long]("q_micro")
+      var curN = q0.getAs[Long]("n_communities")
       rows += ((0L, 0L, 0L, 1L, curN, curQ))
-      // level 1: fine move rungs (rung 1 = the staged D53 move)
-      // (r15 note, §1.2: an A/B'd variant materialized each candidate's
-      // labelEdges frame to scratch parquet and reused it across the
-      // next move / the coarsen / the final remapped score — 6 label
-      // joins down to 3 + 3 columnar writes. At bench SF the label side
-      // is a runtime BROADCAST, so each labelEdges pass is one scan +
-      // two broadcast joins and the extra materialization LOST ~1.5 s;
-      // kept the rebuild-per-pass shape, which AQE turns into the cheap
-      // plan locally while staying shuffle-correct at scale.)
-      for (r <- 1 to CONV_MOVES) {
-        val (cand, nMoved, nc, q) =
-          if (r == 1) {
-            val c = Staged.communityMoved(s, d)
-            val cq = Staged.communityMovedQ(s, d).collect().head
-            (c, cq.getAs[Long]("n_moved"),
-              cq.getAs[Long]("n_communities"), cq.getAs[Long]("q_micro"))
-          } else {
-            val dir = s"$base/l1r$r"
-            Graph.louvainMoveRoundLabeled(
-              Graph.labelEdges(edges, "pa", "pb", curLbl), curLbl,
-              kvcScratch = Some(dir + "_kvc"))
-              .write.mode("overwrite").parquet(dir)
-            val c = s.read.parquet(dir)
-            val (nc0, q0) = scoreFine(c)
-            (c, movedCount(curLbl, c), nc0, q0)
-          }
+      // the Q-accept guard over one rung's stats row; true = adopt
+      def accept(level: Long, r: Long, stats: DataFrame): Boolean = {
+        val st = stats.collect().head
+        val q = st.getAs[Long]("q_micro")
         val acc = q >= curQ
-        if (acc) { curLbl = cand; curQ = q; curN = nc }
-        rows += ((1L, r.toLong, nMoved, if (acc) 1L else 0L, curN, curQ))
+        if (acc) { curQ = q; curN = st.getAs[Long]("n_communities") }
+        rows += ((level, r, st.getAs[Long]("n_moved"),
+          if (acc) 1L else 0L, curN, curQ))
+        acc
+      }
+      // level 1: fine move rungs (rung 1 = the staged D53 move)
+      for (r <- 1 to CONV_MOVES) {
+        val (cand, st) =
+          if (r == 1) (Staged.communityMoved(s, d), Staged.communityMovedQ(s, d))
+          else rung(unit, curLbl, kvc = true)
+        if (accept(1L, r, st)) curLbl = cand
       }
       // phase 2: coarsen the accepted partition (self-loops carry the
       // intra-community weight) and move on the supernode graph
-      val cdir = s"$base/coarse"
-      Graph.coarsenGraph(Graph.labelEdges(edges, "pa", "pb", curLbl))
-        .write.mode("overwrite").parquet(cdir)
-      val cg = s.read.parquet(cdir)
-      var curC = cg.select(F.col("pa").as("v"))
-        .unionByName(cg.select(F.col("pb").as("v"))).distinct()
-        .select(F.col("v"), F.col("v").as("community"))
+      val (cg, spine) = coarse(edges, curLbl)
+      var curC = spine
       for (r <- 1 to CONV_MOVES) {
-        val mdir = s"$base/l2r$r"
-        Graph.louvainMoveRoundWeighted(cg, curC, monotone = true)
-          .write.mode("overwrite").parquet(mdir)
-        val cand = s.read.parquet(mdir)
-        val cr = weightedModularityCore(cg, cand).collect().head
-        val (nc, q) = (cr.getAs[Long]("n_communities"),
-          cr.getAs[Long]("qw_micro"))
-        val nMoved = movedCount(curC, cand)
-        val acc = q >= curQ
-        if (acc) { curC = cand; curQ = q; curN = nc }
-        rows += ((2L, r.toLong, nMoved, if (acc) 1L else 0L, curN, curQ))
+        val (cand, st) = rung(cg, curC, monotone = true)
+        if (accept(2L, r, st)) curC = cand
       }
       // (3,0) unroll and re-score exactly on the full graph
       val mapped = curLbl.select(F.col("v"), F.col("community").as("_c0"))
         .join(F.broadcast(curC.select(F.col("v").as("_c0"),
           F.col("community").as("_c1"))), "_c0")
         .select(F.col("v"), F.col("_c1").as("community"))
-      val fdir = s"$base/final"
-      mapped.write.mode("overwrite").parquet(fdir)
-      val fin = s.read.parquet(fdir)
-      val (ncf, qf) = scoreFine(fin)
-      rows += ((3L, 0L, movedCount(curLbl, fin), 1L, ncf, qf))
+      val fin = rung(unit, curLbl, to = Some(mapped))._2.collect().head
+      rows += ((3L, 0L, fin.getAs[Long]("n_moved"), 1L,
+        fin.getAs[Long]("n_communities"), fin.getAs[Long]("q_micro")))
       rows.toSeq
         .toDF("level", "rung", "n_moved", "accepted", "n_communities",
           "q_micro")

@@ -65,12 +65,12 @@ object Staged {
   private val staged =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Build-once/read-many parquet staging shared by every artifact
-    * below: the first caller per (JVM, sf dir, name) writes, everyone
-    * reads back. A FAILED write removes the dir from the staged set
-    * before rethrowing — otherwise every later reader would hit the
-    * missing/partial parquet of a build that never completed (the
-    * truncate-then-crash class of bug).
+  /** Build-once parquet staging, the one path every staged artifact
+    * below and every streaming input dir goes through: the first caller
+    * per `dir` writes `build` there, everyone returns `dir`. The dir is
+    * marked staged only after the write SUCCEEDED — otherwise every later
+    * reader would hit the missing/partial parquet of a build that never
+    * completed (the truncate-then-crash class of bug).
     *
     * Concurrency is a per-dir LATCH, not a monitor: the winning caller
     * installs the latch and builds while holding NO lock, so nested
@@ -83,10 +83,7 @@ object Staged {
   private val inflight = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.CountDownLatch]()
 
-  private def stagedParquet(s: SparkSession, d: String, name: String)(
-      build: => DataFrame): DataFrame = {
-    val dir = s"/tmp/graft_graph_${Harness.runId}_" +
-      s"${new java.io.File(d).getName}/$name"
+  private[graft] def stagedDir(dir: String)(build: => DataFrame): String = {
     var done = staged.contains(dir)
     while (!done) {
       val latch = new java.util.concurrent.CountDownLatch(1)
@@ -108,8 +105,14 @@ object Staged {
         done = staged.contains(dir)
       }
     }
-    s.read.parquet(dir)
+    dir
   }
+
+  /** [[stagedDir]] per (JVM, sf dir, name), read back. */
+  private def stagedParquet(s: SparkSession, d: String, name: String)(
+      build: => DataFrame): DataFrame =
+    s.read.parquet(stagedDir(s"/tmp/graft_graph_${Harness.runId}_" +
+      s"${new java.io.File(d).getName}/$name")(build))
 
   /** Co-purchase pair list: one row per (order, unordered part pair),
     * pa < pb, built from (order, part)-DISTINCT lineitem. Multiplicity
@@ -196,39 +199,29 @@ object Staged {
   def communityQ(s: SparkSession, d: String): DataFrame =
     stagedParquet(s, d, "community_q") {
       CommunityQueries.modularityCore(
-        coPurchaseEdges(s, d), communityLabels(s, d))
+        graft.operators.Graph.unitWeights(coPurchaseEdges(s, d)),
+        communityLabels(s, d))
     }
 
-  /** Round-1 Louvain-moved labels — the ladder's first rung, a pure
-    * function of [[communityLabels]] + [[coPurchaseEdges]], staged so
-    * D53 (which computes the SAME round live — its bench number IS the
-    * move cost) and D55 (which continues the ladder from here) don't
-    * both pay it per execution. */
+  /** Round-1 Louvain-moved labels — the ladders' first [[CommunityQueries
+    * .rung]] from [[communityLabels]], staged so D53 (which computes the
+    * SAME round live — its bench number IS the move cost) and D55/D63/
+    * D71 (which continue from here) don't each pay it per execution. */
   def communityMoved(s: SparkSession, d: String): DataFrame =
     stagedParquet(s, d, "community_moved") {
-      val l0 = communityLabels(s, d)
-      graft.operators.Graph.louvainMoveRoundLabeled(
-        graft.operators.Graph.labelEdges(
-          coPurchaseEdges(s, d), "pa", "pb", l0), l0,
-        kvcScratch = Some(s"/tmp/graft_graph_${Harness.runId}_" +
-          s"${new java.io.File(d).getName}/community_moved_kvc"))
+      CommunityQueries.rung(
+        graft.operators.Graph.unitWeights(coPurchaseEdges(s, d)),
+        communityLabels(s, d), kvc = true)._1
     }
 
-  /** One-row rung-1 summary — modularity of [[communityMoved]] PLUS
-    * the rung's n_moved (labels that changed vs [[communityLabels]]):
-    * both are pure functions of staged artifacts, and folding the move
-    * count in here spares D55 a live node-sized join per execution. */
+  /** The rung-1 stats row (n_moved, n_communities, m, q_micro) of
+    * [[communityMoved]] against [[communityLabels]] — pure functions of
+    * staged artifacts, so staged beside them. */
   def communityMovedQ(s: SparkSession, d: String): DataFrame =
     stagedParquet(s, d, "community_moved_q") {
-      val nm = communityLabels(s, d)
-        .select(F.col("v"), F.col("community").as("_x"))
-        .join(communityMoved(s, d)
-          .select(F.col("v"), F.col("community").as("_y")), "v")
-        .agg(F.sum(F.when(F.col("_x") =!= F.col("_y"), 1L).otherwise(0L))
-          .as("n_moved"))
-      CommunityQueries.modularityCore(
-        coPurchaseEdges(s, d), communityMoved(s, d))
-        .crossJoin(F.broadcast(nm))
+      CommunityQueries.rung(
+        graft.operators.Graph.unitWeights(coPurchaseEdges(s, d)),
+        communityLabels(s, d), to = Some(communityMoved(s, d)))._2
     }
 
   // ------------------------------------------------------------------

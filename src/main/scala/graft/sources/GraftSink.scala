@@ -91,10 +91,11 @@ object GraftSink {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Best-effort cleanup: a failure is logged as a WARN, not raised. */
-  private[sources] def quietly(what: String)(body: => Any): Unit =
+  /** Best-effort cleanup: a failure is logged as a WARN naming `what`,
+    * not raised. Shared with the streaming harness's cleanup sites. */
+  private[graft] def quietly(what: String)(body: => Any): Unit =
     try body
-    catch { case NonFatal(e) => log.warn(s"graft sink: $what failed", e) }
+    catch { case NonFatal(e) => log.warn(s"graft: $what failed", e) }
 
   /** Driver-side Hadoop conf: the active session's (so fs.defaultFS /
     * S3A settings apply), falling back to defaults off-session (specs

@@ -48,8 +48,9 @@ class CommunitySpec extends SparkSpec {
     val bad = Seq((1L, 100L), (2L, 100L), (3L, 200L), (4L, 100L),
       (11L, 200L), (12L, 200L), (13L, 200L), (14L, 200L))
       .toDF("v", "community")
+    val unit = graft.operators.Graph.unitWeights(edges)
     val moved = graft.operators.Graph
-      .louvainMoveRound(edges, "pa", "pb", bad)
+      .louvainMove(unit, bad)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(moved(3L) == 100L, s"node 3 should rejoin its clique: $moved")
     assert(Seq(1L, 2L, 4L).forall(moved(_) == 100L), moved.toString)
@@ -59,7 +60,7 @@ class CommunitySpec extends SparkSpec {
       (11L, 200L), (12L, 200L), (13L, 200L), (14L, 200L))
       .toDF("v", "community")
     val stable = graft.operators.Graph
-      .louvainMoveRound(edges, "pa", "pb", good)
+      .louvainMove(unit, good)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(stable == Seq(1L -> 100L, 2L -> 100L, 3L -> 100L, 4L -> 100L,
       11L -> 200L, 12L -> 200L, 13L -> 200L, 14L -> 200L).toMap,
@@ -111,8 +112,9 @@ class CommunitySpec extends SparkSpec {
   test("staged rung-1 labels equal a live one-round move (build/serve parity)") {
     val staged = graft.queries.Staged.communityMoved(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val live = graft.operators.Graph.louvainMoveRound(
-      graft.queries.Staged.coPurchaseEdges(spark, sf), "pa", "pb",
+    val live = graft.operators.Graph.louvainMove(
+      graft.operators.Graph.unitWeights(
+        graft.queries.Staged.coPurchaseEdges(spark, sf)),
       graft.queries.Staged.communityLabels(spark, sf))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(staged == live)
@@ -156,7 +158,7 @@ class CommunitySpec extends SparkSpec {
       5L -> 20L, 6L -> 30L)
     val labels = lbl.toSeq.toDF("v", "community")
     val got = graft.operators.Graph
-      .louvainMoveRoundWeighted(wEdges, labels)
+      .louvainMove(wEdges, labels)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // replay the exact weighted gain from first principles
     val self = Map(4L -> 2L)
@@ -257,6 +259,46 @@ class CommunitySpec extends SparkSpec {
       if (b._4 == 0L) assert(b._5 == a._5 && b._6 == a._6,
         s"rejected rung $b must forward state from $a")
     }
+    graft.operators.CacheScope.release(spark)
+  }
+
+  test("community_converge reproduces its recorded accept sequence") {
+    // (level, rung, n_moved, accepted, n_communities, q_micro), recorded
+    // from the ladder before its rungs shared one move/score helper
+    val rows = q("community_converge").collect()
+      .map(r => (0 until 6).map(r.getLong)).toSeq
+    assert(rows == Seq(
+      Seq(0L, 0L, 0L, 1L, 1L, 0L), Seq(1L, 1L, 0L, 1L, 1L, 0L),
+      Seq(1L, 2L, 0L, 1L, 1L, 0L), Seq(1L, 3L, 0L, 1L, 1L, 0L),
+      Seq(2L, 1L, 0L, 1L, 1L, 0L), Seq(2L, 2L, 0L, 1L, 1L, 0L),
+      Seq(2L, 3L, 0L, 1L, 1L, 0L), Seq(3L, 0L, 0L, 1L, 1L, 0L)))
+    graft.operators.CacheScope.release(spark)
+  }
+
+  test("community_converge reads each rung with one driver collect") {
+    // warm the staged artifacts, so only the ladder's own actions count
+    q("community_converge").collect()
+    graft.operators.CacheScope.release(spark)
+    val collects = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        if (funcName == "collect") collects.incrementAndGet()
+      def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit =
+        if (funcName == "collect") collects.incrementAndGet()
+    }
+    org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      q("community_converge")
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val rungs = 2 * graft.queries.CommunityQueries.CONV_MOVES + 2
+    assert(collects.get <= rungs,
+      s"${collects.get} collects for $rungs rungs")
     graft.operators.CacheScope.release(spark)
   }
 
