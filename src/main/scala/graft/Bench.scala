@@ -7,11 +7,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", {
-      val shm = new java.io.File("/dev/shm")
-      val root = if (shm.isDirectory && shm.canWrite) "/dev/shm" else "/tmp"
-      s"$root/graft_bench_local_${ProcessHandle.current().pid()}"
-    })
+    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
+      graft.queries.Harness.tmpfsRoot.resolve("spark_local").toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -35,14 +32,14 @@ object Bench {
       // JVM's blockmgr state, not a neighbor run's (r15, item 5).
       // r15 OPT (§2.1/§6): prefer tmpfs (/dev/shm) for shuffle/spill
       // files — the same bounded-harness rationale as the streaming
-      // checkpoints' tmpfs root (r9): the sweep's peak on-disk
-      // blockmgr footprint is ~0.5 GB at sf0.1 against a 128 GiB
-      // sandbox, and the disk-backed default charged the heavy graph
-      // queries (ktruss wedge shuffle) real fsync/page-cache cost.
-      // Production sizes real local SSDs for shuffle (a deployment
-      // choice, like the streaming checkpoint location);
-      // SPARK_GRAFT_LOCAL_DIR overrides, and a sandbox without a
-      // writable /dev/shm falls back to /tmp unchanged.
+      // checkpoints (r9), and under the same run root
+      // (Harness.tmpfsRoot, /tmp without a writable /dev/shm): the
+      // sweep's peak on-disk blockmgr footprint is ~0.5 GB at sf0.1
+      // against a 128 GiB sandbox, and the disk-backed default charged
+      // the heavy graph queries (ktruss wedge shuffle) real
+      // fsync/page-cache cost. Production sizes real local SSDs for
+      // shuffle (a deployment choice, like the streaming checkpoint
+      // location); SPARK_GRAFT_LOCAL_DIR overrides.
       .config("spark.local.dir", localDir)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

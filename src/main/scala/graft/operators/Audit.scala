@@ -52,7 +52,7 @@ object Audit {
     * (`approx_count_distinct`, HLL++), which removes the Expand
     * entirely (O(1) sketch state per column, single-multiplicity scan)
     * while the exact form stays the oracle config; both configs are
-    * A/B-measured in `tools/ScaleTest` on the 6M-row fact. The unpivot
+    * A/B-measurable with `runMain graft.Bench <names>`. The unpivot
     * of the 1-row result is free. */
   def tableProfile(df: DataFrame, cols: Seq[String],
       approx: Boolean = false): DataFrame = {

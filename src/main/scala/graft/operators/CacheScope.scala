@@ -14,8 +14,10 @@ import org.apache.spark.storage.StorageLevel
   * the iterative graph operators), so callers get a per-job release
   * handle instead of the session-wide `spark.catalog.clearCache()`.
   *
-  * Operators call [[persist]] / [[iterate]]; a pipeline driver calls
-  * [[release]] after the consuming action (Verify/Bench do, per query).
+  * Operators call [[persist]] / [[iterate]], and the query harness
+  * [[track]]s its scratch dirs and memory-sink views; a pipeline driver
+  * calls [[release]] after the consuming action (Verify/Bench do, per
+  * query).
   *
   * Checkpoints need their own tracking because `Dataset.unpersist` only
   * covers CacheManager entries: a `localCheckpoint` pins its blocks at
@@ -51,7 +53,10 @@ object CacheScope {
   private val tracked =
     new java.util.HashMap[SparkSession, java.util.ArrayList[() => Unit]]()
 
-  private def track(spark: SparkSession, thunk: () => Unit): Unit =
+  /** Run `thunk` at the next [[release]] of `spark` — how frames,
+    * checkpoints, scratch dirs ([[graft.queries.Harness.scratch]]) and
+    * memory-sink views end their life. */
+  private[graft] def track(spark: SparkSession, thunk: () => Unit): Unit =
     tracked.synchronized {
       tracked.computeIfAbsent(spark,
         _ => new java.util.ArrayList[() => Unit]()).add(thunk)
@@ -167,11 +172,13 @@ object CacheScope {
     }
 
   /** Unpersist (non-blocking) everything tracked on this session since
-    * the last release — persisted frames AND checkpoint blocks. For
+    * the last release — persisted frames, checkpoint blocks, scratch
+    * dirs and memory-sink views. For
     * PERSISTED frames this is safe at any time (a later action
     * recomputes from lineage). CHECKPOINTED frames have no lineage to
-    * recompute from — release() is the END OF THEIR LIFE: a read after
-    * release fails with a missing-block error instead of recomputing.
+    * recompute from, nor have frames read from a scratch dir —
+    * release() is the END OF THEIR LIFE: a read after release fails
+    * with a missing-block or missing-file error instead of recomputing.
     * Callers therefore release only after the consuming action (the
     * Verify/Bench per-query discipline). A failing release step is
     * logged and the remaining steps still run. */

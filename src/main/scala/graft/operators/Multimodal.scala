@@ -96,8 +96,9 @@ object Multimodal {
   * multiply-adds per grid — small enough to codegen in ISOLATION, but
   * whole-stage codegen fuses it with the md5 grid construction into
   * one processNext() that exceeds janino's 64 KB method limit, and the
-  * silent fallback runs the whole stage interpreted (r14 ScaleTest
-  * logged 16 compile failures). This is exactly the decode-stage shape
+  * silent fallback runs the whole stage interpreted (an r14 10× probe
+  * logged 16 compile failures; re-measure with
+  * `runMain graft.Bench <names>`). This is exactly the decode-stage shape
   * the F-section documents as batched mapPartitions (the mapInPandas
   * analog): tight primitive JVM loops, one digest per 16-byte grid
   * row, narrow (no shuffle), schema-explicit. */

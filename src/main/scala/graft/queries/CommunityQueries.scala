@@ -120,16 +120,6 @@ object CommunityQueries {
           .as("q_micro"))
   }
 
-  /** Per-JVM scratch root of the community ladders' staged frames. */
-  private val scratchRoot =
-    java.nio.file.Paths.get(s"/tmp/graft_community_${Harness.runId}")
-
-  /** A fresh scratch directory under [[scratchRoot]] — unique per call,
-    * so concurrent runs of one query never overwrite each other. */
-  private def scratchDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(
-      java.nio.file.Files.createDirectories(scratchRoot), tag).toString
-
   /** One rung of a community ladder, the step every community query
     * runs: move `from` (v, community) once over the weighted graph `g`
     * (pa, pb, w) with [[Graph.louvainMove]] — or, given `to`, take it as
@@ -141,7 +131,8 @@ object CommunityQueries {
     * the 1-row scalar a driver-side accept guard reads.
     *
     * The staged labels feed the stats' three label reads and the next
-    * rung; NO corpus-scale block cache anywhere (profiled at sf0.1:
+    * rung (the scratch dir dies at [[graft.operators.CacheScope.release]]);
+    * NO corpus-scale block cache anywhere (profiled at sf0.1:
     * persist()ing the move result cost 2–3 s against 0.3 s for the plain
     * pipeline, localCheckpoint 3–6× the plan cost; the parquet write
     * costs ~0.1 s and is the shape a production refinement publishes
@@ -151,7 +142,7 @@ object CommunityQueries {
   private[queries] def rung(g: DataFrame, from: DataFrame,
       kvc: Boolean = false, monotone: Boolean = false,
       to: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    val dir = scratchDir("rung")
+    val dir = Harness.scratch(g.sparkSession, "rung")
     to.getOrElse(Graph.louvainMove(g, from,
         if (kvc) Some(s"$dir/kvc") else None, monotone))
       .write.mode("overwrite").parquet(s"$dir/labels")
@@ -168,7 +159,7 @@ object CommunityQueries {
     * several subtrees), and its supernode spine (v, community = v). */
   private def coarse(edges: DataFrame,
       labels: DataFrame): (DataFrame, DataFrame) = {
-    val dir = scratchDir("coarse")
+    val dir = Harness.scratch(edges.sparkSession, "coarse")
     Graph.coarsenGraph(edges, labels).write.mode("overwrite").parquet(dir)
     val cg = edges.sparkSession.read.parquet(dir)
     (cg, cg.select(F.col("pa").as("v"))

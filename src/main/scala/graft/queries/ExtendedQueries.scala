@@ -214,7 +214,7 @@ object ExtendedQueries {
   private val sourceRoundtrip = QueryDef(
     "source_roundtrip",
     (s, d) => {
-      val base = s"/tmp/graft_h2_${Harness.runId}_${new java.io.File(d).getName}"
+      val base = Harness.scratch(s, "source_roundtrip")
       val sup = t(s, d, "supplier")
       sup.write.mode("overwrite").option("header", "true").csv(s"$base/csv")
       sup.write.mode("overwrite").json(s"$base/json")
@@ -240,7 +240,7 @@ object ExtendedQueries {
   private val orcRoundtrip = QueryDef(
     "orc_roundtrip",
     (s, d) => {
-      val base = s"/tmp/graft_h9_${Harness.runId}_${new java.io.File(d).getName}"
+      val base = Harness.scratch(s, "orc_roundtrip")
       val sup = t(s, d, "supplier")
       sup.write.mode("overwrite").option("compression", "zlib")
         .orc(s"$base/orc")
@@ -263,8 +263,7 @@ object ExtendedQueries {
   private val sinkRoundtrip = QueryDef(
     "sink_roundtrip",
     (s, d) => {
-      val base = s"/tmp/graft_h10_${Harness.runId}_" +
-        s"${new java.io.File(d).getName}/sink"
+      val base = s"${Harness.scratch(s, "sink_roundtrip")}/sink"
       val sup = t(s, d, "supplier")
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
       sup.write.format("graft.sources.GraftAtomicSinkProvider")
@@ -286,16 +285,14 @@ object ExtendedQueries {
     * from the source, so the hash compare proves both the snapshot-
     * chain resolution (an append never rewrites prior manifests) and
     * the parquet encode/decode path (page encoding via parquet-java,
-    * null cells, exact doubles). Within one bench JVM the query is
-    * idempotent: re-runs append versions 3, 4, … and version 1 stays
-    * byte-identical — time travel is WHY it stays idempotent.
+    * null cells, exact doubles). Every call writes a fresh table in its
+    * own scratch dir, so the chain is always exactly versions 1 and 2.
     * Version-resolution errors and overlapping-writer serialization
     * are GraftSinkSpec's; this query is the driver-graded read. */
   private val sinkTimeTravel = QueryDef(
     "sink_time_travel",
     (s, d) => {
-      val base = s"/tmp/graft_h11_${Harness.runId}_" +
-        s"${new java.io.File(d).getName}/sink_tt"
+      val base = s"${Harness.scratch(s, "sink_time_travel")}/sink"
       val fmt = "graft.sources.GraftAtomicSinkProvider"
       val sup = t(s, d, "supplier")
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -320,16 +317,13 @@ object ExtendedQueries {
     * ("give me what changed since the version I processed") without a
     * streaming checkpoint. The oracle recomputes commit 2's content,
     * so the hash compare proves the version set-difference loses and
-    * duplicates nothing. Idempotent within a bench JVM for the same
-    * reason H20 is: re-runs append versions whose delta past v1 is
-    * recomputed fresh each run... so the read pins BOTH bounds —
-    * version = 2 AND startVersion = 1 — making every re-run read the
-    * same (v1, v2] delta. */
+    * duplicates nothing. Every call writes a fresh table in its own
+    * scratch dir; the read still pins BOTH bounds — version = 2 AND
+    * startVersion = 1 — so it names the (v1, v2] delta it grades. */
   private val sinkChangeFeed = QueryDef(
     "sink_change_feed",
     (s, d) => {
-      val base = s"/tmp/graft_h21_${Harness.runId}_" +
-        s"${new java.io.File(d).getName}/sink_cf"
+      val base = s"${Harness.scratch(s, "sink_change_feed")}/sink"
       val fmt = "graft.sources.GraftAtomicSinkProvider"
       val sup = t(s, d, "supplier")
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -354,7 +348,7 @@ object ExtendedQueries {
   private val partitionedPrune = QueryDef(
     "partitioned_prune",
     (s, d) => {
-      val out = s"/tmp/graft_h3_${Harness.runId}_${new java.io.File(d).getName}"
+      val out = s"${Harness.scratch(s, "partitioned_prune")}/orders"
       // repartition on the partition column first: every write task
       // otherwise emits a file per priority it sees (tasks × 5 small
       // files — the classic partitioned-write small-files explosion; at
@@ -386,21 +380,15 @@ object ExtendedQueries {
     (s, d) => {
       val sf = new java.io.File(d).getName.replace(".", "_").replace("-", "_")
       // run-id suffix: managed-table DIRS are shared across JVMs via the
-      // warehouse dir even though the in-memory catalog is not
+      // warehouse dir even though the in-memory catalog is not. The
+      // tables die at release (DROP deletes a managed table's dir); the
+      // DROP here covers a re-run before release.
       val ob = s"g_orders_bkt_${Harness.runId}_$sf"
       val cb = s"g_cust_bkt_${Harness.runId}_$sf"
-      // managed-table dirs survive across sessions while the in-memory
-      // catalog does not — clear them so saveAsTable never hits
-      // "location already exists"
-      val wh = new java.io.File(java.net.URI.create(
-        s.conf.get("spark.sql.warehouse.dir")).getPath)
       Seq(ob, cb).foreach { n =>
         s.sql(s"DROP TABLE IF EXISTS $n")
-        val dir = new java.io.File(wh, n)
-        if (dir.exists()) {
-          import scala.reflect.io.Directory
-          new Directory(dir).deleteRecursively()
-        }
+        graft.operators.CacheScope.track(s,
+          () => s.sql(s"DROP TABLE IF EXISTS $n"))
       }
       // repartition(8, key) matches the bucket hash (both are
       // pmod(murmur3, 8)), so each task holds exactly one bucket and
@@ -1112,18 +1100,18 @@ object ExtendedQueries {
     "dpp_join",
     (s, d) => {
       import s.implicits._
-      val out = s"/tmp/graft_h10_${Harness.runId}_${new java.io.File(d).getName}"
+      val base = Harness.scratch(s, "dpp_join")
       t(s, d, "orders").repartition(F.col("o_orderpriority"))
         .write.mode("overwrite")
-        .partitionBy("o_orderpriority").parquet(out)
+        .partitionBy("o_orderpriority").parquet(s"$base/fact")
       Seq(
         ("1-URGENT", "expedite"), ("2-HIGH", "expedite"),
         ("3-MEDIUM", "standard"), ("4-NOT SPECIFIED", "standard"),
         ("5-LOW", "deferred"))
         .toDF("priority", "sla_class")
-        .write.mode("overwrite").parquet(s"$out-dim")
-      val dim = s.read.parquet(s"$out-dim")
-      s.read.parquet(out)
+        .write.mode("overwrite").parquet(s"$base/dim")
+      val dim = s.read.parquet(s"$base/dim")
+      s.read.parquet(s"$base/fact")
         .join(F.broadcast(dim.filter(F.col("sla_class") === "expedite")),
           F.col("o_orderpriority") === F.col("priority"))
         .groupBy("o_orderstatus")

@@ -571,8 +571,9 @@ object GraphMetricsQueries {
     * graph_effective_diameter share hops 1–2 instead of each re-running
     * the full loop from hop 0 (the r12 verdict's consolidation item —
     * previously ~2× the ladder per sweep, ~53 s redundant at the 10×
-    * probe). First toucher builds; the ScaleTest probes price the
-    * single-shot build, the community_lpa convention. */
+    * probe). First toucher builds; run 1 of `runMain graft.Bench
+    * graph_anf` prices the single-shot build, the community_lpa
+    * convention. */
   private def anfReach(s: org.apache.spark.sql.SparkSession, d: String,
       hops: Int): org.apache.spark.sql.DataFrame =
     (1 to hops).map { h =>

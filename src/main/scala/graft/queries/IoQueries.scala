@@ -10,9 +10,9 @@ import Tables.t
   * parquet generations (mergeSchema + null backfill), and dynamic
   * partition overwrite (the idempotent-backfill write mode).
   *
-  * All scratch I/O goes under per-JVM run-id dirs (Harness.runId) so a
-  * concurrent local check.py and driver verify can't clobber each
-  * other mid-read.
+  * Each call writes under its own [[Harness.scratch]] dir, so neither
+  * a re-run nor a concurrent JVM can clobber a write mid-read; the dir
+  * is deleted at the caller's `CacheScope.release`.
   */
 object IoQueries {
 
@@ -30,8 +30,7 @@ object IoQueries {
   private val csvTextRoundtrip = QueryDef(
     "csv_text_roundtrip",
     (s, d) => {
-      val base = s"/tmp/graft_h13_${Harness.runId}_" +
-        s"${new java.io.File(d).getName}"
+      val base = Harness.scratch(s, "csv_text")
       val docs = t(s, d, "documents")
         .select("doc_id", "text", "lang", "source")
       docs.write.mode("overwrite")
@@ -67,8 +66,7 @@ object IoQueries {
   private val mergeSchemaRead = QueryDef(
     "merge_schema_read",
     (s, d) => {
-      val base = s"/tmp/graft_h14_${Harness.runId}_" +
-        s"${new java.io.File(d).getName}"
+      val base = Harness.scratch(s, "merge_schema")
       val docs = t(s, d, "documents")
       docs.where(F.expr("doc_id % 2 = 0"))
         .select(F.col("doc_id"), F.col("source"), F.col("n_chars"),
@@ -116,8 +114,7 @@ object IoQueries {
   private val partitionOverwrite = QueryDef(
     "partition_overwrite",
     (s, d) => {
-      val base = s"/tmp/graft_h15_${Harness.runId}_" +
-        s"${new java.io.File(d).getName}/tbl"
+      val base = s"${Harness.scratch(s, "partition_overwrite")}/tbl"
       val docs = t(s, d, "documents")
         .select("doc_id", "source", "n_chars")
       docs.write.mode("overwrite").partitionBy("source").parquet(base)
@@ -152,8 +149,7 @@ object IoQueries {
   private val jsonlRoundtrip = QueryDef(
     "jsonl_roundtrip",
     (s, d) => {
-      val base = s"/tmp/graft_h18_${Harness.runId}_" +
-        s"${new java.io.File(d).getName}"
+      val base = Harness.scratch(s, "jsonl")
       val docs = t(s, d, "documents")
         .select("doc_id", "text", "lang", "source")
       docs.write.mode("overwrite").json(s"$base/jsonl")

@@ -1,6 +1,11 @@
 package graft.queries
 
+import java.nio.file.{Files, NoSuchFileException, Path, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.operators.CacheScope
+import graft.sources.GraftSink
 
 /** One inventory entry from SURVEY.md §2: a Spark implementation plus
   * (when SQL-expressible) the equivalent DuckDB oracle SQL. */
@@ -10,14 +15,59 @@ final case class QueryDef(
     oracle: Option[String])
 
 object Harness {
-  /** Per-JVM run id for scratch paths and managed-table names. Fixed
-    * sf-keyed paths let two concurrent JVMs (e.g. a local check.py next
-    * to the driver's verify) overwrite each other's staging dirs
-    * mid-read; pid+nanotime is unique per JVM while stable within it,
-    * so per-JVM reuse (streaming stage dirs) still works. */
+  /** Per-JVM run id, the name of the run's scratch roots and of its
+    * managed tables. pid+nanotime is unique per JVM, so two concurrent
+    * JVMs (e.g. a local check.py next to the driver's verify) never
+    * share a staging dir, while it stays stable within one JVM, so
+    * per-JVM build-once staging still works. */
   val runId: String =
     java.lang.Long.toHexString(ProcessHandle.current().pid()) + "_" +
       java.lang.Long.toHexString(System.nanoTime())
+
+  /** The run's one scratch root, and its tmpfs twin on /dev/shm for
+    * stream checkpoints and Bench's Spark local dir (the /tmp root when
+    * /dev/shm is not writable). Every scratch path in graft lives under
+    * one of the two; the shutdown hook below removes both. */
+  private[graft] val root: Path = Paths.get(s"/tmp/graft_$runId")
+  private[graft] val tmpfsRoot: Path = {
+    val shm = new java.io.File("/dev/shm")
+    if (shm.isDirectory && shm.canWrite) Paths.get(s"/dev/shm/graft_$runId")
+    else root
+  }
+  sys.addShutdownHook { deleteTree(root); deleteTree(tmpfsRoot) }
+
+  /** A fresh, empty directory `<root>/<kind>_<n>`, unique per call, that
+    * dies at the next [[CacheScope.release]] of `spark` — like a
+    * checkpoint, so read it only before the consuming action's release.
+    * `tmpfs` puts it under [[tmpfsRoot]]. */
+  def scratch(spark: SparkSession, kind: String,
+      tmpfs: Boolean = false): String = {
+    val dir = Files.createTempDirectory(
+      Files.createDirectories(if (tmpfs) tmpfsRoot else root), kind + "_")
+    CacheScope.track(spark, () => deleteTree(dir))
+    dir.toString
+  }
+
+  /** `<root>/<name>`: the home of a per-JVM build-once artifact
+    * ([[Staged.stagedDir]]); it lives until the JVM exits. */
+  private[graft] def staged(name: String): String =
+    root.resolve(name).toString
+
+  /** The one recursive scratch delete. A failure is logged as a WARN;
+    * a path that is already gone (or goes while the walk runs) is done. */
+  private[graft] def deleteTree(path: Path): Unit =
+    GraftSink.quietly(s"deleting $path") {
+      try {
+        val walk = Files.walk(path)
+        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+          .forEach(p => Files.deleteIfExists(p))
+        finally walk.close() // an unclosed walk leaks a directory fd
+      } catch {
+        case _: NoSuchFileException => ()
+        case e: java.io.UncheckedIOException
+            if e.getCause.isInstanceOf[NoSuchFileException] => ()
+      }
+    }
 }
 
 object Tables {
@@ -111,8 +161,8 @@ object Staged {
   /** [[stagedDir]] per (JVM, sf dir, name), read back. */
   private def stagedParquet(s: SparkSession, d: String, name: String)(
       build: => DataFrame): DataFrame =
-    s.read.parquet(stagedDir(s"/tmp/graft_graph_${Harness.runId}_" +
-      s"${new java.io.File(d).getName}/$name")(build))
+    s.read.parquet(stagedDir(Harness.staged(
+      s"graph_${new java.io.File(d).getName}/$name"))(build))
 
   /** Co-purchase pair list: one row per (order, unordered part pair),
     * pa < pb, built from (order, part)-DISTINCT lineitem. Multiplicity
@@ -177,8 +227,8 @@ object Staged {
     * [[coPurchaseEdges]]), staged so the partition is computed ONCE per
     * (JVM, sf dir): `community_lpa` triggers the build on first touch
     * (under Bench's median-of-3 only run 1 pays it, so the committed
-    * per-query number is the read — detection cost is tracked by the
-    * single-shot `community_lpa_10x` ScaleTest probe instead) and
+    * per-query number is the read — the detection cost is run 1 of
+    * `runMain graft.Bench community_lpa`) and
     * `community_modularity` SCORES the staged partition instead of
     * re-running the full propagation — the r8 verdict's double-LPA.
     * At 100 TB this parquet is the detect-once/score-and-join-many
@@ -304,8 +354,8 @@ object Staged {
     * FULL ladder from hop 0, paying the identical hops 1–2 twice per
     * sweep (~6 s at sf0.1, ~53 s at the 10× probe). Now the pair costs
     * one ladder + one cheap hop-3 extension; the first query to touch
-    * a hop builds it (single-shot build cost tracked by the ScaleTest
-    * probes, the community_lpa convention). At 100 TB these parquets
+    * a hop builds it (its cost is run 1 of `runMain graft.Bench <names>`,
+    * the community_lpa convention). At 100 TB these parquets
     * are the checkpointed per-hop frontier state any HyperANF-style
     * run persists between supersteps anyway. */
   def anfSketch(s: SparkSession, d: String, hop: Int): DataFrame =
@@ -342,9 +392,9 @@ object Staged {
     * verdict's #1 item: `harmonic_centrality` and
     * `harmonic_sample_audit` each re-ran the identical BFS, ~7 s
     * combined idle — the anfSketch consolidation applied to the last
-    * duplicated graph ladder). First toucher pays the build
-    * (single-shot cost tracked by the `harmonic_centrality_10x`
-    * ScaleTest probe — the community_lpa convention); at 100 TB this
+    * duplicated graph ladder). First toucher pays the build (run 1 of
+    * `runMain graft.Bench harmonic_centrality` — the community_lpa
+    * convention); at 100 TB this
     * parquet is the centrality snapshot a serving layer joins against
     * anyway. */
   def harmonicEstimates(s: SparkSession, d: String): DataFrame =

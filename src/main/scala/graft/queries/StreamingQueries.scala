@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.{functions => F}
+import graft.operators.CacheScope
 import Tables.t
 
 /** Streaming-executed inventory entries (G): each query REALLY runs
@@ -32,7 +33,7 @@ object StreamingQueries {
     * failed write marks nothing. */
   private def stage(s: SparkSession, d: String, table: String): String =
     Staged.stagedDir(
-      s"/tmp/graft_stream_${Harness.runId}_${new java.io.File(d).getName}/$table") {
+      Harness.staged(s"stream_${new java.io.File(d).getName}/$table")) {
       // 8 files, matching the state-partition cap: the driver tables
       // read as ONE input partition at these sizes, and a one-file dir
       // gives every micro-batch a SINGLE-TASK scan — the file source
@@ -75,7 +76,7 @@ object StreamingQueries {
         StructField("ts", TimestampType), StructField("event_id", LongType)))
       val rows = (1 to 4).map(i => Row(i.toLong % 2,
         java.sql.Timestamp.valueOf(s"2024-01-01 00:0$i:00"), i.toLong))
-      val dir = s"/tmp/graft_stream_${Harness.runId}_warm/tiny"
+      val dir = Harness.scratch(s, "stream_warm")
       s.createDataFrame(
         new java.util.ArrayList[Row](scala.jdk.CollectionConverters
           .SeqHasAsJava(rows).asJava), sch)
@@ -114,44 +115,6 @@ object StreamingQueries {
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** Run a bounded stream into a memory sink and return its content.
-    *
-    * Suite-wide state-partition cap (r8, from the r7 verdict's bench
-    * cost item): the partition count binds at stream START, and every
-    * extra shuffle partition is an extra state store instantiated,
-    * checkpointed and committed PER micro-batch — profiled at sf0.1
-    * a stateful drain drops ~0.3–0.9 s going 32 → 8 partitions with
-    * identical results (re-measure per query with
-    * `runMain graft.Bench <names>`). Queries that already
-    * picked a tighter value via [[withStatePartitions]] keep it (the
-    * cap takes the MIN with the surrounding setting); at production
-    * scale state-partition count is a deployment choice, not a plan
-    * property. */
-  /** tmpfs checkpoint root (r9): the offset/commit WAL and state-store
-    * files fsync per micro-batch — ~100 ms/batch of pure log IO on the
-    * disk-backed default temp dir (per-layer attribution:
-    * `python3 perfbench/run.py --trace 1`).
-    * A fresh per-drain directory under /dev/shm (when present) removes
-    * the fsync cost with identical semantics; each drain's dir is
-    * deleted after the sink is read. Production points
-    * checkpointLocation at durable shared storage — tmpfs only binds
-    * this bounded local harness, like the state-partition cap. */
-  private val ckptRoot: Option[String] = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite)
-      Some(s"/dev/shm/graft_ckpt_${Harness.runId}")
-    else None
-  }
-
-  private def deleteRecursively(path: java.nio.file.Path): Unit =
-    graft.sources.GraftSink.quietly(s"deleting $path") {
-      val walk = java.nio.file.Files.walk(path)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => graft.sources.GraftSink.quietly(s"deleting $p") {
-          java.nio.file.Files.delete(p) })
-      finally walk.close() // an unclosed walk leaks a directory fd
-    }
-
   /** Scoped session-conf override (binds at stream START, like
     * [[withStatePartitions]]). */
   private def withConf[T](s: SparkSession, key: String, value: String)(
@@ -178,10 +141,32 @@ object StreamingQueries {
       withConf(s, "spark.sql.streaming.minBatchesToRetain", "2")(body)
     }
 
-  private def drain(df: DataFrame, mode: String): DataFrame = {
-    val name = s"graft_sink_${nameCounter.incrementAndGet()}"
+  /** Drain a bounded stream (Trigger.AvailableNow) into the sink that
+    * `sink` sets on `df`'s writer.
+    *
+    * Suite-wide state-partition cap (r8, from the r7 verdict's bench
+    * cost item): the partition count binds at stream START, and every
+    * extra shuffle partition is an extra state store instantiated,
+    * checkpointed and committed PER micro-batch — profiled at sf0.1
+    * a stateful drain drops ~0.3–0.9 s going 32 → 8 partitions with
+    * identical results (re-measure per query with
+    * `runMain graft.Bench <names>`). Queries that already
+    * picked a tighter value via [[withStatePartitions]] keep it (the
+    * cap takes the MIN with the surrounding setting); at production
+    * scale state-partition count is a deployment choice, not a plan
+    * property.
+    *
+    * The checkpoint is a fresh tmpfs scratch dir (r9): the offset/commit
+    * WAL and state-store files fsync per micro-batch — ~100 ms/batch of
+    * pure log IO on a disk-backed dir (`perfbench/run.py --trace 1`).
+    * Nothing reads it after the drain, so it is freed here, also on
+    * failure, or a query the bench retries would pile state-store files
+    * up in RAM. Production points checkpointLocation at durable shared
+    * storage — tmpfs only binds this bounded local harness. */
+  private def runToEnd(df: DataFrame, mode: String)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
     val s = df.sparkSession
-    val ckpt = ckptRoot.map(r => s"$r/$name")
+    val ckpt = Harness.scratch(s, "ckpt", tmpfs = true)
     // COMPLETE-mode drains skip the trailing no-data micro-batch: in
     // complete mode the sink always holds the last FULL result and the
     // watermark never evicts state, so an empty wrap-up batch re-emits
@@ -199,21 +184,27 @@ object StreamingQueries {
       math.min(s.conf.get("spark.sql.shuffle.partitions").toInt, 4)) {
       withDrainConfs(s) {
         withConf(s, "spark.sql.streaming.noDataMicroBatches.enabled", noData) {
-          val w = df.writeStream.format("memory").queryName(name)
-            .outputMode(mode).trigger(Trigger.AvailableNow())
-          ckpt.foreach(w.option("checkpointLocation", _))
-          w.start()
+          sink(df.writeStream.outputMode(mode)
+            .trigger(Trigger.AvailableNow())
+            .option("checkpointLocation", ckpt)).start()
         }
       }
     }
     try q.awaitTermination()
-    finally
-      // the drained checkpoint has no future reader (names are unique
-      // per drain), so free the tmpfs space eagerly — also on failure,
-      // or a crashing query retried by the bench would accumulate
-      // state-store files in RAM-backed storage
-      ckpt.foreach(c => deleteRecursively(java.nio.file.Paths.get(c)))
-    df.sparkSession.table(name)
+    finally Harness.deleteTree(java.nio.file.Paths.get(ckpt))
+  }
+
+  /** Run a bounded stream into a memory sink and return its content.
+    * The memory sink registers the result as a temp view named after
+    * the query, so the view is dropped at `CacheScope.release` — it
+    * would otherwise hold every drained result in driver memory for the
+    * life of the JVM. */
+  private def drain(df: DataFrame, mode: String): DataFrame = {
+    val s = df.sparkSession
+    val name = s"graft_sink_${nameCounter.incrementAndGet()}"
+    CacheScope.track(s, () => s.catalog.dropTempView(name))
+    runToEnd(df, mode)(_.format("memory").queryName(name))
+    s.table(name)
   }
 
   /** Drain a LARGE-output append stream through the parquet FILE sink
@@ -225,21 +216,9 @@ object StreamingQueries {
     * production shape — a validation stream lands on storage, not in a
     * driver table. */
   private def drainFiles(df: DataFrame): DataFrame = {
-    val name = s"graft_fsink_${nameCounter.incrementAndGet()}"
-    val s = df.sparkSession
-    val outDir = s"/tmp/graft_stream_out_${Harness.runId}/$name"
-    val ckpt = ckptRoot.map(r => s"$r/$name").getOrElse(s"$outDir/_ckpt")
-    val q = withStatePartitions(s,
-      math.min(s.conf.get("spark.sql.shuffle.partitions").toInt, 4)) {
-      withDrainConfs(s) {
-        df.writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      }
-    }
-    try q.awaitTermination()
-    finally deleteRecursively(java.nio.file.Paths.get(ckpt))
-    s.read.parquet(outDir)
+    val out = Harness.scratch(df.sparkSession, "stream_out")
+    runToEnd(df, "append")(_.format("parquet").option("path", out))
+    df.sparkSession.read.parquet(out)
   }
 
   // ------------------------------------------------------------------ G2
@@ -587,11 +566,12 @@ object StreamingQueries {
   private val streamUpsert = QueryDef(
     "stream_upsert",
     (s, d) => {
-      val store = s"/tmp/graft_upsert_${Harness.runId}_${new java.io.File(d).getName}"
+      val store = Harness.scratch(s, "upsert")
       // dedicated MULTI-FILE staging (the shared staged dir is one file,
       // which collapses AvailableNow into a single batch): 12 files at
       // 3 per trigger → 4 real micro-batches, 3 real merges
-      val dir = Staged.stagedDir(s"$store/_input") {
+      val dir = Staged.stagedDir(
+        Harness.staged(s"upsert_${new java.io.File(d).getName}")) {
         t(s, d, "events").repartition(12)
       }
       val schema = schemaCache.computeIfAbsent(dir,
@@ -1556,19 +1536,10 @@ object StreamingQueries {
         .where(F.col("event_type").isin("view", "purchase"))
         .select(F.col("event_id"), F.col("user_id"), F.col("event_type"),
           F.unix_micros(F.col("ts")).as("ts_us"))
-      val n = nameCounter.incrementAndGet()
-      val sinkPath = s"/tmp/graft_gsink_${Harness.runId}_" +
-        s"${new java.io.File(d).getName}/t$n"
-      val ckpt = ckptRoot.map(r => s"$r/gsink_$n")
-        .getOrElse(s"/tmp/graft_gsink_ckpt_${Harness.runId}_$n")
-      val q = withDrainConfs(s) {
-        out.writeStream.format("graft.sources.GraftAtomicSinkProvider")
-          .option("path", sinkPath).option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .start()
-      }
-      try q.awaitTermination()
-      finally deleteRecursively(java.nio.file.Paths.get(ckpt))
+      val sinkPath = s"${Harness.scratch(s, "gsink")}/t"
+      runToEnd(out, "append")(
+        _.format("graft.sources.GraftAtomicSinkProvider")
+          .option("path", sinkPath))
       s.read.format("graft.sources.GraftAtomicSinkProvider")
         .option("path", sinkPath).load()
         .orderBy("event_id")
@@ -1597,9 +1568,7 @@ object StreamingQueries {
       val fmt = "graft.sources.GraftAtomicSinkProvider"
       val sup = t(s, d, "supplier")
         .select("s_suppkey", "s_name", "s_acctbal")
-      val n = nameCounter.incrementAndGet()
-      val sinkPath = s"/tmp/graft_gsrc_${Harness.runId}_" +
-        s"${new java.io.File(d).getName}/t$n"
+      val sinkPath = s"${Harness.scratch(s, "gsrc")}/t"
       sup.where(F.col("s_suppkey") % 2 === 0)
         .write.format(fmt).option("path", sinkPath)
         .mode("overwrite").save()

@@ -131,4 +131,47 @@ class CacheScopeSpec extends SparkSpec {
     assert(CacheScope.trackedFrames(spark) >= 1, "sibling session untouched")
     CacheScope.release(spark)
   }
+
+  test("Harness.scratch gives each call its own dir, and release deletes both") {
+    val a = java.nio.file.Paths.get(graft.queries.Harness.scratch(spark, "twin"))
+    val b = java.nio.file.Paths.get(graft.queries.Harness.scratch(spark, "twin"))
+    assert(a != b)
+    assert(java.nio.file.Files.isDirectory(a) && java.nio.file.Files.isDirectory(b))
+    CacheScope.release(spark)
+    assert(!java.nio.file.Files.exists(a) && !java.nio.file.Files.exists(b))
+  }
+
+  test("the exit hook's delete removes both roots and is quiet once they are gone") {
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val roots = Seq("data_root", "tmpfs_root").map { k =>
+      val r = SparkSpec.tempDir(k)
+      java.nio.file.Files.writeString(
+        java.nio.file.Files.createDirectories(r.resolve("a/b")).resolve("f"), "x")
+      r
+    }
+    val warns = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val capture = new AbstractAppender("scratch-warns", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warns.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = org.apache.logging.log4j.LogManager
+      .getLogger(graft.sources.GraftSink.getClass).asInstanceOf[Logger]
+    logger.addAppender(capture)
+    try {
+      // the capture sees the WARN a failed cleanup logs
+      graft.sources.GraftSink.quietly("probe")(throw new RuntimeException("x"))
+      assert(warns.size == 1, warns)
+      warns.clear()
+      roots.foreach(graft.queries.Harness.deleteTree)
+      assert(roots.forall(r => !java.nio.file.Files.exists(r)))
+      roots.foreach(graft.queries.Harness.deleteTree) // already gone
+    } finally {
+      logger.removeAppender(capture)
+      capture.stop()
+    }
+    assert(warns.isEmpty, warns)
+  }
 }

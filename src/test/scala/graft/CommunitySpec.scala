@@ -326,4 +326,27 @@ class CommunitySpec extends SparkSpec {
     assert(r.getLong(r.fieldIndex("qw_micro")) == qwMicro)
     graft.operators.CacheScope.release(spark)
   }
+
+  test("community_converge's rung and coarse dirs die at release; " +
+    "staged dirs and kcore survive") {
+    graft.operators.CacheScope.release(spark)
+    val root = graft.queries.Harness.root
+    def children(prefix: String): Seq[String] = {
+      val ls = java.nio.file.Files.list(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        ls.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith(prefix)).toSeq
+      } finally ls.close()
+    }
+    q("community_converge").collect()
+    assert(children("rung_").nonEmpty && children("coarse_").nonEmpty)
+    val staged = children("graph_")
+    assert(staged.nonEmpty)
+    graft.operators.CacheScope.release(spark)
+    assert(children("rung_").isEmpty && children("coarse_").isEmpty)
+    assert(children("graph_") == staged)
+    assert(q("kcore").collect().nonEmpty)
+    graft.operators.CacheScope.release(spark)
+  }
 }

@@ -2,7 +2,6 @@ package graft
 
 import graft.dsl._
 import graft.schema._
-import java.nio.file.Files
 
 /** End-to-end ETL mirror of reference examples/etl_pipeline.py:
   * one schema definition → csv extract → bulk validate → parquet load,
@@ -20,7 +19,7 @@ class EtlExampleSpec extends SparkSpec {
       "Total must equal amount + tax")
 
   test("csv extract -> validate -> parquet load, one schema definition") {
-    val dir = Files.createTempDirectory("graft_etl").toString
+    val dir = SparkSpec.tempDir("etl").toString
     Seq(
       "1,a@x.com,10.0,1.0,11.0",   // valid
       "2,bad-email,10.0,1.0,11.0", // bad email

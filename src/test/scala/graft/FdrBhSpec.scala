@@ -100,8 +100,7 @@ class FdrBhSpec extends SparkSpec {
 
   private def writeDir(rows: Seq[(String, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_fdr_bh").toString
+    val dir = SparkSpec.tempDir("fdr_bh").toString
     // one customer per distinct segment; orders reference them
     val segs = rows.map(_._2).distinct.sorted
     segs.zipWithIndex.map { case (s, i) => (i.toLong + 1, s) }

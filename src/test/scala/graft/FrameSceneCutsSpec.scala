@@ -41,8 +41,7 @@ class FrameSceneCutsSpec extends SparkSpec {
   test("frame_scene_cuts matches the driver replay and cuts land on " +
     "the planted scene boundaries") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_scenecuts").toString
+    val dir = SparkSpec.tempDir("scenecuts").toString
     // lengths spanning 1..14 frames of 32 bytes (cap at SCENE_FRAMES)
     val docs = (0L until 60L).map { i =>
       (i, "x" * (20 + (i % 14).toInt * 32)) }

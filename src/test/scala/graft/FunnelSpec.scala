@@ -70,7 +70,7 @@ class FunnelSpec extends SparkSpec {
       (6L, "purchase", "2024-01-01 11:05:00"))
       .toDF("user_id", "event_type", "ts_s")
       .withColumn("ts", F.col("ts_s").cast("timestamp")).drop("ts_s")
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel").toString
+    val dir = SparkSpec.tempDir("funnel").toString
     // the query reads the standard events table layout; stage a minimal one
     rows.withColumn("event_id", F.monotonically_increasing_id())
       .withColumn("value", F.lit(0.0)).withColumn("props", F.lit("{}"))

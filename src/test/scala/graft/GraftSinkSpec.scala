@@ -17,8 +17,7 @@ class GraftSinkSpec extends SparkSpec {
 
   private val FMT = "graft.sources.GraftAtomicSinkProvider"
 
-  private def tmpDir(): String = java.nio.file.Files
-    .createTempDirectory("graft_sink").toString + "/t"
+  private def tmpDir(): String = SparkSpec.tempDir("sink").toString + "/t"
 
   test("overwrite + append round-trip all supported types, nulls and " +
     "escaped control characters exactly") {
@@ -319,11 +318,11 @@ class GraftSinkSpec extends SparkSpec {
   test("a real writeStream through the sink drains and reads back " +
     "exactly (AvailableNow, file source)") {
     import spark.implicits._
-    val src = java.nio.file.Files.createTempDirectory("graft_ss").toString
+    val src = SparkSpec.tempDir("ss").toString
     (1 to 50).map(i => (i, i * 2L)).toDF("id", "v")
       .repartition(4).write.mode("overwrite").parquet(src)
     val path = tmpDir()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ck").toString
+    val ckpt = SparkSpec.tempDir("ck").toString
     val q = spark.readStream
       .schema(spark.read.parquet(src).schema).parquet(src)
       .where(col("id") % 2 === 0)
@@ -355,14 +354,14 @@ class GraftSinkSpec extends SparkSpec {
     "consumes only the delta since its checkpoint") {
     import spark.implicits._
     val path = tmpDir()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_src_ck")
+    val ckpt = SparkSpec.tempDir("src_ck")
       .toString
     Seq((1, "a"), (2, "b")).toDF("id", "s").write.format(FMT)
       .option("path", path).mode("overwrite").save()
     // a checkpoint-recoverable sink (parquet file sink — the memory
     // sink refuses restarts): any RE-read after a restart would append
     // duplicate ids here, so uniqueness IS the delta proof
-    val outDir = java.nio.file.Files.createTempDirectory("graft_src_out")
+    val outDir = SparkSpec.tempDir("src_out")
       .toString
     def drainTo(): Unit = {
       val q = spark.readStream.format(FMT).option("path", path).load()

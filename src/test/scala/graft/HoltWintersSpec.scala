@@ -45,8 +45,7 @@ class HoltWintersSpec extends SparkSpec {
 
   private def writeDir(rows: Seq[(Int, Int, Long)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_hw").toString
+    val dir = SparkSpec.tempDir("hw").toString
     rows.map { case (m, day, cents) =>
       (f"1995-$m%02d-$day%02d 00:00:00", cents / 100.0)
     }.toDF("o_orderdate", "o_totalprice")
@@ -85,8 +84,7 @@ class HoltWintersSpec extends SparkSpec {
     // (the level/season coupling at alpha = 1/4 rings for ~20 cycles,
     // then the integer state locks in — driver-simulated max |err| 15)
     val season = Seq(40000L, -20000L, 0L, 10000L, -30000L, 25000L, -25000L)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_hw_planted").toString
+    val dir = SparkSpec.tempDir("hw_planted").toString
     (0 until 700).map { i =>
       val date = java.time.LocalDate.of(1995, 1, 1).plusDays(i)
       (date.toString + " 00:00:00", (500000L + season(i % 7)) / 100.0)

@@ -13,7 +13,7 @@ class MalformedSourceSpec extends SparkSpec {
     StructField("id", LongType), StructField("score", DoubleType)))
 
   private def writeCsv(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bad_csv")
+    val dir = SparkSpec.tempDir("bad_csv")
     java.nio.file.Files.writeString(dir.resolve("part-0.csv"),
       "id,score\n1,1.5\n2\n3,3.25\n")
     dir.toString

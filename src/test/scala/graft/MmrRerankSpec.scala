@@ -40,8 +40,7 @@ class MmrRerankSpec extends SparkSpec {
 
   private def writeDir(vecs: Seq[(Long, Array[Float])]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_mmr").toString
+    val dir = SparkSpec.tempDir("mmr").toString
     vecs.map { case (id, v) => (id, v.toSeq) }
       .toDF("vec_id", "embedding")
       .selectExpr("vec_id", "CAST(embedding AS ARRAY<FLOAT>) AS embedding")

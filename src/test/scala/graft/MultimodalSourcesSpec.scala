@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.Multimodal
 import org.apache.spark.sql.{functions => F}
-import java.nio.file.Files
 
 /** SURVEY §2 F2 (multimodal plumbing) + H2/H3 (sources/sinks). */
 class MultimodalSourcesSpec extends SparkSpec {
@@ -48,7 +47,7 @@ class MultimodalSourcesSpec extends SparkSpec {
   }
 
   test("H2: csv and json round-trip with schema enforcement") {
-    val dir = Files.createTempDirectory("graft_sources").toString
+    val dir = SparkSpec.tempDir("sources").toString
     val schema = graft.queries.Schemas.documents
     val docs = spark.read.parquet(s"$sf/documents.parquet").limit(50)
 
@@ -64,7 +63,7 @@ class MultimodalSourcesSpec extends SparkSpec {
   }
 
   test("H3: partitioned write + partition-pruned read") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = SparkSpec.tempDir("part").toString
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     docs.write.mode("overwrite").partitionBy("lang").parquet(s"$dir/by_lang")
 

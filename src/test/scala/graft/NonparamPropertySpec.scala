@@ -32,8 +32,7 @@ class NonparamPropertySpec extends SparkSpec {
 
   private def writeDir(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_nonparam_prop").toString
+    val dir = SparkSpec.tempDir("nonparam_prop").toString
     rows.toDF("l_quantity", "l_returnflag")
       .selectExpr("CAST(l_quantity AS DOUBLE) AS l_quantity",
         "l_returnflag")
@@ -129,8 +128,7 @@ class NonparamPropertySpec extends SparkSpec {
       // every group present so k is stable across seeds
       val rows = cents.zip(grps) :+ (105L -> "1-URGENT") :+
         (106L -> "2-HIGH") :+ (107L -> "3-MEDIUM")
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_kw_prop").toString
+      val dir = SparkSpec.tempDir("kw_prop").toString
       rows.toDF("cents", "o_orderpriority")
         .selectExpr("CAST(cents AS DOUBLE) / 100 AS o_totalprice",
           "o_orderpriority")

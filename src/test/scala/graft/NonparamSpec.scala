@@ -141,8 +141,7 @@ class NonparamSpec extends SparkSpec {
     // 2×2 grid with cell (P2,B) EMPTY: nt=6, nr={P1:4,P2:2}, nc={A:5,B:1}
     // full-grid χ² = .0333+.1667+.0667+.3333 = 0.6 — observed-cells-only
     // would understate it as 0.2667 (the r10 ADVICE defect)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_cramers_empty").toString
+    val dir = SparkSpec.tempDir("cramers_empty").toString
     Seq((1L, "A"), (2L, "B")).toDF("c_custkey", "c_mktsegment")
       .write.parquet(s"$dir/customer.parquet")
     Seq(("P1", 1L), ("P1", 1L), ("P1", 1L), ("P1", 2L), ("P2", 1L),
@@ -617,8 +616,7 @@ class NonparamSpec extends SparkSpec {
     assert(math.abs(gotSf - expSf) < 1e-6, s"sf: $gotSf vs $expSf")
     // single-edge fixture: saturates at hop 1 -> sub-1 interpolation
     import spark.implicits._
-    val d1 = java.nio.file.Files
-      .createTempDirectory("graft_diam1").toString
+    val d1 = SparkSpec.tempDir("diam1").toString
     Seq((1L, 10L), (1L, 11L)).toDF("l_orderkey", "l_partkey")
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$d1/lineitem.parquet")
@@ -626,8 +624,7 @@ class NonparamSpec extends SparkSpec {
     assert(got1 < 1.0 && math.abs(got1 - exp1) < 1e-6,
       s"single edge: $got1 vs $exp1")
     // 8-node path fixture: slow growth -> crossing past hop 2
-    val d2 = java.nio.file.Files
-      .createTempDirectory("graft_diam2").toString
+    val d2 = SparkSpec.tempDir("diam2").toString
     (0 until 7).flatMap(i =>
       Seq((i.toLong, 100L + i), (i.toLong, 101L + i)))
       .toDF("l_orderkey", "l_partkey")

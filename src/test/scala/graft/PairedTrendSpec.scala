@@ -45,8 +45,7 @@ class PairedTrendSpec extends SparkSpec {
 
   private def writeDir(rows: Seq[(Int, Int, String, Long)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_paired_trend").toString
+    val dir = SparkSpec.tempDir("paired_trend").toString
     rows.map { case (m, day, pri, cents) =>
       (f"1995-$m%02d-$day%02d 00:00:00", pri, cents / 100.0)
     }.toDF("o_orderdate", "o_orderpriority", "o_totalprice")

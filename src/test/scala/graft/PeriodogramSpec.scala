@@ -41,8 +41,7 @@ class PeriodogramSpec extends SparkSpec {
 
   private def writeDir(rows: Seq[(Int, Int, Long)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_periodogram").toString
+    val dir = SparkSpec.tempDir("periodogram").toString
     rows.map { case (m, day, cents) =>
       (f"1995-$m%02d-$day%02d 00:00:00", cents / 100.0)
     }.toDF("o_orderdate", "o_totalprice")

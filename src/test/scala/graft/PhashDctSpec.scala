@@ -53,8 +53,7 @@ class PhashDctSpec extends SparkSpec {
 
   private def writeDocs(n: Int): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_phash").toString
+    val dir = SparkSpec.tempDir("phash").toString
     (0L until n.toLong).map(i => (i, s"doc $i"))
       .toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite")

@@ -10,8 +10,7 @@ class ShapeDriftSpec extends SparkSpec {
   test("wasserstein_1 matches a hand-computed CDF-area on a tiny " +
     "two-arm fixture") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_w1").toString
+    val dir = SparkSpec.tempDir("w1").toString
     // R: prices 1.00, 2.00, 2.00; N: 2.00, 4.00 (cents 100/200/400)
     Seq(("R", 1.00), ("R", 2.00), ("R", 2.00), ("N", 2.00), ("N", 4.00))
       .toDF("l_returnflag", "l_extendedprice")
@@ -30,8 +29,7 @@ class ShapeDriftSpec extends SparkSpec {
   test("hazard_na matches a first-principles Nelson-Aalen replay with " +
     "censoring") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_na").toString
+    val dir = SparkSpec.tempDir("na").toString
     // customers: A repeats after 5d, B after 20d, C and D never repeat
     // (censored at horizon). Max day = 1992-02-01 (day 31).
     Seq(
@@ -59,8 +57,7 @@ class ShapeDriftSpec extends SparkSpec {
   test("rich_club: suffix-sum ladder matches a brute-force phi on a " +
     "hub-clique fixture") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_rc").toString
+    val dir = SparkSpec.tempDir("rc").toString
     // K12 hub clique (degrees 11 + spokes) with 200 leaves: two leaves
     // per hub ensure hub degree 13 > 8; leaves degree 1.
     val hub = for (i <- 1L to 12L; j <- (i + 1) to 12L) yield (i, j)
@@ -86,8 +83,7 @@ class ShapeDriftSpec extends SparkSpec {
 
   test("hodges_lehmann matches a brute-force Walsh-median replay") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_hl").toString
+    val dir = SparkSpec.tempDir("hl").toString
     // one month, 4 days with known cents (one outlier the HL resists)
     val cents = Seq(100L, 200L, 300L, 99900L)
     cents.zipWithIndex.map { case (c, i) =>
@@ -111,8 +107,7 @@ class ShapeDriftSpec extends SparkSpec {
 
   test("cross_correlation matches a brute-force lagged Pearson replay") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ccf").toString
+    val dir = SparkSpec.tempDir("ccf").toString
     // y leads x by 2 days: y_t = x_{t+2} shape on a 10-day burst
     val xs = Seq(100L, 900L, 300L, 700L, 500L, 800L, 200L, 600L, 400L,
       1000L)
@@ -153,8 +148,7 @@ class ShapeDriftSpec extends SparkSpec {
 
   test("leaderboard_turnover counts surviving top-set members exactly") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lb").toString
+    val dir = SparkSpec.tempDir("lb").toString
     // 1995 parts {1,2,3}; 1996 parts {2,3,4} (all inside top-100)
     val li = Seq((10L, 1L), (10L, 2L), (11L, 3L),
       (20L, 2L), (20L, 3L), (21L, 4L))
@@ -229,8 +223,7 @@ class ShapeDriftSpec extends SparkSpec {
   test("ab_sprt stops at the planted crossing day with the right " +
     "decision") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sprt").toString
+    val dir = SparkSpec.tempDir("sprt").toString
     // 15 urgent-only orders on day 0: step = 15*200671 = 3010065
     // >= 2944439 -> crossing day 0, accept_h1; later days drift down
     // but the decision is already taken.
@@ -249,8 +242,7 @@ class ShapeDriftSpec extends SparkSpec {
     assert(r.getAs[Long]("crossing_day") == 0L)
     assert(r.getAs[String]("decision") == "accept_h1")
     // no-crossing fixture: a single balanced day stays 'continue'
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("graft_sprt2").toString
+    val dir2 = SparkSpec.tempDir("sprt2").toString
     Seq(("1995-01-01", "1-URGENT", 1L), ("1995-01-01", "2-HIGH", 2L))
       .toDF("o_orderdate", "o_orderpriority", "o_orderkey")
       .selectExpr("CAST(o_orderdate AS TIMESTAMP) AS o_orderdate",
@@ -291,8 +283,7 @@ class ShapeDriftSpec extends SparkSpec {
 
   test("graph_edge_drift: year-mask jaccard matches hand-set overlap") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_drift").toString
+    val dir = SparkSpec.tempDir("drift").toString
     // 1995: edges {1-2, 3-4}; 1996: edges {1-2, 5-6, 7-8}
     val li = Seq(
       (10L, 1L), (10L, 2L), (11L, 3L), (11L, 4L),

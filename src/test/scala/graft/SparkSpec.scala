@@ -14,11 +14,19 @@ object TestSpark {
     .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
       "true")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
+    .config("spark.sql.warehouse.dir", SparkSpec.tempDir("wh").toString)
     .getOrCreate()
   graft.functions.VectorFunctions.register(spark)
   graft.functions.TopKFunctions.register(spark)
+}
+
+object SparkSpec {
+  /** The specs' one temp-dir fixture: a fresh dir under the run's
+    * scratch root ([[graft.queries.Harness.root]]), so the JVM-exit hook
+    * that removes the root removes it too. */
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(java.nio.file.Files
+      .createDirectories(graft.queries.Harness.root), prefix + "_")
 }
 
 abstract class SparkSpec extends AnyFunSuite {

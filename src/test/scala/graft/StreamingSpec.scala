@@ -86,4 +86,13 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable(); q.stop()
     assert(spark.table("g3").count() == 4) // 5 in, 1 dup dropped
   }
+
+  test("stream_tumbling's memory-sink view is dropped at release") {
+    def sinkViews = spark.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith("graft_sink_"))
+    val rows = SparkEntry.queries("stream_tumbling")(spark, sf).collect()
+    assert(rows.nonEmpty)
+    graft.operators.CacheScope.release(spark)
+    assert(sinkViews.isEmpty, sinkViews.mkString(", "))
+  }
 }

@@ -10,8 +10,8 @@ class StreamingRecoverySpec extends SparkSpec {
   import spark.implicits._
 
   test("checkpointed aggregation resumes exactly-once across restart") {
-    val src = java.nio.file.Files.createTempDirectory("graft_stream_src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val src = SparkSpec.tempDir("stream_src").toString
+    val ckpt = SparkSpec.tempDir("ckpt").toString
     val sink = "graft_recovery_sink"
 
     def appendBatch(rows: Seq[(Long, String)]): Unit =
@@ -51,7 +51,7 @@ class StreamingRecoverySpec extends SparkSpec {
     // store. The in-memory `prev` of the bench query would NOT survive
     // a restart; deriving lineage from the batch id is the fix this
     // spec pins down.
-    val src = java.nio.file.Files.createTempDirectory("graft_ups_src").toString
+    val src = SparkSpec.tempDir("ups_src").toString
 
     def upsertRun(ckpt: String, store: String): Unit = {
       val schema = spark.read.parquet(src).schema
@@ -93,8 +93,8 @@ class StreamingRecoverySpec extends SparkSpec {
 
     // interrupted run: drain 2 files, "crash" (query fully stops), stage
     // 2 more, restart against the SAME checkpoint and store
-    val ckptA = java.nio.file.Files.createTempDirectory("graft_ups_ckA").toString
-    val storeA = java.nio.file.Files.createTempDirectory("graft_ups_stA").toString
+    val ckptA = SparkSpec.tempDir("ups_ckA").toString
+    val storeA = SparkSpec.tempDir("ups_stA").toString
     stage(Seq(1L -> 10L, 2L -> 5L))
     stage(Seq(1L -> 7L))
     upsertRun(ckptA, storeA) // batches 0,1
@@ -103,8 +103,8 @@ class StreamingRecoverySpec extends SparkSpec {
     upsertRun(ckptA, storeA) // restart: batches 2,3 only
 
     // control: uninterrupted run over the identical input from scratch
-    val ckptB = java.nio.file.Files.createTempDirectory("graft_ups_ckB").toString
-    val storeB = java.nio.file.Files.createTempDirectory("graft_ups_stB").toString
+    val ckptB = SparkSpec.tempDir("ups_ckB").toString
+    val storeB = SparkSpec.tempDir("ups_stB").toString
     upsertRun(ckptB, storeB)
 
     val expected = Map(1L -> (3L, 20L), 2L -> (2L, 6L), 3L -> (1L, 2L))

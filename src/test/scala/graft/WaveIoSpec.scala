@@ -14,7 +14,7 @@ class WaveIoSpec extends SparkSpec {
   test("csv_text_roundtrip preserves every document byte-for-byte") {
     // the aggregate query proves checksum equality; this spec pins the
     // stronger row-level claim on the same written files
-    val base = s"/tmp/graft_spec_csv_${graft.queries.Harness.runId}"
+    val base = s"${SparkSpec.tempDir("spec_csv")}/csv"
     val docs = graft.queries.Tables.t(spark, sf, "documents")
       .select("doc_id", "text")
     docs.write.mode("overwrite")
@@ -30,7 +30,7 @@ class WaveIoSpec extends SparkSpec {
   }
 
   test("jsonl_roundtrip preserves every document byte-for-byte") {
-    val base = s"/tmp/graft_spec_jsonl_${graft.queries.Harness.runId}"
+    val base = s"${SparkSpec.tempDir("spec_jsonl")}/jsonl"
     val docs = graft.queries.Tables.t(spark, sf, "documents")
       .select("doc_id", "text")
     docs.write.mode("overwrite").json(base)
@@ -150,5 +150,15 @@ class WaveIoSpec extends SparkSpec {
       assert(r.getLong(r.fieldIndex("min_micro")) == mn)
       assert(r.getLong(r.fieldIndex("n_dips")) == dips)
     }
+  }
+
+  test("sink_roundtrip's table survives a dpp_join run before it is read") {
+    // the two queries once shared one scratch root, and dpp_join's
+    // overwrite of it deleted sink_roundtrip's committed table
+    val roundtrip = q("sink_roundtrip")
+    q("dpp_join").collect()
+    assert(roundtrip.count() ==
+      graft.queries.Tables.t(spark, sf, "supplier").count())
+    graft.operators.CacheScope.release(spark)
   }
 }
