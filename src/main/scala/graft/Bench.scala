@@ -142,10 +142,20 @@ object Bench {
       if (root.exists()) walk(root)
       (n, bytes / (1024 * 1024))
     }
+    // Janino compiles: Spark keeps generated classes in a cache of
+    // spark.sql.codegen.cache.maxEntries (default 100) entries, so a
+    // query whose classes its neighbours evicted compiles them again in
+    // the suite, where alone its later runs hit the cache. (count, ns)
+    def codegen(): (Long, Long) = (
+      org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+        .compileTime)
     val diag = scala.collection.mutable.ArrayBuffer
       .empty[(String, Long, Long, Long)] // name, gc delta ms, heap, storage
     val diagExt = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Long)] // code cache MB, disk files, disk MB
+      .empty[(Long, Long, Long, Long, Long)] // code cache MB, disk files,
+                                             // disk MB, compiles, compile ms
     // GC fence: an explicit full GC every `fence` queries, OUTSIDE the
     // timed regions — System.gc() is what processes the cleaner's weak
     // references, so this converts unbounded cleanup debt into a
@@ -176,10 +186,12 @@ object Bench {
         org.apache.spark.sql.DataFrame)]) =
       qs.flatMap { case (name, fn) =>
         val gc0 = gcMs()
+        val (c0, ns0) = codegen()
         val med = median3(name, fn)
+        val (c1, ns1) = codegen()
         diag += ((name, gcMs() - gc0, heapMb(), storageMb()))
         val (dn, dmb) = diskStats()
-        diagExt += ((codeCacheMb(), dn, dmb))
+        diagExt += ((codeCacheMb(), dn, dmb, c1 - c0, (ns1 - ns0) / 1000000))
         maybeFence()
         med.map(name -> _)
       }
@@ -260,7 +272,7 @@ object Bench {
     // must pass it.
     val diagVerdict = graft.tools.DiagCheck.evaluate(diag.toSeq,
       normalizedRatio,
-      diag.zip(diagExt).map { case ((n, _, _, _), (_, _, dmb)) => (n, dmb) }
+      diag.zip(diagExt).map { case ((n, _, _, _), (_, _, dmb, _, _)) => (n, dmb) }
         .toSeq, failed.toSeq)
     if (only.isEmpty && !diagVerdict.pass)
       System.err.println(s"[bench] DIAG CHECK FAILED: ${diagVerdict.json}")
@@ -314,19 +326,24 @@ object Bench {
           "failed" -> Json.strings(failed.toSeq),
           "queries" -> Json.secs(results))) + "\n")
     // full per-query sweep telemetry (r13): one line per query in sweep
-    // order — gc_ms is the GC time that fired DURING the query's three
-    // runs; heap/storage are post-query occupancy. The file is how a
-    // future round attributes a diffuse drift (rising gc_ms = heap
-    // debt; rising storage_mb = a leaked persist) without re-running.
+    // order — gc_ms, compiles and compile_ms are what happened DURING
+    // the query's three runs; heap/storage are post-query occupancy.
+    // The file is how a future round attributes a diffuse drift (rising
+    // gc_ms = heap debt; rising storage_mb = a leaked persist; compiles
+    // above the query's alone count = codegen-cache eviction) without
+    // re-running. An args run prints the lines to stderr instead.
+    val diagLines = diag.zip(diagExt).map {
+      case ((n, g, h, st), (cc, dn, dmb, nc, cms)) =>
+        Json.compact(JObject("q" -> JString(n), "gc_ms" -> JLong(g),
+          "heap_mb" -> JLong(h), "storage_mb" -> JLong(st),
+          "code_cache_mb" -> JLong(cc), "disk_files" -> JLong(dn),
+          "disk_mb" -> JLong(dmb), "compiles" -> JLong(nc),
+          "compile_ms" -> JLong(cms)))
+    }
     if (only.isEmpty)
-      write(
-        java.nio.file.Paths.get("bench_diag.json"),
-        diag.zip(diagExt).map { case ((n, g, h, st), (cc, dn, dmb)) =>
-          Json.compact(JObject("q" -> JString(n), "gc_ms" -> JLong(g),
-            "heap_mb" -> JLong(h), "storage_mb" -> JLong(st),
-            "code_cache_mb" -> JLong(cc), "disk_files" -> JLong(dn),
-            "disk_mb" -> JLong(dmb)))
-        }.mkString("[\n", ",\n", "\n]") + "\n")
+      write(java.nio.file.Paths.get("bench_diag.json"),
+        diagLines.mkString("[\n", ",\n", "\n]") + "\n")
+    else diagLines.foreach(l => System.err.println(s"[bench] diag $l"))
     println(jsonLine(top.sortBy(_._1), total, meta(top.size)))
     spark.stop()
   }

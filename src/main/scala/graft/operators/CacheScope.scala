@@ -4,7 +4,6 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -93,11 +92,14 @@ object CacheScope {
     * rounds, never rounds × frame; the final round stays tracked for
     * [[release]].
     *
-    * Each round is a LAZY checkpoint plus ONE aggregate — `count(*)`,
-    * and `max(changed)` when `changed` names a boolean column of the
-    * step's output — that materializes it (an eager checkpoint next to
-    * the convergence aggregate was two jobs per round: measured 3×
-    * slower end to end at the 10× probe).
+    * Each round is a LAZY checkpoint of the step's output plus ONE job
+    * of the loop's own. Planning the checkpoint runs the step's shuffle
+    * and broadcast stages (AQE executes them as their own jobs); the
+    * loop's job then runs the final stage over the checkpoint's RDD,
+    * storing its blocks, and returns per partition the row count and,
+    * when `changed` names a boolean column of the step's output, whether
+    * any row has it true. A Dataset aggregate would cost two jobs a round
+    * (its single-partition exchange is a stage of its own).
     * Materializing round r is what makes round r−1 safe to free. With
     * `changed` the loop stops at the first round with no change.
     *
@@ -108,23 +110,41 @@ object CacheScope {
   private[graft] def iterate(init: DataFrame, maxRounds: Int)(
       step: DataFrame => DataFrame,
       changed: Option[String] = None): (DataFrame, Boolean, Seq[Long]) = {
-    val aggs = F.count(F.lit(1)) +:
-      changed.map(c => F.coalesce(F.max(F.col(c)), F.lit(false))).toSeq
     var state = init
     val rows = Seq.newBuilder[Long]
     var rounds = 0
     var converged = false
     while (rounds < maxRounds && !converged) {
       val next = checkpoint(step(state))
-      val r = next.agg(aggs.head, aggs.tail: _*).head()
-      rows += r.getLong(0)
-      converged = changed.isDefined && !r.getBoolean(1)
+      val (n, anyChanged) = materialize(next, changed.map(next.schema.fieldIndex))
+      rows += n
+      converged = changed.isDefined && !anyChanged
       state.unpersist(blocking = false)
       unpersistCheckpoint(state)
       state = next
       rounds += 1
     }
     (state, changed.isEmpty || converged, rows.result())
+  }
+
+  /** One job over a checkpoint's own RDD: computes (and so stores) every
+    * partition, and returns the row count and whether any row's boolean
+    * column `flag` is true (nulls count as false). */
+  private def materialize(cp: DataFrame, flag: Option[Int]): (Long, Boolean) = {
+    val rdd = checkpointRdd(cp).getOrElse(throw new IllegalStateException(
+      "CacheScope.iterate: the checkpoint has no RDD leaf"))
+      .asInstanceOf[RDD[org.apache.spark.sql.catalyst.InternalRow]]
+    val i = flag.getOrElse(-1)
+    val parts = rdd.mapPartitions { it =>
+      var n = 0L
+      var any = false
+      it.foreach { row =>
+        n += 1
+        if (i >= 0 && !row.isNullAt(i) && row.getBoolean(i)) any = true
+      }
+      Iterator.single((n, any))
+    }.collect()
+    (parts.iterator.map(_._1).sum, parts.exists(_._2))
   }
 
   /** Lazy checkpoint (reliable when the context has a checkpoint dir,

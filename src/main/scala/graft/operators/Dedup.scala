@@ -472,8 +472,9 @@ object Dedup {
     * long-path graphs you'd switch to pointer-jumping / large-star
     * small-star — O(log n) rounds — which this API could adopt without
     * signature change.) The per-round lineage cut, free and convergence
-    * test are [[CacheScope.iterate]]'s `changed`-column policy: one job
-    * per round, the max label-change flag materializing the round.
+    * test are [[CacheScope.iterate]]'s `changed`-column policy: the
+    * loop's one job per round materializes the round and returns whether
+    * any label changed.
     *
     * Output: (doc_id, cluster_id) for every vertex that appears in ≥ 1
     * pair. Isolated docs are absent — join back against the corpus with
@@ -511,17 +512,8 @@ object Dedup {
     // improvement, so a graph whose last improvement lands exactly in
     // round maxRounds needs one confirming round — without it a
     // provably-final labelling would be reported as unconverged
-    val (last, converged, _) = CacheScope.iterate(init, maxRounds + 1)({ labels =>
-      // min over {own label} ∪ {neighbor labels}
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("v", "src"), "src")
-        .groupBy(F.col("dst").as("v"))
-        .agg(F.min(F.col("lbl")).as("_nlbl"))
-      labels.join(neighborMin, Seq("v"), "left")
-        .select(F.col("v"),
-          F.least(F.col("lbl"), F.coalesce(F.col("_nlbl"), F.col("lbl"))).as("lbl"),
-          (F.col("_nlbl") < F.col("lbl")).as("_changed"))
-    }, changed = Some("_changed"))
+    val (last, converged, _) = CacheScope.iterate(init, maxRounds + 1)(
+      ccRound(edges), changed = Some("_changed"))
     // a silent cut-off would split one true component into several
     // "clusters" with no signal (a 30-hop drift chain at maxRounds=25
     // reports two representatives of one duplicate family) — fail loud,
@@ -534,6 +526,45 @@ object Dedup {
           "one shuffle each) or use connectedComponentsStarContract " +
           "(O(log n) rounds) for this graph")
     last.select(F.col("v").as("doc_id"), F.col("lbl").as("cluster_id"))
+  }
+
+  /** One [[connectedComponents]] round over doubled edges (src, dst):
+    * labels (v, lbl) → (v, lbl, _changed), the min over {own label} ∪
+    * {neighbor labels}. */
+  private[graft] def ccRound(edges: DataFrame)(labels: DataFrame): DataFrame = {
+    val neighborMin = edges
+      .join(labels.withColumnRenamed("v", "src"), "src")
+      .groupBy(F.col("dst").as("v"))
+      .agg(F.min(F.col("lbl")).as("_nlbl"))
+    labels.join(neighborMin, Seq("v"), "left")
+      .select(F.col("v"),
+        F.least(F.col("lbl"), F.coalesce(F.col("_nlbl"), F.col("lbl"))).as("lbl"),
+        (F.col("_nlbl") < F.col("lbl")).as("_changed"))
+  }
+
+  /** One [[connectedComponentsStarContract]] round: jump, then
+    * propagate; (v, lbl) → (v, lbl, _changed). */
+  private[graft] def ccStarRound(edges: DataFrame)(labels: DataFrame): DataFrame = {
+    // 1. jump: follow the label's own label — a self-join of the
+    // MATERIALIZED previous round (checkpointed partitions, so the
+    // two branches re-read, never recompute). A label always names a
+    // tracked vertex (ids only ever come from the label column), so
+    // the inner join cannot drop rows.
+    val jumpTo = labels.select(F.col("v").as("_jv"), F.col("lbl").as("_jlbl"))
+    val jumped = labels.join(jumpTo, F.col("lbl") === F.col("_jv"))
+      .select(F.col("v"),
+        F.col("_jlbl").as("lbl"),
+        (F.col("_jlbl") < F.col("lbl")).as("_c1"))
+    // 2. propagate: min over {own label} ∪ {neighbor labels}. `jumped`
+    // feeds both branches — one edges⋈jumped shuffle plus the merge.
+    val neighborMin = edges
+      .join(jumped.select(F.col("v").as("src"), F.col("lbl")), "src")
+      .groupBy(F.col("dst").as("v"))
+      .agg(F.min(F.col("lbl")).as("_nlbl"))
+    jumped.join(neighborMin, Seq("v"), "left")
+      .select(F.col("v"),
+        F.least(F.col("lbl"), F.coalesce(F.col("_nlbl"), F.col("lbl"))).as("lbl"),
+        (F.col("_c1") || (F.col("_nlbl") < F.col("lbl"))).as("_changed"))
   }
 
   /** Small-graph finishing layer shared by both CC variants: when the
@@ -610,28 +641,8 @@ object Dedup {
     val init = CacheScope.persist(
       edges.select(F.col("src").as("v")).distinct()
         .withColumn("lbl", F.col("v")))
-    val (last, converged, _) = CacheScope.iterate(init, maxRounds + 1)({ labels =>
-      // 1. jump: follow the label's own label — a self-join of the
-      // MATERIALIZED previous round (checkpointed partitions, so the
-      // two branches re-read, never recompute). A label always names a
-      // tracked vertex (ids only ever come from the label column), so
-      // the inner join cannot drop rows.
-      val jumpTo = labels.select(F.col("v").as("_jv"), F.col("lbl").as("_jlbl"))
-      val jumped = labels.join(jumpTo, F.col("lbl") === F.col("_jv"))
-        .select(F.col("v"),
-          F.col("_jlbl").as("lbl"),
-          (F.col("_jlbl") < F.col("lbl")).as("_c1"))
-      // 2. propagate: min over {own label} ∪ {neighbor labels}. `jumped`
-      // feeds both branches — one edges⋈jumped shuffle plus the merge.
-      val neighborMin = edges
-        .join(jumped.select(F.col("v").as("src"), F.col("lbl")), "src")
-        .groupBy(F.col("dst").as("v"))
-        .agg(F.min(F.col("lbl")).as("_nlbl"))
-      jumped.join(neighborMin, Seq("v"), "left")
-        .select(F.col("v"),
-          F.least(F.col("lbl"), F.coalesce(F.col("_nlbl"), F.col("lbl"))).as("lbl"),
-          (F.col("_c1") || (F.col("_nlbl") < F.col("lbl"))).as("_changed"))
-    }, changed = Some("_changed"))
+    val (last, converged, _) = CacheScope.iterate(init, maxRounds + 1)(
+      ccStarRound(edges), changed = Some("_changed"))
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponentsStarContract did not converge after " +

@@ -188,17 +188,20 @@ object Graph {
     val edges = undirected(pairs, aCol, bCol, assumeUnique)
     val init = edges.select(F.col("src").as("v")).distinct()
       .select(F.col("v"), F.col("v").as("lbl"))
-    val (last, _, _) = CacheScope.iterate(init, iters) { labels =>
-      edges
-        .join(labels.withColumnRenamed("v", "dst"), "dst")
-        .groupBy(F.col("src").as("v"), F.col("lbl"))
-        .agg(F.count(F.lit(1)).as("c"))
-        .groupBy("v")
-        .agg(F.min(F.struct(F.negate(F.col("c")), F.col("lbl"))).as("_m"))
-        .select(F.col("v"), F.col("_m.lbl").as("lbl"))
-    }
+    val (last, _, _) = CacheScope.iterate(init, iters)(lpaRound(edges))
     last.select(F.col("v"), F.col("lbl").as("community"))
   }
+
+  /** One [[labelPropagation]] round over doubled edges (src, dst):
+    * labels (v, lbl) → each vertex's most frequent neighbor label. */
+  private[graft] def lpaRound(edges: DataFrame)(labels: DataFrame): DataFrame =
+    edges
+      .join(labels.withColumnRenamed("v", "dst"), "dst")
+      .groupBy(F.col("src").as("v"), F.col("lbl"))
+      .agg(F.count(F.lit(1)).as("c"))
+      .groupBy("v")
+      .agg(F.min(F.struct(F.negate(F.col("c")), F.col("lbl"))).as("_m"))
+      .select(F.col("v"), F.col("_m.lbl").as("lbl"))
 
   /** One deterministic synchronous Louvain local-move round [Blondel et
     * al. 2008 §2] applied to a GIVEN partition `labels` (v, community)
@@ -442,15 +445,20 @@ object Graph {
     * The state is node-sized: round r's (node, degree) frame, whose
     * degree ≥ k rows are round r+1's survivors. Survivors shrink
     * monotonically and every endpoint of e_r is a survivor of every
-    * earlier round, so e_{r+1} = e0 ⋉ keep ⋉ keep over the BASE edges
-    * (persisted once): each round is one map-side-combined degree
-    * aggregate over two semi joins, and the lineage stays one round deep
-    * under [[CacheScope.iterate]] instead of growing two semi joins per
-    * round. Degree reads the edge list ONCE via explode(array(a, b)). */
+    * earlier round, so e_{r+1} = e0 ⋉ keep ⋉ keep over the BASE edges:
+    * each round is one map-side-combined degree aggregate over two semi
+    * joins, and the lineage stays one round deep under
+    * [[CacheScope.iterate]] instead of growing two semi joins per round.
+    * Degree reads the edge list ONCE via explode(array(a, b)).
+    *
+    * The base edges are read, not persisted: every round re-scans
+    * `edges`, so pass a materialized edge list (the `kcore` query passes
+    * the staged co-purchase parquet). Persisting it would copy the edges
+    * into the block manager and, with cached plans under AQE, add the
+    * cache's own materialization jobs. */
   def kCore(edges: DataFrame, aCol: String, bCol: String, k: Long,
       rounds: Int): DataFrame = {
-    val e0 = CacheScope.persist(
-      edges.select(F.col(aCol).as("a"), F.col(bCol).as("b")))
+    val e0 = edges.select(F.col(aCol).as("a"), F.col(bCol).as("b"))
     def degrees(e: DataFrame) =
       e.select(F.explode(F.array(F.col("a"), F.col("b"))).as("node"))
         .groupBy("node").agg(F.count(F.lit(1)).as("degree"))

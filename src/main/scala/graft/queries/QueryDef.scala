@@ -88,7 +88,7 @@ object Tables {
     graft.functions.GraftFunctions.register(spark)
     if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
+      val raw = Inputs.parquet(spark, s"$dir/$name.parquet")
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           raw.withColumn("ts",
@@ -99,8 +99,88 @@ object Tables {
             .cast(org.apache.spark.sql.types.TimestampType))
         case _ => raw
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else Inputs.parquet(spark, s"$dir/$name.parquet")
   }
+}
+
+/** One resolved parquet relation per (session, input path): the read
+  * that every table ([[Tables.t]]), staged artifact ([[Staged]]) and
+  * streaming input goes through.
+  *
+  * `spark.read.parquet` lists the path and infers its schema on every
+  * call, and the inference is a Spark job (a footer read), so each
+  * query paid one job per input before it ran anything. The first read
+  * of a path in a session resolves it; later reads reuse the resolved
+  * relation (schema and file listing) and start no job. Each call
+  * still returns a new DataFrame over that relation with fresh
+  * attribute ids, exactly as `spark.read.parquet` does, so two reads
+  * of one input in one plan (a self-join) stay two distinct sides.
+  *
+  * A path is resolved again when its modification time or length
+  * (Hadoop `getFileStatus`) changes, so an input rewritten at the same
+  * path is read anew. A missing or malformed input is never kept: it
+  * fails in `spark.read.parquet`, as an uncached read does. The
+  * relation is resolved under the session conf of its first read.
+  *
+  * Entries are per session and end with it: a session's entries are
+  * dropped when its SparkContext stops. A derived session that is never
+  * stopped keeps its entries (a schema and a file listing per input,
+  * no data) until its context stops. Only paths that outlive a query
+  * belong here — inputs and staged dirs — never per-call scratch
+  * output, whose fresh path per call would add an entry per call. */
+object Inputs {
+  import org.apache.spark.sql.execution.datasources.LogicalRelation
+  import org.apache.spark.sql.sources.BaseRelation
+
+  private final case class Resolved(relation: BaseRelation, stamp: (Long, Long))
+
+  private val bySession = new java.util.HashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[String, Resolved]]()
+
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    stampOf(spark, path) match {
+      case None => spark.read.parquet(path) // missing: fails as it always did
+      case Some(stamp) =>
+        val entries = sessionEntries(spark)
+        val hit = entries.get(path)
+        if (hit != null && hit.stamp == stamp)
+          spark.baseRelationToDataFrame(hit.relation)
+        else {
+          val df = spark.read.parquet(path)
+          df.queryExecution.analyzed match {
+            case l: LogicalRelation => entries.put(path, Resolved(l.relation, stamp))
+            case _ => ()
+          }
+          df
+        }
+    }
+
+  /** (modification time, length) of `path`, None when it does not exist. */
+  private def stampOf(spark: SparkSession, path: String): Option[(Long, Long)] =
+    try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(p)
+      Some((st.getModificationTime, st.getLen))
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** The session's entries, created on first use together with the
+    * listener that drops them when the session's context stops. */
+  private def sessionEntries(spark: SparkSession) =
+    bySession.synchronized {
+      var m = bySession.get(spark)
+      if (m == null) {
+        m = new java.util.concurrent.ConcurrentHashMap[String, Resolved]()
+        bySession.put(spark, m)
+        spark.sparkContext.addSparkListener(
+          new org.apache.spark.scheduler.SparkListener {
+            override def onApplicationEnd(
+                e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+              bySession.synchronized(bySession.remove(spark))
+          })
+      }
+      m
+    }
 }
 
 /** Shared intermediates materialized ONCE per (JVM, sf dir) to scratch
@@ -158,10 +238,10 @@ object Staged {
     dir
   }
 
-  /** [[stagedDir]] per (JVM, sf dir, name), read back. */
+  /** [[stagedDir]] per (JVM, sf dir, name), read back through [[Inputs]]. */
   private def stagedParquet(s: SparkSession, d: String, name: String)(
       build: => DataFrame): DataFrame =
-    s.read.parquet(stagedDir(Harness.staged(
+    Inputs.parquet(s, stagedDir(Harness.staged(
       s"graph_${new java.io.File(d).getName}/$name"))(build))
 
   /** Co-purchase pair list: one row per (order, unordered part pair),

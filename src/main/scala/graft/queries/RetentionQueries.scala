@@ -186,8 +186,9 @@ object RetentionQueries {
     * ([[graft.operators.Graph.kCore]]): each round is one map-side-
     * combined degree aggregate plus two SEMI joins of the base edge list
     * against the surviving-node list — shuffles stay keyed on node id,
-    * state is one degree per node, and the edge list comes from the
-    * SHARED staged build ([[Staged.coPurchaseEdges]]). */
+    * state is one degree per node, and every round re-reads the edge
+    * list from the SHARED staged build ([[Staged.coPurchaseEdges]]),
+    * which is its materialization: nothing is persisted. */
   private val kcore = QueryDef(
     "kcore",
     (s, d) => graft.operators.Graph.kCore(Staged.coPurchaseEdges(s, d),

@@ -43,19 +43,11 @@ object StreamingQueries {
       t(s, d, table).repartition(8)
     }
 
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
-  /** File-stream source over a staged dir with the schema inferred ONCE
-    * per (JVM, dir): the previous per-call `s.read.parquet(dir).schema`
-    * re-listed the directory and re-read footers on EVERY query call —
-    * with 3 timed bench runs across 30 G-queries, ~100 schema-infer
-    * passes of pure scaffolding. The staged dirs are written once per
-    * JVM and never mutated, so the cache cannot go stale. */
+  /** File-stream source over a staged dir, its schema from the dir's
+    * resolved relation ([[Inputs]]): resolved once per (session, dir),
+    * so a query call lists and infers nothing. */
   private def stagedStream(s: SparkSession, dir: String): DataFrame =
-    s.readStream.schema(
-      schemaCache.computeIfAbsent(dir, _ => s.read.parquet(dir).schema))
-      .parquet(dir)
+    s.readStream.schema(Inputs.parquet(s, dir).schema).parquet(dir)
 
   /** Pre-stage the streaming inputs (used by Bench's untimed warmup so
     * the timed region measures the stream execution, not scaffolding). */
@@ -81,20 +73,22 @@ object StreamingQueries {
         new java.util.ArrayList[Row](scala.jdk.CollectionConverters
           .SeqHasAsJava(rows).asJava), sch)
         .coalesce(1).write.mode("overwrite").parquet(dir)
-      val src = stagedStream(s, dir)
+      val src = s.readStream.schema(sch).parquet(dir)
       drain(src.where(F.col("event_id") > 0), "append")
       drain(src.withWatermark("ts", "1 minute")
         .groupBy(F.window(F.col("ts"), "1 minute")).count(), "complete")
       import s.implicits._
+      // the typed inputs take the aliases stream_session and
+      // stream_balance give them (userId, eventId)
       drain(graft.streaming.StreamOps.sessionizeStream(
-        src.select(F.col("user_id"), F.col("ts"))
+        src.select(F.col("user_id").as("userId"), F.col("ts"))
           .as[graft.streaming.StreamOps.SessionInput],
         60000L, "1 minute").toDF(), "append")
       withConf(s, "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
         drain(graft.streaming.StreamOps.balanceStream(
-          src.select(F.col("user_id"), F.col("ts"), F.col("event_id"),
-            F.col("event_id").as("deltaMicro"))
+          src.select(F.col("user_id").as("userId"), F.col("ts"),
+            F.col("event_id").as("eventId"), F.col("event_id").as("deltaMicro"))
             .as[graft.streaming.StreamOps.BalIn],
           60000L, "1 minute").toDF(), "append")
       }
@@ -320,7 +314,7 @@ object StreamingQueries {
     (s, d) => {
       import s.implicits._
       val dir = stage(s, d, "events")
-      val batch = s.read.parquet(dir)
+      val batch = Inputs.parquet(s, dir)
       val maxUs = batch.agg(F.max(F.unix_micros(F.col("ts")))).head().getLong(0)
       val cutoffUs = maxUs - 2700L * 1000000L // max(ts) − 45 min
       val stream = s.readStream.schema(batch.schema).parquet(dir)
@@ -402,7 +396,7 @@ object StreamingQueries {
     "stream_dedup_incremental",
     (s, d) => {
       val dir = stage(s, d, "documents")
-      val static = s.read.parquet(dir)
+      val static = Inputs.parquet(s, dir)
       val isBatch = F.pmod(graft.operators.Hashing.hash60(
         F.col("doc_id").cast("string")), F.lit(10L)) === 0L
       val store = static.where(!isBatch)
@@ -441,8 +435,7 @@ object StreamingQueries {
     "stream_join",
     (s, d) => {
       val dir = stage(s, d, "events")
-      val schema = schemaCache.computeIfAbsent(dir,
-        _ => s.read.parquet(dir).schema)
+      val schema = Inputs.parquet(s, dir).schema
       // A stream-stream join maintains FOUR state stores per partition;
       // state partitioning is fixed at the query's first run, and the
       // per-partition store overhead dominates when state is modest —
@@ -499,7 +492,7 @@ object StreamingQueries {
     "stream_join_outer",
     (s, d) => {
       val dir = stage(s, d, "events")
-      val batch = s.read.parquet(dir)
+      val batch = Inputs.parquet(s, dir)
       // one max per side; if EITHER side is absent the global watermark
       // never advances (no eviction, no null rows), so both engines must
       // emit zero rows — cutoff below every timestamp here, NULL cutoff
@@ -574,8 +567,7 @@ object StreamingQueries {
         Harness.staged(s"upsert_${new java.io.File(d).getName}")) {
         t(s, d, "events").repartition(12)
       }
-      val schema = schemaCache.computeIfAbsent(dir,
-        _ => s.read.parquet(dir).schema)
+      val schema = Inputs.parquet(s, dir).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "3").parquet(dir)
       var prev: Option[String] = None
@@ -725,7 +717,7 @@ object StreamingQueries {
     (s, d) => {
       val dir = stage(s, d, "orders")
       val cust = t(s, d, "customer")
-      val batch = s.read.parquet(dir)
+      val batch = Inputs.parquet(s, dir)
       val joined = batch
         .join(F.broadcast(cust), F.col("o_custkey") === F.col("c_custkey"))
         .select(F.col("c_mktsegment").as("segment"),
@@ -777,7 +769,7 @@ object StreamingQueries {
     (s, d) => {
       import s.implicits._
       val dir = stage(s, d, "events")
-      val batch = s.read.parquet(dir)
+      val batch = Inputs.parquet(s, dir)
       val maxUs = batch.agg(F.max(F.unix_micros(F.col("ts")))).head().getLong(0)
       val cutoffUs = maxUs - 2700L * 1000000L // max(ts) − 45 min
       val flushed = batch.groupBy("user_id")
@@ -895,8 +887,7 @@ object StreamingQueries {
     "stream_funnel",
     (s, d) => withStatePartitions(s, 4) {
       val dir = stage(s, d, "documents")
-      val schema = schemaCache.computeIfAbsent(dir,
-        _ => s.read.parquet(dir).schema)
+      val schema = Inputs.parquet(s, dir).schema
       val cols = graft.operators.TextOps.qualityColumns(F.col("text")).toMap
       val total = drain(
         s.readStream.schema(schema).parquet(dir)
@@ -938,8 +929,7 @@ object StreamingQueries {
     "stream_funnel_window",
     (s, d) => withStatePartitions(s, 8) {
       val dir = stage(s, d, "events")
-      val schema = schemaCache.computeIfAbsent(dir,
-        _ => s.read.parquet(dir).schema)
+      val schema = Inputs.parquet(s, dir).schema
       def ev() = s.readStream.schema(schema).parquet(dir)
       val hour = F.expr("INTERVAL 1 HOUR")
       // one drain doubles as the user spine AND stage 1: the per-user
@@ -987,8 +977,7 @@ object StreamingQueries {
     "stream_retention",
     (s, d) => withStatePartitions(s, 8) {
       val dir = stage(s, d, "events")
-      val schema = schemaCache.computeIfAbsent(dir,
-        _ => s.read.parquet(dir).schema)
+      val schema = Inputs.parquet(s, dir).schema
       def ev() = s.readStream.schema(schema).parquet(dir)
         .select(F.col("user_id"), F.to_date(F.col("ts")).as("day"))
       val first = drain(
@@ -1021,10 +1010,9 @@ object StreamingQueries {
     "stream_contamination",
     (s, d) => withStatePartitions(s, 8) {
       val dir = stage(s, d, "documents")
-      val schema = schemaCache.computeIfAbsent(dir,
-        _ => s.read.parquet(dir).schema)
+      val schema = Inputs.parquet(s, dir).schema
       val bench = graft.operators.TextOps.shingleDocs(
-        s.read.parquet(dir).where(F.col("source") === "src0"),
+        Inputs.parquet(s, dir).where(F.col("source") === "src0"),
         "doc_id", "text", 3)
         .select("shingle").distinct().withColumn("_hit", F.lit(1L))
       val grams = graft.operators.TextOps.shingleDocs(
@@ -1085,7 +1073,7 @@ object StreamingQueries {
     "stream_psi",
     (s, d) => {
       val dir = stage(s, d, "events")
-      val ref = s.read.parquet(dir).where(F.expr("event_id % 2 = 0"))
+      val ref = Inputs.parquet(s, dir).where(F.expr("event_id % 2 = 0"))
         .select(F.col("value"), F.col("event_id"))
       // the 9 bound values are a model artifact: computed once, tiny
       // (the collect is 9 doubles) — ranked over the REFERENCE cohort
@@ -1179,7 +1167,7 @@ object StreamingQueries {
     (s, d) => {
       import s.implicits._
       val dir = stage(s, d, "events")
-      val batch = s.read.parquet(dir)
+      val batch = Inputs.parquet(s, dir)
       val maxUs = batch.agg(F.max(F.unix_micros(F.col("ts")))).head().getLong(0)
       val cutoffUs = maxUs - 2700L * 1000000L
       val flushed = batch.groupBy("user_id")
@@ -1364,7 +1352,7 @@ object StreamingQueries {
     "stream_asof",
     (s, d) => {
       val dir = stage(s, d, "events")
-      val batch = s.read.parquet(dir)
+      val batch = Inputs.parquet(s, dir)
       val dim = graft.operators.Warehouse.scd2Build(
         batch, "user_id", "ts", "event_id", "event_type")
         .select(F.col("user_id").as("du"), F.col("attr"),

@@ -77,7 +77,7 @@ class CacheScopeSpec extends SparkSpec {
       ("randomWalks", () => Graph.randomWalks(ring, "a", "b", seeds, "v",
         steps = 4).count(), 15L, 1), // ranked adjacency
       ("kCore", () => Graph.kCore(ring, "a", "b", 2L, 3).count(),
-        40L, 1)) // base edges
+        40L, 0)) // reads its edges, persists nothing
     for ((name, run, rows, persisted) <- cases) {
       CacheScope.release(spark)
       val before = sc.getPersistentRDDs.keySet
@@ -103,6 +103,68 @@ class CacheScopeSpec extends SparkSpec {
     assert(rows == Seq(4L, 2L, 1L))
     assert(converged && last.count() == 1L)
     CacheScope.release(spark)
+  }
+
+  test("iterate runs one job of its own per round, and its rows and converged flag match a plain replay") {
+    // A round's jobs are the step's own stage jobs (AQE runs them while
+    // the checkpoint is planned) plus the loop's. The step's share is
+    // measured by planning the same round's lazy checkpoint outside the
+    // loop; the loop's share must then be exactly one job per round.
+    // Edges are plain frames, not persisted: a cache's first
+    // materialization would add jobs to one side only.
+    import graft.operators.{Dedup, Graph}
+    import org.apache.spark.sql.DataFrame
+    val path = spark.range(9).selectExpr("id AS a", "id + 1 AS b")
+    val edges = path.selectExpr("a AS src", "b AS dst")
+      .union(path.selectExpr("b AS src", "a AS dst"))
+    val init = edges.select(F.col("src").as("v")).distinct()
+      .select(F.col("v"), F.col("v").as("lbl"))
+    val cases: Seq[(String, DataFrame => DataFrame, Int, Option[String])] = Seq(
+      ("labelPropagation", Graph.lpaRound(edges), 4, None),
+      ("connectedComponents", Dedup.ccRound(edges), 20, Some("_changed")),
+      ("connectedComponentsStarContract", Dedup.ccStarRound(edges), 20,
+        Some("_changed")))
+    org.apache.spark.TestListenerBus.countingJobs(spark.sparkContext) { jobsNow =>
+      for ((name, step, maxRounds, changed) <- cases) {
+        // the loop: a round's jobs start after its step is called
+        val marks = scala.collection.mutable.ArrayBuffer.empty[Int]
+        val (last, converged, rows) = CacheScope.iterate(init, maxRounds)(
+          { s => marks += jobsNow(); step(s) }, changed)
+        marks += jobsNow()
+        val loopJobs = marks.sliding(2).map(m => m(1) - m(0)).toSeq
+        assert(last.count() == 10L, name)
+        // the step alone: the same rounds' lazy checkpoints, planned
+        var prev = init
+        val stepJobs = rows.indices.map { _ =>
+          val j0 = jobsNow()
+          val cp = step(prev).localCheckpoint(eager = false)
+          val j = jobsNow() - j0
+          cp.queryExecution.toRdd.count()
+          prev = cp
+          j
+        }
+        assert(loopJobs == stepJobs.map(_ + 1),
+          s"$name: jobs per round $loopJobs, the step's own $stepJobs")
+        // a plain replay: each round collected into a local frame
+        var state = init
+        val replayRows = Seq.newBuilder[Long]
+        var replayConverged = changed.isEmpty
+        var r = 0
+        while (r < maxRounds && !(changed.isDefined && replayConverged)) {
+          val next = step(state)
+          val out = next.collect()
+          replayRows += out.length.toLong
+          replayConverged = changed.forall(c => !out.exists(row =>
+            !row.isNullAt(row.fieldIndex(c)) && row.getBoolean(row.fieldIndex(c))))
+          state = spark.createDataFrame(java.util.Arrays.asList(out: _*),
+            next.schema).select("v", "lbl")
+          r += 1
+        }
+        assert(rows == replayRows.result(), name)
+        assert(converged == replayConverged, name)
+        CacheScope.release(spark)
+      }
+    }
   }
 
   test("both CC variants throw when a component outlasts maxRounds") {

@@ -87,6 +87,28 @@ class StreamingSpec extends SparkSpec {
     assert(spark.table("g3").count() == 4) // 5 in, 1 dup dropped
   }
 
+  test("the streaming prewarm runs all four warm queries to their end without an exception") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val ended = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        ended.add(e.exception)
+    }
+    spark.streams.addListener(listener)
+    try {
+      graft.queries.StreamingQueries.prewarm(spark, sf)
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    } finally spark.streams.removeListener(listener)
+    graft.operators.CacheScope.release(spark)
+    val outcomes = scala.jdk.CollectionConverters.CollectionHasAsScala(ended)
+      .asScala.toSeq
+    assert(outcomes.size == 4, s"${outcomes.size} of 4 warm queries ended")
+    assert(outcomes.forall(_.isEmpty), outcomes.flatten.mkString("; "))
+  }
+
   test("stream_tumbling's memory-sink view is dropped at release") {
     def sinkViews = spark.catalog.listTables().collect()
       .map(_.name).filter(_.startsWith("graft_sink_"))
