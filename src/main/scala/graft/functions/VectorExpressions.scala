@@ -192,10 +192,6 @@ object VectorFunctions {
   def floatNorm(a: Column): Column =
     org.apache.spark.sql.functions.sqrt(floatDot(a, a))
 
-  def floatCosine(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.round(
-      floatDot(a, b) / (floatNorm(a) * floatNorm(b)), 6)
-
   /** Installs graft's SQL functions and plan rewrites
     * ([[GraftFunctions.register]]) on an existing session. */
   def register(spark: SparkSession): Unit = GraftFunctions.register(spark)

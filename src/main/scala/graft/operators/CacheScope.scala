@@ -68,20 +68,6 @@ object CacheScope {
     p
   }
 
-  /** Persist MEMORY_AND_DISK_SER (compact serialized in-memory image)
-    * and track for later [[release]] — for CORPUS-PROPORTIONAL
-    * intermediates (labeled edge lists, banded signatures): the
-    * deserialized default's row objects are what evict into GC storms
-    * under co-located memory pressure (the r9 driver-bench pollution
-    * window); the serialized image trades a decode per read for a
-    * several-fold smaller, GC-inert footprint. Node-/community-sized
-    * frames keep the deserialized [[persist]]. */
-  private[graft] def persistSer(df: DataFrame): DataFrame = {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK_SER)
-    track(df.sparkSession, () => p.unpersist(blocking = false))
-    p
-  }
-
   /** The per-round policy of every iterative operator: run `step` from
     * `init` for at most `maxRounds` rounds, cutting lineage every round
     * (iterative self-joins otherwise grow the logical plan linearly in

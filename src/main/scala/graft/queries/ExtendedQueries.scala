@@ -253,11 +253,12 @@ object ExtendedQueries {
     * ([[graft.sources.GraftAtomicSinkProvider]], r14): the supplier
     * table is written through the manifest-gated atomic sink
     * (SaveMode.Overwrite → SupportsTruncate) and read back through the
-    * same provider's scan — schema from the committed manifest, one
-    * input partition per committed file. The oracle reads the source
-    * directly, so the hash compare covers the WHOLE write+read path:
-    * task staging, commit messages, manifest publication, parquet
-    * encode/decode (ints, longs, strings, and bit-exact doubles).
+    * same provider's scan — schema and file list from the committed
+    * manifest, files read by Spark's Parquet scan. The oracle reads the
+    * source directly, so the hash compare covers the WHOLE write+read
+    * path: task staging, commit messages, manifest publication, Spark's
+    * Parquet encode/decode (ints, longs, strings, and bit-exact
+    * doubles).
     * Commit/abort atomicity itself is proven by GraftSinkSpec's
     * injected task failures. */
   private val sinkRoundtrip = QueryDef(
@@ -284,8 +285,8 @@ object ExtendedQueries {
     * the append invisible. The oracle recomputes commit 1's content
     * from the source, so the hash compare proves both the snapshot-
     * chain resolution (an append never rewrites prior manifests) and
-    * the parquet encode/decode path (page encoding via parquet-java,
-    * null cells, exact doubles). Every call writes a fresh table in its
+    * the sink's data files (Spark's own Parquet writer and scan; null
+    * cells, exact doubles). Every call writes a fresh table in its
     * own scratch dir, so the chain is always exactly versions 1 and 2.
     * Version-resolution errors and overlapping-writer serialization
     * are GraftSinkSpec's; this query is the driver-graded read. */

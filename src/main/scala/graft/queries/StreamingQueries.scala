@@ -95,22 +95,8 @@ object StreamingQueries {
     }
   }
 
-  /** Stateful-query partition sizing (the G8 lesson, measured 8.2 s →
-    * ~3 s at sf0.1): a streaming aggregate creates a state store PER
-    * shuffle partition PER drain, and that per-store overhead dominates
-    * when state is modest — size partitions to the state volume, not to
-    * the session's scan parallelism. Restores the previous setting
-    * after the body (the override binds at each query's START, so it
-    * only affects streams launched inside). */
-  private def withStatePartitions[T](
-      s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** Scoped session-conf override (binds at stream START, like
-    * [[withStatePartitions]]). */
+  /** Scoped session-conf override; a streaming conf binds at the
+    * query's START, so it only affects streams launched inside. */
   private def withConf[T](s: SparkSession, key: String, value: String)(
       body: => T): T = {
     val prev = s.conf.getOption(key)
@@ -138,17 +124,14 @@ object StreamingQueries {
   /** Drain a bounded stream (Trigger.AvailableNow) into the sink that
     * `sink` sets on `df`'s writer.
     *
-    * Suite-wide state-partition cap (r8, from the r7 verdict's bench
-    * cost item): the partition count binds at stream START, and every
-    * extra shuffle partition is an extra state store instantiated,
-    * checkpointed and committed PER micro-batch — profiled at sf0.1
-    * a stateful drain drops ~0.3–0.9 s going 32 → 8 partitions with
-    * identical results (re-measure per query with
-    * `runMain graft.Bench <names>`). Queries that already
-    * picked a tighter value via [[withStatePartitions]] keep it (the
-    * cap takes the MIN with the surrounding setting); at production
-    * scale state-partition count is a deployment choice, not a plan
-    * property.
+    * The suite's ONE state-partition policy: every drain runs with at
+    * most 4 shuffle partitions (the MIN with the session's setting).
+    * The partition count binds at stream START, and every shuffle
+    * partition is a state store instantiated, checkpointed and
+    * committed PER micro-batch, so at bench scale a handful of stores
+    * is faster with identical results (re-measure per query with
+    * `runMain graft.Bench <names>`). At production scale the
+    * state-partition count is a deployment choice, not a plan property.
     *
     * The checkpoint is a fresh tmpfs scratch dir (r9): the offset/commit
     * WAL and state-store files fsync per micro-batch — ~100 ms/batch of
@@ -168,14 +151,13 @@ object StreamingQueries {
     // (measured per batch at sf0.1). APPEND-mode stateful queries KEEP it — it is what
     // emits their watermark-finalized rows.
     val noData = if (mode == "complete") "false" else "true"
-    // suite cap 8 → 4 (r10): each shuffle partition is a state store
-    // instantiated + committed per micro-batch, and no G-query's state
-    // needs more than a handful of stores at bench SF — A/B'd with
-    // `runMain graft.Bench` (tumbling 1.8 → 1.3 s, pii 1.15 → 0.6 s, suite
-    // −15–25%). Production sizes this to state volume via deployment
-    // conf, exactly like the previous 8.
-    val q = withStatePartitions(s,
-      math.min(s.conf.get("spark.sql.shuffle.partitions").toInt, 4)) {
+    // no G-query's state needs more than a handful of stores at bench
+    // SF — A/B'd with `runMain graft.Bench` (tumbling 1.8 → 1.3 s, pii
+    // 1.15 → 0.6 s, suite −15–25% against a cap of 8)
+    val statePartitions =
+      math.min(s.conf.get("spark.sql.shuffle.partitions").toInt, 4)
+    val q = withConf(s, "spark.sql.shuffle.partitions",
+        statePartitions.toString) {
       withDrainConfs(s) {
         withConf(s, "spark.sql.streaming.noDataMicroBatches.enabled", noData) {
           sink(df.writeStream.outputMode(mode)
@@ -436,33 +418,23 @@ object StreamingQueries {
     (s, d) => {
       val dir = stage(s, d, "events")
       val schema = Inputs.parquet(s, dir).schema
-      // A stream-stream join maintains FOUR state stores per partition;
-      // state partitioning is fixed at the query's first run, and the
-      // per-partition store overhead dominates when state is modest —
-      // size it to the state volume, not the session's scan parallelism
-      // (measured 8.2 s → ~3 s at sf0.1 going 32 → 8 with
-      // `runMain graft.Bench`). Restored after the drain.
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val clicks = s.readStream.schema(schema).parquet(dir)
-          .where(F.col("event_type") === "click")
-          .select(F.col("event_id").as("click_id"), F.col("user_id"),
-            F.col("ts").as("click_ts"))
-          .withWatermark("click_ts", "1 hour")
-        val purchases = s.readStream.schema(schema).parquet(dir)
-          .where(F.col("event_type") === "purchase")
-          .select(F.col("event_id").as("purchase_id"),
-            F.col("user_id").as("_p_user"), F.col("ts").as("purchase_ts"))
-          .withWatermark("purchase_ts", "1 hour")
-        val joined = clicks.join(purchases,
-          F.col("user_id") === F.col("_p_user") &&
-            F.col("purchase_ts") >= F.col("click_ts") &&
-            F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES"))
-        drain(joined, "append")
-          .select("user_id", "click_id", "click_ts", "purchase_id", "purchase_ts")
-          .orderBy("user_id", "click_id", "purchase_id")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val clicks = s.readStream.schema(schema).parquet(dir)
+        .where(F.col("event_type") === "click")
+        .select(F.col("event_id").as("click_id"), F.col("user_id"),
+          F.col("ts").as("click_ts"))
+        .withWatermark("click_ts", "1 hour")
+      val purchases = s.readStream.schema(schema).parquet(dir)
+        .where(F.col("event_type") === "purchase")
+        .select(F.col("event_id").as("purchase_id"),
+          F.col("user_id").as("_p_user"), F.col("ts").as("purchase_ts"))
+        .withWatermark("purchase_ts", "1 hour")
+      val joined = clicks.join(purchases,
+        F.col("user_id") === F.col("_p_user") &&
+          F.col("purchase_ts") >= F.col("click_ts") &&
+          F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES"))
+      drain(joined, "append")
+        .select("user_id", "click_id", "click_ts", "purchase_id", "purchase_ts")
+        .orderBy("user_id", "click_id", "purchase_id")
     },
     Some("""
       SELECT c.user_id, c.event_id AS click_id, c.ts AS click_ts,
@@ -504,29 +476,25 @@ object StreamingQueries {
       val cutoffUs =
         if (maxRows.length < 2) Long.MinValue
         else maxRows.map(_.getLong(1)).min - 7200L * 1000000L // min-max − 2 h
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8") // see stream_join
-      try {
-        val clicks = s.readStream.schema(batch.schema).parquet(dir)
-          .where(F.col("event_type") === "click")
-          .select(F.col("event_id").as("click_id"), F.col("user_id"),
-            F.col("ts").as("click_ts"))
-          .withWatermark("click_ts", "1 hour")
-        val purchases = s.readStream.schema(batch.schema).parquet(dir)
-          .where(F.col("event_type") === "purchase")
-          .select(F.col("event_id").as("purchase_id"),
-            F.col("user_id").as("_p_user"), F.col("ts").as("purchase_ts"))
-          .withWatermark("purchase_ts", "1 hour")
-        val joined = clicks.join(purchases,
-          F.col("user_id") === F.col("_p_user") &&
-            F.col("purchase_ts") >= F.col("click_ts") &&
-            F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES"),
-          "left_outer")
-        drain(joined, "append")
-          .where(F.unix_micros(F.col("click_ts")) < cutoffUs)
-          .select("user_id", "click_id", "click_ts", "purchase_id", "purchase_ts")
-          .orderBy("user_id", "click_id", "purchase_id")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val clicks = s.readStream.schema(batch.schema).parquet(dir)
+        .where(F.col("event_type") === "click")
+        .select(F.col("event_id").as("click_id"), F.col("user_id"),
+          F.col("ts").as("click_ts"))
+        .withWatermark("click_ts", "1 hour")
+      val purchases = s.readStream.schema(batch.schema).parquet(dir)
+        .where(F.col("event_type") === "purchase")
+        .select(F.col("event_id").as("purchase_id"),
+          F.col("user_id").as("_p_user"), F.col("ts").as("purchase_ts"))
+        .withWatermark("purchase_ts", "1 hour")
+      val joined = clicks.join(purchases,
+        F.col("user_id") === F.col("_p_user") &&
+          F.col("purchase_ts") >= F.col("click_ts") &&
+          F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES"),
+        "left_outer")
+      drain(joined, "append")
+        .where(F.unix_micros(F.col("click_ts")) < cutoffUs)
+        .select("user_id", "click_id", "click_ts", "purchase_id", "purchase_ts")
+        .orderBy("user_id", "click_id", "purchase_id")
     },
     Some("""
       SELECT c.user_id, c.event_id AS click_id, c.ts AS click_ts,
@@ -885,7 +853,7 @@ object StreamingQueries {
     * `pipeline_funnel`. */
   private val streamFunnel = QueryDef(
     "stream_funnel",
-    (s, d) => withStatePartitions(s, 4) {
+    (s, d) => {
       val dir = stage(s, d, "documents")
       val schema = Inputs.parquet(s, dir).schema
       val cols = graft.operators.TextOps.qualityColumns(F.col("text")).toMap
@@ -927,7 +895,7 @@ object StreamingQueries {
     * Same oracle as `funnel_window`. */
   private val streamFunnelWindow = QueryDef(
     "stream_funnel_window",
-    (s, d) => withStatePartitions(s, 8) {
+    (s, d) => {
       val dir = stage(s, d, "events")
       val schema = Inputs.parquet(s, dir).schema
       def ev() = s.readStream.schema(schema).parquet(dir)
@@ -975,7 +943,7 @@ object StreamingQueries {
     * from the drained masks. Same oracle as `bitmap_retention`. */
   private val streamRetention = QueryDef(
     "stream_retention",
-    (s, d) => withStatePartitions(s, 8) {
+    (s, d) => {
       val dir = stage(s, d, "events")
       val schema = Inputs.parquet(s, dir).schema
       def ev() = s.readStream.schema(schema).parquet(dir)
@@ -1008,7 +976,7 @@ object StreamingQueries {
     * `contamination`. */
   private val streamContamination = QueryDef(
     "stream_contamination",
-    (s, d) => withStatePartitions(s, 8) {
+    (s, d) => {
       val dir = stage(s, d, "documents")
       val schema = Inputs.parquet(s, dir).schema
       val bench = graft.operators.TextOps.shingleDocs(
@@ -1257,9 +1225,7 @@ object StreamingQueries {
           F.expr("CAST((year(o_orderdate) - 1992) * 12 + " +
             "month(o_orderdate) - 1 AS BIGINT)").as("m"))
         .groupBy("ck").agg(F.min("m").as("fm"))
-      withStatePartitions(s, 8) {
-        drain(mins, "complete")
-      }
+      drain(mins, "complete")
         .groupBy("fm").agg(F.count(F.lit(1)).as("new_customers"))
         .orderBy("fm")
     },
@@ -1295,7 +1261,7 @@ object StreamingQueries {
         .groupBy("u_host", "norm_url")
         .agg(F.min("doc_id").as("keep_doc"),
           F.count(F.lit(1)).as("n"))
-      withStatePartitions(s, 8) { drain(per, "complete") }
+      drain(per, "complete")
         .groupBy("u_host")
         .agg(F.count(F.lit(1)).as("n_urls"),
           F.sum("n").as("n_docs"),
@@ -1334,7 +1300,7 @@ object StreamingQueries {
           F.col("o_orderkey").cast("string")), F.lit(5))
           .cast("long").as("fold"))
         .groupBy("fold").agg(F.count(F.lit(1)).as("n_fold"))
-      val drained = withStatePartitions(s, 5) { drain(folds, "complete") }
+      val drained = drain(folds, "complete")
       ClusterEvalQueries.srmAssemble(drained)
     },
     Some(ClusterEvalQueries.srmOracleSql))
@@ -1413,7 +1379,7 @@ object StreamingQueries {
             s"CASE WHEN lang = 'en' THEN 1L ELSE 0L END)").as("nc"))
       val grouped = in.groupBy("cal", "nc")
         .agg(F.count(F.lit(1)).as("c"))
-      val drained = withStatePartitions(s, 5) { drain(grouped, "complete") }
+      val drained = drain(grouped, "complete")
       EvalQueries.conformalAssemble(drained)
     },
     Some(EvalQueries.conformalOracleSql))
@@ -1434,7 +1400,7 @@ object StreamingQueries {
         F.expr("CAST(floor(value * 1e6) AS BIGINT)").as("r_micro"))
         .groupBy("action")
         .agg(F.count(F.lit(1)).as("n_a"), F.sum("r_micro").as("sr"))
-      val drained = withStatePartitions(s, 5) { drain(per, "complete") }
+      val drained = drain(per, "complete")
       EvalQueries.ipsAssemble(drained)
     },
     Some(EvalQueries.ipsOracleSql))
@@ -1463,7 +1429,7 @@ object StreamingQueries {
         .agg(F.expr("sum(CASE WHEN o_orderpriority = '1-URGENT' " +
           "THEN 1L ELSE 0L END)").as("x"),
           F.count(F.lit(1)).as("n"))
-      val drained = withStatePartitions(s, 5) { drain(daily, "complete") }
+      val drained = drain(daily, "complete")
       RetentionQueries.sprtAssemble(
         drained.select(F.col("day"),
           F.expr("(2 * x - n) * 200671L").as("step")))
@@ -1483,7 +1449,7 @@ object StreamingQueries {
     * CAST(o_orderdate AS DATE) day. */
   private val streamHoltWinters = QueryDef(
     "stream_holt_winters",
-    (s, d) => withStatePartitions(s, 4) {
+    (s, d) => {
       val dir = stage(s, d, "orders")
       val stream = stagedStream(s, dir)
       val agg = stream

@@ -3,28 +3,36 @@ package graft.sources
 import java.util
 import java.util.UUID
 
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.{OutputWriterFactory, PartitionSpec, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** A from-scratch DataSource V2 batch SINK with real commit/abort
   * transactionality — the write half of the connector surface
   * ([[SynthDocs]] is the read half), `df.write.format(
   * "graft.sources.GraftAtomicSinkProvider").option("path", p)`.
   *
-  * Visibility is MANIFEST-GATED, the Iceberg/Delta pattern reduced to
-  * its transactional core:
+  * graft owns the TRANSACTION; Spark owns the FILE FORMAT. Visibility
+  * is MANIFEST-GATED, the Iceberg/Delta pattern reduced to its
+  * transactional core:
   *
   *  - each task writes its rows to `_staging/<queryId>/part-...` and
   *    reports the file in its [[WriterCommitMessage]] — nothing under
@@ -58,34 +66,21 @@ import org.apache.spark.unsafe.types.UTF8String
   *    is unreachable by construction, which GraftSinkSpec proves by
   *    injecting a mid-write task failure.
   *
-  * Rows are stored as parquet, written through parquet-java's public
-  * writer (snappy pages; optional int32/int64/double/UTF-8 primitives,
-  * so nulls, control characters and every double's bits round-trip
-  * exactly). `option("format", "parquet")` is accepted; any other
-  * format is refused when the write is built. All paths go through the
-  * Hadoop FileSystem API with the SESSION's Hadoop configuration
-  * threaded to executors ([[SerializableHadoopConf]]), so `file://` in
-  * tests and HDFS on a cluster are the same code INCLUDING
-  * fs.defaultFS/credentials.
+  * Data files are Spark's own Parquet: each write prepares Spark's
+  * Parquet writer once on the driver, as `df.write.parquet` does, and
+  * every task writes InternalRows straight into its staged file; reads
+  * plan the manifest's files through Spark's Parquet scan (vectorized
+  * reader, column pruning), fed by a file index built from the manifest
+  * ([[GraftSinkFileIndex]]) rather than a directory listing. Columns are
+  * int/long/double/string, so nulls, control characters and every
+  * double's bits round-trip exactly; files written by earlier versions
+  * through parquet-java's example writer read the same way.
+  * `option("format", "parquet")` is accepted; any other format is
+  * refused when the write is built. All paths go through the Hadoop
+  * FileSystem API with the SESSION's Hadoop configuration shipped to
+  * executors, so `file://` in tests and HDFS on a cluster are the same
+  * code INCLUDING fs.defaultFS/credentials.
   */
-/** Java-serializable Hadoop Configuration carrier (the r14 ADVICE fix:
-  * `new Configuration()` on executors dropped the session's
-  * fs.defaultFS / S3A credentials). The driver captures
-  * `sparkContext.hadoopConfiguration` once per write/scan and ships it
-  * inside the factories; executors deserialize the same settings. */
-class SerializableHadoopConf(@transient var conf: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    conf.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    conf = new Configuration(false)
-    conf.readFields(in)
-  }
-}
-
 object GraftSink {
   val MANIFEST_PREFIX = "_graft_commit_v"
 
@@ -101,15 +96,12 @@ object GraftSink {
     * S3A settings apply), falling back to defaults off-session (specs
     * that probe manifests before any SparkSession exists). */
   private[sources] def driverConf(): Configuration =
-    org.apache.spark.sql.SparkSession.getActiveSession
+    SparkSession.getActiveSession
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
 
   private[sources] def fs(p: Path): FileSystem =
     p.getFileSystem(driverConf())
-
-  private[sources] def fs(p: Path, conf: Configuration): FileSystem =
-    p.getFileSystem(conf)
 
   /** A streaming epoch's staging directory under its query's. */
   private[sources] def epochDir(stagingDir: Path, epochId: Long): Path =
@@ -208,31 +200,24 @@ object GraftSink {
 
   /** Append-compatibility: same field names and types in the same
     * order as the committed snapshot (nullability is not load-bearing
-    * — every parquet column is optional). */
+    * — Spark's Parquet reader reads required and optional columns
+    * alike). */
   private[sources] def compatible(a: StructType, b: StructType): Boolean =
     a.fields.length == b.fields.length &&
       a.fields.zip(b.fields).forall { case (x, y) =>
         x.name == y.name && x.dataType == y.dataType
       }
 
-  /** Parquet MessageType for a (pre-checked) sink schema: optional
-    * primitives, strings as UTF-8-annotated binary. */
-  private[sources] def parquetType(
-      schema: StructType): org.apache.parquet.schema.MessageType = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val b = org.apache.parquet.schema.Types.buildMessage()
-    schema.fields.foreach { f =>
-      f.dataType match {
-        case IntegerType => b.optional(INT32).named(f.name)
-        case LongType => b.optional(INT64).named(f.name)
-        case DoubleType => b.optional(DOUBLE).named(f.name)
-        case StringType => b.optional(BINARY)
-          .as(org.apache.parquet.schema.LogicalTypeAnnotation.stringType())
-          .named(f.name)
-        case dt => throw new IllegalStateException(s"unsupported $dt")
-      }
-    }
-    b.named("graft_sink")
+  /** Spark's Parquet scan over `files` (names under `data/`) read as
+    * `schema`, keeping only the `required` columns. */
+  private[sources] def parquetScan(root: Path, schema: StructType,
+      files: Seq[(String, Long)], required: StructType): Batch = {
+    val spark = SparkSession.active
+    val builder = ParquetScanBuilder(spark,
+      new GraftSinkFileIndex(spark, root, files.map(_._1)), schema, schema,
+      CaseInsensitiveStringMap.empty())
+    builder.pruneColumns(required)
+    builder.build().toBatch
   }
 }
 
@@ -301,11 +286,10 @@ class GraftSinkBatchWrite(path: String, schema: StructType,
     queryId: String, truncate: Boolean) extends BatchWrite {
   private val root = new Path(path)
   private val stagingDir = new Path(root, s"_staging/$queryId")
-  private val sconf = new SerializableHadoopConf(GraftSink.driverConf())
+  private val factory = GraftSinkWriterFactory(stagingDir, schema)
 
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftSinkWriterFactory(stagingDir.toString, schema.json, sconf)
+      info: PhysicalWriteInfo): DataWriterFactory = factory
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     GraftSinkCommit.publish(root, stagingDir, schema, truncate,
@@ -429,11 +413,10 @@ class GraftSinkStreamingWrite(path: String, schema: StructType,
     queryId: String) extends StreamingWrite {
   private val root = new Path(path)
   private val stagingDir = new Path(root, s"_staging/$queryId")
-  private val sconf = new SerializableHadoopConf(GraftSink.driverConf())
+  private val factory = GraftSinkWriterFactory(stagingDir, schema)
 
   override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new GraftSinkWriterFactory(stagingDir.toString, schema.json, sconf)
+      info: PhysicalWriteInfo): StreamingDataWriterFactory = factory
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
@@ -453,15 +436,15 @@ class GraftSinkStreamingWrite(path: String, schema: StructType,
 
 /** Task-side writer factory for both write surfaces: a batch task
   * stages into `stagingDir`, a streaming task into its epoch's
-  * `e<epoch>` subdirectory of it. */
-class GraftSinkWriterFactory(stagingDir: String, schemaJson: String,
-    sconf: SerializableHadoopConf)
+  * `e<epoch>` subdirectory of it. `parquet` is Spark's Parquet writer,
+  * prepared for this write with the job configuration in `conf`. */
+class GraftSinkWriterFactory(stagingDir: String, schema: StructType,
+    parquet: OutputWriterFactory, conf: SerializableConfiguration)
     extends DataWriterFactory with StreamingDataWriterFactory {
   private def writer(dir: String, partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
-    new GraftSinkParquetWriter(dir,
-      DataType.fromJson(schemaJson).asInstanceOf[StructType], partitionId,
-      taskId, sconf.conf)
+    new GraftSinkParquetWriter(dir, schema, parquet, conf.value,
+      partitionId, taskId)
 
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
@@ -473,42 +456,36 @@ class GraftSinkWriterFactory(stagingDir: String, schemaJson: String,
       partitionId, taskId)
 }
 
-/** Task writer: parquet-java's public example writer (real page
-  * encoding + snappy) into one staged file, reported to the driver's
-  * commit in a [[GraftSinkCommitMessage]]. */
+object GraftSinkWriterFactory {
+  /** Prepares Spark's Parquet writer once per write on the driver, the
+    * way `df.write.parquet` does: `prepareWrite` fills the job
+    * configuration (write support, row schema, codec) that every task
+    * opens its file with. */
+  def apply(stagingDir: Path, schema: StructType): GraftSinkWriterFactory = {
+    val spark = SparkSession.active
+    val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
+    val parquet = new ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, schema)
+    new GraftSinkWriterFactory(stagingDir.toString, schema, parquet,
+      new SerializableConfiguration(job.getConfiguration))
+  }
+}
+
+/** Task writer: one staged Parquet file written by Spark's own writer,
+  * reported with its row count to the driver's commit in a
+  * [[GraftSinkCommitMessage]]. */
 class GraftSinkParquetWriter(stagingDir: String, schema: StructType,
-    partitionId: Int, taskId: Long, conf: Configuration)
-    extends DataWriter[InternalRow] {
+    parquet: OutputWriterFactory, conf: Configuration, partitionId: Int,
+    taskId: Long) extends DataWriter[InternalRow] {
   private val fileName =
     s"part-$partitionId-$taskId-${UUID.randomUUID()}.parquet"
   private val staged = new Path(new Path(stagingDir), fileName)
-  private val msgType = GraftSink.parquetType(schema)
-  private val writer = {
-    GraftSink.fs(staged, conf).mkdirs(staged.getParent)
-    org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
-        .fromPath(staged, conf))
-      .withType(msgType)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
-  }
-  private val groups =
-    new org.apache.parquet.example.data.simple.SimpleGroupFactory(msgType)
+  private val writer = parquet.newInstance(staged.toString, schema,
+    new TaskAttemptContextImpl(conf, new TaskAttemptID()))
   private var rows = 0L
 
   override def write(row: InternalRow): Unit = {
-    val g = groups.newGroup()
-    schema.fields.zipWithIndex.foreach { case (f, i) =>
-      if (!row.isNullAt(i)) f.dataType match {
-        case IntegerType => g.add(i, row.getInt(i))
-        case LongType => g.add(i, row.getLong(i))
-        case DoubleType => g.add(i, row.getDouble(i))
-        case StringType => g.add(i, row.getUTF8String(i).toString)
-        case dt => throw new IllegalStateException(s"unsupported $dt")
-      }
-    }
-    writer.write(g)
+    writer.write(row)
     rows += 1
   }
 
@@ -520,7 +497,7 @@ class GraftSinkParquetWriter(stagingDir: String, schema: StructType,
   override def abort(): Unit = {
     GraftSink.quietly(s"close of aborted $staged")(writer.close())
     GraftSink.quietly(s"delete of aborted $staged") {
-      GraftSink.fs(staged, conf).delete(staged, false)
+      staged.getFileSystem(conf).delete(staged, false)
     }
   }
 
@@ -533,127 +510,109 @@ class GraftSinkParquetWriter(stagingDir: String, schema: StructType,
   * `startVersion` turns the scan into a CHANGE-FEED read — exactly the
   * files versions (start, end] added ([[GraftSink.filesAdded]], the
   * same planning as the streaming MicroBatchStream; startVersion = 0
-  * is the full snapshot). */
+  * is the full snapshot). Pruned columns reach Spark's Parquet reader. */
 class GraftSinkScanBuilder(path: String, version: Option[Long],
-    startVersion: Option[Long]) extends ScanBuilder {
+    startVersion: Option[Long])
+    extends ScanBuilder with SupportsPushDownRequiredColumns {
+  private var required: Option[StructType] = None
+
+  override def pruneColumns(requiredSchema: StructType): Unit =
+    required = Some(requiredSchema)
+
   override def build(): Scan = {
     val root = new Path(path)
     val end = GraftSink.snapshot(root, version, required = true).get
-    new GraftSinkScan(path, end.schema,
+    new GraftSinkScan(path, end.schema, required.getOrElse(end.schema),
       GraftSink.filesAdded(root, startVersion.getOrElse(0L), end))
   }
 }
 
-case class GraftSinkFilePartition(file: String) extends InputPartition
-
-class GraftSinkScan(path: String, schema: StructType,
-    files: Seq[(String, Long)]) extends Scan with Batch {
-  override def readSchema(): StructType = schema
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    files.map { case (name, _) =>
-      GraftSinkFilePartition(new Path(new Path(path), s"data/$name").toString)
-    }.toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftSinkReaderFactory(schema.json,
-      new SerializableHadoopConf(GraftSink.driverConf()))
+/** A resolved read: batch planning is Spark's Parquet scan over the
+  * manifest's files, built once per scan; a streaming read plans per
+  * micro-batch in [[GraftSinkMicroBatchStream]]. */
+class GraftSinkScan(path: String, schema: StructType, required: StructType,
+    files: Seq[(String, Long)]) extends Scan {
+  private lazy val batch =
+    GraftSink.parquetScan(new Path(path), schema, files, required)
+  override def readSchema(): StructType = required
+  override def description(): String =
+    s"GraftSinkScan($path, ${files.size} files)"
+  override def toBatch: Batch = batch
   override def toMicroBatchStream(checkpointLocation: String):
-      org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new GraftSinkMicroBatchStream(path, schema)
+      MicroBatchStream = new GraftSinkMicroBatchStream(path, schema)
+}
+
+/** The manifest's data files as Spark's file index. Their statuses come
+  * from ONE listing of `data/` narrowed to the manifest's names: never a
+  * per-path or parallel listing job, and never a file the manifest does
+  * not name (staged, aborted or `.crc` companions). */
+private[sources] class GraftSinkFileIndex(spark: SparkSession, root: Path,
+    names: Seq[String])
+    extends PartitioningAwareFileIndex(spark, Map.empty, None) {
+  private val dataDir = new Path(root, "data")
+
+  override protected val leafFiles: mutable.LinkedHashMap[Path, FileStatus] = {
+    val listed =
+      if (names.isEmpty) Map.empty[String, FileStatus]
+      else GraftSink.fs(dataDir).listStatus(dataDir)
+        .map(f => f.getPath.getName -> f).toMap
+    mutable.LinkedHashMap.from(names.map { n =>
+      val f = listed.getOrElse(n, throw new java.io.FileNotFoundException(
+        s"graft sink at $root: committed data file $n is missing"))
+      f.getPath -> f
+    })
+  }
+
+  override protected val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
+    leafFiles.values.toArray.groupBy(_.getPath.getParent)
+
+  override def allFiles(): Seq[FileStatus] = leafFiles.values.toSeq
+  override def rootPaths: Seq[Path] = Seq(dataDir)
+  override def partitionSpec(): PartitionSpec = PartitionSpec.emptySpec
+  override def refresh(): Unit = ()
 }
 
 /** A committed-snapshot VERSION as a streaming offset. */
-case class GraftSinkOffset(version: Long)
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
+case class GraftSinkOffset(version: Long) extends Offset {
   override def json(): String = version.toString
 }
 
 /** STREAMING read surface (r15): the manifest chain consumed as a
   * stream — each micro-batch is the set of data files a version range
   * ADDED ([[GraftSink.filesAdded]]; the Delta/Iceberg "table as a
-  * stream" pattern on this sink's own chain). Offsets are manifest
-  * versions, so restart resumes exactly where the checkpoint left off
-  * and nothing is re-read. A TRUNCATE surfaces only the rows it wrote
-  * (its manifest drops prior files — replaced history is not
-  * replayed), which is the documented change-feed semantics for
-  * overwrites. */
+  * stream" pattern on this sink's own chain), planned and read by
+  * Spark's Parquet scan. Offsets are manifest versions, so restart
+  * resumes exactly where the checkpoint left off and nothing is
+  * re-read. A TRUNCATE surfaces only the rows it wrote (its manifest
+  * drops prior files — replaced history is not replayed), which is the
+  * documented change-feed semantics for overwrites. */
 class GraftSinkMicroBatchStream(path: String, schema: StructType)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
+    extends MicroBatchStream {
   private val root = new Path(path)
 
-  override def latestOffset():
-      org.apache.spark.sql.connector.read.streaming.Offset =
+  override def latestOffset(): Offset =
     GraftSinkOffset(GraftSink.latestManifest(root).map(_._1).getOrElse(0L))
 
-  override def initialOffset():
-      org.apache.spark.sql.connector.read.streaming.Offset =
-    GraftSinkOffset(0L)
+  override def initialOffset(): Offset = GraftSinkOffset(0L)
 
-  override def deserializeOffset(json: String):
-      org.apache.spark.sql.connector.read.streaming.Offset =
+  override def deserializeOffset(json: String): Offset =
     GraftSinkOffset(json.trim.toLong)
 
-  override def planInputPartitions(
-      start: org.apache.spark.sql.connector.read.streaming.Offset,
-      end: org.apache.spark.sql.connector.read.streaming.Offset):
-      Array[InputPartition] = {
+  override def planInputPartitions(start: Offset,
+      end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[GraftSinkOffset].version
     val e = end.asInstanceOf[GraftSinkOffset].version
     val added = if (e <= s) Seq.empty else GraftSink.filesAdded(root, s,
       GraftSink.snapshot(root, Some(e), required = true).get)
-    new GraftSinkScan(path, schema, added).planInputPartitions()
+    GraftSink.parquetScan(root, schema, added, schema).planInputPartitions()
   }
 
+  // the reader factory depends on the schema only, not on the files
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftSinkReaderFactory(schema.json,
-      new SerializableHadoopConf(GraftSink.driverConf()))
+    GraftSink.parquetScan(root, schema, Seq.empty, schema)
+      .createReaderFactory()
 
-  override def commit(
-      end: org.apache.spark.sql.connector.read.streaming.Offset): Unit = ()
+  override def commit(end: Offset): Unit = ()
 
   override def stop(): Unit = ()
-}
-
-/** Task reader factory: one parquet reader per committed data file. */
-class GraftSinkReaderFactory(schemaJson: String,
-    sconf: SerializableHadoopConf) extends PartitionReaderFactory {
-  override def createReader(
-      partition: InputPartition): PartitionReader[InternalRow] =
-    new GraftSinkParquetReader(
-      partition.asInstanceOf[GraftSinkFilePartition].file,
-      DataType.fromJson(schemaJson).asInstanceOf[StructType], sconf.conf)
-}
-
-/** Columnar task reader: parquet-java Group reader over one committed
-  * file; cells with repetition count 0 are the nulls the writer
-  * skipped. */
-class GraftSinkParquetReader(file: String, schema: StructType,
-    conf: Configuration) extends PartitionReader[InternalRow] {
-  private val reader = {
-    val c = new Configuration(conf)
-    org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-        new Path(file))
-      .withConf(c)
-      .build()
-  }
-  private var group: org.apache.parquet.example.data.Group = _
-
-  override def next(): Boolean = { group = reader.read(); group != null }
-
-  override def get(): InternalRow = {
-    val vals = schema.fields.zipWithIndex.map { case (f, i) =>
-      if (group.getFieldRepetitionCount(i) == 0) null
-      else f.dataType match {
-        case IntegerType => java.lang.Integer.valueOf(group.getInteger(i, 0))
-        case LongType => java.lang.Long.valueOf(group.getLong(i, 0))
-        case DoubleType => java.lang.Double.valueOf(group.getDouble(i, 0))
-        case StringType => UTF8String.fromString(group.getString(i, 0))
-        case dt => throw new IllegalStateException(s"unsupported $dt")
-      }
-    }
-    new GenericInternalRow(vals.asInstanceOf[Array[Any]])
-  }
-
-  override def close(): Unit = reader.close()
 }

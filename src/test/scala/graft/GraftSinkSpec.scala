@@ -428,4 +428,80 @@ class GraftSinkSpec extends SparkSpec {
     assert(err.getMessage.contains("int/long/double/string"),
       s"got: ${err.getMessage}")
   }
+
+  test("a table whose data file parquet-java's example writer wrote " +
+    "reads back exactly, as a batch and as a change feed") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val path = tmpDir()
+    val conf = spark.sparkContext.hadoopConfiguration
+    // the reference encoding: message graft_sink, every column an
+    // optional primitive, strings as UTF-8-annotated binary
+    val msg = Types.buildMessage()
+      .optional(INT32).named("i").optional(INT64).named("l")
+      .optional(DOUBLE).named("d")
+      .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("s")
+      .named("graft_sink")
+    val rows = Seq(
+      Row(1, 10L, -0.0, "tab\there"),
+      Row(2, null, Double.MinPositiveValue, null),
+      Row(3, 30L, math.Pi, ""))
+    val file = "part-0-0-legacy.parquet"
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$path/data/$file"), conf))
+      .withType(msg).withConf(conf)
+      .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    val groups = new SimpleGroupFactory(msg)
+    try rows.foreach { r =>
+      val g = groups.newGroup()
+      if (!r.isNullAt(0)) g.add(0, r.getInt(0))
+      if (!r.isNullAt(1)) g.add(1, r.getLong(1))
+      if (!r.isNullAt(2)) g.add(2, r.getDouble(2))
+      if (!r.isNullAt(3)) g.add(3, r.getString(3))
+      w.write(g)
+    } finally w.close()
+    val schema = StructType(Seq(StructField("i", IntegerType),
+      StructField("l", LongType), StructField("d", DoubleType),
+      StructField("s", StringType)))
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(path, "_graft_commit_v1.json"),
+      s"${schema.json}\n$file\t${rows.size}")
+    def exact(df: org.apache.spark.sql.DataFrame): Unit = {
+      val got = df.orderBy("i").collect().toSeq
+      assert(df.schema == schema)
+      assert(got == rows, s"got $got")
+      assert(got.map(r => java.lang.Double.doubleToRawLongBits(
+        r.getDouble(2))) == rows.map(r => java.lang.Double
+        .doubleToRawLongBits(r.getDouble(2))))
+    }
+    exact(spark.read.format(FMT).option("path", path).load())
+    exact(spark.read.format(FMT).option("path", path)
+      .option("startVersion", "0").load())
+  }
+
+  test("reading a 40-file snapshot starts exactly one Spark job") {
+    import spark.implicits._
+    val path = tmpDir()
+    (1 to 40).foreach { i =>
+      Seq((i, s"r$i")).toDF("id", "s").coalesce(1).write.format(FMT)
+        .option("path", path).mode("append").save()
+    }
+    val files = new java.io.File(path, "data").list()
+      .count(_.endsWith(".parquet"))
+    assert(files == 40, s"expected 40 data files, found $files")
+    val (ids, jobs) = org.apache.spark.TestListenerBus
+      .countingJobs(spark.sparkContext) { jobsNow =>
+        val got = spark.read.format(FMT).option("path", path).load()
+          .collect().map(_.getInt(0)).sorted.toSeq
+        (got, jobsNow())
+      }
+    assert(ids == (1 to 40))
+    assert(jobs == 1, s"the read started $jobs Spark jobs")
+  }
 }
