@@ -1,6 +1,7 @@
 package graft.dsl
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.{functions => F}
 
 /** Validator-DSL expression AST.
@@ -10,22 +11,34 @@ import org.apache.spark.sql.{functions => F}
   * ops.py:416 `UnaryOp`, validators/string.py:618 `StringOp`,
   * validators/datetime.py:809 `DateTimeOp`,
   * validators/membership.py:963 `MembershipOp`)
-  * that compiles to two targets:
+  * with ONE compiler and two evaluators of its output:
   *
-  *   - [[Expr!.toColumn]] — an `org.apache.spark.sql.Column` (Catalyst
-  *     expression; whole-stage-codegen'd, pushdown-eligible). Analog of
-  *     the reference's `to_polars`.
-  *   - [[Expr!.eval]] — a row-level interpreter over `Map[String, Any]`.
-  *     Analog of the reference's `to_python` (Pydantic path).
+  *   - [[Expr!.toColumn]] — an `org.apache.spark.sql.Column`, run in bulk
+  *     (whole-stage-codegen'd, pushdown-eligible). Analog of the
+  *     reference's `to_polars`.
+  *   - [[Expr!.eval]] / [[graft.schema.RowValidator]] — the SAME Column,
+  *     evaluated per row by Catalyst's interpreter ([[RowEval]]; no
+  *     SparkSession, no job). Analog of the reference's `to_python`.
   *
-  * Null semantics on the row path mirror the reference: nulls propagate
-  * through math/string/datetime ops; boolean and/or use Kleene logic to
-  * match Spark/SQL (reference's Python path short-circuits truthiness,
-  * its Polars path is Kleene — we follow the columnar engine).
+  * So both paths share one semantics: nulls propagate, and/or are Kleene
+  * (the reference's Polars path), `/` and `%` by zero give null, and a
+  * long overflow raises (ANSI).
   */
 sealed trait Expr {
-  def toColumn: Column
-  def eval(row: Map[String, Any]): Any
+  def toColumn: Column = columnWith(_.column)
+
+  /** The Column, with each [[Raw]] node compiled by `raw` (the row
+    * evaluator swaps a Raw for an input of its own). */
+  private[dsl] def columnWith(raw: Raw => Column): Column
+
+  /** This expression over one row of plain values (a `null` is a
+    * NullType input), analyzed anew on every call. */
+  def eval(row: Map[String, Any]): Any = {
+    val ev = RowEval(Seq(this), row.toSeq.map { case (k, v) => k -> Literal(v).dataType })
+    ev.refs(0).find(!row.contains(_)).foreach(n =>
+      throw new NoSuchElementException(s"Field '$n' not found in values"))
+    ev(row)(0)
+  }
 
   // ---- comparisons / arithmetic / boolean (reference core.py FieldRef ops)
   def >(o: Any): Expr  = Bin(this, ">", Expr.lift(o))
@@ -70,61 +83,11 @@ object Expr {
     case e: Expr => e
     case other   => Lit(other)
   }
-
-  private[dsl] def litColumn(v: Any): Column = v match {
-    case t: java.time.Instant => F.lit(t)
-    case t: java.sql.Timestamp => F.lit(t)
-    case d: java.time.LocalDate => F.lit(d)
-    case other => F.lit(other)
-  }
-
-  private[dsl] def numOp(a: Any, b: Any)(fl: (Long, Long) => Any)(fd: (Double, Double) => Any): Any = {
-    (a, b) match {
-      case (null, _) | (_, null) => null
-      case (x: Long, y: Long)    => fl(x, y)
-      case (x: Int, y: Long)     => fl(x.toLong, y)
-      case (x: Long, y: Int)     => fl(x, y.toLong)
-      case (x: Int, y: Int)      => fl(x.toLong, y.toLong)
-      case _                     => fd(toD(a), toD(b))
-    }
-  }
-
-  private[dsl] def toD(a: Any): Double = a match {
-    case x: Double => x
-    case x: Float  => x.toDouble
-    case x: Long   => x.toDouble
-    case x: Int    => x.toDouble
-    case x: Short  => x.toDouble
-    case x: java.math.BigDecimal => x.doubleValue
-    case x: java.sql.Timestamp   => x.getTime / 1000.0
-    case x: java.time.Instant    => x.toEpochMilli / 1000.0
-    case other => throw new IllegalArgumentException(s"not numeric: $other")
-  }
-
-  /** 3-way comparison for heterogeneous row values. */
-  private[dsl] def cmp(a: Any, b: Any): Int = (a, b) match {
-    case (x: String, y: String) => x.compareTo(y)
-    // exact integral comparison — the double fallback would collapse
-    // longs that differ past 2^53, which Spark compares exactly
-    case (x: Long, y: Long) => java.lang.Long.compare(x, y)
-    case (x: Long, y: Int)  => java.lang.Long.compare(x, y.toLong)
-    case (x: Int, y: Long)  => java.lang.Long.compare(x.toLong, y)
-    case (x: Int, y: Int)   => java.lang.Integer.compare(x, y)
-    case (x: java.sql.Timestamp, y: java.sql.Timestamp) => x.compareTo(y)
-    case (x: java.time.Instant, y: java.time.Instant)   => x.compareTo(y)
-    case (x: java.time.LocalDate, y: java.time.LocalDate) => x.compareTo(y)
-    case (x: Boolean, y: Boolean) => x.compareTo(y)
-    // + 0.0 normalizes -0.0 to 0.0 (Spark compares -0.0 == 0.0; raw
-    // Double.compare orders them) and leaves NaN/ordering untouched
-    case _ => java.lang.Double.compare(toD(a) + 0.0, toD(b) + 0.0)
-  }
 }
 
 /** Field reference — `col("name")`. */
 final case class Col(name: String) extends Expr {
-  def toColumn: Column = F.col(name)
-  def eval(row: Map[String, Any]): Any =
-    row.getOrElse(name, throw new NoSuchElementException(s"Field '$name' not found in values"))
+  private[dsl] def columnWith(raw: Raw => Column): Column = F.col(name)
 }
 
 /** Escape hatch mirroring the reference's dict-result validators
@@ -134,18 +97,16 @@ final case class Col(name: String) extends Expr {
   * analog of `get_pydantic_validator()` returning None. */
 final case class Raw(column: Column,
     rowFn: Option[Map[String, Any] => Any] = None) extends Expr {
-  def toColumn: Column = column
-  def eval(row: Map[String, Any]): Any = rowFn.map(_(row)).orNull
+  private[dsl] def columnWith(raw: Raw => Column): Column = raw(this)
 }
 
 final case class Lit(value: Any) extends Expr {
-  def toColumn: Column = Expr.litColumn(value)
-  def eval(row: Map[String, Any]): Any = value
+  private[dsl] def columnWith(raw: Raw => Column): Column = F.lit(value)
 }
 
 final case class Bin(left: Expr, op: String, right: Expr) extends Expr {
-  def toColumn: Column = {
-    val l = left.toColumn; val r = right.toColumn
+  private[dsl] def columnWith(raw: Raw => Column): Column = {
+    val l = left.columnWith(raw); val r = right.columnWith(raw)
     op match {
       case ">"  => l > r
       case ">=" => l >= r
@@ -156,61 +117,20 @@ final case class Bin(left: Expr, op: String, right: Expr) extends Expr {
       case "+"  => l + r
       case "-"  => l - r
       case "*"  => l * r
-      // total division: zero divisor → null on BOTH engines' modes
-      // (plain `/`/`%` throw under Spark 4's default ANSI, returned
-      // null pre-ANSI; try_divide/try_mod pin the null semantics the
-      // row interpreter implements)
+      // total division: zero divisor → null (plain `/`/`%` throw under
+      // Spark 4's default ANSI and returned null pre-ANSI; try_divide/
+      // try_mod pin the null semantics whatever the session's mode)
       case "/"  => F.try_divide(l, r)
       case "%"  => F.try_mod(l, r)
       case "&"  => l && r
       case "|"  => l || r
     }
   }
-
-  def eval(row: Map[String, Any]): Any = {
-    import Expr._
-    val a = left.eval(row); val b = right.eval(row)
-    op match {
-      case "&" => // Kleene AND
-        (a, b) match {
-          case (false, _) | (_, false) => false
-          case (null, _) | (_, null)   => null
-          case (x: Boolean, y: Boolean) => x && y
-        }
-      case "|" => // Kleene OR
-        (a, b) match {
-          case (true, _) | (_, true) => true
-          case (null, _) | (_, null) => null
-          case (x: Boolean, y: Boolean) => x || y
-        }
-      case _ if a == null || b == null => null
-      case ">"  => cmp(a, b) > 0
-      case ">=" => cmp(a, b) >= 0
-      case "<"  => cmp(a, b) < 0
-      case "<=" => cmp(a, b) <= 0
-      case "==" => cmp(a, b) == 0
-      case "!=" => cmp(a, b) != 0
-      case "+"  => numOp(a, b)(_ + _)(_ + _)
-      case "-"  => numOp(a, b)(_ - _)(_ - _)
-      case "*"  => numOp(a, b)(_ * _)(_ * _)
-      // zero divisor → null, matching the Column path (Spark non-ANSI
-      // Divide/Remainder return NULL on /0 for EVERY numeric type,
-      // doubles included) — the interpreter previously produced
-      // Infinity / ArithmeticException here, a divergence the
-      // DslPropertySpec full-operator generator surfaces (r13)
-      case "/"  =>
-        if (toD(b) == 0.0) null
-        else numOp(a, b)((x, y) => x.toDouble / y)(_ / _)
-      case "%"  =>
-        if (toD(b) == 0.0) null
-        else numOp(a, b)(_ % _)(_ % _)
-    }
-  }
 }
 
 final case class Un(op: String, operand: Expr, arg: Option[Any] = None) extends Expr {
-  def toColumn: Column = {
-    val c = operand.toColumn
+  private[dsl] def columnWith(raw: Raw => Column): Column = {
+    val c = operand.columnWith(raw)
     op match {
       case "~"           => !c
       case "is_null"     => c.isNull
@@ -221,45 +141,6 @@ final case class Un(op: String, operand: Expr, arg: Option[Any] = None) extends 
       case "ceil"        => F.ceil(c)
       case "sqrt"        => F.sqrt(c)
       case "pow"         => F.pow(c, arg.get.asInstanceOf[Double])
-    }
-  }
-
-  def eval(row: Map[String, Any]): Any = {
-    val v = operand.eval(row)
-    op match {
-      case "is_null"     => v == null
-      case "is_not_null" => v != null
-      case "~" => v match { case null => null; case b: Boolean => !b }
-      case _ if v == null => null
-      case "abs" => v match {
-        case x: Long => math.abs(x); case x: Int => math.abs(x.toLong)
-        case other   => math.abs(Expr.toD(other))
-      }
-      case "round" =>
-        val d = arg.fold(0)(_.asInstanceOf[Int])
-        v match {
-          case x: Long => x
-          case x: Int  => x.toLong
-          // NaN/Infinity pass through unchanged — Spark's Round guards
-          // them before its BigDecimal conversion (which would throw),
-          // so the interpreter must too (DslPropertySpec, r13)
-          case other if Expr.toD(other).isNaN ||
-            Expr.toD(other).isInfinite => Expr.toD(other)
-          case other   => BigDecimal(Expr.toD(other)).setScale(d, BigDecimal.RoundingMode.HALF_UP).toDouble
-        }
-      // integral inputs short-circuit: Spark's Floor/Ceil on an
-      // integral type is the identity (no double round-trip, which
-      // would corrupt |x| > 2^53 — DslPropertySpec, r13)
-      case "floor" => v match {
-        case x: Long => x; case x: Int => x.toLong
-        case other   => math.floor(Expr.toD(other)).toLong
-      }
-      case "ceil" => v match {
-        case x: Long => x; case x: Int => x.toLong
-        case other   => math.ceil(Expr.toD(other)).toLong
-      }
-      case "sqrt"  => math.sqrt(Expr.toD(v))
-      case "pow"   => math.pow(Expr.toD(v), arg.get.asInstanceOf[Double])
     }
   }
 }
@@ -280,8 +161,8 @@ final case class StringAcc(e: Expr) {
 }
 
 final case class StrOp(op: String, operand: Expr, args: Seq[Any]) extends Expr {
-  def toColumn: Column = {
-    val c = operand.toColumn
+  private[dsl] def columnWith(raw: Raw => Column): Column = {
+    val c = operand.columnWith(raw)
     op match {
       // reference uses regex semantics for contains (polars str.contains)
       case "contains"     => c.rlike(args.head.asInstanceOf[String])
@@ -299,42 +180,6 @@ final case class StrOp(op: String, operand: Expr, args: Seq[Any]) extends Expr {
       case "count_matches" => F.regexp_count(c, F.lit(args.head.asInstanceOf[String]))
     }
   }
-
-  def eval(row: Map[String, Any]): Any = {
-    // Nulls propagate through every string op — matching the Column
-    // (Spark/SQL) semantics. The reference's Python path returns False/0
-    // for contains/len on None while its Polars path returns null; we
-    // keep the two graft paths consistent with each other instead.
-    val v = operand.eval(row)
-    op match {
-      case _ if v == null => null
-      case "contains" =>
-        args.head.asInstanceOf[String].r.findFirstIn(v.asInstanceOf[String]).isDefined
-      case "starts_with" => v.asInstanceOf[String].startsWith(args.head.asInstanceOf[String])
-      case "ends_with"   => v.asInstanceOf[String].endsWith(args.head.asInstanceOf[String])
-      case "len_chars"   => v.asInstanceOf[String].length.toLong
-      case "strip_chars"  => v.asInstanceOf[String].trim
-      case "to_lowercase" => v.asInstanceOf[String].toLowerCase
-      case "to_uppercase" => v.asInstanceOf[String].toUpperCase
-      case "replace" =>
-        args(0).asInstanceOf[String].r.replaceAllIn(v.asInstanceOf[String], args(1).asInstanceOf[String])
-      case "extract" =>
-        // '' on no match AND on a non-participating group — the
-        // regexp_extract contract both engines (Spark, DuckDB) pin;
-        // the interpreter previously returned null on no match, a
-        // divergence the DslPropertySpec generator surfaces (r13)
-        val m = args(0).asInstanceOf[String].r.findFirstMatchIn(v.asInstanceOf[String])
-        m.map(mm => Option(mm.group(args(1).asInstanceOf[Int]))
-          .getOrElse("")).getOrElse("")
-      case "slice" =>
-        val s = v.asInstanceOf[String]; val off = args(0).asInstanceOf[Int]
-        val len = args(1).asInstanceOf[Int]
-        val from = math.min(off, s.length)
-        s.substring(from, math.min(s.length, if (len == Int.MaxValue) s.length else from + len))
-      case "count_matches" =>
-        args.head.asInstanceOf[String].r.findAllIn(v.asInstanceOf[String]).size.toLong
-    }
-  }
 }
 
 /** Datetime ops accessor (reference validators/datetime.py:761 DateTimeAccessor). */
@@ -350,8 +195,8 @@ final case class DtAcc(e: Expr) {
 }
 
 final case class DtOp(op: String, operand: Expr, arg: Option[Expr]) extends Expr {
-  def toColumn: Column = {
-    val c = operand.toColumn
+  private[dsl] def columnWith(raw: Raw => Column): Column = {
+    val c = operand.columnWith(raw)
     op match {
       case "year"   => F.year(c)
       case "month"  => F.month(c)
@@ -362,56 +207,17 @@ final case class DtOp(op: String, operand: Expr, arg: Option[Expr]) extends Expr
       case "total_days" =>
         // date → timestamp first: DateType has no direct double cast
         (c.cast("timestamp").cast("double") -
-          arg.get.toColumn.cast("timestamp").cast("double")) / F.lit(86400.0)
-    }
-  }
-
-  def eval(row: Map[String, Any]): Any = {
-    val v = operand.eval(row)
-    if (v == null) return null
-    def zdt(a: Any): java.time.ZonedDateTime = a match {
-      case t: java.sql.Timestamp => t.toInstant.atZone(java.time.ZoneOffset.UTC)
-      case t: java.time.Instant  => t.atZone(java.time.ZoneOffset.UTC)
-      case d: java.time.LocalDate => d.atStartOfDay(java.time.ZoneOffset.UTC)
-      case d: java.sql.Date => d.toLocalDate.atStartOfDay(java.time.ZoneOffset.UTC)
-      case other => throw new IllegalArgumentException(s"Expected date or datetime, got $other")
-    }
-    op match {
-      case "year"   => zdt(v).getYear.toLong
-      case "month"  => zdt(v).getMonthValue.toLong
-      case "day"    => zdt(v).getDayOfMonth.toLong
-      case "hour"   => zdt(v).getHour.toLong
-      case "minute" => zdt(v).getMinute.toLong
-      case "second" => zdt(v).getSecond.toLong
-      case "total_days" =>
-        val o = arg.get.eval(row)
-        if (o == null) null
-        else {
-          val a = zdt(v).toInstant; val b = zdt(o).toInstant
-          java.time.Duration.between(b, a).toNanos / 86400.0e9
-        }
+          arg.get.columnWith(raw).cast("timestamp").cast("double")) / F.lit(86400.0)
     }
   }
 }
 
 final case class InOp(operand: Expr, values: Seq[Any], nullsEqual: Boolean = false) extends Expr {
-  def toColumn: Column = {
-    val c = operand.toColumn
+  private[dsl] def columnWith(raw: Raw => Column): Column = {
+    val c = operand.columnWith(raw)
     val base = c.isin(values.filter(_ != null): _*)
     if (nullsEqual) F.when(c.isNull, F.lit(values.contains(null))).otherwise(base)
     else base
-  }
-  def eval(row: Map[String, Any]): Any = {
-    val v = operand.eval(row)
-    val nonNull = values.filter(_ != null)
-    if (v == null) {
-      // empty candidate set → false even for null input (membership in
-      // the empty set is unconditionally false — Spark's isin() with no
-      // non-null values evaluates to false, not null; DslPropertySpec)
-      if (nullsEqual) values.contains(null)
-      else if (nonNull.isEmpty) false
-      else null
-    } else nonNull.exists(x => Expr.cmp(v, x) == 0)
   }
 }
 
@@ -428,32 +234,21 @@ final case class BetweenOp(operand: Expr, lo: Expr, hi: Expr, closed: String) ex
     * interval), matching the reference; the warning is the signal. */
   val invertedBounds: Boolean = (lo, hi) match {
     case (Lit(l), Lit(h)) if l != null && h != null =>
-      try Expr.cmp(l, h) > 0 catch { case _: Exception => false }
+      // `lo > hi` through the row evaluator: Catalyst's own coercion
+      // and ordering; bounds it cannot compare are not flagged
+      try (lo > hi).eval(Map.empty) == true catch { case _: Exception => false }
     case _ => false
   }
   if (invertedBounds)
     org.slf4j.LoggerFactory.getLogger(classOf[BetweenOp]).warn(
       s"isBetween called with lower_bound > upper_bound; interval is empty (lower=$lo, upper=$hi)")
-  def toColumn: Column = {
-    val c = operand.toColumn; val l = lo.toColumn; val h = hi.toColumn
+  private[dsl] def columnWith(raw: Raw => Column): Column = {
+    val c = operand.columnWith(raw); val l = lo.columnWith(raw); val h = hi.columnWith(raw)
     closed match {
       case "both"  => c >= l && c <= h
       case "left"  => c >= l && c < h
       case "right" => c > l && c <= h
       case "none"  => c > l && c < h
-    }
-  }
-  def eval(row: Map[String, Any]): Any = {
-    val v = operand.eval(row)
-    if (v == null) return null
-    val l = lo.eval(row); val h = hi.eval(row)
-    if (l == null || h == null) return null
-    import Expr.cmp
-    closed match {
-      case "both"  => cmp(v, l) >= 0 && cmp(v, h) <= 0
-      case "left"  => cmp(v, l) >= 0 && cmp(v, h) < 0
-      case "right" => cmp(v, l) > 0 && cmp(v, h) <= 0
-      case "none"  => cmp(v, l) > 0 && cmp(v, h) < 0
     }
   }
 }

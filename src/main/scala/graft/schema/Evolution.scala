@@ -137,6 +137,16 @@ object Evolution {
     }
   }
 
+  /** Delta Lake's append rule (Armbrust et al., VLDB 2020): names, order
+    * and types must match (else Left, the refusal); the table's schema
+    * is then Right, nullable where either side is. */
+  def appendable(committed: StructType, incoming: StructType): Either[String, StructType] =
+    if (committed.map(f => (f.name, f.dataType)) == incoming.map(f => (f.name, f.dataType)))
+      Right(StructType(committed.zip(incoming).map {
+        case (c, i) => i.copy(nullable = c.nullable || i.nullable) }))
+    else Left(s"append schema ${incoming.simpleString} is incompatible with " +
+      s"committed snapshot schema ${committed.simpleString}")
+
   /** Structural diff `from` → `to`. A field counts as changed when its
     * data type, nullability or default differs; constraint-only changes
     * (ge/le/pattern/…) are listed too — they don't alter storage but do

@@ -50,7 +50,8 @@ final case class GSchema(
   def allChecks: Seq[Check] = fields.flatMap(_.checks) ++ modelChecks
 
   def validator: Validator       = new Validator(this)
-  def rowValidator: RowValidator = new RowValidator(this)
+  /** Compiled once per schema value (its checks' Catalyst analysis). */
+  @transient lazy val rowValidator: RowValidator = new RowValidator(this)
 
   /** Spark SQL DDL — analog of to_sqlalchemy
     * (generators/sqlalchemy.py:14 create_sqlalchemy_table).

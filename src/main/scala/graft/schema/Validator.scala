@@ -1,6 +1,8 @@
 package graft.schema
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.KnownNullable
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.{functions => F}
 
 /** Raised by strict-mode validation (analog of the reference's
@@ -94,7 +96,11 @@ final class Validator(val schema: GSchema) {
         if (fillNulls && f.default.isDefined && present(f.name))
           F.coalesce(base, F.lit(f.default.get).cast(f.dataType))
         else base
-      filled.as(f.name)
+      // a default is not-null to Catalyst: keep a nullable field nullable
+      // (widen only — never mark not-null what the checks have not seen)
+      if (f.nullable && f.default.isDefined && (fillNulls || !present(f.name)))
+        ColumnBridge.column(KnownNullable(ColumnBridge.expression(filled))).as(f.name)
+      else filled.as(f.name)
     }
     df.select(cols: _*)
   }
@@ -224,7 +230,8 @@ final class Validator(val schema: GSchema) {
 
 /** Row-level validation — the Pydantic analog (reference
   * generators/pydantic.py:15 create_pydantic_model, validators attached
-  * pydantic.py:70-116). Interprets the same DSL checks per record.
+  * pydantic.py:70-116). The checks [[Validator.compiledChecks]] wraps
+  * compile once into a [[graft.dsl.RowEval]] (no SparkSession, no job).
   *
   * Input values are COERCED onto the declared field types before
   * constraint evaluation (pydantic lax-mode construction semantics:
@@ -235,27 +242,37 @@ final class RowValidator(val schema: GSchema) {
 
   import org.apache.spark.sql.types._
 
-  /** Lax coercion of one non-null raw value onto `f.dataType`.
-    * Accepted conversions mirror pydantic lax mode: numeric strings and
-    * whole floats for integer fields; numerics and numeric strings for
-    * double fields; "true"/"false"/0/1 for booleans; ISO-8601 strings
-    * for timestamps/dates. Unknown target types pass through. */
+  private val checks = schema.allChecks
+  private val eval = graft.dsl.RowEval(checks.map(_.expr),
+    schema.fields.map(f => f.name -> f.dataType))
+
+  /** Lax coercion of one non-null raw value onto `f.dataType`'s own JVM
+    * type. Accepted conversions mirror pydantic lax mode: numeric strings
+    * and whole floats for integer fields (in range); numerics and numeric
+    * strings for double fields; "true"/"false"/0/1 for booleans; ISO-8601
+    * strings for timestamps/dates. Unknown target types pass through. */
   private def coerceValue(f: GField, v: Any): Either[String, Any] = {
     def fail: Either[String, Any] =
       Left(s"${f.name}: cannot coerce '$v' to ${f.dataType.simpleString}")
     try {
       f.dataType match {
-        case LongType | IntegerType | ShortType => v match {
-          case x: Long    => Right(x)
-          case x: Int     => Right(x.toLong)
-          case x: Short   => Right(x.toLong)
-          case x: Byte    => Right(x.toLong)
-          case x: Double  => if (x.isWhole) Right(x.toLong) else fail
-          case x: Float   => if (x.isWhole) Right(x.toLong) else fail
-          case x: Boolean => Right(if (x) 1L else 0L) // python bool <: int
-          case x: String  => Right(x.trim.toLong)
-          case _          => fail
-        }
+        case LongType | IntegerType | ShortType =>
+          val x: Long = v match {
+            case x: Long    => x
+            case x: Int     => x.toLong
+            case x: Short   => x.toLong
+            case x: Byte    => x.toLong
+            case x: Double if x.isWhole => x.toLong
+            case x: Float if x.isWhole  => x.toLong
+            case x: Boolean => if (x) 1L else 0L // python bool <: int
+            case x: String  => x.trim.toLong
+            case _          => return fail
+          }
+          f.dataType match {
+            case IntegerType => if (x.isValidInt) Right(x.toInt) else fail
+            case ShortType   => if (x.isValidShort) Right(x.toShort) else fail
+            case _           => Right(x)
+          }
         case DoubleType => v match {
           case x: Double => Right(x)
           case x: Float  => Right(x.toDouble)
@@ -329,15 +346,13 @@ final class RowValidator(val schema: GSchema) {
     val coerceErrors = schema.fields.flatMap(f =>
       coercions.get(f.name).collect { case Left(m) => m })
     val coerced = coercions.collect { case (k, Right(v)) => k -> v }
-    val constraintViolations = schema.allChecks.flatMap { ch =>
-      // a check referencing a missing/uncoercible field is unevaluable —
-      // that field is already reported, so skip rather than crash
-      val result = try ch.expr.eval(coerced)
-      catch { case _: NoSuchElementException => null }
-      result match {
-        case false => Some(ch.message)
-        case _     => None // true or null (null ⇒ pass, consistent with Validator)
-      }
+    val results = eval(coerced)
+    // a check referencing a missing, null or uncoercible field is
+    // skipped (that field is already reported, or null ⇒ pass); a null
+    // result passes too, consistent with Validator
+    val constraintViolations = checks.indices.collect {
+      case i if eval.refs(i).forall(coerced.contains) && results(i) == false =>
+        checks(i).message
     }
     missing ++ nullViolations ++ coerceErrors ++ constraintViolations
   }

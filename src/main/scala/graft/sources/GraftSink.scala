@@ -6,6 +6,8 @@ import java.util.UUID
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
+import graft.schema.Evolution
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
@@ -51,10 +53,11 @@ import org.apache.spark.util.SerializableConfiguration
   *    so overlapping writers serialize and no commit drops another's
   *    files from the chain;
   *  - an APPEND onto a prior snapshot requires the incoming schema to
-  *    match the committed manifest schema by field names and types
-  *    (r14 ADVICE: ACCEPT_ANY_SCHEMA disables Spark's own check, and a
+  *    match the committed manifest schema by field names, order and
+  *    types (ACCEPT_ANY_SCHEMA disables Spark's own check, and a
   *    reordered/retyped append would silently reinterpret the carried-
-  *    forward files' cells under the new header);
+  *    forward files' cells under the new header), and is nullable where
+  *    either side is (`Evolution.appendable`: committed nulls stay null);
   *  - readers resolve the LATEST manifest — or, with
   *    `option("version", N)`, exactly manifest N: the snapshot chain
   *    is never rewritten, so every committed version stays readable
@@ -198,16 +201,6 @@ object GraftSink {
       }
     }
 
-  /** Append-compatibility: same field names and types in the same
-    * order as the committed snapshot (nullability is not load-bearing
-    * — Spark's Parquet reader reads required and optional columns
-    * alike). */
-  private[sources] def compatible(a: StructType, b: StructType): Boolean =
-    a.fields.length == b.fields.length &&
-      a.fields.zip(b.fields).forall { case (x, y) =>
-        x.name == y.name && x.dataType == y.dataType
-      }
-
   /** Spark's Parquet scan over `files` (names under `data/`) read as
     * `schema`, keeping only the `required` columns. */
   private[sources] def parquetScan(root: Path, schema: StructType,
@@ -345,25 +338,21 @@ private[sources] object GraftSinkCommit {
         fs.delete(stagingDir, true)
       }
       else {
-        val carried: Seq[(String, Long)] =
-          if (truncate) Seq.empty
-          else prior.map { p =>
-            // r14 ADVICE (medium): ACCEPT_ANY_SCHEMA disables Spark's
-            // own append validation, and a reordered/retyped append
-            // would reinterpret the carried-forward files' cells under
-            // the new header — refuse instead
-            if (!GraftSink.compatible(schema, p.schema))
-              throw new IllegalArgumentException(
-                s"graft sink append schema ${schema.simpleString} is " +
-                  s"incompatible with committed snapshot schema " +
-                  s"${p.schema.simpleString}; use SaveMode.Overwrite " +
-                  "to replace the table")
-            p.files
-          }.getOrElse(Seq.empty)
+        // ACCEPT_ANY_SCHEMA disables Spark's own append validation, and
+        // a reordered/retyped append would reinterpret the carried-forward
+        // files' cells under the new header — refuse instead
+        val (manifestSchema, carried) = prior match {
+          case Some(p) if !truncate => Evolution.appendable(p.schema, schema) match {
+            case Right(merged) => (merged, p.files)
+            case Left(reason) => throw new IllegalArgumentException(
+              s"graft sink $reason; use SaveMode.Overwrite to replace the table")
+          }
+          case _ => (schema, Seq.empty[(String, Long)])
+        }
         val epochs =
           (if (truncate) Map.empty[String, Long] else priorEpochs) ++
             epochMarker.toMap
-        val body = (schema.json +:
+        val body = (manifestSchema.json +:
           (epochs.toSeq.sortBy(_._1).map { case (q, e) => s"#epoch\t$q\t$e" } ++
             (carried ++ added).map { case (f, r) => s"$f\t$r" }))
           .mkString("\n")

@@ -223,6 +223,21 @@ class DslPropertySpec extends SparkSpec {
       samples(Gen.listOfN(6, genRow), 100, seed = 29L))
   }
 
+  test("the row evaluator reproduces the column path exactly on random " +
+    "numeric expressions (no tolerance; NaN equals NaN)") {
+    def nan(v: Any) = v match { case d: Double => d.isNaN; case _ => false }
+    (samples(genNumExpr(3), 120, seed = 13L) zip
+      samples(Gen.listOfN(6, genRow), 120, seed = 17L)).foreach { case (e, rows) =>
+      val df = spark.createDataFrame(
+        rows.map { case (a, b, i, s, t) => Row(a, b, i, s, t) }.asJava, schema)
+      val viaColumn = df.select(e.toColumn.as("x")).collect().map(_.get(0)).toSeq
+      (viaColumn zip rows).foreach { case (c, row @ (a, b, i, s, t)) =>
+        val r = e.eval(Map("a" -> a, "b" -> b, "i" -> i, "s" -> s, "ts" -> t))
+        assert(c == r || (nan(c) && nan(r)), s"expr $e on row $row: $c vs $r")
+      }
+    }
+  }
+
   test("row validator and bulk validator agree on pass/fail per row") {
     import graft.schema._
     val gs = GSchema("P")

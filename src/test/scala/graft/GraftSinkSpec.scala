@@ -504,4 +504,53 @@ class GraftSinkSpec extends SparkSpec {
     assert(ids == (1 to 40))
     assert(jobs == 1, s"the read started $jobs Spark jobs")
   }
+
+  private def nullableV(rows: Seq[(Long, java.lang.Long)], nullable: Boolean) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.map { case (k, v) => Row(k, v) }.asJava,
+      StructType(Seq(StructField("k", LongType, nullable = false),
+        StructField("v", LongType, nullable))))
+  }
+
+  private def readKV(path: String, version: Option[Long] = None) = {
+    val r = spark.read.format(FMT).option("path", path)
+    val df = version.fold(r)(v => r.option("version", v.toString)).load()
+    (df.schema("v").nullable, df.orderBy("k").collect()
+      .map(r => (r.getLong(0), r.get(1))).toSeq)
+  }
+
+  test("an append keeps committed nulls: a column is nullable if either " +
+    "side is, and every version reads back exactly") {
+    def save(df: org.apache.spark.sql.DataFrame, path: String, mode: String) =
+      df.write.format(FMT).option("path", path).mode(mode).save()
+    // a non-nullable append onto a snapshot holding nulls
+    val p1 = tmpDir()
+    save(nullableV(Seq((1L, null), (2L, 20L)), nullable = true), p1, "overwrite")
+    save(nullableV(Seq((3L, 30L)), nullable = false), p1, "append")
+    assert(readKV(p1) == (true, Seq((1L, null), (2L, 20L), (3L, 30L))))
+    assert(readKV(p1, Some(1L)) == (true, Seq((1L, null), (2L, 20L))))
+    assert(readKV(p1, Some(2L)) == readKV(p1))
+    // a nullable append onto a non-nullable snapshot
+    val p2 = tmpDir()
+    save(nullableV(Seq((1L, 10L)), nullable = false), p2, "overwrite")
+    save(nullableV(Seq((2L, null)), nullable = true), p2, "append")
+    assert(readKV(p2, Some(1L)) == (false, Seq((1L, 10L))))
+    assert(readKV(p2) == (true, Seq((1L, 10L), (2L, null))))
+  }
+
+  test("a strict-validated batch whose nullable field comes from its " +
+    "default appends without rewriting committed nulls") {
+    import graft.schema._
+    import spark.implicits._
+    val path = tmpDir()
+    nullableV(Seq((1L, null), (2L, 20L)), nullable = true).write.format(FMT)
+      .option("path", path).mode("overwrite").save()
+    val s = GSchema("S").field(GLong("k"))
+      .field(GLong("v", nullable = true, default = Some(7L)))
+    s.validator.validate(Seq(3L).toDF("k")).write.format(FMT)
+      .option("path", path).mode("append").save()
+    assert(readKV(path) == (true, Seq((1L, null), (2L, 20L), (3L, 7L))))
+  }
 }

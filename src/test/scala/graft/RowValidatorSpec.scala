@@ -98,4 +98,36 @@ class RowValidatorSpec extends AnyFunSuite {
     assert(s.rowValidator.check(Map("phone" -> "555-1234", "day" -> 40L))
       == Seq("Phone must have 10 digits", "day in month"))
   }
+
+  test("int and short fields reject out-of-range values, as the bulk " +
+    "path's try_cast does") {
+    val s = GSchema("S")
+      .field(GLong("n", width = 32, ge = Some(1L)))
+      .field(GLong("k", width = 16, nullable = true))
+    assert(s.rowValidator.check(Map("n" -> 3000000000L))
+      == Seq("n: cannot coerce '3000000000' to int"))
+    assert(s.rowValidator.check(Map("n" -> 7L, "k" -> 40000))
+      == Seq("k: cannot coerce '40000' to smallint"))
+    assert(s.rowValidator.check(Map("n" -> "2147483647", "k" -> -32768L)).isEmpty)
+    assert(s.rowValidator.check(Map("n" -> 0, "k" -> 5.0)) == Seq("n must be >= 1"))
+  }
+
+  test("check called from 8 threads gives the single-threaded answers") {
+    val s = GSchema("S")
+      .field(GString("phone"))
+      .check(col("phone").str.replace("[^0-9]", "").str.lenChars === 10L,
+        "Phone must have 10 digits")
+    val rows = (0 until 500).map(i => Map[String, Any]("phone" ->
+      (if (i % 3 == 0) s"55-$i" else f"(555) 12-$i%05d")))
+    val want = rows.map(s.rowValidator.check)
+    assert(want.count(_.isEmpty) > 0 && want.count(_.nonEmpty) > 0)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val got = (0 until 8).map(_ => pool.submit(
+        new java.util.concurrent.Callable[Seq[Seq[String]]] {
+          def call(): Seq[Seq[String]] = rows.map(s.rowValidator.check)
+        }))
+      got.foreach(f => assert(f.get() == want))
+    } finally pool.shutdown()
+  }
 }

@@ -173,4 +173,19 @@ class ValidatorSpec extends SparkSpec {
     assert(v.head.getString(1) == "1")
     assert(v.head.getLong(2) == 2L)
   }
+
+  test("a defaulted nullable field keeps its declared nullability") {
+    import spark.implicits._
+    val s = GSchema("S").field(GLong("id"))
+      .field(GLong("v", nullable = true, default = Some(7L)))
+      .field(GLong("w", default = Some(1L)))
+    val out = s.validator.validate(Seq(3L).toDF("id"))
+    assert(out.schema("v").nullable)
+    assert(!out.schema("w").nullable) // widen only: required stays as Catalyst infers
+    assert(out.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((3L, 7L)))
+    val filled = s.validator.validate(
+      Seq((3L, Option.empty[Long], 2L)).toDF("id", "v", "w"), fillNulls = true)
+    assert(filled.schema("v").nullable)
+    assert(filled.collect().map(_.getLong(1)).toSeq == Seq(7L))
+  }
 }
