@@ -1,13 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{functions => F}
 
 /** IVF-style approximate nearest neighbour: coarse-quantize the corpus
   * into centroid lists, then search only the lists nearest to the query
   * (the 100 TB scale path — a brute-force scan touches every vector;
-  * IVF touches `nprobe / nlists` of them).
+  * IVF touches `nprobe / nlists` of them). Routing and ranking are
+  * [[Retrieval.route]] and [[Retrieval.rank]].
   *
   * Centroids here come from any labelling (a clustering column, a prior
   * k-means, a category) — [[centroidsByKey]] computes the mean vector
@@ -108,20 +108,12 @@ object Ivf {
       .select(F.col("ckey"), F.col("centroid").cast("array<float>"))
   }
 
-  /** Assign each vector to its nearest centroid by cosine (broadcast
-    * centroids; ties broken by key). Narrow over the corpus + broadcast:
-    * no corpus shuffle. */
+  /** Assign each vector to its nearest centroid: [[Retrieval.route]]
+    * with one probe, (vec_id, centroid_label, cos). */
   def assign(corpus: DataFrame, centroids: DataFrame,
-      idCol: String, vecCol: String): DataFrame = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
-    val scored = corpus.crossJoin(F.broadcast(centroids))
-      .select(F.col(idCol).as("vec_id"), F.col("ckey"),
-        Similarity.cosine(F.col(vecCol), F.col("centroid")).as("cos"))
-    val w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc, F.col("ckey"))
-    scored.withColumn("rn", F.row_number().over(w))
-      .filter(F.col("rn") === 1)
-      .select(F.col("vec_id"), F.col("ckey").as("centroid_label"), F.col("cos"))
-  }
+      idCol: String, vecCol: String): DataFrame =
+    Retrieval.route(corpus, centroids, idCol, vecCol, 1)
+      .withColumnRenamed("query_id", "vec_id")
 
   /** ANN search: probe the `nprobe` centroid lists nearest each query,
     * rank candidates by true cosine. Corpus shuffles once on its
@@ -142,31 +134,18 @@ object Ivf {
   def searchAssigned(corpus: DataFrame, assignments: DataFrame,
       centroids: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
     val assigned = assignments
       .select(F.col("vec_id").as("match_id"), F.col("centroid_label"))
       .join(corpus.select(F.col(idCol).as("match_id"), F.col(vecCol).as("c_vec")), "match_id")
-    val qProbes = assign(queries, centroids, idCol, vecCol) // nearest-1 fallback
-    val probes =
-      if (nprobe <= 1) qProbes.select(F.col("vec_id").as("query_id"), F.col("centroid_label"))
-      else {
-        val scored = queries.crossJoin(F.broadcast(centroids))
-          .select(F.col(idCol).as("query_id"), F.col("ckey"),
-            Similarity.cosine(F.col(vecCol), F.col("centroid")).as("cos"))
-        val w = Window.partitionBy("query_id").orderBy(F.col("cos").desc, F.col("ckey"))
-        scored.withColumn("rn", F.row_number().over(w))
-          .filter(F.col("rn") <= nprobe)
-          .select(F.col("query_id"), F.col("ckey").as("centroid_label"))
-      }
+    val probes = Retrieval.route(queries, centroids, idCol, vecCol, nprobe)
+      .select("query_id", "centroid_label")
     val qVec = queries.select(F.col(idCol).as("query_id"), F.col(vecCol).as("q_vec"))
     val cands = F.broadcast(probes.join(qVec, "query_id"))
       .join(assigned, "centroid_label")
       .filter(F.col("query_id") =!= F.col("match_id"))
       .select(F.col("query_id"), F.col("match_id"),
         Similarity.cosine(F.col("q_vec"), F.col("c_vec")).as("cos"))
-    val w2 = Window.partitionBy("query_id").orderBy(F.col("cos").desc, F.col("match_id"))
-    cands.withColumn("rank", F.row_number().over(w2))
-      .filter(F.col("rank") <= k)
+    Retrieval.rank(cands, "query_id", F.col("cos").desc, "match_id", k)
       .select("query_id", "rank", "match_id", "cos")
   }
 }

@@ -97,35 +97,22 @@ object Pq {
       .filter(F.col("match_id") =!= F.col("query_id"))
       .groupBy("query_id", "match_id")
       .agg(F.sum("_p").as("score_micro"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(F.col("score_micro").desc, F.col("match_id"))
-    scored.withColumn("rank", F.row_number().over(w))
-      .filter(F.col("rank") <= k)
+    Retrieval.rank(scored, "query_id", F.col("score_micro").desc,
+        "match_id", k)
       .select("query_id", "rank", "match_id", "score_micro")
   }
 
   /** The composed production ANN index — FAISS-style IVFPQ [Jégou et
     * al. 2011 §V]: route each query to its `nprobe` nearest IVF lists,
     * ADC-score ONLY those lists' PQ codes, then exact-rerank the
-    * shortlist. Each stage is an existing staged part (D9 list
-    * centroids / routing, D14 codebooks / ADC, D14d rerank) — this
-    * composes them end-to-end, which is the shape a 100 TB vector
-    * index actually serves queries in:
-    *
-    *  - routing touches k_list centroids per query (broadcast);
-    *  - ADC touches |probed lists| codes instead of the corpus — the
-    *    list restriction happens BEFORE the lookup join, so the
-    *    per-query candidate fan-out is bounded by nprobe·list-size,
-    *    never corpus size;
-    *  - the exact float rerank touches shortlistK candidates per query
-    *    (broadcast ids joined against the corpus vectors, which stream
-    *    once).
-    *
-    * Determinism: identical ingredients as the parts — integer-micro
-    * ADC partial dots, (score DESC, id) / (cos DESC, ckey) tie-breaks
-    * everywhere. Returns (query_id, rank, match_id, cos) with rank ≤ k
-    * by EXACT cosine over the ADC shortlist. */
+    * shortlist: [[Retrieval.route]] → ADC → [[Retrieval.rank]] →
+    * [[Retrieval.rerank]], the shape a 100 TB vector index serves
+    * queries in. ADC touches |probed lists| codes instead of the corpus
+    * — the list restriction happens BEFORE the lookup join, so the
+    * per-query candidate fan-out is bounded by nprobe·list-size, never
+    * corpus size. Scores are integer-micro ADC partial dots. Returns
+    * (query_id, rank, match_id, cos) with rank ≤ k by EXACT cosine over
+    * the ADC shortlist. */
   def ivfpqTopK(corpus: DataFrame, listCentroids: DataFrame,
       codebooks: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int,
@@ -178,39 +165,23 @@ object Pq {
     * `listBias = false`) and [[ivfpqResidualServe]] (residual codes,
     * `listBias = true` — the ADC sum gains the per-(query, probed-list)
     * dot(q, c_list) bias, constant within a (query, match) group since
-    * each match lives in exactly one list). One implementation so a fix
-    * or tuning to the routing / shortlist / rerank stages can never
-    * drift between the raw and residual variants. */
+    * each match lives in exactly one list). */
   private def serveCore(corpus: DataFrame, assignments: DataFrame,
       codes: DataFrame, listCentroids: DataFrame,
       codebooks: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int,
       shortlistK: Int, m: Int, subDim: Int,
       listBias: Boolean): DataFrame = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-    // 1. route queries to their nprobe nearest lists (residual serving
-    //    carries each probed list's integer-micro bias along)
-    // qc_micro (the per-list bias dot product) is paid ONLY in the
-    // residual path — the raw path's routing pass scores each
-    // (query, centroid) pair once with cosine and nothing else
-    val biasCols =
+    // 1. route queries to their nprobe nearest lists; the residual path
+    //    carries each probed list's integer-micro bias along (the raw
+    //    path scores each (query, centroid) pair with cosine only)
+    val bias =
       if (listBias)
         Seq(F.floor(Similarity.dot(F.col(vecCol), F.col("centroid")) * 1e6)
           .cast("long").as("qc_micro"))
       else Seq.empty
-    val routed = queries.crossJoin(F.broadcast(listCentroids))
-      .select(Seq(F.col(idCol).as("query_id"),
-        F.col("ckey").as("centroid_label"),
-        Similarity.cosine(F.col(vecCol), F.col("centroid")).as("_qc"))
-        ++ biasCols: _*)
-      .withColumn("_rn", F.row_number().over(
-        w.orderBy(F.col("_qc").desc, F.col("centroid_label"))))
-      .filter(F.col("_rn") <= nprobe)
-    val probes =
-      if (listBias) routed.select("query_id", "centroid_label", "qc_micro")
-      else routed.select("query_id", "centroid_label")
+    val probes = Retrieval.route(queries, listCentroids, idCol, vecCol,
+      nprobe, bias: _*).drop("cos")
     // 2. the standing index: per-vector list assignment + PQ codes
     val asg = assignments
       .select(F.col("vec_id").as("match_id"), F.col("centroid_label"))
@@ -238,22 +209,10 @@ object Pq {
       .groupBy("query_id", "match_id")
       .agg((if (listBias) F.sum("_p") + F.max("qc_micro")
             else F.sum("_p")).as("score_micro"))
-    val shortlist = scored.withColumn("_rn", F.row_number().over(
-      w.orderBy(F.col("score_micro").desc, F.col("match_id"))))
-      .filter(F.col("_rn") <= shortlistK)
+    val shortlist = Retrieval.rank(scored, "query_id",
+        F.col("score_micro").desc, "match_id", shortlistK)
       .select("query_id", "match_id")
     // 5. exact rerank of the shortlist only
-    val qv = queries.select(F.col(idCol).as("query_id"),
-      F.col(vecCol).as("_qvec"))
-    val cv = corpus.select(F.col(idCol).as("match_id"),
-      F.col(vecCol).as("_cvec"))
-    F.broadcast(shortlist.join(qv, "query_id"))
-      .join(cv, "match_id")
-      .select(F.col("query_id"), F.col("match_id"),
-        Similarity.cosine(F.col("_qvec"), F.col("_cvec")).as("cos"))
-      .withColumn("rank", F.row_number().over(
-        w.orderBy(F.col("cos").desc, F.col("match_id"))))
-      .filter(F.col("rank") <= k)
-      .select("query_id", "rank", "match_id", "cos")
+    Retrieval.rerank(shortlist, queries, corpus, idCol, vecCol, k)
   }
 }

@@ -34,16 +34,21 @@ object Similarity {
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
     graft.functions.VectorFunctions.register(corpus.sparkSession)
-    val q = queries.select(F.col(idCol).as("query_id"), F.col(vecCol).as("q_vec"))
-    val c = corpus.select(F.col(idCol).as("match_id"), F.col(vecCol).as("c_vec"))
-    val scored = c.join(F.broadcast(q), F.col("query_id") =!= F.col("match_id"))
+    val scored = pairs(corpus, queries, idCol, vecCol)
       .select(F.col("query_id"), F.col("match_id"),
-        cosine(F.col("q_vec"), F.col("c_vec")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(F.col("cos").desc, F.col("match_id"))
-    scored.withColumn("rank", F.row_number().over(w))
-      .filter(F.col("rank") <= k)
+        cosine(F.col("_q"), F.col("_c")).as("cos"))
+    Retrieval.rank(scored, "query_id", F.col("cos").desc, "match_id", k)
       .select("query_id", "rank", "match_id", "cos")
+  }
+
+  /** The self-excluding candidate join of the exact top-k kernels:
+    * (match_id, _c, query_id, _q) for every corpus row against every
+    * broadcast query but itself. */
+  private def pairs(corpus: DataFrame, queries: DataFrame,
+      idCol: String, col: String): DataFrame = {
+    val q = queries.select(F.col(idCol).as("query_id"), F.col(col).as("_q"))
+    val c = corpus.select(F.col(idCol).as("match_id"), F.col(col).as("_c"))
+    c.join(F.broadcast(q), F.col("query_id") =!= F.col("match_id"))
   }
 
   /** 1-bit SIGN quantization — the cheapest rung of the quantization
@@ -77,49 +82,31 @@ object Similarity {
   }
 
   /** Binary-code ANN serve: Hamming-distance shortlist over [[signPack]]
-    * codes, exact-cosine rerank of the shortlist only (the D14d
+    * codes, then [[Retrieval.rerank]] of the shortlist only (the D14d
     * pattern). The scored pass is ONE codegen'd `bit_count(bits ^ qb)`
     * per (query, candidate) — 8 bytes of state per corpus vector, the
-    * cheapest possible first-stage filter at 100 TB; the float corpus is
-    * touched only for the shortlistK reranked candidates per query
-    * (broadcast ids, corpus streams once). Returns (query_id, rank,
-    * match_id, hamming, cos), rank ≤ k by exact cosine.
+    * cheapest possible first-stage filter at 100 TB. Returns (query_id,
+    * rank, match_id, hamming, cos), rank ≤ k by exact cosine.
     *
     * QUERY CONTRACT — queries ⊆ corpus (self-top-k, like the
-    * bruteForceTopK family): the exact-cosine rerank resolves each
-    * query's float vector by joining shortlist query_ids back against
-    * `corpus` itself, so a query_id in `queryCodes` that is absent from
-    * `corpus` is silently DROPPED after the Hamming stage rather than
-    * erroring. Callers with external query vectors must union them into
-    * `corpus` (or extend this to take a query-vector frame). */
+    * bruteForceTopK family): the rerank resolves each query's float
+    * vector from `corpus` itself, so a query_id in `queryCodes` that is
+    * absent from `corpus` is silently DROPPED after the Hamming stage
+    * rather than erroring. Callers with external query vectors must
+    * union them into `corpus`. */
   def binaryTopK(corpus: DataFrame, codes: DataFrame,
       queryCodes: DataFrame, idCol: String, vecCol: String,
       k: Int, shortlistK: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
     val q = queryCodes.select(F.col("vec_id").as("query_id"),
       F.col("bits").as("_qb"))
     val scored = codes.join(F.broadcast(q),
         F.col("query_id") =!= F.col("vec_id"))
       .select(F.col("query_id"), F.col("vec_id").as("match_id"),
         F.expr("CAST(bit_count(bits ^ _qb) AS BIGINT)").as("hamming"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-    val shortlist = scored.withColumn("_rn", F.row_number().over(
-        w.orderBy(F.col("hamming").asc, F.col("match_id"))))
-      .filter(F.col("_rn") <= shortlistK)
+    val shortlist = Retrieval.rank(scored, "query_id", F.col("hamming").asc,
+        "match_id", shortlistK)
       .select("query_id", "match_id", "hamming")
-    val qv = corpus.select(F.col(idCol).as("query_id"),
-      F.col(vecCol).as("_qvec"))
-    val cv = corpus.select(F.col(idCol).as("match_id"),
-      F.col(vecCol).as("_cvec"))
-    F.broadcast(shortlist.join(qv, "query_id"))
-      .join(cv, "match_id")
-      .select(F.col("query_id"), F.col("match_id"), F.col("hamming"),
-        cosine(F.col("_qvec"), F.col("_cvec")).as("cos"))
-      .withColumn("rank", F.row_number().over(
-        w.orderBy(F.col("cos").desc, F.col("match_id"))))
-      .filter(F.col("rank") <= k)
-      .select("query_id", "rank", "match_id", "hamming", "cos")
+    Retrieval.rerank(shortlist, corpus, corpus, idCol, vecCol, k)
   }
 
   /** Cosine-threshold near-duplicate pairs within a blocking column. */
@@ -199,20 +186,14 @@ object Similarity {
   /** Exact top-k by int8-quantized dot product vs a broadcast query set
     * — the cheap first stage of a quantize → shortlist → float-rerank
     * pipeline. Same scale shape as [[bruteForceTopK]] (corpus streams
-    * once, no corpus shuffle; the per-query top-k is a bounded
-    * WindowGroupLimit) but the scoring inner loop is integer multiply-
-    * adds over 4×-smaller vectors. */
+    * once, no corpus shuffle) but the scoring inner loop is integer
+    * multiply-adds over 4×-smaller vectors. */
   def quantizedTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, qCol: String, k: Int): DataFrame = {
-    val q = queries.select(F.col(idCol).as("query_id"), F.col(qCol).as("qa"))
-    val c = corpus.select(F.col(idCol).as("match_id"), F.col(qCol).as("qb"))
-    val scored = c.join(F.broadcast(q), F.col("query_id") =!= F.col("match_id"))
+    val scored = pairs(corpus, queries, idCol, qCol)
       .select(F.col("query_id"), F.col("match_id"),
-        intDot(F.col("qa"), F.col("qb")).as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(F.col("score").desc, F.col("match_id"))
-    scored.withColumn("rank", F.row_number().over(w))
-      .filter(F.col("rank") <= k)
+        intDot(F.col("_q"), F.col("_c")).as("score"))
+    Retrieval.rank(scored, "query_id", F.col("score").desc, "match_id", k)
       .select("query_id", "rank", "match_id", "score")
   }
 

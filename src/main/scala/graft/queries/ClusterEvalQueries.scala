@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.operators.{Hashing, Ivf, Similarity}
+import graft.operators.{Hashing, Ivf, Retrieval, Similarity}
 import org.apache.spark.sql.{functions => F}
 import Tables.t
 
@@ -231,11 +231,7 @@ object ClusterEvalQueries {
           F.col("q_label") =!= F.col("neg_label"))
         .select(F.col("query_id"), F.col("match_id"), F.col("neg_label"),
           Similarity.cosine(F.col("q_vec"), F.col("c_vec")).as("cos"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id")
-        .orderBy(F.col("cos").desc, F.col("match_id"))
-      scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
+      Retrieval.rank(scored, "query_id", F.col("cos").desc, "match_id", 3)
         .select("query_id", "rank", "match_id", "neg_label", "cos")
         .orderBy("query_id", "rank")
     },
@@ -310,10 +306,7 @@ object ClusterEvalQueries {
         .select(F.col("vec_id"), F.col("ckey"),
           F.round(Similarity.cosine(F.col("embedding"), F.col("centroid"))
             * 1000000).cast("long").as("cm"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("vec_id").orderBy(F.col("cm").desc, F.col("ckey"))
-      scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 2)
+      Retrieval.rank(scored, "vec_id", F.col("cm").desc, "ckey", 2, "rn")
         .groupBy("vec_id")
         .agg(F.max(F.when(F.col("rn") === 1,
             F.struct(F.col("ckey"), F.col("cm")))).as("_own"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.operators.{Dedup, Hashing, Ivf, Similarity, Skew, TextOps}
+import graft.operators.{Dedup, Hashing, Ivf, Retrieval, Similarity, Skew, TextOps}
 import org.apache.spark.sql.{functions => F}
 import Tables.t
 
@@ -1609,14 +1609,10 @@ object PipelineQueries {
         .transform(graft.operators.CacheScope.persist)
       val nCand = cands.groupBy("query_id")
         .agg(F.count(F.lit(1)).as("n_cand"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id")
-        .orderBy(F.col("cos").desc, F.col("match_id"))
-      val approx = cands
-        .select(F.col("query_id"), F.col("match_id"),
-          Similarity.cosine(F.col("qv"), F.col("cv")).as("cos"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= ANN_RECALL_K)
+      val approx = Retrieval.rank(cands
+          .select(F.col("query_id"), F.col("match_id"),
+            Similarity.cosine(F.col("qv"), F.col("cv")).as("cos")),
+          "query_id", F.col("cos").desc, "match_id", ANN_RECALL_K)
         .select(F.col("query_id"), F.col("match_id").as("_am"))
       val exact = Similarity.bruteForceTopK(
         emb, emb.where(F.col("vec_id") < 10), "vec_id", "embedding",

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.operators.{Curation, Dedup, Hashing, Pq, TextOps}
+import graft.operators.{Curation, Dedup, Hashing, Pq, Retrieval, TextOps}
 import org.apache.spark.sql.{Column, functions => F}
 import Tables.t
 
@@ -463,13 +463,11 @@ object RefineQueries {
 
   // --------------------------------------------------------------- D14d
   /** The full production ANN pattern: ADC shortlist (cheap, approximate,
-    * corpus-linear) → EXACT cosine rerank of the shortlist only. The
-    * expensive float scoring touches shortlistK candidates per query
-    * instead of the corpus — at 100 TB the rerank cost is independent of
-    * corpus size (shortlist ⋈ corpus vectors is a broadcast join keyed
-    * on the candidate ids; the corpus streams once). Recovers most of
-    * the recall PQ quantization loses (the shortlist just has to CONTAIN
-    * the true neighbors; exact scoring reorders them). */
+    * corpus-linear) → [[Retrieval.rerank]] of the shortlist only, so at
+    * 100 TB the float scoring cost is independent of corpus size.
+    * Recovers most of the recall PQ quantization loses (the shortlist
+    * just has to CONTAIN the true neighbors; exact scoring reorders
+    * them). */
   private val embedPqRerank = QueryDef(
     "embed_pq_rerank",
     (s, d) => {
@@ -478,21 +476,7 @@ object RefineQueries {
       val shortlist = Pq.adcTopK(Staged.pqCodes(s, d),
         cb, queries, "vec_id", "embedding", k = 20, PQ_M, PQ_SUBDIM)
         .select(F.col("query_id"), F.col("match_id"))
-      val qv = queries.select(F.col("vec_id").as("query_id"),
-        F.col("embedding").as("_qv"))
-      val cv = emb.select(F.col("vec_id").as("match_id"),
-        F.col("embedding").as("_cv"))
-      val rescored = F.broadcast(shortlist.join(qv, "query_id"))
-        .join(cv, "match_id")
-        .select(F.col("query_id"), F.col("match_id"),
-          graft.operators.Similarity.cosine(F.col("_qv"), F.col("_cv"))
-            .as("cos"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id")
-        .orderBy(F.col("cos").desc, F.col("match_id"))
-      rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "rank", "match_id", "cos")
+      Retrieval.rerank(shortlist, queries, emb, "vec_id", "embedding", 5)
         .orderBy("query_id", "rank")
     },
     Some {

@@ -1,7 +1,7 @@
 package graft.queries
 
-import graft.operators.{Ivf, Similarity}
-import org.apache.spark.sql.{functions => F}
+import graft.operators.{Ivf, Retrieval, Similarity}
+import org.apache.spark.sql.{DataFrame, functions => F}
 import Tables.t
 
 /** Wave-44 inventory (r7): retrieval-quality summary for the ANN stack.
@@ -326,6 +326,30 @@ object RetrievalQueries {
                 AND e.match_id = a.match_id, nq
       GROUP BY a.np, nq.n_queries ORDER BY nprobe"""))
 
+  /** ColBERT MaxSim of each probe in `qs` against every other vector of
+    * `emb`: (query_id, match_id, score_micro) with score_micro =
+    * Σ_i max_j round(dot(q_i, d_j)·10⁶) over 4 16-dim chunks a side.
+    * The chunk join is the truth pass times a CONSTANT 16; probes
+    * broadcast; per-(probe, doc, chunk) state collapses map-side. */
+  private def maxSim(emb: DataFrame, qs: DataFrame): DataFrame = {
+    def chunked(df: DataFrame, idName: String, posName: String,
+        vecName: String) =
+      df.select(F.col("vec_id").as(idName),
+        F.posexplode(F.array((0 until 4).map(i =>
+          F.slice(F.col("embedding"), i * 16 + 1, 16)): _*))
+          .as(Seq(posName, vecName)))
+    chunked(emb, "match_id", "di", "dv")
+      .join(F.broadcast(chunked(qs, "query_id", "qi", "qv")),
+        F.col("query_id") =!= F.col("match_id"))
+      .select(F.col("query_id"), F.col("match_id"), F.col("qi"),
+        F.round(Similarity.dot(F.col("qv"), F.col("dv")) * 1000000)
+          .cast("long").as("dm"))
+      .groupBy("query_id", "match_id", "qi")
+      .agg(F.max("dm").as("mx"))
+      .groupBy("query_id", "match_id")
+      .agg(F.sum("mx").as("score_micro"))
+  }
+
   // ---------------------------------------------------------------- D46
   /** ColBERT-style late interaction [Khattab & Zaharia 2020]: each
     * vector is treated as 4 token-vectors (16-dim chunks — the PQ
@@ -333,36 +357,13 @@ object RetrievalQueries {
     * Exactness discipline: each chunk dot rounds to INTEGER MICROS
     * before the max (selection over integers), the 4 maxes sum as
     * integers — the whole score is hash-portable where a float MaxSim
-    * would drift. Scale shape: the chunk join multiplies the standard
-    * truth-pass by a CONSTANT 16 (4 query × 4 doc chunks); probes
-    * broadcast; per-(probe, doc, chunk) state collapses map-side. */
+    * would drift. The scorer is [[maxSim]]. */
   private val lateInteraction = QueryDef(
     "late_interaction",
     (s, d) => {
       val emb = t(s, d, "embeddings")
-      def chunked(df: org.apache.spark.sql.DataFrame, idName: String,
-          posName: String, vecName: String) =
-        df.select(F.col("vec_id").as(idName),
-          F.posexplode(F.array((0 until 4).map(i =>
-            F.slice(F.col("embedding"), i * 16 + 1, 16)): _*))
-            .as(Seq(posName, vecName)))
-      val qc = chunked(emb.filter(F.expr("vec_id % 25 = 1")),
-        "query_id", "qi", "qv")
-      val cc = chunked(emb, "match_id", "di", "dv")
-      val scored = cc.join(F.broadcast(qc),
-        F.col("query_id") =!= F.col("match_id"))
-        .select(F.col("query_id"), F.col("match_id"), F.col("qi"),
-          F.round(Similarity.dot(F.col("qv"), F.col("dv")) * 1000000)
-            .cast("long").as("dm"))
-        .groupBy("query_id", "match_id", "qi")
-        .agg(F.max("dm").as("mx"))
-        .groupBy("query_id", "match_id")
-        .agg(F.sum("mx").as("score_micro"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id")
-        .orderBy(F.col("score_micro").desc, F.col("match_id"))
-      scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
+      Retrieval.rank(maxSim(emb, emb.filter(F.expr("vec_id % 25 = 1"))),
+          "query_id", F.col("score_micro").desc, "match_id", 5)
         .select("query_id", "rank", "match_id", "score_micro")
         .orderBy("query_id", "rank")
     },
@@ -411,28 +412,8 @@ object RetrievalQueries {
         emb, qs, "vec_id", "embedding", k = 10)
         .select(F.col("query_id"), F.col("match_id"),
           F.col("rank").as("r_cos"))
-      def chunked(df: org.apache.spark.sql.DataFrame, idName: String,
-          posName: String, vecName: String) =
-        df.select(F.col("vec_id").as(idName),
-          F.posexplode(F.array((0 until 4).map(i =>
-            F.slice(F.col("embedding"), i * 16 + 1, 16)): _*))
-            .as(Seq(posName, vecName)))
-      val qc = chunked(qs, "query_id", "qi", "qv")
-      val cc = chunked(emb, "match_id", "di", "dv")
-      val ms = cc.join(F.broadcast(qc),
-        F.col("query_id") =!= F.col("match_id"))
-        .select(F.col("query_id"), F.col("match_id"), F.col("qi"),
-          F.round(Similarity.dot(F.col("qv"), F.col("dv")) * 1000000)
-            .cast("long").as("dm"))
-        .groupBy("query_id", "match_id", "qi")
-        .agg(F.max("dm").as("mx"))
-        .groupBy("query_id", "match_id")
-        .agg(F.sum("mx").as("score_micro"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id")
-        .orderBy(F.col("score_micro").desc, F.col("match_id"))
-      val maxL = ms.withColumn("r_max", F.row_number().over(w))
-        .filter(F.col("r_max") <= 10)
+      val maxL = Retrieval.rank(maxSim(emb, qs), "query_id",
+          F.col("score_micro").desc, "match_id", 10, "r_max")
         .select("query_id", "match_id", "r_max")
       val fused = cosL.join(maxL, Seq("query_id", "match_id"), "full_outer")
         .select(F.col("query_id"), F.col("match_id"),
@@ -442,11 +423,8 @@ object RetrievalQueries {
             "1000000L div (60 + r_max) END, 0L)").as("rrf_micro"),
           F.expr("CAST(r_cos AS BIGINT)").as("r_cos"),
           F.expr("CAST(r_max AS BIGINT)").as("r_max"))
-      val wf = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id")
-        .orderBy(F.col("rrf_micro").desc, F.col("match_id"))
-      fused.withColumn("rank", F.row_number().over(wf))
-        .filter(F.col("rank") <= 5)
+      Retrieval.rank(fused, "query_id", F.col("rrf_micro").desc,
+          "match_id", 5)
         .select("query_id", "rank", "match_id", "rrf_micro",
           "r_cos", "r_max")
         .orderBy("query_id", "rank")

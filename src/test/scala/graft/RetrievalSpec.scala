@@ -151,4 +151,37 @@ class RetrievalSpec extends SparkSpec {
       assert(sorted.length == 5)
     }
   }
+
+  test("every retrieval rank step is one row_number Window ranked by " +
+      "(score, id asc)") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending,
+      AttributeReference, RowNumber, WindowExpression}
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    // one Window per rank step in each query's plan: a count that moves
+    // means a rank step was added, dropped or merged
+    val windows = Seq(
+      "embed_cosine_topk" -> 1, "embed_ivf_search" -> 2,
+      "embed_pq_rerank" -> 2, "ivfpq_search" -> 3, "ivfpq_residual" -> 3,
+      "embed_binary_topk" -> 2, "embed_quantized_topk" -> 1,
+      "late_interaction" -> 1, "rrf_fusion" -> 3, "ivf_nprobe_sweep" -> 7)
+    val ids = Set("match_id", "centroid_label")
+    windows.foreach { case (name, n) =>
+      val ws = SparkEntry.queries(name)(spark, sf)
+        .queryExecution.optimizedPlan.collect { case w: Window => w }
+      assert(ws.length == n, s"$name: ${ws.length} Windows, expected $n")
+      ws.foreach { w =>
+        val shape = w.windowExpressions.map(_.sql).mkString("; ")
+        assert(w.windowExpressions.length == 1 &&
+          (w.windowExpressions.head match {
+            case Alias(WindowExpression(_: RowNumber, _), _) => true
+            case _ => false
+          }), s"$name: not a single row_number: $shape")
+        val last = w.orderSpec.last
+        assert(last.direction == Ascending && (last.child match {
+          case a: AttributeReference => ids(a.name)
+          case _ => false
+        }), s"$name: last sort key is not an ASC id: ${last.sql}")
+      }
+    }
+  }
 }
